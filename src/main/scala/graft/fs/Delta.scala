@@ -58,23 +58,9 @@ object Delta {
     val sourceUri = sourceUri0.stripSuffix("/")
     val targetUri = targetUri0.stripSuffix("/")
 
-    def side(rootUri: String) = {
-      val listed = spark.createDataset(Fs.list(rootUri).toIndexedSeq
-          .map(e => (e.path, e.isDirectory, e.byteSize)))
-        .toDF("path", "isDirectory", "byteSize")
+    def side(rootUri: String) =
+      withContentHash(spark.createDataset(Fs.list(rootUri).toIndexedSeq), checkContent)
         .withColumn("relPath", relCol(rootUri)($"path"))
-      if (!checkContent) listed.withColumn("contentHash", lit(0L))
-      else {
-        val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-        listed.as[(String, Boolean, Long, String)].mapPartitions { it =>
-          val c = sconf.value
-          it.map { case (path, isDir, size, rel) =>
-            val h = if (isDir) 0L else contentHash(c, path)
-            (path, isDir, size, rel, h)
-          }
-        }.toDF("path", "isDirectory", "byteSize", "relPath", "contentHash")
-      }
-    }
 
     val src = side(sourceUri)
     val trg = side(targetUri)
@@ -91,10 +77,10 @@ object Delta {
     (missing, extra)
   }
 
-  /** Distributed-listing twin of getDelta's hashing stage: files gain a
-    * content hash computed in the tasks that would read them anyway at
-    * copy time (dirs hash 0; with checkContent off the column is a
-    * constant so the diff keys keep one shape).
+  /** The diff's hashing stage, for driver and distributed listings:
+    * files gain a content hash computed in the tasks that would read them
+    * anyway at copy time (dirs hash 0; with checkContent off the column
+    * is a constant so the diff keys keep one shape).
     */
   private def withContentHash(list: org.apache.spark.sql.Dataset[FsElement],
       checkContent: Boolean)(implicit spark: SparkSession): org.apache.spark.sql.DataFrame = {
@@ -222,7 +208,7 @@ object Delta {
     // source-only files: distributed copy with retry
     val files = missing.filter(!$"isDirectory").select($"relPath").as[String]
       .map(relPath => Paths(s"$sourceUri/$relPath", s"$targetUri/$relPath"))
-    DistributedExecution.copyDataset(files, taskCount)
+    DistributedExecution.copyDataset(files, taskCount).unpersist()
     missing.unpersist()
     release()
     ()

@@ -9,7 +9,8 @@ import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
   * ≤ [[Retry.MaxAttempts]], then pin the final result set and release
   * the per-attempt caches (left persisted they would hold a row per
   * item for the session lifetime; unpersisting unmaterialized would
-  * re-run the side effects).
+  * re-run the side effects). A clean first attempt is returned as is:
+  * its pin, materialized by the failed-count, already is the result.
   */
 object DistributedRetry {
 
@@ -19,17 +20,16 @@ object DistributedRetry {
     *        Dataset[String])
     * @param opName     noun for the exhaustion error message
     * @param attemptFn  one side-effecting pass over (pending, pendingCount)
-    * @param knownCount item count if already known (skips a count job)
     */
   def run[T: Encoder](work: Dataset[T], keyCol: String, opName: String,
-      attemptFn: (Dataset[T], Long) => Dataset[FsOperationResult],
-      knownCount: Long = -1L)(implicit spark: SparkSession): Dataset[FsOperationResult] = {
+      attemptFn: (Dataset[T], Long) => Dataset[FsOperationResult])(
+      implicit spark: SparkSession): Dataset[FsOperationResult] = {
     import spark.implicits._
     var pending = work
     var results = spark.emptyDataset[FsOperationResult]
     val attemptCaches = scala.collection.mutable.ListBuffer.empty[Dataset[FsOperationResult]]
     var attempt = 0
-    var pendingCount = if (knownCount >= 0) knownCount else work.count()
+    var pendingCount = work.count()
     while (pendingCount > 0 && attempt < Retry.MaxAttempts) {
       attempt += 1
       val res = attemptFn(pending, pendingCount).persist()
@@ -40,9 +40,13 @@ object DistributedRetry {
       pending = pending.join(failed.select($"path".as(keyCol)), Seq(keyCol), "left_semi").as[T]
       pendingCount = failedCount
     }
-    if (pendingCount > 0)
+    if (pendingCount > 0) {
+      val failing = pending.select(keyCol).as[String].take(5).mkString(", ")
+      attemptCaches.foreach(_.unpersist())
       throw new IllegalStateException(
-        s"$pendingCount $opName still failing after ${Retry.MaxAttempts} attempts")
+        s"$pendingCount $opName still failing after ${Retry.MaxAttempts} attempts: $failing")
+    }
+    if (attempt == 1) return attemptCaches.head
     results = results.persist()
     results.count()
     attemptCaches.foreach(_.unpersist())
