@@ -25,8 +25,8 @@ object DevBench {
       // broadcast-build) worth knowing about. Dev-only: the full Bench
       // never sets job groups.
       names.foreach { name =>
-        val fn = SparkEntry.queries(name)
         try {
+          val fn = SparkEntry.queries(name)
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           graft.ops.Blocks.sweep(spark)
           spark.sparkContext.setJobGroup(name, name)

@@ -1,29 +1,53 @@
 package graft.compact
 
-import java.util.concurrent.Executors
+import scala.util.Try
+import scala.util.control.NonFatal
 
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-
-import graft.fs.{Fs, LocalExecution}
+import graft.fs.Fs
 
 /** Small-file compaction (reference: Coalesce.scala).
   *
-  * Plan: median file size + total size → target file count; skip when the
-  * folder is already compact. Execute: `spark.read.parquet.coalesce(n)`
-  * (CoalesceExec — no shuffle) → write to a temp sibling → swap.
+  * Plan: per leaf folder, median file size + total size → target file
+  * count, or skip when the folder is already compact; the sizes come from
+  * the listing that found the leaves. Execute: every leaf that needs a
+  * rewrite goes through ONE Spark write job per distinct leaf schema (so
+  * one job on an ordinary table), not one job per leaf — at small-file
+  * scale the per-job driver latency, not the bytes, is the cost. The
+  * schema comes from a parquet footer read on the driver (the file
+  * Spark's own inference would pick), so no inference job runs either.
+  * The price is one shuffle of the rewritten bytes (rows are routed to
+  * their leaf's output files by hash, reducer count sized by AQE) where
+  * the reference's per-leaf `coalesce(n)` shuffled nothing.
+  *
+  * Swap: live leaf → aside, rewritten leaf → live, delete aside — one
+  * leaf at a time, after every rewrite has been written. The temp root
+  * and the aside folders have `.`-prefixed names, which Spark's file
+  * index ignores, so a concurrent reader never sees a leaf twice and a
+  * crash leaves no extra partition behind; [[getLowestFoldersPaths]]
+  * skips them too.
   *
   * Two reference bugs fixed deliberately (SURVEY §7.6):
   *   - `numOfFiles == -1` (skip sentinel) was passed into `coalesce()`
   *     unguarded (reference Coalesce.scala:38-40) — here -1 short-circuits;
   *   - the delete-before-rename swap window (reference Coalesce.scala:79-81)
-  *     is narrowed by renaming the old folder aside first (old → .bak,
-  *     temp → live, delete .bak) so a crash leaves a recoverable folder.
+  *     is narrowed by renaming the old folder aside first, so a crash
+  *     leaves a recoverable folder.
   */
 object Compactor {
+
+  private val LeafCol = "__graft_leaf"
+  private val BucketCol = "__graft_bucket"
+  private val ZCol = "__graft_z"
 
   /** Target file count, or -1 when compaction should be skipped: fewer
     * than 2 files, or median file size already ≥ requested (reference
@@ -40,85 +64,221 @@ object Compactor {
   }
 
   /** Compact one parquet folder in place. Returns the new file count, or
-    * -1 if skipped.
+    * -1 if skipped. The folder must hold no (visible) sub-folders: a
+    * partitioned table is compacted leaf by leaf with [[doItAll]].
     *
     * @param zorderCols when non-empty, the rewrite lays the data out
-    *        along the Morton curve of these columns
-    *        ([[graft.ops.ZOrder.layoutBy]]) instead of a plain
-    *        `coalesce` — compaction is the natural (often only) moment a
+    *        along the Morton curve of these columns — exactly
+    *        [[graft.ops.ZOrder.layoutBy]] — instead of a plain hash
+    *        spread: compaction is the natural (often only) moment a
     *        pipeline rewrites a table, so clustering rides the same I/O
-    *        for free. Note z-ordering is a repartition (one range
-    *        exchange + per-column quantile probe), not coalesce's
-    *        shuffle-free narrowing — reserve it for tables whose read
-    *        pattern filters on those columns.
+    *        for free. It adds a quantile probe job and a range sample
+    *        to the rewrite — reserve it for tables whose read pattern
+    *        filters on those columns.
     */
   def doAutoCoalesce(path: String, requestedSizeMb: Int = 100,
       zorderCols: Seq[String] = Nil)(
       implicit spark: SparkSession): Int = {
-    implicit val conf = spark.sessionState.newHadoopConf()
+    val conf = spark.sessionState.newHadoopConf()
     val fs = Fs.getFileSystem(conf, path)
-    val files = fs.listStatus(new Path(path)).filter(s => !s.isDirectory &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    val n = figureOutNumberOfPartitions(files.map(_.getLen).toIndexedSeq, requestedSizeMb)
-    if (n < 0) return -1
-    val tmp = s"${path}_graft_tmp"
-    val bak = s"${path}_graft_bak"
-    val data = spark.read.parquet(path)
-    val rewritten =
-      if (zorderCols.isEmpty) data.coalesce(n)
-      else graft.ops.ZOrder.layoutBy(data, zorderCols, numPartitions = n)
-    rewritten.write.mode("overwrite").parquet(tmp)
-    // swap: live → bak, tmp → live, drop bak
-    fs.delete(new Path(bak), true)
-    require(fs.rename(new Path(path), new Path(bak)), s"swap: cannot move $path aside")
-    require(fs.rename(new Path(tmp), new Path(path)), s"swap: cannot promote $tmp")
-    fs.delete(new Path(bak), true)
-    n
+    val (dirs, files) = fs.listStatus(new Path(path))
+      .filterNot(s => isHidden(s.getPath.getName)).partition(_.isDirectory)
+    require(dirs.isEmpty,
+      s"$path has sub-folders (${dirs.head.getPath.getName}, ...): compact a partitioned table with doItAll")
+    val leaf = Leaf(path, files.map(_.getLen).toIndexedSeq, files.map(_.getPath.toString).minOption)
+    val done = compact(path, Seq(leaf), requestedSizeMb, zorderCols)
+    done(path)
   }
 
   /** Leaf (partition) directories under `path` — dirs with no subdirs
-    * (reference Coalesce.scala:48-62).
+    * (reference Coalesce.scala:48-62). Folders Spark's file index skips
+    * (names starting with `.`, or with `_` and holding no `=`) are
+    * skipped here too, with everything under them.
     *
     * @param distributedListing scan the tree with Spark jobs instead of
     *        driver threads ([[Fs.listDistributed]]) and compute the
     *        leaf set with a distributed anti-join — for tables whose
-    *        file count exceeds driver memory; only the leaf DIRECTORY
-    *        paths (bounded by partition count) are collected.
+    *        file count exceeds driver memory; per folder only its files'
+    *        sizes and first file name are collected, not every path.
     */
   def getLowestFoldersPaths(path: String, distributedListing: Boolean = false)(
-      implicit spark: SparkSession): Seq[String] = {
-    val leaves: Seq[String] =
+      implicit spark: SparkSession): Seq[String] =
+    leaves(path, distributedListing).map(_.path)
+
+  /** Compact every leaf partition folder of `tablePath` (reference
+    * Coalesce.scala:85-97 ran one job per leaf on a 10-thread pool).
+    * The leaves that need a rewrite share one Spark write job per
+    * distinct schema — a leaf is never rewritten under another leaf's
+    * schema, and its rows never leave it; each ends with at most its
+    * returned file count. A leaf whose files hold no rows is left as it
+    * is and reported skipped. With `zorderCols`, every leaf is its own
+    * group: the Morton ranks and the range bounds are sampled per leaf,
+    * as a bound sampled over several leaves could cut a leaf into more
+    * files than its plan.
+    *
+    * @return per leaf path, the new file count or -1 if skipped
+    */
+  def doItAll(tablePath: String, requestedSizeMb: Int = 100,
+      distributedListing: Boolean = false, zorderCols: Seq[String] = Nil)(
+      implicit spark: SparkSession): Map[String, Int] = {
+    val all = leaves(tablePath, distributedListing)
+    compact(tablePath, all, requestedSizeMb, zorderCols)
+  }
+
+  /** A leaf folder as listed: its data files' sizes and the path-sorted
+    * first data file, whose footer Spark's schema inference would read.
+    */
+  private final case class Leaf(path: String, sizes: Seq[Long], first: Option[String])
+
+  /** Names Spark's file index does not read (`HadoopFSUtils.shouldFilterOutPathName`). */
+  private def isHidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+
+  /** Whether no folder or file name on `p`'s path below depth `rootDepth` is hidden. */
+  private def isVisible(p: String, rootDepth: Int): Boolean = {
+    var q = new Path(p)
+    while (q.depth > rootDepth && !isHidden(q.getName)) q = q.getParent
+    q.depth <= rootDepth
+  }
+
+  private def parentOf(p: String): String = new Path(p).getParent.toString
+
+  private def leaves(path: String, distributedListing: Boolean)(
+      implicit spark: SparkSession): Seq[Leaf] = {
+    implicit val conf: Configuration = spark.sessionState.newHadoopConf()
+    val root = Fs.getFileSystem(conf, path).makeQualified(new Path(path))
+    val rootDepth = root.depth
+    // leaf dirs, and per parent folder: its data files' sizes + first path
+    val (leafDirs, byParent): (Seq[String], Map[String, (Seq[Long], String)]) =
       if (distributedListing) {
         import spark.implicits._
         val tree = Fs.listDistributed(spark, path) // arrives persisted
-        val dirs = tree.filter(_.isDirectory).map(_.path).persist()
-        val parents = dirs.map(d => new Path(d).getParent.toString).distinct()
+        val visible = tree.filter(e => isVisible(e.path, rootDepth))
+        val dirs = visible.filter(_.isDirectory).map(_.path).persist()
+        val parents = dirs.map(parentOf).distinct()
         val out = dirs.toDF("p").join(parents.toDF("p"), Seq("p"), "left_anti")
           .as[String].collect().toIndexedSeq
+        val files = visible.filter(!_.isDirectory).map(e => (parentOf(e.path), e.byteSize, e.path))
+          .toDF("p", "size", "path").groupBy("p").agg(collect_list("size"), min("path"))
+          .as[(String, Seq[Long], String)].collect()
         dirs.unpersist()
         tree.unpersist()
-        out
+        (out, files.map { case (p, sizes, first) => p -> (sizes, first) }.toMap)
       } else {
-        implicit val conf = spark.sessionState.newHadoopConf()
-        val dirs = Fs.list(path).filter(_.isDirectory).map(_.path)
-        val parentsOfDirs = dirs.map(d => new Path(d).getParent.toString).toSet
-        dirs.filterNot(parentsOfDirs.contains).toIndexedSeq
+        val (dirs, files) = Fs.list(path).filter(e => isVisible(e.path, rootDepth))
+          .partition(_.isDirectory)
+        val parentsOfDirs = dirs.map(d => parentOf(d.path)).toSet
+        (dirs.map(_.path).filterNot(parentsOfDirs.contains).toIndexedSeq,
+          files.groupBy(f => parentOf(f.path))
+            .map { case (p, fs) => p -> (fs.map(_.byteSize).toSeq, fs.map(_.path).min) })
       }
-    if (leaves.isEmpty) Seq(path.stripSuffix("/")) else leaves
+    val (paths, keys) =
+      if (leafDirs.isEmpty) (Seq(path.stripSuffix("/")), Seq(root.toString))
+      else (leafDirs, leafDirs)
+    paths.zip(keys).map { case (p, k) =>
+      byParent.get(k).fold(Leaf(p, Nil, None)) { case (sizes, first) => Leaf(p, sizes, Some(first)) }
+    }
   }
 
-  /** Compact every leaf partition folder, a few in flight at a time
-    * (each is itself a Spark job — reference Coalesce.scala:85-97).
+  /** The schema Spark infers for each file (its footer's), read on the driver. */
+  private def footerSchemas(files: Seq[String])(
+      implicit spark: SparkSession, conf: Configuration): Map[String, StructType] = {
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    def schemaOf(f: String): StructType = {
+      val input = HadoopInputFile.fromPath(new Path(f), conf)
+      val footer = ParquetFooterReader.readFooter(input, ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(new Path(f), footer), converter)
+    }
+    files.map(f => f -> schemaOf(f)).toMap
+  }
+
+  /** A leaf to rewrite into `n` files; `index` names its staged folder
+    * `LeafCol=index` under the temp root.
     */
-  def doItAll(tablePath: String, requestedSizeMb: Int = 100, concurrency: Int = 10,
-      distributedListing: Boolean = false, zorderCols: Seq[String] = Nil)(
-      implicit spark: SparkSession): Map[String, Int] = {
-    val leaves = getLowestFoldersPaths(tablePath, distributedListing)
-    val pool = Executors.newFixedThreadPool(concurrency.max(1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+  private final case class Rewrite(path: String, dir: Path, first: String, n: Int, index: Int)
+
+  /** Rewrite the `leaves` of `tablePath` that need it and swap them in;
+    * the shared body of [[doAutoCoalesce]] (one leaf) and [[doItAll]].
+    */
+  private def compact(tablePath: String, leaves: Seq[Leaf], requestedSizeMb: Int,
+      zorderCols: Seq[String])(implicit spark: SparkSession): Map[String, Int] = {
+    implicit val conf: Configuration = spark.sessionState.newHadoopConf()
+    val fs = Fs.getFileSystem(conf, tablePath)
+    val planned = leaves.map(l => l.path -> figureOutNumberOfPartitions(l.sizes, requestedSizeMb))
+    val todo = leaves.zip(planned).collect { case (l, (_, n)) if n > 0 => (l, n) }.zipWithIndex
+      .map { case ((l, n), g) => Rewrite(l.path, fs.makeQualified(new Path(l.path)), l.first.get, n, g) }
+    if (todo.isEmpty) return planned.toMap
+    val table = fs.makeQualified(new Path(tablePath))
+    require(table.getParent != null, s"cannot compact a file system root: $tablePath")
+    val tmp = new Path(table.getParent, s".${table.getName}_graft_tmp")
+    def staged(r: Rewrite) = new Path(tmp, s"$LeafCol=${r.index}")
+    val schemas = footerSchemas(todo.map(_.first))
+    val groups = todo.groupBy(r => (schemas(r.first), if (zorderCols.isEmpty) "" else r.path))
+    fs.delete(tmp, true)
     try {
-      val futures = leaves.map(l => Future(l -> doAutoCoalesce(l, requestedSizeMb, zorderCols)))
-      futures.map(Await.result(_, Duration.Inf)).toMap
-    } finally pool.shutdown()
+      groups.foreach { case ((schema, _), group) =>
+        rewrite(group, schema, zorderCols).write.mode("append").partitionBy(LeafCol).parquet(tmp.toString)
+      }
+      // a leaf whose files hold no rows stages nothing: it stays as it is
+      val written = fs.listStatus(tmp).map(_.getPath.getName).toSet
+      val done = todo.filter(r => written(staged(r).getName))
+      done.foreach(r => swap(fs, staged(r), r.dir))
+      val swapped = done.map(_.path).toSet
+      planned.map { case (l, n) => l -> (if (swapped(l)) n else -1) }.toMap
+    } finally fs.delete(tmp, true)
+  }
+
+  /** One DataFrame over a group of same-schema leaves, each row tagged
+    * with its leaf's index in [[LeafCol]] and partitioned so leaf g's rows
+    * land in at most n_g tasks. The plain spread hashes each row's file
+    * path and row position into one of n_g buckets (deterministic, so a
+    * retried map task routes every row as before) and shuffles on (leaf,
+    * bucket); the z-order spread range-partitions on (leaf, Morton code).
+    */
+  private def rewrite(group: Seq[Rewrite], schema: StructType,
+      zorderCols: Seq[String])(implicit spark: SparkSession): DataFrame = {
+    val data = spark.read.schema(schema).parquet(group.map(_.dir.toString): _*)
+    val file = col("_metadata.file_path")
+    val folderOf = regexp_extract(file, "^(.*)/[^/]*$", 1)
+    // `_metadata.file_path` is the file's URI string; match leaves the same way
+    val index = typedLit(group.map(r => r.dir.toUri.toString -> r.index).toMap)
+    val leaf = coalesce(element_at(index, folderOf),
+      raise_error(concat(lit("compaction: file outside every planned leaf: "), file)))
+    val tagged = data.withColumn(LeafCol, leaf)
+    if (zorderCols.isEmpty) {
+      val target = typedLit(group.map(r => r.index -> r.n).toMap)
+      tagged
+        .withColumn(BucketCol, pmod(hash(file, col("_metadata.row_index")), element_at(target, col(LeafCol))))
+        .repartition(col(LeafCol), col(BucketCol))
+        .drop(BucketCol)
+    } else {
+      graft.ops.ZOrder.withZValue(tagged, zorderCols, zCol = ZCol)
+        .repartitionByRange(group.map(_.n).sum, col(LeafCol), col(ZCol))
+        .sortWithinPartitions(LeafCol, ZCol)
+        .drop(ZCol)
+    }
+  }
+
+  /** live → aside, staged → live, delete aside. A failed promotion moves
+    * the original folder back (or, failing that, names where it is) and
+    * throws; nothing of the original is deleted before the promotion.
+    */
+  private def swap(fs: FileSystem, staged: Path, leaf: Path): Unit = {
+    val aside = new Path(leaf.getParent, s".${leaf.getName}_graft_aside")
+    // a live leaf exists, so an aside left by an earlier crash is stale
+    fs.delete(aside, true)
+    rename(fs, leaf, aside, s"swap: cannot move $leaf aside")
+    try rename(fs, staged, leaf, s"swap: cannot promote the compacted copy of $leaf")
+    catch { case NonFatal(e) =>
+      val restored = Try(fs.rename(aside, leaf)).getOrElse(false)
+      throw new IllegalStateException(
+        s"${e.getMessage}; its original files are ${if (restored) "back in place" else s"in $aside"}", e)
+    }
+    fs.delete(aside, true)
+  }
+
+  private def rename(fs: FileSystem, from: Path, to: Path, what: String): Unit = {
+    val ok = try fs.rename(from, to) catch { case NonFatal(e) => throw new IllegalStateException(what, e) }
+    if (!ok) throw new IllegalStateException(what)
   }
 }

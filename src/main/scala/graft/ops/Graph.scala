@@ -98,8 +98,10 @@ object Graph {
     // node ids materialized once — every round's zero-restore join
     // would otherwise re-evaluate the caller's `nodes` subtree (see
     // [[pageRank]]); freed before return (the result is a checkpoint).
-    // Guarded by `materialize` (r16 advice): an opt-out caller must not
-    // pay an eager job either — it accepts the per-round re-evaluation.
+    // Guarded by `materialize`: an opt-out caller skips this job and the
+    // edge checkpoint's, accepting the per-round re-evaluation. It still
+    // pays one eager job: the initial rank frame below is checkpointed
+    // unconditionally.
     val ids0 = nodes.select(col("id"))
     val ids = if (materialize) ids0.localCheckpoint() else ids0
     var r = ids.select(col("id"), lit(1000000L).as("rank")).localCheckpoint()
@@ -373,8 +375,10 @@ object Graph {
     val e0 = edges.select(col("src"), col("dst"), col(weightCol).as("w"))
     val e = if (materialize) e0.localCheckpoint() else e0
     // node ids materialized once — see [[hits]]; freed before return.
-    // Guarded by `materialize` (r16 advice): an opt-out caller must not
-    // pay an eager job either — it accepts the per-round re-evaluation.
+    // Guarded by `materialize`: an opt-out caller skips this job and the
+    // edge checkpoint's, accepting the per-round re-evaluation. It still
+    // pays one eager job: the initial score frame below is checkpointed
+    // unconditionally.
     val ids1 = nodes.select(col("id"))
     val ids = if (materialize) ids1.localCheckpoint() else ids1
 

@@ -1,15 +1,55 @@
 package graft.compact
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths => JPaths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.fs.FlakyFileSystem
 
 class CompactorSpec extends AnyFunSuite {
-  implicit lazy val spark: SparkSession = SparkTestSession.spark
+  implicit lazy val spark: SparkSession = {
+    val s = SparkTestSession.spark
+    s.sparkContext.hadoopConfiguration.set(s"fs.${FlakyFileSystem.Scheme}.impl",
+      classOf[FlakyFileSystem].getName)
+    s
+  }
+
+  private def local(uri: String) = JPaths.get(new Path(uri).toUri.getPath)
+
+  /** Visible data file name → bytes, directly in `dir`. */
+  private def dataFiles(dir: String): Map[String, Seq[Byte]] =
+    Files.list(local(dir)).iterator().asScala
+      .filter(f => Files.isRegularFile(f) && !f.getFileName.toString.matches("^[._].*"))
+      .map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq).toMap
+
+  /** Per `part` value: row count and an order-insensitive row hash. */
+  private def leafHashes(table: String): Map[String, (Long, BigDecimal)] =
+    spark.read.parquet(table).groupBy("part")
+      .agg(count(lit(1)), sum(xxhash64(col("id"), col("payload")).cast("decimal(38,0)")))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), BigDecimal(r.getDecimal(2)))).toMap
+
+  /** 20 leaves `part=p00..p19` of 4 files each under a new `file:` root.
+    * At a 1 MB target p00..p17 compact to 1 file, p18 (4 × ~400 KB) to 2,
+    * and p19 (4 × ~1.2 MB) is already compact.
+    */
+  private def twentyLeaves(prefix: String): String = {
+    val dir = "file:" + Files.createTempDirectory(prefix).toFile.getAbsolutePath + "/t"
+    def rows(p: Int) = if (p == 19) 72000 else if (p == 18) 24000 else 200
+    (0 until 20).map { p =>
+      val part = f"p$p%02d"
+      spark.range(0, rows(p), 1, 4)
+        .select(col("id"), sha2(concat(lit(part), col("id").cast("string")), 256).as("payload"), lit(part).as("part"))
+    }.reduce(_ union _).write.partitionBy("part").parquet(dir)
+    dir
+  }
 
   test("figureOutNumberOfPartitions heuristic") {
     // median >= target → skip
@@ -56,8 +96,117 @@ class CompactorSpec extends AnyFunSuite {
       .withColumn("m", date_format(col("l_shipdate"), "yyyy"))
     li.repartition(8).write.partitionBy("m").parquet(dir)
     val before = spark.read.parquet(dir).count()
-    val results = Compactor.doItAll(dir, requestedSizeMb = 100, concurrency = 4)
+    val results = Compactor.doItAll(dir, requestedSizeMb = 100)
     assert(results.nonEmpty && results.values.forall(v => v == 1 || v == -1))
     assert(spark.read.parquet(dir).count() == before)
+  }
+
+  test("doItAll rewrites 20 leaves in at most 2 jobs, keeping every leaf's rows") {
+    val dir = twentyLeaves("compact_one_job")
+    val leaves = Compactor.getLowestFoldersPaths(dir)
+    assert(leaves.size == 20 && leaves.forall(l => dataFiles(l).size == 4), "fixture: 20 leaves of 4 files")
+    val skipped = leaves.find(_.endsWith("part=p19")).get
+    val skippedFiles = dataFiles(skipped)
+    val hashes = leafHashes(dir)
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val res =
+      try {
+        val r = Compactor.doItAll(dir, requestedSizeMb = 1)
+        org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() <= 2, s"doItAll ran ${jobs.get()} jobs")
+    assert(res.keySet == leaves.toSet)
+    assert(res(skipped) == -1 && res(leaves.find(_.endsWith("part=p18")).get) == 2 &&
+      res.values.count(_ == 1) == 18, s"plan: $res")
+    // rows never move between leaves, and none are lost or doubled
+    assert(leafHashes(dir) == hashes)
+    res.foreach { case (l, n) =>
+      val files = dataFiles(l).size
+      assert(files >= 1 && files <= (if (n < 0) 4 else n), s"$l holds $files files for n = $n")
+    }
+    assert(dataFiles(skipped) == skippedFiles, "a skipped leaf must keep its files and bytes")
+  }
+
+  test("swap folders stay invisible: hidden folders are neither read nor picked as leaves") {
+    val dir = twentyLeaves("compact_hidden")
+    val parts = spark.read.parquet(dir).select("part").distinct().collect().map(_.getString(0)).toSet
+    val rows = spark.read.parquet(dir).count()
+    // a `.`-prefixed aside left by a crash, and a `_temporary` tree
+    for (hidden <- Seq(".part=p05_graft_aside", "_temporary/0/part=p05")) {
+      val d = local(s"$dir/$hidden")
+      Files.createDirectories(d)
+      dataFiles(s"$dir/part=p05").foreach { case (n, b) => Files.write(d.resolve(n), b.toArray) }
+    }
+    val leaves = Compactor.getLowestFoldersPaths(dir)
+    assert(leaves.size == 20 && !leaves.exists(_.contains("_graft_aside")) &&
+      !leaves.exists(_.contains("_temporary")), s"hidden folders picked as leaves: $leaves")
+    assert(Compactor.getLowestFoldersPaths(dir, distributedListing = true).toSet == leaves.toSet)
+    assert(spark.read.parquet(dir).count() == rows)
+    Compactor.doItAll(dir, requestedSizeMb = 1)
+    assert(spark.read.parquet(dir).select("part").distinct().collect().map(_.getString(0)).toSet == parts)
+    assert(spark.read.parquet(dir).count() == rows)
+    val parent = local(dir).getParent
+    assert(Files.list(parent).iterator().asScala.map(_.getFileName.toString).toSet == Set("t"),
+      "the temp root must be gone")
+  }
+
+  test("leaves with different columns each keep their own schema") {
+    import spark.implicits._
+    val dir = "file:" + Files.createTempDirectory("compact_schemas").toFile.getAbsolutePath + "/t"
+    val a = (0 until 30).map(i => (i.toLong, i * 2)).toDF("id", "a").repartition(3)
+    val b = (0 until 30).map(i => (i.toLong, s"s$i")).toDF("id", "b").repartition(3)
+    a.write.parquet(s"$dir/part=a")
+    b.write.parquet(s"$dir/part=b b") // Spark leaves a space unescaped in a partition folder name
+    a.write.parquet(s"$dir/part=c%3Ac") // an escaped ':'; its path URI encodes the '%' 
+    def snapshot(leaf: String): (String, Seq[String]) = {
+      val df = spark.read.parquet(leaf)
+      (df.schema.toDDL, df.collect().map(_.toString).sorted.toSeq)
+    }
+    val leaves = Compactor.getLowestFoldersPaths(dir)
+    val before = leaves.map(l => l -> snapshot(l)).toMap
+    val res = Compactor.doItAll(dir, requestedSizeMb = 100)
+    assert(res.values.toSet == Set(1), s"plan: $res")
+    leaves.foreach(l => assert(snapshot(l) == before(l), s"$l changed"))
+    assert(before(leaves.find(_.endsWith("b b")).get)._1.contains("b STRING"))
+  }
+
+  test("a leaf whose files hold no rows is left as it is") {
+    import spark.implicits._
+    val dir = "file:" + Files.createTempDirectory("compact_empty").toFile.getAbsolutePath + "/t"
+    val empty = Seq.empty[(Long, String)].toDF("id", "payload")
+    empty.write.mode("append").parquet(s"$dir/part=e") // each empty append leaves one file
+    empty.write.mode("append").parquet(s"$dir/part=e")
+    Seq((1L, "x"), (2L, "y")).toDF("id", "payload").repartition(2).write.parquet(s"$dir/part=f")
+    val before = dataFiles(s"$dir/part=e")
+    assert(before.size == 2, "fixture: two empty files")
+    val res = Compactor.doItAll(dir)
+    assert(res == Map(s"$dir/part=e" -> -1, s"$dir/part=f" -> 1), s"plan: $res")
+    assert(dataFiles(s"$dir/part=e") == before)
+    assert(leafHashes(dir).keySet == Set("f") && spark.read.parquet(dir).count() == 2)
+  }
+
+  test("a failed promotion throws naming the leaf and keeps its original files") {
+    val dir = twentyLeaves("compact_fault")
+    val flaky = FlakyFileSystem.flaky(dir)
+    val hashes = leafHashes(dir)
+    val victim = s"$dir/part=p03"
+    val originals = dataFiles(victim)
+    FlakyFileSystem.reset(0)
+    FlakyFileSystem.failRenamesOnto(_.endsWith("/part=p03"))
+    val e =
+      try intercept[IllegalStateException](Compactor.doItAll(flaky, requestedSizeMb = 1))
+      finally FlakyFileSystem.reset(0)
+    assert(e.getMessage.contains("part=p03"), e.getMessage)
+    // every original file of the victim is still on disk, live or aside
+    val onDisk = Files.walk(local(dir).getParent).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq).toSet
+    originals.foreach(o => assert(onDisk.contains(o), s"${o._1} of part=p03 is gone"))
+    // every other leaf still holds its rows, compacted or not
+    assert(leafHashes(dir) - "p03" == hashes - "p03")
   }
 }

@@ -13,6 +13,8 @@ import org.apache.hadoop.util.Progressable
   * under the `flaky:` scheme, whose `create` throws for the first
   * [[FlakyFileSystem.failures]] calls on each path. Every call is
   * counted per path, so a spec can pin how many attempts a file took.
+  * Opt-in, `rename` throws for every target [[FlakyFileSystem.failRenamesOnto]]
+  * picks.
   * State lives in the companion: Spark's local-mode tasks share the
   * test JVM, and whichever cached instance they resolve sees it.
   */
@@ -33,16 +35,25 @@ class FlakyFileSystem extends RawLocalFileSystem {
     failIfDue(f)
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    if (failRenameOnto(key(dst))) throw new IOException(s"injected rename failure: $src -> $dst")
+    super.rename(src, dst)
+  }
 }
 
 object FlakyFileSystem {
   val Scheme = "flaky"
   val Uri: URI = URI.create(s"$Scheme:///")
   @volatile var failures = 0
+  @volatile private var failRenameOnto: String => Boolean = _ => false
   private val calls = new ConcurrentHashMap[String, AtomicInteger]()
 
-  /** Fail the first `k` creates of every path from now on. */
-  def reset(k: Int): Unit = { failures = k; calls.clear() }
+  /** Fail the first `k` creates of every path from now on; renames succeed. */
+  def reset(k: Int): Unit = { failures = k; failRenameOnto = _ => false; calls.clear() }
+
+  /** Fail every rename onto a target whose scheme-less path satisfies `p`. */
+  def failRenamesOnto(p: String => Boolean): Unit = failRenameOnto = p
 
   /** `create` calls seen for `uri` since the last [[reset]]. */
   def createCalls(uri: String): Int =
