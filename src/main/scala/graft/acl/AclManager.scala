@@ -1,10 +1,8 @@
 package graft.acl
 
-import java.util.concurrent.Executors
-
-import scala.concurrent.duration._
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, Future}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -39,9 +37,6 @@ object AclManager {
     b.build()
   }
 
-  private def withPool[T](threads: Int)(body: ExecutionContext => T): T =
-    Fs.withPool(threads)(body)
-
   /** Multithreaded `modifyAclEntries` over paths; paths that vanished are
     * skipped (reference acl/AclManager.scala:57-80); retry ≤5.
     */
@@ -64,7 +59,7 @@ object AclManager {
     val existing = paths.filter(p => fs.exists(new Path(p)))
     Retry.retryFailed[String](
       existing,
-      work => withPool(threads) { implicit ec =>
+      work => Fs.withPool(threads) { implicit ec =>
         val fut = work.map { p => Future {
           val ok = try { fs.modifyAclEntries(new Path(p), entries); true }
                    catch { case _: Throwable => false }
@@ -133,7 +128,7 @@ object AclManager {
     val fs = Fs.getFileSystem(conf, paths.head)
     Retry.retryFailed[String](
       paths.filter(p => fs.exists(new Path(p))),
-      work => withPool(threads) { implicit ec =>
+      work => Fs.withPool(threads) { implicit ec =>
         val fut = work.map { p => Future {
           val ok = try { fs.removeAcl(new Path(p)); true }
                    catch { case _: Throwable => false }
@@ -215,7 +210,7 @@ object AclManager {
             val fs = path.getFileSystem(c)
             if (fs.exists(path)) op(fs, path)
             true // vanished paths are skipped-success, as in the driver variant
-          } catch { case _: Throwable => false }
+          } catch { case NonFatal(_) => false }
           FsOperationResult(p, ok)
         }
       })

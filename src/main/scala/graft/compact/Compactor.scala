@@ -34,7 +34,9 @@ import graft.fs.Fs
   * and the aside folders have `.`-prefixed names, which Spark's file
   * index ignores, so a concurrent reader never sees a leaf twice and a
   * crash leaves no extra partition behind; [[getLowestFoldersPaths]]
-  * skips them too.
+  * skips them too. [[doItAll]] and [[doAutoCoalesce]] start by moving
+  * back an aside folder whose leaf is missing, so a swap that failed
+  * half way (or a crash between its renames) heals on the next run.
   *
   * Two reference bugs fixed deliberately (SURVEY §7.6):
   *   - `numOfFiles == -1` (skip sentinel) was passed into `coalesce()`
@@ -48,6 +50,8 @@ object Compactor {
   private val LeafCol = "__graft_leaf"
   private val BucketCol = "__graft_bucket"
   private val ZCol = "__graft_z"
+  private val AsideSuffix = "_graft_aside"
+  private val AsideName = ("""\.(.+)""" + AsideSuffix).r
 
   /** Target file count, or -1 when compaction should be skipped: fewer
     * than 2 files, or median file size already ≥ requested (reference
@@ -81,7 +85,8 @@ object Compactor {
       implicit spark: SparkSession): Int = {
     val conf = spark.sessionState.newHadoopConf()
     val fs = Fs.getFileSystem(conf, path)
-    val (dirs, files) = fs.listStatus(new Path(path))
+    val dir = fs.makeQualified(new Path(path))
+    val (dirs, files) = listRestoring(fs, dir)(fs.listStatus(dir))
       .filterNot(s => isHidden(s.getPath.getName)).partition(_.isDirectory)
     require(dirs.isEmpty,
       s"$path has sub-folders (${dirs.head.getPath.getName}, ...): compact a partitioned table with doItAll")
@@ -103,7 +108,7 @@ object Compactor {
     */
   def getLowestFoldersPaths(path: String, distributedListing: Boolean = false)(
       implicit spark: SparkSession): Seq[String] =
-    leaves(path, distributedListing).map(_.path)
+    leaves(path, distributedListing, restore = false).map(_.path)
 
   /** Compact every leaf partition folder of `tablePath` (reference
     * Coalesce.scala:85-97 ran one job per leaf on a 10-thread pool).
@@ -121,7 +126,9 @@ object Compactor {
   def doItAll(tablePath: String, requestedSizeMb: Int = 100,
       distributedListing: Boolean = false, zorderCols: Seq[String] = Nil)(
       implicit spark: SparkSession): Map[String, Int] = {
-    val all = leaves(tablePath, distributedListing)
+    val fs = Fs.getFileSystem(spark.sessionState.newHadoopConf(), tablePath)
+    val all = listRestoring(fs, fs.makeQualified(new Path(tablePath)))(
+      leaves(tablePath, distributedListing, restore = true))
     compact(tablePath, all, requestedSizeMb, zorderCols)
   }
 
@@ -143,10 +150,54 @@ object Compactor {
 
   private def parentOf(p: String): String = new Path(p).getParent.toString
 
-  private def leaves(path: String, distributedListing: Boolean)(
+  /** Where [[swap]] moves a live `leaf` while its compacted copy is promoted. */
+  private def asideOf(leaf: Path): Path = new Path(leaf.getParent, s".${leaf.getName}$AsideSuffix")
+
+  /** The aside folders among `dirs` under a visible parent, each paired
+    * with the live leaf it belongs to.
+    */
+  private def asides(dirs: Seq[String], rootDepth: Int): Seq[(Path, Path)] =
+    dirs.map(new Path(_)).flatMap { a =>
+      a.getName match {
+        case AsideName(leaf) if isVisible(a.getParent.toString, rootDepth) => Some(a -> new Path(a.getParent, leaf))
+        case _ => None
+      }
+    }
+
+  /** Moves each aside folder whose leaf is not `live` back into place;
+    * true if any moved. An aside beside a live leaf is stale, and [[swap]]
+    * deletes it.
+    */
+  private def restoreOrphans(fs: FileSystem, found: Seq[(Path, Path)], live: Set[String]): Boolean = {
+    val orphans = found.filterNot { case (_, leaf) => live(leaf.toString) }
+    orphans.foreach { case (aside, leaf) => moveBack(fs, aside, leaf) }
+    orphans.nonEmpty
+  }
+
+  private def moveBack(fs: FileSystem, aside: Path, leaf: Path): Unit =
+    rename(fs, aside, leaf, s"cannot move $aside back to $leaf")
+
+  /** `list`, or, when it fails because `dir` itself is missing and sits
+    * aside (its own swap failed half way), `list` again after moving it
+    * back.
+    */
+  private def listRestoring[T](fs: FileSystem, dir: Path)(list: => T): T =
+    try list catch { case NonFatal(_) if !fs.exists(dir) && fs.exists(asideOf(dir)) =>
+      moveBack(fs, asideOf(dir), dir)
+      list
+    }
+
+  /** The leaves under `path`. With `restore`, first moves back every
+    * aside folder whose leaf is missing (a promotion that failed and
+    * could not move it back, or a crash between [[swap]]'s two renames):
+    * the asides are found in the same listing, and only a restore lists
+    * the tree again.
+    */
+  private def leaves(path: String, distributedListing: Boolean, restore: Boolean)(
       implicit spark: SparkSession): Seq[Leaf] = {
     implicit val conf: Configuration = spark.sessionState.newHadoopConf()
-    val root = Fs.getFileSystem(conf, path).makeQualified(new Path(path))
+    val fs = Fs.getFileSystem(conf, path)
+    val root = fs.makeQualified(new Path(path))
     val rootDepth = root.depth
     // leaf dirs, and per parent folder: its data files' sizes + first path
     val (leafDirs, byParent): (Seq[String], Map[String, (Seq[Long], String)]) =
@@ -155,6 +206,16 @@ object Compactor {
         val tree = Fs.listDistributed(spark, path) // arrives persisted
         val visible = tree.filter(e => isVisible(e.path, rootDepth))
         val dirs = visible.filter(_.isDirectory).map(_.path).persist()
+        if (restore) {
+          val found = asides(tree.filter(e => e.isDirectory && e.path.endsWith(AsideSuffix))
+            .map(_.path).collect().toSeq, rootDepth)
+          val wanted = found.map(_._2.toString).toSet
+          if (found.nonEmpty && restoreOrphans(fs, found, dirs.filter(wanted(_)).collect().toSet)) {
+            dirs.unpersist()
+            tree.unpersist()
+            return leaves(path, distributedListing, restore)
+          }
+        }
         val parents = dirs.map(parentOf).distinct()
         val out = dirs.toDF("p").join(parents.toDF("p"), Seq("p"), "left_anti")
           .as[String].collect().toIndexedSeq
@@ -165,8 +226,10 @@ object Compactor {
         tree.unpersist()
         (out, files.map { case (p, sizes, first) => p -> (sizes, first) }.toMap)
       } else {
-        val (dirs, files) = Fs.list(path).filter(e => isVisible(e.path, rootDepth))
-          .partition(_.isDirectory)
+        val listing = Fs.list(path)
+        val (dirs, files) = listing.filter(e => isVisible(e.path, rootDepth)).partition(_.isDirectory)
+        if (restore && restoreOrphans(fs, asides(listing.collect { case e if e.isDirectory => e.path }.toSeq,
+            rootDepth), dirs.map(_.path).toSet)) return leaves(path, distributedListing, restore)
         val parentsOfDirs = dirs.map(d => parentOf(d.path)).toSet
         (dirs.map(_.path).filterNot(parentsOfDirs.contains).toIndexedSeq,
           files.groupBy(f => parentOf(f.path))
@@ -264,7 +327,7 @@ object Compactor {
     * throws; nothing of the original is deleted before the promotion.
     */
   private def swap(fs: FileSystem, staged: Path, leaf: Path): Unit = {
-    val aside = new Path(leaf.getParent, s".${leaf.getName}_graft_aside")
+    val aside = asideOf(leaf)
     // a live leaf exists, so an aside left by an earlier crash is stale
     fs.delete(aside, true)
     rename(fs, leaf, aside, s"swap: cannot move $leaf aside")

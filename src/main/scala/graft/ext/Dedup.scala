@@ -978,59 +978,41 @@ object Dedup {
     */
   private[graft] def clustersWithRounds(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 50): (DataFrame, Int) = {
+    // pinned by an eager checkpoint, not a cache: round 1 reads the edges
+    // in several places, and a cache not yet filled runs its plan once
+    // per place
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .unionByName(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct().persist()
-    // localCheckpoint, not persist: the jump SELF-JOINS each round's
-    // result, so without truncation the logical plan doubles per round
-    // (2^rounds nodes — a driver OOM long before the data is big);
-    // checkpointing materializes the round and cuts lineage to depth 1
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster_id", col("id")).localCheckpoint()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("cluster_id").as("dstLabel")), "dst")
-        .groupBy(col("src").as("id")).agg(min(col("dstLabel")).as("nbrMin"))
-      val propagated = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("cluster_id").as("prev"),
-          least(col("cluster_id"), coalesce(col("nbrMin"), col("cluster_id"))).as("cluster_id"))
-      // pointer jump: follow the label one hop (label(label(v))). The
-      // left join always matches — a label is the id of some node — and
-      // label(x) <= x, so the jump only ever improves toward the root.
-      // prev rides along so convergence is read off the SAME
-      // materialized round instead of a separate join against labels.
-      val updated = propagated.as("a")
-        .join(propagated.select(col("id").as("cluster_id"), col("cluster_id").as("grand")).as("b"),
-          Seq("cluster_id"), "left")
-        .select(col("id"), coalesce(col("grand"), col("cluster_id")).as("cluster_id"),
-          col("prev"))
-        .localCheckpoint(false)
-      // ONE job per round (r16 verdict task 5): the checkpoint is LAZY
-      // and the convergence count is its materializing action — the
-      // filter+count scans every partition of the round's RDD, caching
-      // the blocks as a side effect (localCheckpoint marks the RDD
-      // persisted; the first full pass fills it), so the separate eager
-      // checkpoint job this loop used to run bought no information
-      val changed = updated.filter(col("cluster_id") =!= col("prev")).count()
-      unpersistCheckpoint(labels)
-      labels = updated
-      converged = changed == 0
-      i += 1
-    }
-    edges.unpersist()
+      .distinct().localCheckpoint()
+    // each round is checkpointed ([[graft.ops.Blocks.converge]]), not
+    // persisted: the jump SELF-JOINS each round's result, so without
+    // truncation the logical plan doubles per round (2^rounds nodes — a
+    // driver OOM long before the data is big)
+    val (labels, rounds, converged) = graft.ops.Blocks.converge(
+      edges.select(col("src").as("id")).distinct().withColumn("cluster_id", col("id")), maxIter)(
+      { labels =>
+        val nbrMin = edges
+          .join(labels.select(col("id").as("dst"), col("cluster_id").as("dstLabel")), "dst")
+          .groupBy(col("src").as("id")).agg(min(col("dstLabel")).as("nbrMin"))
+        val propagated = labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"), col("cluster_id").as("prev"),
+            least(col("cluster_id"), coalesce(col("nbrMin"), col("cluster_id"))).as("cluster_id"))
+        // pointer jump: follow the label one hop (label(label(v))). The
+        // left join always matches — a label is the id of some node — and
+        // label(x) <= x, so the jump only ever improves toward the root.
+        // prev rides along so convergence is read off the SAME
+        // materialized round instead of a separate join against labels.
+        propagated.as("a")
+          .join(propagated.select(col("id").as("cluster_id"), col("cluster_id").as("grand")).as("b"),
+            Seq("cluster_id"), "left")
+          .select(col("id"), coalesce(col("grand"), col("cluster_id")).as("cluster_id"),
+            col("prev"))
+      },
+      col("cluster_id") =!= col("prev"))
+    graft.ops.Blocks.free(edges) // the result is a checkpoint
     require(converged, s"label propagation did not converge in $maxIter rounds")
-    (labels.select(col("id"), col("cluster_id")), i)
+    (labels.select(col("id"), col("cluster_id")), rounds)
   }
-
-  /** Free a [[org.apache.spark.sql.Dataset.localCheckpoint]]'s blocks —
-    * now the shared [[graft.ops.Blocks.free]] (every iterative operator
-    * follows the same one-live-checkpoint contract; see Blocks'
-    * scaladoc for why `Dataset.unpersist` can't do this).
-    */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    graft.ops.Blocks.free(df)
 
   /** `docs` minus every non-representative near-dup cluster member: the
     * composition a pipeline actually runs (pairs → [[clusters]] → keep

@@ -1,5 +1,7 @@
 package graft.fs
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -185,7 +187,7 @@ object Delta {
       it.map { relPath =>
         val p = new org.apache.hadoop.fs.Path(s"$targetUri/$relPath")
         val ok = try { val fs = p.getFileSystem(c); fs.delete(p, true); !fs.exists(p) }
-                 catch { case _: Throwable => false }
+                 catch { case NonFatal(_) => false }
         FsOperationResult(relPath, ok)
       }
     }.filter(!_.success).count()
@@ -200,7 +202,7 @@ object Delta {
         val c = conf.value
         it.map { relPath =>
           val p = new org.apache.hadoop.fs.Path(s"$targetUri/$relPath")
-          val ok = try p.getFileSystem(c).mkdirs(p) catch { case _: Throwable => false }
+          val ok = try p.getFileSystem(c).mkdirs(p) catch { case NonFatal(_) => false }
           FsOperationResult(relPath, ok)
         }
       }.filter(!_.success).count()

@@ -1,9 +1,6 @@
 package graft.fs
 
-import java.util.concurrent.Executors
-
-import scala.concurrent.duration._
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, Future}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -15,9 +12,6 @@ import org.apache.hadoop.fs.Path
   */
 object LocalExecution {
 
-  private def withPool[T](threads: Int)(body: ExecutionContext => T): T =
-    Fs.withPool(threads)(body)
-
   /** Multithreaded rename with retry ≤5 and false-negative repair: a
     * "failed" rename whose source is gone and target exists already took
     * effect (reference fs/LocalExecution.scala:70-97,151-157).
@@ -28,7 +22,7 @@ object LocalExecution {
     val fs = Fs.getFileSystem(conf, paths.head.sourcePath)
     Retry.retryFailed[Paths](
       paths,
-      work => withPool(threads) { implicit ec =>
+      work => Fs.withPool(threads) { implicit ec =>
         val fut = work.map { p => Future {
           val ok = try fs.rename(new Path(p.sourcePath), new Path(p.targetPath))
                    catch { case _: Throwable => false }
@@ -135,7 +129,7 @@ object LocalExecution {
     val fs = Fs.getFileSystem(conf, paths.head)
     Retry.retryFailed[String](
       paths,
-      work => withPool(threads) { implicit ec =>
+      work => Fs.withPool(threads) { implicit ec =>
         val fut = work.map { p => Future {
           val ok = try { fs.delete(new Path(p), true); !fs.exists(new Path(p)) }
                    catch { case _: Throwable => false }

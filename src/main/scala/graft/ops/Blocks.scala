@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Block-manager hygiene for iterative operators and long-lived
   * sessions.
@@ -47,6 +47,43 @@ object Blocks {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** The round driver of every converged iterative operator: runs
+    * `round` from `init` until a round has no row matching `changed`
+    * or `maxRounds` rounds ran. `round` gets the previous frame (`init`,
+    * then the last round's output) and returns the next one, carrying
+    * the previous state as the columns `changed` compares. Returns the
+    * last frame, the rounds run, and whether the last round changed
+    * nothing.
+    *
+    * Each round is a lazy `localCheckpoint` (plan depth stays one round
+    * however deep the trajectory runs) whose one action is the count of
+    * its rows matching `changed`, the answer to "stable?". The count
+    * scans the round's RDD: one job, no exchange (`Dataset.count` would
+    * add a partial-count shuffle, a second job under AQE). The previous
+    * round is freed after that count, but only if this driver
+    * checkpointed it: `init` may read the caller's own checkpoints
+    * (edges, node ids), which stay the caller's to free. Freeing is safe
+    * once any job has read the new round: at the end of a job that
+    * touches a locally checkpointed RDD, Spark
+    * (`LocalRDDCheckpointData.doCheckpoint`) caches every partition the
+    * job skipped, so the new round never needs the freed one again
+    * (BlocksSpec pins this).
+    */
+  private[graft] def converge(init: DataFrame, maxRounds: Int)(
+      round: DataFrame => DataFrame, changed: Column): (DataFrame, Int, Boolean) = {
+    var cur = init
+    var rounds = 0
+    var stable = false
+    while (rounds < maxRounds && !stable) {
+      val next = round(cur).localCheckpoint(false)
+      stable = next.filter(changed).queryExecution.toRdd.count() == 0L
+      if (rounds > 0) free(cur)
+      cur = next
+      rounds += 1
+    }
+    (cur, rounds, stable)
+  }
 
   /** The REAL materialized size of an (eagerly) localCheckpointed
     * frame, read from the block manager with NO job: sums mem+disk

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics in the Pregel-on-DataFrames shape:
@@ -44,28 +44,57 @@ object Graph {
     * frame too (the [[graft.ext.Dedup.clusters]] lineage rule).
     */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 3,
-      materialize: Boolean = true): DataFrame = {
+      materialize: Boolean = true): DataFrame =
+    rankFixed(nodes.select(col("id")), edges, iters, None, materialize)(uniformPrior)
+
+  /** `df` pinned once by an eager `localCheckpoint` when `materialize`. */
+  private def pin(df: DataFrame, materialize: Boolean): DataFrame =
+    if (materialize) df.localCheckpoint() else df
+
+  private val uniformPrior: DataFrame => DataFrame =
+    _.select(col("id"), lit(1000000L).as("rank"))
+
+  /** A PageRank loop's inputs, each pinned once when `materialize`: the
+    * edges carrying their source's out-degree `d` (or, with `weightCol`,
+    * weight sum `ws`), the node frame `ids` (id plus whatever the
+    * round's `floor` reads), and the SQL share of a source's rank one
+    * edge carries. `ids` is pinned because every round's zero-restore
+    * join would otherwise embed the caller's whole `nodes` subtree (for
+    * the crawl queries: a documents scan + link harvest + distinct) once
+    * per round — r16 measured g10's single action at 16 parquet scans /
+    * 44 exchanges from exactly this duplication.
+    */
+  private def rankInputs(ids: DataFrame, edges: DataFrame, weightCol: Option[String],
+      materialize: Boolean): (DataFrame, DataFrame, String) = {
+    val (norm, share) = weightCol.fold((count(lit(1)).as("d"), "rank div d"))(
+      w => (sum(col(w)).as("ws"), s"rank * $w div ws"))
+    (pin(edges.join(edges.groupBy("src").agg(norm), "src"), materialize),
+      pin(ids, materialize), share)
+  }
+
+  /** One round of the integer recurrence: `r` (id, rank, …) spreads
+    * `share` along the edges `e`, and every node of `ids` gets `floor`
+    * (the teleport mass) plus 85 % of what reached it.
+    */
+  private def rankRound(e: DataFrame, ids: DataFrame, r: DataFrame, share: String,
+      floor: Column): DataFrame = {
+    val contrib = e.join(r.select(col("id").as("src"), col("rank")), "src")
+      .select(col("dst").as("id"), expr(share).as("c"))
+      .groupBy("id").agg(sum("c").as("c"))
+    ids.join(contrib, Seq("id"), "left")
+      .select(col("id"),
+        (floor + expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("rank"))
+  }
+
+  /** The lazy fixed-round spellings: `iters` rounds from `init(ids)`,
+    * one plan, no job of their own beyond the input pins.
+    */
+  private def rankFixed(ids: DataFrame, edges: DataFrame, iters: Int,
+      weightCol: Option[String], materialize: Boolean, floor: Column = lit(150000L))(
+      init: DataFrame => DataFrame): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val joined = edges.join(deg, "src")
-    val e = if (materialize) joined.localCheckpoint() else joined
-    // materialize the node-id frame ONCE: the per-iteration zero-restore
-    // join otherwise embeds the caller's whole `nodes` subtree (for the
-    // crawl queries: a documents scan + link harvest + distinct) iters+1
-    // times in the final plan — r16 measured g10's single action at 16
-    // parquet scans / 44 exchanges from exactly this duplication
-    val ids0 = nodes.select(col("id"))
-    val ids = if (materialize) ids0.localCheckpoint() else ids0
-    var r = ids.select(col("id"), lit(1000000L).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(r.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr("rank div d").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      r = ids.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(150000L) + expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("rank"))
-    }
-    r
+    val (e, pinned, share) = rankInputs(ids, edges, weightCol, materialize)
+    (1 to iters).foldLeft(init(pinned))((r, _) => rankRound(e, pinned, r, share, floor))
   }
 
   /** [[pageRank]] with CONVERGENCE DETECTION (the r12 verdict task 7
@@ -92,50 +121,17 @@ object Graph {
       materialize: Boolean = true): (DataFrame, Int) = {
     require(maxIters >= 1, "maxIters must be >= 1")
     require(tolMicros >= 0L, "tolMicros must be >= 0")
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val joined = edges.join(deg, "src")
-    val e = if (materialize) joined.localCheckpoint() else joined
-    // node ids materialized once — every round's zero-restore join
-    // would otherwise re-evaluate the caller's `nodes` subtree (see
-    // [[pageRank]]); freed before return (the result is a checkpoint).
-    // Guarded by `materialize`: an opt-out caller skips this job and the
-    // edge checkpoint's, accepting the per-round re-evaluation. It still
-    // pays one eager job: the initial rank frame below is checkpointed
-    // unconditionally.
-    val ids0 = nodes.select(col("id"))
-    val ids = if (materialize) ids0.localCheckpoint() else ids0
-    var r = ids.select(col("id"), lit(1000000L).as("rank")).localCheckpoint()
-    var rounds = 0
-    var stable = false
-    while (rounds < maxIters && !stable) {
-      val contrib = e.join(r.select(col("id").as("src"), col("rank")), "src")
-        .select(col("dst").as("id"), expr("rank div d").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      // ONE job per round (r16 verdict task 5, the clusters fusion):
-      // the previous round's rank rides the LAZY checkpoint as `_prev`,
-      // and the tolerance count below is the checkpoint's materializing
-      // action — the old protocol (eager checkpoint job + a separate
-      // join-and-isEmpty action, the latter take-escalating over EVERY
-      // partition exactly when the round IS stable) paid 2+ driver jobs
-      // per round for the same information
-      val next = ids.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(150000L) + expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100"))
-            .as("rank"))
-        .join(r.select(col("id"), col("rank").as("_prev")), "id")
-        .localCheckpoint(false)
-      rounds += 1
-      stable = next.filter(abs(col("rank") - col("_prev")) > tolMicros)
-        .count() == 0L
-      // next is materialized (by the count) and has read r — the
-      // previous round's blocks are dead weight from here
-      // ([[graft.ops.Blocks]] contract: at most ONE live checkpoint
-      // survives the call, the returned frame)
-      Blocks.free(r)
-      r = next
-    }
-    if (materialize) Blocks.free(ids) // every consumer of ids has materialized
-    if (materialize) Blocks.free(e) // r is a checkpoint; e is no longer needed
+    // edges and ids are pinned only when `materialize`; an opt-out
+    // caller runs no eager job at all and re-evaluates them per round
+    val (e, ids, share) = rankInputs(nodes.select(col("id")), edges, None, materialize)
+    // the previous round's rank rides each round as `_prev`, so the
+    // tolerance count is the round's one action ([[Blocks.converge]])
+    val (r, rounds, _) = Blocks.converge(uniformPrior(ids), maxIters)(
+      r => rankRound(e, ids, r, share, lit(150000L))
+        .join(r.select(col("id"), col("rank").as("_prev")), "id"),
+      abs(col("rank") - col("_prev")) > tolMicros)
+    // the result is a checkpoint: the pinned inputs are dead weight
+    if (materialize) { Blocks.free(ids); Blocks.free(e) }
     (r.select(col("id"), col("rank")), rounds)
   }
 
@@ -164,28 +160,13 @@ object Graph {
     */
   def pageRankPersonalized(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
       iters: Int = 3, materialize: Boolean = true): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val joined = edges.join(deg, "src")
-    val e = if (materialize) joined.localCheckpoint() else joined
-    val seeded0 = nodes.select(col("id"))
+    val seeded = nodes.select(col("id"))
       .join(seeds.select(col("id")).distinct().withColumn("_s", lit(1)),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("_s"), lit(0)).as("is_seed"))
-    // materialized once — referenced per iteration (see [[pageRank]])
-    val seeded = if (materialize) seeded0.localCheckpoint() else seeded0
-    var r = seeded.select(col("id"), col("is_seed"),
-      (col("is_seed").cast("long") * 1000000L).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(r.select(col("id").as("src"), col("rank")), "src")
-        .select(col("dst").as("id"), expr("rank div d").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      r = seeded.join(contrib, Seq("id"), "left")
-        .select(col("id"), col("is_seed"),
-          (col("is_seed").cast("long") * 150000L +
-            expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("rank"))
-    }
-    r.select(col("id"), col("rank"))
+    rankFixed(seeded, edges, iters, None, materialize,
+      floor = col("is_seed").cast("long") * 150000L)(
+      _.select(col("id"), (col("is_seed").cast("long") * 1000000L).as("rank")))
   }
 
   /** Weight-proportional PageRank — [[pageRank]] with each node's rank
@@ -203,25 +184,8 @@ object Graph {
     * (optionally checkpointed) edge frame.
     */
   def pageRankWeighted(nodes: DataFrame, edges: DataFrame, iters: Int = 3,
-      weightCol: String = "w", materialize: Boolean = true): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    val wsum = edges.groupBy("src").agg(sum(col(weightCol)).as("ws"))
-    val joined = edges.join(wsum, "src")
-    val e = if (materialize) joined.localCheckpoint() else joined
-    // node ids materialized once — see [[pageRank]]
-    val ids0 = nodes.select(col("id"))
-    val ids = if (materialize) ids0.localCheckpoint() else ids0
-    var r = ids.select(col("id"), lit(1000000L).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(r.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr(s"rank * $weightCol div ws").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      r = ids.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(150000L) + expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("rank"))
-    }
-    r
-  }
+      weightCol: String = "w", materialize: Boolean = true): DataFrame =
+    rankFixed(nodes.select(col("id")), edges, iters, Some(weightCol), materialize)(uniformPrior)
 
   /** [[pageRankWeighted]] with a WARM-START rank vector — the
     * incremental-recrawl primitive behind [[RankIndex]]: instead of
@@ -245,27 +209,10 @@ object Graph {
     */
   def pageRankWeightedFrom(nodes: DataFrame, edges: DataFrame,
       init: DataFrame, iters: Int = 3, weightCol: String = "w",
-      materialize: Boolean = true): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    val wsum = edges.groupBy("src").agg(sum(col(weightCol)).as("ws"))
-    val joined = edges.join(wsum, "src")
-    val e = if (materialize) joined.localCheckpoint() else joined
-    // node ids materialized once — see [[pageRank]]
-    val ids0 = nodes.select(col("id"))
-    val ids = if (materialize) ids0.localCheckpoint() else ids0
-    var r = ids
-      .join(init.select(col("id"), col("rank").as("_init")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("_init"), lit(1000000L)).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(r.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr(s"rank * $weightCol div ws").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      r = ids.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(150000L) + expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("rank"))
-    }
-    r
-  }
+      materialize: Boolean = true): DataFrame =
+    rankFixed(nodes.select(col("id")), edges, iters, Some(weightCol), materialize)(
+      _.join(init.select(col("id"), col("rank").as("_init")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("_init"), lit(1000000L)).as("rank")))
 
   /** HITS hubs-and-authorities over a weighted DIRECTED graph — the
     * other classic crawl-frontier centrality next to
@@ -291,61 +238,17 @@ object Graph {
     * shape: two shuffles per half-iteration (the contribution rollup +
     * the normalizer agg, the latter a 1-row reduce), all keyed at node
     * cardinality — domain-level for a crawl, never page-level.
+    *
+    * A fixed-round run is [[hitsConverged]] capped at `iters`: it stops
+    * early only at an exact integer fixpoint, which every further round
+    * repeats, so the scores are exactly those of `iters` rounds. Each
+    * round is checkpointed, so plan depth stays one round; `materialize`
+    * governs only the edge and node-id pins.
     */
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int = 2,
       weightCol: String = "w", materialize: Boolean = true): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val e0 = edges.select(col("src"), col("dst"), col(weightCol).as("w"))
-    val e = if (materialize) e0.localCheckpoint() else e0
-    // node ids materialized once — referenced by every half-step's
-    // zero-restore join (see [[pageRank]]: without this the caller's
-    // whole `nodes` subtree re-evaluates per half-step)
-    val ids0 = nodes.select(col("id"))
-    val ids = if (materialize) ids0.localCheckpoint() else ids0
-
-    // one weighted-sum + L1-normalize half-step: scores keyed by
-    // `from` flow along (from → to) edges and land keyed by `to`
-    def halfStep(scores: DataFrame, from: String, to: String): DataFrame = {
-      val raw = e.join(scores.withColumnRenamed("id", from), from)
-        .select(col(to).as("id"), (col("s") * col("w")).as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      val withZeros = ids.join(raw, Seq("id"), "left")
-        .select(col("id"), coalesce(col("c"), lit(0L)).as("c"))
-      val total = withZeros.agg(greatest(sum("c"), lit(1L)).as("tot"))
-      withZeros.crossJoin(broadcast(total))
-        .select(col("id"), expr("c * 1000000L div tot").as("s"))
-    }
-
-    // both vectors ride ONE combined (id, a_s, h_s) frame per round:
-    // one checkpoint job per round instead of two (the auth half-step's
-    // node-cardinality subtree re-evaluates inside the hub side of the
-    // same job — far cheaper than a whole extra driver job per round)
-    var cur = ids.select(col("id"), lit(0L).as("a_s"), lit(1000000L).as("h_s"))
-    var curOwned = false
-    for (_ <- 1 to iters) {
-      // materialize each round (the pageRankWeighted discipline —
-      // Graph.scala's join-chain lineage doubles per iteration, so an
-      // uncheckpointed run at iters=10+ builds an exponentially nested
-      // plan) and free the previous round's blocks immediately
-      // ([[graft.ops.Blocks]] contract)
-      val a = halfStep(cur.select(col("id"), col("h_s").as("s")), "src", "dst")
-      val h = halfStep(a, "dst", "src")
-      val nxt0 = a.withColumnRenamed("s", "a_s")
-        .join(h.withColumnRenamed("s", "h_s"), "id")
-      if (materialize) {
-        val nxt = nxt0.localCheckpoint()
-        if (curOwned) Blocks.free(cur)
-        cur = nxt; curOwned = true
-      } else cur = nxt0
-    }
-    val out = cur.select(col("id"), col("h_s").as("hub_micro"),
-      col("a_s").as("auth_micro"))
-    if (materialize) {
-      // the returned frame reads only the final round's checkpoint —
-      // edge and id blocks are dead weight from here
-      Blocks.free(e); Blocks.free(ids)
-    }
-    out
+    hitsConverged(nodes, edges, iters, weightCol = weightCol, materialize = materialize)._1
   }
 
   /** Convergence-run HITS — [[hits]] at the DETECTED fixpoint instead
@@ -362,71 +265,53 @@ object Graph {
     * first — a truncating-integer HITS can limit-cycle rather than
     * settle, and the flag (NOT the round count — a run converging
     * exactly at the cap still reports stable) is what callers must
-    * branch on before trusting the scores as converged. Same
-    * per-round localCheckpoint + free discipline as [[hits]], so plan
-    * depth and block-manager residency stay constant however far the
-    * trajectory runs.
+    * branch on before trusting the scores as converged. Rounds run
+    * through [[Blocks.converge]], so plan depth and block-manager
+    * residency stay constant however far the trajectory runs.
     */
   def hitsConverged(nodes: DataFrame, edges: DataFrame, maxIters: Int = 64,
       tolMicros: Long = 0L, weightCol: String = "w",
       materialize: Boolean = true): (DataFrame, Int, Boolean) = {
     require(maxIters >= 1, "maxIters must be >= 1")
     require(tolMicros >= 0L, "tolMicros must be >= 0")
-    val e0 = edges.select(col("src"), col("dst"), col(weightCol).as("w"))
-    val e = if (materialize) e0.localCheckpoint() else e0
-    // node ids materialized once — see [[hits]]; freed before return.
-    // Guarded by `materialize`: an opt-out caller skips this job and the
-    // edge checkpoint's, accepting the per-round re-evaluation. It still
-    // pays one eager job: the initial score frame below is checkpointed
-    // unconditionally.
-    val ids1 = nodes.select(col("id"))
-    val ids = if (materialize) ids1.localCheckpoint() else ids1
+    // edges and ids are pinned only when `materialize`: an opt-out
+    // caller runs no eager job at all and re-evaluates them per round
+    val e = pin(edges.select(col("src"), col("dst"), col(weightCol).as("w")), materialize)
+    // node ids pinned once — referenced by every half-step's
+    // zero-restore join (see [[rankInputs]]); freed before return
+    val ids = pin(nodes.select(col("id")), materialize)
 
-    def halfStep(scores: DataFrame, from: String, to: String): DataFrame = {
+    // one weighted-sum + L1-normalize half-step: scores keyed by
+    // `from` flow along (from → to) edges and land keyed by `to` on
+    // every row of `nodes` (one per node id), whose columns ride along
+    def halfStep(nodes: DataFrame, scores: DataFrame, from: String, to: String): DataFrame = {
       val raw = e.join(scores.withColumnRenamed("id", from), from)
         .select(col(to).as("id"), (col("s") * col("w")).as("c"))
         .groupBy("id").agg(sum("c").as("c"))
-      val withZeros = ids.join(raw, Seq("id"), "left")
-        .select(col("id"), coalesce(col("c"), lit(0L)).as("c"))
+      val withZeros = nodes.join(raw, Seq("id"), "left")
+        .withColumn("c", coalesce(col("c"), lit(0L)))
       val total = withZeros.agg(greatest(sum("c"), lit(1L)).as("tot"))
       withZeros.crossJoin(broadcast(total))
-        .select(col("id"), expr("c * 1000000L div tot").as("s"))
+        .withColumn("s", expr("c * 1000000L div tot")).drop("c", "tot")
     }
 
-    // both vectors ride ONE combined (id, a_s, h_s) checkpoint per
-    // round (the [[hits]] r16 restructure), and the round's SINGLE
-    // driver job both materializes it and answers the stability
-    // question (r16 verdict task 5): the previous round's scores ride
-    // the LAZY checkpoint as `_pa`/`_ph` and the OR-filter count below
-    // is its materializing action — the old protocol (eager checkpoint
-    // job + a separate join-and-isEmpty, the latter take-escalating
-    // over every partition exactly when the round IS stable) paid 2+
-    // driver jobs per round for the same information
-    var cur = ids.select(col("id"), lit(0L).as("a_s"),
-      lit(1000000L).as("h_s")).localCheckpoint()
-    var rounds = 0
-    var stable = false
-    while (rounds < maxIters && !stable) {
-      val a = halfStep(cur.select(col("id"), col("h_s").as("s")), "src", "dst")
-      val h = halfStep(a, "dst", "src")
-      val nxt = a.withColumnRenamed("s", "a_s")
-        .join(h.withColumnRenamed("s", "h_s"), "id")
-        .join(cur.select(col("id"), col("a_s").as("_pa"),
-          col("h_s").as("_ph")), "id")
-        .localCheckpoint(false)
-      rounds += 1
-      stable = nxt.filter(abs(col("a_s") - col("_pa")) > tolMicros ||
-          abs(col("h_s") - col("_ph")) > tolMicros).count() == 0L
-      // nxt is materialized (by the count) and has read cur — the
-      // previous round's blocks are dead weight from here
-      Blocks.free(cur)
-      cur = nxt
-    }
-    val result = cur.select(col("id"), col("h_s").as("hub_micro"),
-      col("a_s").as("auth_micro"))
-    if (materialize) Blocks.free(ids)
-    if (materialize) Blocks.free(e)
-    (result, rounds, stable)
+    // both vectors ride ONE combined (id, a_s, h_s) frame per round; the
+    // auth half-step lands on the previous round's frame, so its scores
+    // ride along as `_pa`/`_ph` for the stability count
+    // ([[Blocks.converge]]) without a join of their own
+    val (cur, rounds, stable) = Blocks.converge(
+      ids.select(col("id"), lit(0L).as("a_s"), lit(1000000L).as("h_s")), maxIters)(
+      { cur =>
+        val a = halfStep(cur.select(col("id"), col("a_s").as("_pa"), col("h_s").as("_ph")),
+          cur.select(col("id"), col("h_s").as("s")), "src", "dst")
+        val h = halfStep(ids, a.select(col("id"), col("s")), "dst", "src")
+        a.withColumnRenamed("s", "a_s").join(h.withColumnRenamed("s", "h_s"), "id")
+      },
+      abs(col("a_s") - col("_pa")) > tolMicros || abs(col("h_s") - col("_ph")) > tolMicros)
+    // the result is a checkpoint: the pinned inputs are dead weight
+    if (materialize) { Blocks.free(ids); Blocks.free(e) }
+    (cur.select(col("id"), col("h_s").as("hub_micro"), col("a_s").as("auth_micro")),
+      rounds, stable)
   }
 
   /** Per-node triangle participation counts over an UNDIRECTED simple
@@ -506,42 +391,26 @@ object Graph {
     * one aggregation, no window machinery — which is exactly
     * "count DESC, label ASC pick-first" (negating the always-positive
     * count keeps the trick valid for ANY label domain), so the whole
-    * trajectory replays in SQL and hash-gates. Fixed `iters` (no
-    * convergence check) keeps the replay finite; synchronous LPA can
-    * oscillate on bipartite structures, but a pinned iteration count
-    * makes the output well-defined regardless.
+    * trajectory replays in SQL and hash-gates. A fixed-round run is
+    * [[labelPropagationConverged]] capped at `iters`: it stops early
+    * only after a round that changed no label, which every further
+    * round repeats, so the labels are exactly those of `iters` rounds.
+    * Synchronous LPA can oscillate on bipartite structures, but a pinned
+    * iteration count makes the output well-defined regardless.
     *
     * `nodes` is (id: long); `edges` is (src, dst) — pass both
     * directions for an undirected graph. Per round: one join on src +
     * two aggregations keyed on the receiving node + one left join back
     * (absent votes keep the old label). The edge frame is loop-invariant
-    * and `materialize` pins it once, the [[pageRank]] contract; labels
-    * are `localCheckpoint`ed per round so plan depth stays constant in
-    * `iters` (the [[graft.ext.Dedup.clusters]] lineage rule).
+    * and `materialize` pins it once, the [[pageRank]] contract; that pin
+    * is all it governs. Labels are checkpointed every round, so plan
+    * depth stays constant in `iters` (the [[graft.ext.Dedup.clusters]]
+    * lineage rule).
     */
   def labelPropagation(nodes: DataFrame, edges: DataFrame, iters: Int = 3,
       materialize: Boolean = true): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val e = if (materialize) edges.select("src", "dst").localCheckpoint()
-            else edges.select("src", "dst")
-    var l = nodes.select(col("id"), col("id").as("label"))
-    var lOwned = false // only free checkpoints THIS call created
-    for (_ <- 1 to iters) {
-      val votes = e.join(l.select(col("id").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("id"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      val pick = votes
-        .groupBy("id")
-        .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
-        .select(col("id"), col("m.label").as("picked"))
-      val next = l.join(pick, Seq("id"), "left")
-        .select(col("id"), coalesce(col("picked"), col("label")).as("label"))
-        .localCheckpoint()
-      if (lOwned) Blocks.free(l)
-      l = next; lOwned = true
-    }
-    if (materialize) Blocks.free(e) // final l is a checkpoint
-    l.select(col("id"), col("label").as("community"))
+    labelPropagationConverged(nodes, edges, iters, None, materialize)._1
   }
 
   /** Weighted label propagation — [[labelPropagation]] with each
@@ -554,32 +423,14 @@ object Graph {
     * deterministic argmax (`min(struct(-Σw, label))` — weight-sum DESC,
     * label ASC), integer weights end to end, same per-round plan with
     * `sum(w)` replacing `count`. Equal weights degenerate to the
-    * uniform operator exactly (spec-pinned).
+    * uniform operator exactly (spec-pinned). Like the uniform spelling,
+    * it is [[labelPropagationConverged]] capped at `iters`.
     */
   def labelPropagationWeighted(nodes: DataFrame, edges: DataFrame,
       iters: Int = 3, weightCol: String = "w",
       materialize: Boolean = true): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val e0 = edges.select(col("src"), col("dst"), col(weightCol).as("_w"))
-    val e = if (materialize) e0.localCheckpoint() else e0
-    var l = nodes.select(col("id"), col("id").as("label"))
-    var lOwned = false // only free checkpoints THIS call created
-    for (_ <- 1 to iters) {
-      val votes = e.join(l.select(col("id").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("id"), col("label"))
-        .agg(sum(col("_w")).as("c"))
-      val pick = votes
-        .groupBy("id")
-        .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
-        .select(col("id"), col("m.label").as("picked"))
-      val next = l.join(pick, Seq("id"), "left")
-        .select(col("id"), coalesce(col("picked"), col("label")).as("label"))
-        .localCheckpoint()
-      if (lOwned) Blocks.free(l)
-      l = next; lOwned = true
-    }
-    if (materialize) Blocks.free(e) // final l is a checkpoint
-    l.select(col("id"), col("label").as("community"))
+    labelPropagationConverged(nodes, edges, iters, Some(weightCol), materialize)._1
   }
 
   /** [[labelPropagation]] / [[labelPropagationWeighted]] with
@@ -613,38 +464,25 @@ object Graph {
       maxIters: Int = 32, weightCol: Option[String] = None,
       materialize: Boolean = true): (DataFrame, Int, Boolean) = {
     require(maxIters >= 1, "maxIters must be >= 1")
-    val e0 = weightCol match {
-      case Some(w) => edges.select(col("src"), col("dst"), col(w).as("_w"))
-      case None    => edges.select(col("src"), col("dst"), lit(1L).as("_w"))
-    }
-    val e = if (materialize) e0.localCheckpoint() else e0
-    var l = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
-    var rounds = 0
-    var stable = false
-    while (rounds < maxIters && !stable) {
-      val votes = e.join(l.select(col("id").as("src"), col("label")), "src")
-        .groupBy(col("dst").as("id"), col("label"))
-        .agg(sum(col("_w")).as("c"))
-      val pick = votes
-        .groupBy("id")
-        .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
-        .select(col("id"), col("m.label").as("picked"))
-      // ONE job per round (r16 verdict task 5, the clusters fusion):
-      // `_prev` already rides the round frame, so the LAZY checkpoint's
-      // materializing action IS the stability count — the old eager
-      // checkpoint + isEmpty (take-escalating over every partition
-      // exactly when the round IS stable) paid 2+ jobs per round
-      val next = l.join(pick, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("picked"), col("label")).as("label"),
-          col("label").as("_prev"))
-        .localCheckpoint(false)
-      rounds += 1
-      stable = next.filter(col("label") =!= col("_prev")).count() == 0L
-      Blocks.free(l) // next is materialized; the previous round is dead
-      l = next.select(col("id"), col("label"))
-    }
-    if (materialize) Blocks.free(e) // final l is a checkpoint
+    val e = pin(edges.select(col("src"), col("dst"),
+      weightCol.fold(lit(1L))(col).as("_w")), materialize)
+    // the previous label rides each round as `_prev`, so the stability
+    // count is the round's one action ([[Blocks.converge]])
+    val (l, rounds, stable) = Blocks.converge(
+      nodes.select(col("id"), col("id").as("label")), maxIters)(
+      { l =>
+        val pick = e.join(l.select(col("id").as("src"), col("label")), "src")
+          .groupBy(col("dst").as("id"), col("label"))
+          .agg(sum(col("_w")).as("c"))
+          .groupBy("id")
+          .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
+          .select(col("id"), col("m.label").as("picked"))
+        l.join(pick, Seq("id"), "left")
+          .select(col("id"), coalesce(col("picked"), col("label")).as("label"),
+            col("label").as("_prev"))
+      },
+      col("label") =!= col("_prev"))
+    if (materialize) Blocks.free(e) // the result is a checkpoint
     (l.select(col("id"), col("label").as("community")), rounds, stable)
   }
 

@@ -208,5 +208,37 @@ class CompactorSpec extends AnyFunSuite {
     originals.foreach(o => assert(onDisk.contains(o), s"${o._1} of part=p03 is gone"))
     // every other leaf still holds its rows, compacted or not
     assert(leafHashes(dir) - "p03" == hashes - "p03")
+    // the next run, with healthy renames, moves the orphaned aside back
+    // before it plans: part=p03 returns with its rows, and no aside is left
+    assert(!Files.exists(local(victim)), "fixture: part=p03 sits only aside")
+    Compactor.doItAll(dir, requestedSizeMb = 1)
+    assert(leafHashes(dir) == hashes)
+    assert(!Files.list(local(dir)).iterator().asScala.exists(_.getFileName.toString.endsWith("_graft_aside")))
+  }
+
+  test("an aside folder with no live leaf is moved back before planning") {
+    import spark.implicits._
+    val dir = "file:" + Files.createTempDirectory("compact_aside").toFile.getAbsolutePath + "/t"
+    (0 until 40).map(i => (i.toLong, s"r$i", s"p${i % 2}")).toDF("id", "payload", "part")
+      .repartition(4).write.partitionBy("part").parquet(dir)
+    def rows() = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    def asides() = Files.list(local(dir)).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith("_graft_aside")).toSeq
+    val before = rows()
+    // doItAll over the distributed listing: leaf part=p1 sits only aside
+    Files.move(local(s"$dir/part=p1"), local(s"$dir/.part=p1_graft_aside"))
+    val res = Compactor.doItAll(dir, requestedSizeMb = 1, distributedListing = true)
+    assert(res.keySet.map(new Path(_).getName) == Set("part=p0", "part=p1"), s"plan: $res")
+    assert(rows() == before && asides().isEmpty)
+    // doAutoCoalesce on a folder that sits only aside
+    Files.move(local(s"$dir/part=p0"), local(s"$dir/.part=p0_graft_aside"))
+    Compactor.doAutoCoalesce(s"$dir/part=p0", requestedSizeMb = 1)
+    assert(rows() == before && asides().isEmpty)
+    // doItAll on a table root that sits only aside
+    val table = local(dir)
+    Files.move(table, table.resolveSibling(".t_graft_aside"))
+    Compactor.doItAll(dir, requestedSizeMb = 1)
+    assert(rows() == before && asides().isEmpty)
+    assert(Files.list(table.getParent).iterator().asScala.map(_.getFileName.toString).toSet == Set("t"))
   }
 }

@@ -115,4 +115,22 @@ class DistributedCopySpec extends AnyFunSuite {
     val slots = spark.sparkContext.defaultParallelism
     assert(tasks.get() <= slots, s"clean copy ran ${tasks.get()} tasks on $slots slots")
   }
+
+  test("synchronizeDistributed fails with a delete's InterruptedException as the cause") {
+    // NonFatal rejects InterruptedException, and Spark does not treat it
+    // as fatal to the executor: the task fails with it instead of the
+    // delete being counted as one more failed item
+    val src = FlakyFileSystem.flaky(sourceTree("sync_int_src", 3))
+    val trg = FlakyFileSystem.flaky(sourceTree("sync_int_trg", 4)) // f3 is target-only
+    FlakyFileSystem.reset(0)
+    FlakyFileSystem.failDeletesWith(() => new InterruptedException("injected delete interrupt"))
+    val e =
+      try intercept[Exception](Delta.synchronizeDistributed(src, trg))
+      finally FlakyFileSystem.reset(0)
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[InterruptedException] &&
+      c.getMessage == "injected delete interrupt"), e)
+    assert(!causes.exists(c => Option(c.getMessage).exists(_.contains("deletes failed"))), e)
+    assert(Files.exists(localPath(s"$trg/d0/f3.bin")), "the target-only file was deleted")
+  }
 }

@@ -14,7 +14,7 @@ import org.apache.hadoop.util.Progressable
   * [[FlakyFileSystem.failures]] calls on each path. Every call is
   * counted per path, so a spec can pin how many attempts a file took.
   * Opt-in, `rename` throws for every target [[FlakyFileSystem.failRenamesOnto]]
-  * picks.
+  * picks, and `delete` throws what [[FlakyFileSystem.failDeletesWith]] makes.
   * State lives in the companion: Spark's local-mode tasks share the
   * test JVM, and whichever cached instance they resolve sees it.
   */
@@ -40,6 +40,11 @@ class FlakyFileSystem extends RawLocalFileSystem {
     if (failRenameOnto(key(dst))) throw new IOException(s"injected rename failure: $src -> $dst")
     super.rename(src, dst)
   }
+
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    deleteFailure.foreach(e => throw e())
+    super.delete(f, recursive)
+  }
 }
 
 object FlakyFileSystem {
@@ -47,13 +52,19 @@ object FlakyFileSystem {
   val Uri: URI = URI.create(s"$Scheme:///")
   @volatile var failures = 0
   @volatile private var failRenameOnto: String => Boolean = _ => false
+  @volatile private var deleteFailure: Option[() => Throwable] = None
   private val calls = new ConcurrentHashMap[String, AtomicInteger]()
 
-  /** Fail the first `k` creates of every path from now on; renames succeed. */
-  def reset(k: Int): Unit = { failures = k; failRenameOnto = _ => false; calls.clear() }
+  /** Fail the first `k` creates of every path from now on; renames and deletes succeed. */
+  def reset(k: Int): Unit = {
+    failures = k; failRenameOnto = _ => false; deleteFailure = None; calls.clear()
+  }
 
   /** Fail every rename onto a target whose scheme-less path satisfies `p`. */
   def failRenamesOnto(p: String => Boolean): Unit = failRenameOnto = p
+
+  /** Make every delete throw `e()`. */
+  def failDeletesWith(e: () => Throwable): Unit = deleteFailure = Some(e)
 
   /** `create` calls seen for `uri` since the last [[reset]]. */
   def createCalls(uri: String): Int =

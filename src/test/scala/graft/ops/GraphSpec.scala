@@ -1,5 +1,10 @@
 package graft.ops
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +13,23 @@ import graft.SparkTestSession
 class GraphSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  /** `body`'s result and the name (its last stage's call site) of every
+    * Spark job it started.
+    */
+  private def jobNames[T](body: => T): (T, Seq[String]) = {
+    val names = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        names.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+      (out, names.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   test("pageRank: hand-computed path graph, hub dominance, isolated node floor") {
     // path 1—2—3 plus isolated node 4
@@ -348,6 +370,32 @@ class GraphSpec extends AnyFunSuite {
     val (s0, r0, st0) = Graph.hitsConverged(nodes, edges.limit(0), maxIters = 8)
     assert(st0 && r0 == 2)
     assert(s0.collect().forall(x => x.getLong(1) == 0L && x.getLong(2) == 0L))
+  }
+
+  test("converged loops: the input pins, then one stability count per round, and no initial-frame job") {
+    // every other job is a shuffle-map or broadcast stage AQE runs while
+    // it plans a round; the exact totals pin those too
+    def eager(jobs: Seq[String]) = jobs.count(_.startsWith("localCheckpoint at"))
+    def counts(jobs: Seq[String]) = jobs.count(_.startsWith("count at Blocks.scala"))
+    val nodes = (1L to 7L).toDF("id")
+    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
+      (5L, 6L), (3L, 4L)).toDF("src", "dst")
+    val edges = und.union(und.select(col("dst"), col("src")))
+    val ((_, rounds, stable), lpa) =
+      jobNames(Graph.labelPropagationConverged(nodes, edges, maxIters = 20))
+    assert(stable && rounds == 4)
+    assert(eager(lpa) == 1, s"only the edge checkpoint runs eagerly: $lpa")
+    assert(counts(lpa) == rounds, lpa)
+    assert(lpa.size == 23, lpa)
+
+    val hNodes = Seq("a", "b", "c", "d").toDF("id")
+    val hEdges = Seq(("a", "c", 2L), ("b", "c", 1L), ("c", "d", 1L))
+      .toDF("src", "dst", "w")
+    val ((_, hRounds, hStable), hits) = jobNames(Graph.hitsConverged(hNodes, hEdges, maxIters = 64))
+    assert(hStable && hRounds == 11)
+    assert(eager(hits) == 2, s"only the edge and id checkpoints run eagerly: $hits")
+    assert(counts(hits) == hRounds, hits)
+    assert(hits.size == 164, hits)
   }
 
   test("commonNeighbors: hand graphs — path, square, K3 micros") {
