@@ -7,11 +7,16 @@ import org.apache.spark.sql.functions._
 
 /** Tree diff + rsync-lite synchronization.
   *
-  * The reference computes the diff with `Array.diff` on the driver
-  * (reference: Delta.scala:40-50) — O(n²) and driver-bound. Here both
-  * trees become Datasets normalized to relative paths and the diff is a
-  * pair of left-anti joins on (relPath, isDirectory, byteSize): O(n log n),
-  * shuffled, scales to billions of entries (SURVEY §7.4.3).
+  * Two forms. The driver form ([[getDelta]], [[synchronize]]) takes the
+  * two `Fs.list` arrays the driver already holds and diffs them as a
+  * keyed hash anti-join on (relPath, isDirectory, byteSize, contentHash):
+  * O(n) on the driver, no Spark job unless content hashing is asked for.
+  * The reference did the same diff with an O(n²) `Array.diff`
+  * (reference: Delta.scala:40-50). The distributed form
+  * ([[getDeltaDataset]], [[synchronizeDistributed]]) diffs the
+  * `Fs.listDistributed` Datasets with a pair of left-anti joins on the
+  * same keys, so trees too large for the driver never come back to it
+  * (SURVEY §7.4.3).
   */
 object Delta {
 
@@ -45,44 +50,66 @@ object Delta {
         lit("listed path "), path, lit(s" is not under root $root"))))
   }
 
-  /** Both directions of the tree diff.
+  /** Both directions of the tree diff, on the driver: each side's
+    * listing keyed by (relPath, isDirectory, byteSize, contentHash);
+    * `missing` holds the source entries whose key the target lacks,
+    * `extra` the reverse.
     *
     * @param checkContent when true, files are additionally compared by a
-    *        distributed content hash (FNV-1a 64 over the byte stream) —
-    *        the reference equates files by relative path + size only
-    *        (reference Delta.scala:45-46), which misses same-size edits.
-    *        Hashing reads every byte, so it is opt-in.
+    *        content hash (FNV-1a 64 over the byte stream) — the reference
+    *        equates files by relative path + size only (reference
+    *        Delta.scala:45-46), which misses same-size edits. Hashing
+    *        reads bytes, so it is opt-in; only files present on both sides
+    *        with one relPath and size are hashed, in one Spark job, since
+    *        every other entry differs already.
     */
   def getDelta(sourceUri0: String, targetUri0: String, checkContent: Boolean = false)(
       implicit spark: SparkSession): (Array[DeltaEntry], Array[DeltaEntry]) = {
-    import spark.implicits._
     implicit val conf = spark.sparkContext.hadoopConfiguration
-    val sourceUri = sourceUri0.stripSuffix("/")
-    val targetUri = targetUri0.stripSuffix("/")
-
-    def side(rootUri: String) =
-      withContentHash(spark.createDataset(Fs.list(rootUri).toIndexedSeq), checkContent)
-        .withColumn("relPath", relCol(rootUri)($"path"))
-
-    val src = side(sourceUri)
-    val trg = side(targetUri)
-    val keys = Seq("relPath", "isDirectory", "byteSize", "contentHash")
+    def side(rootUri: String) = Fs.list(rootUri).map(e => rel(rootUri)(e.path) -> e)
+    val src = side(sourceUri0.stripSuffix("/"))
+    val trg = side(targetUri0.stripSuffix("/"))
+    val hashes = if (checkContent) sharedFileHashes(src, trg) else Map.empty[String, Long]
+    type Key = (String, Boolean, Long, Long)
+    def keys(side: Array[(String, FsElement)]): Array[Key] = side.map { case (r, e) =>
+      (r, e.isDirectory, e.byteSize, hashes.getOrElse(e.path, 0L))
+    }
     // carry isDirectory into the entries: synchronize needs it and the
     // listing already knows it — re-statting every missing path would be
     // one RPC per entry on the source FS
-    val missing = src.join(trg, keys, "left_anti")
-      .select($"relPath", $"isDirectory").as[(String, Boolean)].collect()
-      .map { case (p, d) => DeltaEntry(p, DeltaEntry.MissingInTarget, d) }
-    val extra = trg.join(src, keys, "left_anti")
-      .select($"relPath", $"isDirectory").as[(String, Boolean)].collect()
-      .map { case (p, d) => DeltaEntry(p, DeltaEntry.OnlyInTarget, d) }
-    (missing, extra)
+    def onlyIn(side: Array[Key], other: Array[Key], message: String) = {
+      val otherKeys = other.toSet
+      side.filterNot(otherKeys).map { case (r, isDir, _, _) => DeltaEntry(r, message, isDir) }
+    }
+    val (srcKeys, trgKeys) = (keys(src), keys(trg))
+    (onlyIn(srcKeys, trgKeys, DeltaEntry.MissingInTarget), onlyIn(trgKeys, srcKeys, DeltaEntry.OnlyInTarget))
   }
 
-  /** The diff's hashing stage, for driver and distributed listings:
-    * files gain a content hash computed in the tasks that would read them
-    * anyway at copy time (dirs hash 0; with checkContent off the column
-    * is a constant so the diff keys keep one shape).
+  /** Content hashes, by absolute URI, of the files both listings hold
+    * under one relPath with one size, from one Spark job over the
+    * pending reads (none when no such pair exists).
+    */
+  private def sharedFileHashes(src: Array[(String, FsElement)], trg: Array[(String, FsElement)])(
+      implicit spark: SparkSession): Map[String, Long] = {
+    val trgFiles = trg.collect { case (r, e) if !e.isDirectory => (r, e.byteSize) -> e.path }.toMap
+    val uris = src.toSeq.flatMap { case (r, e) =>
+      if (e.isDirectory) Nil else trgFiles.get((r, e.byteSize)).toSeq.flatMap(t => Seq(e.path, t))
+    }
+    if (uris.isEmpty) Map.empty
+    else {
+      val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+      spark.sparkContext.parallelize(uris, math.min(uris.size, spark.sparkContext.defaultParallelism))
+        .mapPartitions { it =>
+          val c = sconf.value
+          it.map(u => u -> contentHash(c, u))
+        }.collect().toMap
+    }
+  }
+
+  /** The distributed diff's hashing stage: files gain a content hash
+    * computed in the tasks that would read them anyway at copy time (dirs
+    * hash 0; with checkContent off the column is a constant so the diff
+    * keys keep one shape).
     */
   private def withContentHash(list: org.apache.spark.sql.Dataset[FsElement],
       checkContent: Boolean)(implicit spark: SparkSession): org.apache.spark.sql.DataFrame = {
@@ -251,8 +278,17 @@ object Delta {
     h
   }
 
-  /** Make target identical to source: delete target-only paths, then
-    * distributed-copy the missing files (reference Delta.scala:25-32).
+  /** Proper ancestors of a relative path, nearest first: `a/b/c` gives
+    * `a/b`, then `a`.
+    */
+  private def ancestors(relPath: String): Iterator[String] =
+    Iterator.iterate(relPath.lastIndexOf('/'))(i => relPath.lastIndexOf('/', i - 1))
+      .takeWhile(_ > 0).map(relPath.substring(0, _))
+
+  /** Make target identical to source: delete the top-most target-only
+    * paths, recreate missing folders, then distributed-copy the missing
+    * files (reference Delta.scala:25-32). The diff is [[getDelta]]'s, so
+    * without `checkContent` the copy is the only Spark job.
     */
   def synchronize(sourceUri0: String, targetUri0: String, taskCount: Int = -1,
       checkContent: Boolean = false)(implicit spark: SparkSession): Unit = {
@@ -260,11 +296,15 @@ object Delta {
     val sourceUri = new org.apache.hadoop.fs.Path(sourceUri0).toString
     val targetUri = new org.apache.hadoop.fs.Path(targetUri0).toString
     val (missing, extra) = getDelta(sourceUri, targetUri, checkContent)
-    // delete deepest-first so children go before parents; an empty relPath
-    // would resolve to the target ROOT — refuse rather than wipe it
+    // an empty relPath would resolve to the target ROOT — refuse rather
+    // than wipe it
     extra.foreach(e => require(e.path.nonEmpty,
       s"refusing delete of target root (empty relPath in diff of $targetUri)"))
-    val toDelete = extra.map(e => s"$targetUri/${e.path}").sortBy(-_.length).toIndexedSeq
+    // delete only the top-most target-only paths: a target-only folder's
+    // recursive delete already takes everything under it
+    val extraDirs = extra.iterator.filter(_.isDirectory).map(_.path).toSet
+    val toDelete = extra.filterNot(e => ancestors(e.path).exists(extraDirs))
+      .map(e => s"$targetUri/${e.path}").toIndexedSeq
     LocalExecution.deletePaths(toDelete)
     val fs = Fs.getFileSystem(conf, targetUri)
     // recreate missing directories (copy handles files only); the diff

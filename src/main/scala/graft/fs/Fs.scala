@@ -12,12 +12,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Tree scanning + size reporting over any Hadoop FileSystem.
   *
-  * Semantics follow the reference (reference: fs/package.scala:23-119)
-  * with one 100 TB-scale deviation (SURVEY §7.4): above
-  * [[Fs.DriverListingLimit]] directories per level the breadth-first scan
-  * switches from driver futures to a level-synchronous distributed scan
-  * (`Dataset[String].flatMap(listStatus)` — one Spark job per tree level),
-  * so listings never OOM the driver.
+  * Semantics follow the reference (reference: fs/package.scala:23-119).
+  * [[Fs.list]] is driver-only: a breadth-first scan on driver futures
+  * that returns the whole tree as an array. The 100 TB-scale path is a
+  * separate call (SURVEY §7.4): [[Fs.listDistributed]] scans level by
+  * level in Spark (`Dataset[String].flatMap(listStatus)`, one Spark job
+  * per tree level) and returns a Dataset, so a tree too large for driver
+  * memory never comes back to it.
   */
 object Fs {
 
@@ -27,8 +28,6 @@ object Fs {
     */
   @volatile var driverPoolSize: Int = 256
   val OpTimeout: FiniteDuration = 10.minutes
-  /** Max directories fanned out per level before switching to Spark. */
-  @volatile var DriverListingLimit: Int = 100000
 
   /** Resolve a FileSystem from a URI string (spaces sanitized — reference
     * fs/package.scala:23-25).

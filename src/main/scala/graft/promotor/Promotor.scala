@@ -112,6 +112,33 @@ object Promotor {
       matchStrings: Seq[String], taskCount: Int = -1)(
       implicit spark: SparkSession): Array[FsOperationResult] = {
     TableMetadataValidator.validate(srcDb, srcTable, trgDb, trgTable)
+    val res = copyPartitionFiles(srcDb, srcTable, trgDb, trgTable, matchStrings, taskCount)
+    Meta.refreshMetadata(trgDb, trgTable)
+    res
+  }
+
+  /** H9: delete matching target partitions, then copy matching source
+    * partitions, then refresh the target's catalog once (recovering
+    * partitions only adds them, so a refresh between delete and copy
+    * would change nothing the last one does not redo). The tables are
+    * validated before anything is deleted, and the refresh also runs
+    * when the delete or copy throws, so the target's cached file index
+    * never outlives its deleted folders.
+    */
+  def copyOverwritePartitions(srcDb: String, srcTable: String, trgDb: String, trgTable: String,
+      matchStrings: Seq[String], taskCount: Int = -1)(
+      implicit spark: SparkSession): Array[FsOperationResult] = {
+    TableMetadataValidator.validate(srcDb, srcTable, trgDb, trgTable)
+    try {
+      deletePartitionFolders(trgDb, trgTable, matchStrings)
+      copyPartitionFiles(srcDb, srcTable, trgDb, trgTable, matchStrings, taskCount)
+    } finally Meta.refreshMetadata(trgDb, trgTable)
+  }
+
+  /** The file copy of H8/H9, without validation or catalog refresh. */
+  private def copyPartitionFiles(srcDb: String, srcTable: String, trgDb: String, trgTable: String,
+      matchStrings: Seq[String], taskCount: Int)(
+      implicit spark: SparkSession): Array[FsOperationResult] = {
     implicit val conf = spark.sessionState.newHadoopConf()
     val partitions = Meta.filterPartitions(srcDb, srcTable, matchStrings)
     require(partitions.nonEmpty, s"no partitions of $srcDb.$srcTable match $matchStrings")
@@ -119,17 +146,7 @@ object Promotor {
     val trgLoc = Meta.getTableLocation(trgDb, trgTable)
     val files = Fs.getFilesOnlyOfFolders(partitions.toIndexedSeq)
     val pairs = files.map(e => Paths(e.path, Fs.rebase(e.path, srcLoc, trgLoc))).toIndexedSeq
-    val res = DistributedExecution.copyFiles(pairs, taskCount)
-    Meta.refreshMetadata(trgDb, trgTable)
-    res
-  }
-
-  /** H9: delete matching target partitions, then copy matching source partitions. */
-  def copyOverwritePartitions(srcDb: String, srcTable: String, trgDb: String, trgTable: String,
-      matchStrings: Seq[String], taskCount: Int = -1)(
-      implicit spark: SparkSession): Array[FsOperationResult] = {
-    deleteTablePartitions(trgDb, trgTable, matchStrings)
-    copyTablePartitions(srcDb, srcTable, trgDb, trgTable, matchStrings, taskCount)
+    DistributedExecution.copyFiles(pairs, taskCount)
   }
 
   /** H10: H8 generalized to bare folders (no metastore); target
@@ -160,11 +177,16 @@ object Promotor {
   /** H12: delete matching partition folders + refresh. */
   def deleteTablePartitions(db: String, table: String, matchStrings: Seq[String])(
       implicit spark: SparkSession): Seq[FsOperationResult] = {
-    implicit val conf = spark.sessionState.newHadoopConf()
-    val partitions = Meta.filterPartitions(db, table, matchStrings)
-    val res = LocalExecution.deletePaths(partitions.toIndexedSeq)
+    val res = deletePartitionFolders(db, table, matchStrings)
     Meta.refreshMetadata(db, table)
     res
+  }
+
+  /** The folder delete of H9/H12, without catalog refresh. */
+  private def deletePartitionFolders(db: String, table: String, matchStrings: Seq[String])(
+      implicit spark: SparkSession): Seq[FsOperationResult] = {
+    implicit val conf = spark.sessionState.newHadoopConf()
+    LocalExecution.deletePaths(Meta.filterPartitions(db, table, matchStrings).toIndexedSeq)
   }
 
   /** H13: metadata-only partition move between tables — rename partition

@@ -14,7 +14,8 @@ import org.apache.hadoop.util.Progressable
   * [[FlakyFileSystem.failures]] calls on each path. Every call is
   * counted per path, so a spec can pin how many attempts a file took.
   * Opt-in, `rename` throws for every target [[FlakyFileSystem.failRenamesOnto]]
-  * picks, and `delete` throws what [[FlakyFileSystem.failDeletesWith]] makes.
+  * picks, and `delete` throws what [[FlakyFileSystem.failDeletesWith]] makes;
+  * every `delete` is counted ([[FlakyFileSystem.deleteCalls]]).
   * State lives in the companion: Spark's local-mode tasks share the
   * test JVM, and whichever cached instance they resolve sees it.
   */
@@ -42,6 +43,7 @@ class FlakyFileSystem extends RawLocalFileSystem {
   }
 
   override def delete(f: Path, recursive: Boolean): Boolean = {
+    deletes.incrementAndGet()
     deleteFailure.foreach(e => throw e())
     super.delete(f, recursive)
   }
@@ -54,10 +56,11 @@ object FlakyFileSystem {
   @volatile private var failRenameOnto: String => Boolean = _ => false
   @volatile private var deleteFailure: Option[() => Throwable] = None
   private val calls = new ConcurrentHashMap[String, AtomicInteger]()
+  private val deletes = new AtomicInteger()
 
   /** Fail the first `k` creates of every path from now on; renames and deletes succeed. */
   def reset(k: Int): Unit = {
-    failures = k; failRenameOnto = _ => false; deleteFailure = None; calls.clear()
+    failures = k; failRenameOnto = _ => false; deleteFailure = None; calls.clear(); deletes.set(0)
   }
 
   /** Fail every rename onto a target whose scheme-less path satisfies `p`. */
@@ -65,6 +68,9 @@ object FlakyFileSystem {
 
   /** Make every delete throw `e()`. */
   def failDeletesWith(e: () => Throwable): Unit = deleteFailure = Some(e)
+
+  /** `delete` calls seen on any path since the last [[reset]]. */
+  def deleteCalls: Int = deletes.get
 
   /** `create` calls seen for `uri` since the last [[reset]]. */
   def createCalls(uri: String): Int =

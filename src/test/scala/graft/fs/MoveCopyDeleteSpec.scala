@@ -1,17 +1,30 @@
 package graft.fs
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withJobCount
 
 class MoveCopyDeleteSpec extends AnyFunSuite {
-  implicit lazy val spark: org.apache.spark.sql.SparkSession = SparkTestSession.spark
+  implicit lazy val spark: org.apache.spark.sql.SparkSession = {
+    val s = SparkTestSession.spark
+    s.sparkContext.hadoopConfiguration.set(s"fs.${FlakyFileSystem.Scheme}.impl",
+      classOf[FlakyFileSystem].getName)
+    s
+  }
   implicit lazy val conf: Configuration = spark.sparkContext.hadoopConfiguration
 
   private def relSet(root: String) =
     Fs.list(root).map(e => (e.path.stripPrefix(root), e.isDirectory, e.byteSize)).toSet
+
+  private def write(p: String, content: String): Unit = {
+    val out = TestTree.fsFor(p).create(new Path(p), true)
+    out.write(content.getBytes(StandardCharsets.UTF_8)); out.close()
+  }
 
   test("distributed copyFolder replicates the tree's files") {
     val src = TestTree.newRoot("cp_src"); TestTree.create(src, 42)
@@ -204,6 +217,68 @@ class MoveCopyDeleteSpec extends AnyFunSuite {
     val dist = diff.collect().map(e => (e.path, e.message)).toSet
     diff.unpersist()
     assert(dist == expected)
+
+    // both checkContent values, on a tree with a space and an escaped
+    // `%3A` in names, a same-size drift, a resized file and a
+    // target-only subtree
+    val src2 = TestTree.newRoot("dd2_src")
+    val trg2 = TestTree.newRoot("dd2_trg")
+    for (root <- Seq(src2, trg2)) {
+      write(s"$root/with space/a b.txt", "same bytes")
+      write(s"$root/esc%3Adir/x%3Ay.txt", "same bytes too")
+    }
+    write(s"$src2/drift.txt", "aaaa"); write(s"$trg2/drift.txt", "bbbb")
+    write(s"$src2/resized.txt", "short"); write(s"$trg2/resized.txt", "much longer")
+    write(s"$trg2/only/o1.txt", "x"); write(s"$trg2/only/deep/o2.txt", "y")
+    val sizeDiff = Set(
+      ("resized.txt", DeltaEntry.MissingInTarget, false), ("resized.txt", DeltaEntry.OnlyInTarget, false),
+      ("only", DeltaEntry.OnlyInTarget, true), ("only/deep", DeltaEntry.OnlyInTarget, true),
+      ("only/o1.txt", DeltaEntry.OnlyInTarget, false), ("only/deep/o2.txt", DeltaEntry.OnlyInTarget, false))
+    val drift = Set(("drift.txt", DeltaEntry.MissingInTarget, false), ("drift.txt", DeltaEntry.OnlyInTarget, false))
+    for (checkContent <- Seq(false, true)) {
+      val (m, e) = Delta.getDelta(src2, trg2, checkContent)
+      val driver = (m ++ e).map(d => (d.path, d.message, d.isDirectory)).toSet
+      assert(driver == (if (checkContent) sizeDiff ++ drift else sizeDiff), s"checkContent = $checkContent")
+      val diff2 = Delta.getDeltaDataset(src2, trg2, checkContent)
+      val dist2 = try diff2.collect().map(d => (d.path, d.message, d.isDirectory)).toSet
+                  finally diff2.unpersist()
+      assert(dist2 == driver, s"checkContent = $checkContent")
+    }
+  }
+
+  test("driver diff runs no Spark job, or one to hash; a clean synchronize runs one") {
+    val src = TestTree.newRoot("dj_src"); TestTree.create(src, 23)
+    val trg = TestTree.newRoot("dj_trg")
+    DistributedExecution.copyFolder(src, trg)
+    val ((m0, e0), plain) = withJobCount(Delta.getDelta(src, trg))
+    assert(m0.isEmpty && e0.isEmpty)
+    assert(plain == 0, s"size-only getDelta ran $plain jobs")
+    val ((m1, e1), hashed) = withJobCount(Delta.getDelta(src, trg, checkContent = true))
+    assert(m1.isEmpty && e1.isEmpty)
+    assert(hashed == 1, s"content-hashing getDelta ran $hashed jobs")
+    // k files gone from the target: synchronize's one job is the copy
+    val fs = TestTree.fsFor(trg)
+    val gone = Fs.list(trg).filter(!_.isDirectory).take(3)
+    gone.foreach(g => fs.delete(new Path(g.path), false))
+    val (_, sync) = withJobCount(Delta.synchronize(src, trg))
+    assert(sync == 1, s"synchronize ran $sync jobs")
+    assert(gone.forall(g => fs.exists(new Path(g.path))))
+    val (m2, e2) = Delta.getDelta(src, trg)
+    assert(m2.isEmpty && e2.isEmpty)
+  }
+
+  test("synchronize deletes a target-only folder with one delete, not one per file") {
+    val src = TestTree.newRoot("sdel_src"); TestTree.create(src, 25)
+    val trg = TestTree.newRoot("sdel_trg")
+    DistributedExecution.copyFolder(src, trg)
+    (0 until 3).foreach(i => write(s"$trg/stale/f$i.bin", "stale"))
+    (3 until 5).foreach(i => write(s"$trg/stale/deeper/f$i.bin", "stale"))
+    FlakyFileSystem.reset(0)
+    Delta.synchronize(FlakyFileSystem.flaky(src), FlakyFileSystem.flaky(trg))
+    assert(FlakyFileSystem.deleteCalls == 1, s"${FlakyFileSystem.deleteCalls} deletes")
+    assert(!TestTree.fsFor(trg).exists(new Path(s"$trg/stale")))
+    val (m, e) = Delta.getDelta(src, trg)
+    assert(m.isEmpty && e.isEmpty)
   }
 
   test("relCol matches rel across URI spellings; distributed diff plan is UDF-free") {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withJobCount
 import graft.meta.{Meta, TableMetadataValidator}
 
 /** Promotion tests modeled on the reference's end-to-end Hive-table
@@ -56,6 +57,29 @@ class PromotorSpec extends AnyFunSuite {
     assert(res.nonEmpty && res.forall(_.success))
     assert(qtyFor("sales_sfct", m) == qtyFor("sales_fct", m)) // promoted
     assert(qtyFor("sales_sfct", "2001-07") == beforeOther)    // untouched
+  }
+
+  test("copyOverwritePartitions refreshes the target catalog once") {
+    val _ = base
+    val root = "file:" + Files.createTempDirectory("promo_wide").toFile.getAbsolutePath
+    // more than 10 partition folders: each recoverPartitions is then one
+    // Spark job (spark.rdd.parallelListingThreshold)
+    val rows = spark.range(240).select(col("id"), (col("id") % 12).as("p"))
+    rows.withColumn("v", col("id") * 2).write.partitionBy("p")
+      .option("path", s"$root/src").saveAsTable(s"$db.wide_src")
+    rows.withColumn("v", col("id")).write.partitionBy("p")
+      .option("path", s"$root/trg").saveAsTable(s"$db.wide_trg")
+    assert(Meta.getTableL1PartitionsPaths(db, "wide_trg").length > 10, "fixture: more than 10 partitions")
+    def vSum(table: String, p: Int): Long =
+      spark.table(s"$db.$table").where(s"p = $p").agg(sum("v")).head.getLong(0)
+    val other = vSum("wide_trg", 4)
+    val (res, jobs) = withJobCount(
+      Promotor.copyOverwritePartitions(db, "wide_src", db, "wide_trg", Seq("p=3")))
+    // one copy attempt + one recoverPartitions
+    assert(jobs == 2, s"copyOverwritePartitions ran $jobs jobs")
+    assert(res.nonEmpty && res.forall(_.success))
+    assert(vSum("wide_trg", 3) == vSum("wide_src", 3))
+    assert(vSum("wide_trg", 4) == other)
   }
 
   test("deleteTablePartitions removes matching partitions only") {
