@@ -26,16 +26,6 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.speculation", "false") // fs copy tasks are side-effecting
 
-  /** Best-effort runtime application for sessions graft didn't build
-    * (e.g. the driver's smoke session). Legacy parquet confs are
-    * runtime-settable in Spark 4.
-    */
-  def configure(spark: SparkSession): SparkSession = {
-    try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
-    spark
-  }
-
   def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
     val s = builder(s"local[$cores]", cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

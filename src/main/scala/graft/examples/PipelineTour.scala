@@ -146,7 +146,6 @@ object PipelineTour {
     }
 
     check("fingerprint is a pure function of the text and non-degenerate") {
-      graft.functions.GraftFunctions.ensureRegistered(spark)
       val fps = docs.select(lower(col("text")).as("lt"),
         graft.functions.GraftFunctions.graftFingerprint(lower(col("text")), 3).as("fp"))
       // every text maps to exactly one fingerprint (so exact dups always

@@ -69,7 +69,6 @@ object Dedup {
       textCol: String = "text", idCol: String = "doc_id",
       prefixFilter: Boolean = false, broadcastDf: Boolean = false,
       dfTable: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     if (prefixFilter) ngramJaccardPrefix(docs, n, minJaccard, textCol, idCol, broadcastDf, dfTable)
     else {
       // setSize rides the exploded rows (8 bytes per shingle instance)
@@ -109,7 +108,6 @@ object Dedup {
       textCol: String = "text", idCol: String = "doc_id",
       prefixFilter: Boolean = false, broadcastDf: Boolean = false,
       dfTable: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     if (prefixFilter)
       ngramContainmentPrefix(docs, n, minContainment, textCol, idCol, broadcastDf, dfTable)
     else {
@@ -275,7 +273,6 @@ object Dedup {
     */
   def shingleDfTable(docs: DataFrame, n: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol).as("id"), explode(graftShingles(col(textCol), n)).as("shingle"))
       .groupBy("shingle").agg(count(lit(1)).as("df"))
   }
@@ -332,7 +329,6 @@ object Dedup {
     */
   def minhashSignatures(docs: DataFrame, n: Int = 3, k: Int = 32,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val sigs = docs
       .select(col(idCol).as("id"), graftShingles(col(textCol), n).as("set"))
       .filter(size(col("set")) > 0)
@@ -345,7 +341,6 @@ object Dedup {
     */
   private[graft] def minhashSignaturesDeclarative(docs: DataFrame, n: Int, k: Int,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val sh = docs.select(col(idCol).as("id"),
       explode(graftShingles(col(textCol), n)).as("h"))
     val aggs = (0 until k).map(i => min(xxhash64(lit(i), col("h"))).as(s"mh_$i"))
@@ -474,7 +469,6 @@ object Dedup {
   def ngramContamination(evalDocs: DataFrame, corpus: DataFrame, n: Int = 3,
       textCol: String = "text", idCol: String = "doc_id",
       corpusShingles: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.ensureRegistered(evalDocs.sparkSession)
     val evalSh = evalDocs.select(col(idCol),
       explode(graftShingles(col(textCol), n)).as("shingle"))
     val corpusSh = corpusShingles
@@ -526,7 +520,6 @@ object Dedup {
     */
   def noveltyScores(docs: DataFrame, n: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     val sh = docs.select(col(idCol).as("id"),
       explode(graftShingles(col(textCol), n)).as("shingle"))
     val first = sh.groupBy("shingle").agg(min(col("id")).as("first_id"))
@@ -552,7 +545,6 @@ object Dedup {
     */
   def contaminationIndex(corpus: DataFrame, n: Int = 3,
       textCol: String = "text"): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     corpus.select(explode(graftShingles(col(textCol), n)).as("shingle")).distinct()
   }
 
@@ -586,7 +578,6 @@ object Dedup {
   def ngramContaminationApprox(evalDocs: DataFrame, corpus: DataFrame, n: Int = 3,
       fpp: Double = 0.01, textCol: String = "text", idCol: String = "doc_id",
       corpusShingles: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.ensureRegistered(evalDocs.sparkSession)
     val evalSh = evalDocs.select(col(idCol),
       explode(graftShingles(col(textCol), n)).as("shingle"))
     // with a persisted [[contaminationIndex]] the Bloom builds from the
@@ -623,7 +614,6 @@ object Dedup {
   def ngramContaminationBloomExact(evalDocs: DataFrame, corpus: DataFrame,
       n: Int = 3, fpp: Double = 0.01, textCol: String = "text",
       idCol: String = "doc_id", corpusShingles: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.ensureRegistered(evalDocs.sparkSession)
     val evalSh = evalDocs.select(col(idCol),
       explode(graftShingles(col(textCol), n)).as("shingle"))
     // with a persisted [[contaminationIndex]] both the Bloom build and
@@ -750,7 +740,6 @@ object Dedup {
   def ngramJaccardNewPairs(newDocs: DataFrame, corpus: DataFrame, n: Int = 3,
       minJaccard: Double = 0.5, textCol: String = "text", idCol: String = "doc_id",
       broadcastBatch: Boolean = true): DataFrame = {
-    GraftFunctions.ensureRegistered(newDocs.sparkSession)
     val corpusOnly = corpus.join(newDocs.select(col(idCol)), Seq(idCol), "left_anti")
     val all = newDocs.select(col(idCol), col(textCol))
       .unionByName(corpusOnly.select(col(idCol), col(textCol)))
@@ -781,7 +770,6 @@ object Dedup {
   def ngramContainmentNewPairs(newDocs: DataFrame, corpus: DataFrame, n: Int = 3,
       minContainment: Double = 0.6, textCol: String = "text", idCol: String = "doc_id",
       broadcastBatch: Boolean = true): DataFrame = {
-    GraftFunctions.ensureRegistered(newDocs.sparkSession)
     val corpusOnly = corpus.join(newDocs.select(col(idCol)), Seq(idCol), "left_anti")
     val all = newDocs.select(col(idCol), col(textCol))
       .unionByName(corpusOnly.select(col(idCol), col(textCol)))
@@ -1195,7 +1183,6 @@ object Dedup {
     * operator's only wide dependency is the later banding join.
     */
   def simhash64(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol).as("id"),
       GraftFunctions.graftSimhash(col(textCol)).as("simhash"))
   }
@@ -1277,7 +1264,6 @@ object Dedup {
   def simhashPairsMd5(docs: DataFrame, maxDist: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(maxDist < 4, "4x8-bit banding of a 32-bit fingerprint supports maxDist <= 3")
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     // same doc filter as d07: a token-less doc has no fingerprint
     val fps = docs.filter(col(textCol).rlike("\\S"))
       .select(col(idCol).as("id"),
@@ -1334,7 +1320,6 @@ object Dedup {
   def simhashBandingDiagnostic(docs: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
       chunks: Int = 4): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     simhashBanded(docs, textCol, idCol, chunks)
       .groupBy(col("chunk"), col("chunkVal")).agg(count(lit(1)).as("c"))
       .groupBy(col("chunk"))
@@ -1370,7 +1355,6 @@ object Dedup {
     */
   def chunkTable(docs: DataFrame, maskBits: Int = 6,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"), col(textCol).as("_t"))
       .select(col("doc_id"), col("_t"),
         explode(GraftFunctions.graftGearChunks(col("_t"), maskBits)).as("c"))

@@ -79,7 +79,6 @@ object Similarity {
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
       .withColumn("qn", sqrt(graftDot(col("qv"), col("qv"))))
     val c = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
@@ -103,7 +102,6 @@ object Similarity {
   def filteredTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       labelCol: String = "label", idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(labelCol).as("_lbl"),
         asDouble(col(vecCol)).as("qv"))
       .withColumn("qn", sqrt(graftDot(col("qv"), col("qv"))))
@@ -124,7 +122,7 @@ object Similarity {
     * are DRIVER-side (`dim` doubles) folded into the plan as an array
     * literal — broadcast-weights inference is a narrow codegen
     * projection over the corpus, no shuffle, no join, no UDF beyond
-    * the registered graft_dot expression. At 100 TB this runs at scan
+    * the native graft_dot expression. At 100 TB this runs at scan
     * speed and is the cheapest model-in-the-loop filter there is.
     *
     * `score` is rounded to 6 decimals BEFORE the sign test so the
@@ -134,7 +132,6 @@ object Similarity {
   def linearProbe(vectors: DataFrame, weights: Seq[Double], bias: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(weights.nonEmpty, "weights must be non-empty")
-    GraftFunctions.ensureRegistered(vectors.sparkSession)
     val w = array(weights.map(lit): _*)
     vectors.select(col(idCol),
         round6(graftDot(asDouble(col(vecCol)), w) + lit(bias)).as("score"))
@@ -313,7 +310,6 @@ object Similarity {
   def mmrTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       poolSize: Int = 20, lambdaMilli: Long = 700L,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val pool = bruteForceTopK(queries, corpus, poolSize, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id"), col("sim"))
     val vecs = corpus.select(col(idCol).as("_vid"),
@@ -376,7 +372,6 @@ object Similarity {
     requireBounded(queries, (maxBroadcastRows / candidates.toLong).max(1L),
       s"truncatedRerankTopK query set (×$candidates candidates each, broadcast)",
       "maxBroadcastRows")
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val cand = truncatedTopK(queries, corpus, candidates, dPrime, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id"))
     val q = normedSide(queries, idCol, vecCol, "query_id", "qv", "qn")
@@ -426,7 +421,6 @@ object Similarity {
       inDim: Int = 64, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(outDim > 0 && inDim > 0, "dims must be positive")
-    GraftFunctions.ensureRegistered(vectors.sparkSession)
     val signs = projectionSigns(inDim, outDim, seed)
     val v = asDouble(col(vecCol))
     vectors.select(col(idCol), posexplode(array(signs.map(s =>
@@ -464,7 +458,6 @@ object Similarity {
     requireBounded(queries, (maxBroadcastRows / candidates.toLong).max(1L),
       s"projectedRerankTopK query set (×$candidates candidates each, broadcast)",
       "maxBroadcastRows")
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     def projSide(df: DataFrame) = df.select(col(idCol),
       projectedVec(col(vecCol), inDim, outDim, seed).as("embedding"))
     val cand = bruteForceTopK(projSide(queries), projSide(corpus), candidates,
@@ -529,7 +522,6 @@ object Similarity {
   def lshIndex(vectors: DataFrame, dim: Int, bitsPerTable: Int = 8, tables: Int = 8,
       seedBase: Long = 2000L,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(vectors.sparkSession)
     lshBucketed(vectors, dim, bitsPerTable, tables, seedBase, idCol, vecCol,
       "id", "vec", "norm")
   }
@@ -673,7 +665,6 @@ object Similarity {
       broadcastQueries: Boolean = true,
       corpusIndex: Option[DataFrame] = None,
       seedBase: Long = 1000L): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val q = lshBucketed(queries, dim, bitsPerTable, tables, seedBase, idCol, vecCol,
       "query_id", "qv", "qn")
     val c = corpusIndex match {
@@ -694,7 +685,6 @@ object Similarity {
   def lshTopKIndexed(queries: DataFrame, corpusIndex: DataFrame, k: Int,
       p: LshParams, idCol: String = "vec_id", vecCol: String = "embedding",
       broadcastQueries: Boolean = true): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val q = lshBucketed(queries, p.dim, p.bitsPerTable, p.tables, p.seedBase,
       idCol, vecCol, "query_id", "qv", "qn")
     val c = corpusIndex.select(col("id").as("neighbor_id"), col("vec").as("cv"),
@@ -755,7 +745,6 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       broadcastProbes: Boolean = true,
       corpusIndex: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     // with a persisted index the per-call work is hashing only the probe
     // set: the codebook parquet is the 16-row quantizer, the lists
     // parquet the pre-assigned corpus. nCentroids is then defined by the
@@ -803,7 +792,6 @@ object Similarity {
     */
   def ivfIndex(corpus: DataFrame, nCentroids: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): (DataFrame, DataFrame) = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
       .withColumn("norm", sqrt(graftDot(col("vec"), col("vec"))))
     val codebookDf = c.orderBy(xxhash64(col("id"))).limit(nCentroids)
@@ -824,7 +812,6 @@ object Similarity {
     */
   def ivfIndexTrained(corpus: DataFrame, nCentroids: Int = 16, iters: Int = 3,
       idCol: String = "vec_id", vecCol: String = "embedding"): (DataFrame, DataFrame) = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
       .withColumn("norm", sqrt(graftDot(col("vec"), col("vec"))))
     val codebookDf = codebookVectors(
@@ -868,7 +855,6 @@ object Similarity {
     */
   def ivfAssign(vectors: DataFrame, codebook: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(vectors.sparkSession)
     val c = vectors.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
       .withColumn("norm", sqrt(graftDot(col("vec"), col("vec"))))
     c.withColumn("centroid_id",
@@ -960,7 +946,6 @@ object Similarity {
   def semanticDupPairs(vectors: DataFrame, minSim: Double, nCentroids: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding",
       joinAssign: Boolean = false): DataFrame = {
-    GraftFunctions.ensureRegistered(vectors.sparkSession)
     val c = vectors.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
       .withColumn("norm", sqrt(graftDot(col("vec"), col("vec"))))
     val cbDf = c.orderBy(graft.functions.Cols.md5Uint32(col("id").cast("string")), col("id"))
@@ -1075,7 +1060,6 @@ object Similarity {
     */
   def assignToCodebook(vectors: DataFrame, state: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(vectors.sparkSession)
     val st = stateFromRows(state.select(col("centroid_id").cast("long"),
       col("pos").cast("int"), col("csum").cast("long"), col("cnt").cast("long"))
       .collect(), 0, 1, 2, 3)
@@ -1110,7 +1094,6 @@ object Similarity {
     */
   def codebookSilhouette(vectors: DataFrame, state: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(vectors.sparkSession)
     val st = stateFromRows(state.select(col("centroid_id").cast("long"),
       col("pos").cast("int"), col("csum").cast("long"), col("cnt").cast("long"))
       .collect(), 0, 1, 2, 3)
@@ -1180,7 +1163,6 @@ object Similarity {
       "state (k·dim rows per iteration); pass maxCentroids explicitly if a larger " +
       "codebook is intended")
     val spark = vectors.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val v = vectors.select(col(idCol).cast("long").as("id"),
         asDouble(col(vecCol)).as("vec"))
@@ -1276,7 +1258,6 @@ object Similarity {
       "driver-side state (m·k·d rows per iteration); pass maxCentroids explicitly " +
       "if larger codebooks are intended")
     val spark = vectors.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val dim = vectors.select(size(col(vecCol))).head().getInt(0)
     require(m > 0 && dim % m == 0, s"dim $dim must divide into $m subspaces")
@@ -1321,7 +1302,6 @@ object Similarity {
     */
   def pqEncode(vectors: DataFrame, state: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(vectors.sparkSession)
     val stRows = state.select(col("sub").cast("int"), col("centroid_id").cast("long"),
       col("pos").cast("int"), col("csum").cast("long"), col("cnt").cast("long")).collect()
     val bySub = stRows.groupBy(_.getInt(0))
@@ -1356,7 +1336,6 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxProbes: Long = 65536L): DataFrame = {
     val spark = probes.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     // the probe set is collected (the LUT is |probes|·m·k by design);
     // a corpus-sized frame here must fail loudly, not OOM the driver
@@ -1401,7 +1380,6 @@ object Similarity {
     */
   def ivfPqCoarse(corpus: DataFrame, nLists: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
       .withColumn("norm", sqrt(graftDot(col("vec"), col("vec"))))
       .orderBy(graft.functions.Cols.md5Uint32(col("id").cast("string")), col("id"))
@@ -1427,7 +1405,6 @@ object Similarity {
   def ivfPqCodes(corpus: DataFrame, nLists: Int = 16, m: Int = 4,
       k: Int = 8, iters: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     ivfPqEncodeWith(corpus,
       ivfPqCoarse(corpus, nLists, idCol, vecCol).collect(),
       pqTrain(corpus, m, k, iters, idCol, vecCol), idCol, vecCol)
@@ -1466,7 +1443,6 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxProbes: Long = 65536L): DataFrame = {
     val spark = probes.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     requireBounded(probes, maxProbes, "ivfPqTopK probe set", "maxProbes")
     val cbRows = coarse.select(col("id").cast("long"), col("vec"), col("norm")).collect()
@@ -1883,7 +1859,6 @@ object Similarity {
   def cosineDupPairsLsh(vectors: DataFrame, minSim: Double, dim: Int,
       bitsPerTable: Int = 8, tables: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(vectors.sparkSession)
     val bucketed = lshBucketed(vectors, dim, bitsPerTable, tables, 2000L,
       idCol, vecCol, "id", "v", "nrm")
     val a = bucketed.select(col("table"), col("bucket"),
@@ -1916,7 +1891,6 @@ object Similarity {
   def cosineDupPairsNewLsh(newVecs: DataFrame, corpusIndex: DataFrame, minSim: Double,
       dim: Int, bitsPerTable: Int = 8, tables: Int = 8, seedBase: Long = 2000L,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(newVecs.sparkSession)
     val batch = lshBucketed(newVecs, dim, bitsPerTable, tables, seedBase,
       idCol, vecCol, "id", "vec", "norm")
     val a = batch.select(col("table"), col("bucket"),
@@ -1958,7 +1932,6 @@ object Similarity {
     */
   def cosineDupPairs(vectors: DataFrame, minSim: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.ensureRegistered(vectors.sparkSession)
     val a = normedSide(vectors, idCol, vecCol, "id_a", "va", "na")
     val b = normedSide(vectors, idCol, vecCol, "id_b", "vb", "nb")
     // both predicates in the join condition, cheap id check FIRST: a
@@ -1989,7 +1962,6 @@ object Similarity {
   def cosineDupPairsNew(newVecs: DataFrame, corpus: DataFrame, minSim: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
       broadcastBatch: Boolean = true): DataFrame = {
-    GraftFunctions.ensureRegistered(newVecs.sparkSession)
     val corpusOnly = corpus.join(newVecs.select(col(idCol)), Seq(idCol), "left_anti")
     val a = normedSide(newVecs, idCol, vecCol, "id_a", "va", "na")
     val b = normedSide(corpusOnly, idCol, vecCol, "id_b", "vb", "nb")

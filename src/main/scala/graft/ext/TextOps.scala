@@ -941,7 +941,6 @@ object TextOps {
     */
   def repetitionRatio(docs: DataFrame, n: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     // RAW split length (no empty-text guard): the shingle machinery
     // derives its short-doc case from the raw token array, so the
     // instance count must come from the same array
@@ -1545,7 +1544,6 @@ object TextOps {
     * `rec_pos, rec_type, uri, content_length, payload`.
     */
   def warcRecords(pages: DataFrame, containerCol: String = "warc"): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(pages.sparkSession)
     val keep = pages.columns.filterNot(_ == containerCol).map(col).toSeq
     pages
       .select(keep :+ posexplode(
@@ -2178,7 +2176,6 @@ object TextOps {
     * equivalent in ExtSpec).
     */
   def analyze(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col("doc_id"),
         graft.functions.GraftFunctions.graftTextMetrics(col("text")).as("m"))
       .select(
@@ -2216,7 +2213,6 @@ object TextOps {
     */
   def blocklistHits(docs: DataFrame, patterns: Seq[String],
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs
       .select(col(idCol), posexplode(
         graft.functions.GraftFunctions.graftBlocklist(col(textCol), patterns))

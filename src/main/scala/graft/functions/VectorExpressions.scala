@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.typedLit
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst dot product over `array<float>` / `array<double>`
@@ -73,13 +74,12 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration + Column-API surface for graft's native expressions. */
+/** Column-API surface for graft's native expressions, plus their SQL
+  * registration.
+  */
 object GraftFunctions {
 
-  /** Idempotently register graft expressions on a session. The session's
-    * own FunctionRegistry is the source of truth — an external dedupe key
-    * (identity hash) can collide across sessions and silently skip one.
-    */
+  /** The `graft_*` SQL names and builders [[ensureRegistered]] installs. */
   private val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("graft_dot", classOf[DotProduct],
       (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))),
@@ -120,6 +120,14 @@ object GraftFunctions {
     ("graft_warc_records", classOf[WarcRecords],
       (exprs: Seq[Expression]) => WarcRecords(exprs(0))))
 
+  /** Idempotently register graft expressions on a session under their
+    * `graft_*` names. Only SQL text (`spark.sql("SELECT graft_dot(a, b)
+    * ...")`, `expr(...)`) needs this, once per session; the Column helpers
+    * below build their expressions directly and work on any session
+    * without it. The session's own FunctionRegistry is the source of
+    * truth — an external dedupe key (identity hash) can collide across
+    * sessions and silently skip one.
+    */
   def ensureRegistered(spark: SparkSession): Unit = synchronized {
     val registry = spark.sessionState.functionRegistry
     // per-function check: a session registered by an older library
@@ -131,76 +139,63 @@ object GraftFunctions {
     }
   }
 
-  /** Fused native dot product (requires [[ensureRegistered]] on the
-    * owning session, done automatically by graft.ext.Similarity).
-    */
-  def graftDot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  /** Fused native dot product. */
+  def graftDot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
-  /** Distinct hashed word-shingle set (requires [[ensureRegistered]]). */
+  /** Distinct hashed word-shingle set. */
   def graftShingles(text: Column, n: Int): Column =
-    call_function("graft_shingles", text, org.apache.spark.sql.functions.lit(n))
+    column(HashedShingles(expression(text), n))
 
-  /** One-pass text metrics struct (requires [[ensureRegistered]]). */
-  def graftTextMetrics(text: Column): Column = call_function("graft_text_metrics", text)
+  /** One-pass text metrics struct. */
+  def graftTextMetrics(text: Column): Column = column(TextMetrics(expression(text)))
 
-  /** One-pass 64-bit SimHash (requires [[ensureRegistered]]). */
-  def graftSimhash(text: Column): Column = call_function("graft_simhash", text)
+  /** One-pass 64-bit SimHash. */
+  def graftSimhash(text: Column): Column = column(SimHash64(expression(text)))
 
-  /** One-pass 32-bit md5 SimHash, DuckDB-replayable (requires
-    * [[ensureRegistered]]).
-    */
-  def graftSimhashMd5(text: Column): Column = call_function("graft_simhash_md5", text)
+  /** One-pass 32-bit md5 SimHash, DuckDB-replayable. */
+  def graftSimhashMd5(text: Column): Column = column(SimHashMd5(expression(text)))
 
-  /** k seeded MinHash values of a shingle set, one narrow pass
-    * (requires [[ensureRegistered]]).
-    */
+  /** k seeded MinHash values of a shingle set, one narrow pass. */
   def graftMinhashes(set: Column, k: Int): Column =
-    call_function("graft_minhashes", set, org.apache.spark.sql.functions.lit(k))
+    column(MinHashes(expression(set), k))
 
-  /** One-pass min-md5 shingle fingerprint (requires [[ensureRegistered]]). */
+  /** One-pass min-md5 shingle fingerprint. */
   def graftFingerprint(text: Column, n: Int): Column =
-    call_function("graft_fingerprint", text, org.apache.spark.sql.functions.lit(n))
+    column(MinShingleMd5(expression(text), n))
 
-  /** Unicode NFC normalization, codegen'd (requires [[ensureRegistered]]). */
-  def graftNfc(text: Column): Column = call_function("graft_nfc", text)
+  /** Unicode NFC normalization, codegen'd. */
+  def graftNfc(text: Column): Column = column(NfcNormalize(expression(text)))
 
   /** GPT-2-style byte-to-printable remap with whitespace passthrough
-    * (see [[ByteRemap]]; requires [[ensureRegistered]]).
+    * (see [[ByteRemap]]).
     */
-  def graftByteRemap(text: Column): Column = call_function("graft_byte_remap", text)
+  def graftByteRemap(text: Column): Column = column(ByteRemap(expression(text)))
 
   /** WARC-style container record walk — Content-Length-framed, prefix-
-    * keeping rejection (see [[WarcRecords]]; requires
-    * [[ensureRegistered]]).
+    * keeping rejection (see [[WarcRecords]]).
     */
   def graftWarcRecords(container: Column): Column =
-    call_function("graft_warc_records", container)
+    column(WarcRecords(expression(container)))
 
-  /** Native Jaro-Winkler similarity, DuckDB-exact semantics (requires
-    * [[ensureRegistered]]).
-    */
+  /** Native Jaro-Winkler similarity, DuckDB-exact semantics. */
   def graftJaroWinkler(a: Column, b: Column): Column =
-    call_function("graft_jaro_winkler", a, b)
+    column(JaroWinklerSim(expression(a), expression(b)))
 
   /** One-pass Aho-Corasick blocklist counts, index-aligned with
-    * `patterns` (requires [[ensureRegistered]]).
+    * `patterns`.
     */
   def graftBlocklist(text: Column, patterns: Seq[String]): Column =
-    call_function("graft_blocklist", text,
-      org.apache.spark.sql.functions.lit(patterns.toArray))
+    column(BlocklistCounts(expression(text), patterns))
 
   /** Content-defined chunk spans `array<struct<start, len>>` via the
-    * gear rolling hash (requires [[ensureRegistered]]).
+    * gear rolling hash.
     */
   def graftGearChunks(text: Column, maskBits: Int): Column =
-    call_function("graft_gear_chunks", text,
-      org.apache.spark.sql.functions.lit(maskBits))
+    column(GearChunks(expression(text), maskBits))
 
-  /** Native Morton code of `cols` under per-column quantile `bounds`
-    * (requires [[ensureRegistered]]).
-    */
+  /** Native Morton code of `cols` under per-column quantile `bounds`. */
   def graftMorton(bounds: Array[Array[Double]], cols: Seq[Column]): Column =
-    call_function("graft_morton",
-      org.apache.spark.sql.functions.typedLit[Seq[Seq[Double]]](
-        bounds.map(_.toSeq).toSeq) +: cols: _*)
+    column(MortonCode((typedLit[Seq[Seq[Double]]](bounds.map(_.toSeq).toSeq) +: cols)
+      .map(expression)))
 }

@@ -65,7 +65,6 @@ object ZOrder {
     // every table the compactor re-lays-out. Nulls rank 0 — they
     // cluster with the lowest values, which is also where approxQuantile
     // (null-ignoring) leaves the first boundary.
-    graft.functions.GraftFunctions.ensureRegistered(df.sparkSession)
     df.withColumn(zCol, graft.functions.GraftFunctions.graftMorton(
       bounds, cols.map(c => col(c).cast("double"))))
   }

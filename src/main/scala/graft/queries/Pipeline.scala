@@ -280,7 +280,6 @@ object Pipeline {
     */
   def d30JwRank(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val (dirty, cat) = fuzzyCatalog(spark, dir)
     // candidates come from the persisted d27 pair artifact (the
     // pair-graph consumer convention); only candidate-sized rows join
@@ -1444,7 +1443,6 @@ object Pipeline {
     * replace chain — no new shuffle.
     */
   def t29bByteBpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val d = col("doc_id")
     val lowered = lower(col("text"))
     val injected = when(pmod(d, lit(3)) === 0,
@@ -1843,7 +1841,6 @@ object Pipeline {
     * not just ASCII identity. Narrow scan→project→sort.
     */
   def t18Nfc(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val nfc = graft.functions.GraftFunctions.graftNfc _
     Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -1876,7 +1873,6 @@ object Pipeline {
     * round(6)-ed, for the same cross-engine tie-breaking reason as t05.
     */
   def t02TextAnalyze(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val ratio = when(col("m.n_tokens") === 0, lit(0.0))
       .otherwise(col("m.stop_hits").cast("double") / col("m.n_tokens"))
     val lenScore = least(col("m.n_chars").cast("double") / 500.0, lit(1.0))
@@ -2469,7 +2465,6 @@ object Pipeline {
     * quadratic anywhere).
     */
   def d06FingerprintDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.graftFingerprint(lower(col("text")), 3).as("fingerprint"))
@@ -2503,7 +2498,6 @@ object Pipeline {
     * in SQL and sits under the hash gate.
     */
   def t15LangId(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.graftTextMetrics(col("text")).as("m"))
@@ -3882,7 +3876,6 @@ object Pipeline {
     * SQL oracle recomputes it bit-for-bit.
     */
   def t04Fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.graftFingerprint(lower(col("text")), 3).as("fingerprint"))
@@ -4046,7 +4039,6 @@ object Pipeline {
     * in SQL.
     */
   def d34CdcShifted(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val docs = Tables.documents(spark, dir)
     def chunksOf(df: DataFrame): DataFrame =
       graft.ext.Dedup.chunkTable(df, maskBits = 6)
@@ -4324,7 +4316,6 @@ object Pipeline {
     * whitespace-split tokens are all empty.
     */
   def d07SimhashMd5(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     Tables.documents(spark, dir)
       .filter(col("text").rlike("\\S"))
       .select(col("doc_id"),

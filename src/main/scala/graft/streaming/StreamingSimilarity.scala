@@ -33,7 +33,6 @@ object StreamingSimilarity {
   def candidates(queriesStream: DataFrame, corpusIndex: DataFrame,
       dim: Int, bitsPerTable: Int = 8, tables: Int = 8, seedBase: Long = 2000L,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(queriesStream.sparkSession)
     val q = Similarity.lshIndex(queriesStream, dim, bitsPerTable, tables, seedBase,
       idCol, vecCol)
     q.select(col("table"), col("bucket"), col("id").as("query_id"))

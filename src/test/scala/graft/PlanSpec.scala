@@ -276,7 +276,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("d09 prefix stage (broadcast df): exploded shingles never shuffle on the join key") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val docs = Tables.documents(spark, sf)
     val sets = docs.select(col("doc_id").as("id"),
         graft.functions.GraftFunctions.graftShingles(col("text"), 3).as("set"))

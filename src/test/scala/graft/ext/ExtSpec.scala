@@ -107,7 +107,6 @@ class ExtSpec extends AnyFunSuite {
 
   test("PPJoin prefix stage: an injected boilerplate shingle never enters the candidate join") {
     import spark.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     // 40 docs all opening with the same boilerplate 3 words (→ one shared
     // shingle with df = 40, the zipfian hot key) followed by 7 unique
     // words each (7 unique shingles, df = 1). The naive inverted-index
@@ -192,7 +191,6 @@ class ExtSpec extends AnyFunSuite {
 
   test("whitespace fuzz: native tokenization matches the declarative twin on 300 random texts") {
     import spark.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     // seeded random strings over a whitespace-heavy alphabet — the class
     // of input where Java trim/split semantics silently diverge from
     // Spark's (r3 code review finding)
@@ -566,7 +564,6 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("native min-md5 shingle fingerprint equals the explode+min-agg formulation") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     // edge shapes alongside the fixture: short doc (<n tokens), empty,
     // whitespace-only, duplicated shingles, non-space edge whitespace
@@ -826,7 +823,6 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("langIdScored == fused TextMetrics lang fields (pred AND winning hits)") {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
     val both = docs.select(col("doc_id"),
       graft.functions.GraftFunctions.graftTextMetrics(col("text")).as("m"),
       TextOps.langIdScored(col("text")).as("s"))

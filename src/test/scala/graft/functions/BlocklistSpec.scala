@@ -62,7 +62,6 @@ class BlocklistSpec extends AnyFunSuite {
 
   test("codegen path == direct machine; nulls propagate; SQL-callable; plan is UDF-free") {
     import spark.implicits._
-    GraftFunctions.ensureRegistered(spark)
     val pats = Seq("fast", "fast table", "table table")
     val df = Seq(
       "fast table table fast",
@@ -74,6 +73,7 @@ class BlocklistSpec extends AnyFunSuite {
     val direct = Seq("fast table table fast", "table table table", "nothing here")
       .map(t => ac(t, pats))
     assert(viaPlan == direct, "whole-stage codegen drifted from countGreedy")
+    GraftFunctions.ensureRegistered(spark) // SQL text needs the names
     val sqlRow = spark.sql(
       "SELECT graft_blocklist('aaaa', array('aa'))").head.getSeq[Long](0)
     assert(sqlRow == Seq(2L))

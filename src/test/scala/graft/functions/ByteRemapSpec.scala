@@ -15,7 +15,6 @@ class ByteRemapSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def remap(s: String): String = {
-    GraftFunctions.ensureRegistered(spark)
     Seq(s).toDF("t")
       .select(GraftFunctions.graftByteRemap(col("t"))).collect()(0).getString(0)
   }

@@ -19,7 +19,6 @@ class GearChunksSpec extends AnyFunSuite {
 
   test("chunks partition the text exactly: contiguous spans, lens sum to length, empty text empty") {
     val docs = Tables.documents(spark, sf)
-    GraftFunctions.ensureRegistered(spark)
     val bad = docs.select(col("doc_id"), length(col("text")).as("n"),
         GraftFunctions.graftGearChunks(col("text"), 6).as("cs"))
       .select(col("doc_id"), col("n"),
@@ -55,7 +54,6 @@ class GearChunksSpec extends AnyFunSuite {
   }
 
   test("deterministic; codegen path == direct eval; SQL-callable") {
-    GraftFunctions.ensureRegistered(spark)
     val docs = Tables.documents(spark, sf).limit(50).cache()
     val viaDf = docs.select(col("doc_id"),
         GraftFunctions.graftGearChunks(col("text"), 6).as("cs"))
@@ -67,6 +65,7 @@ class GearChunksSpec extends AnyFunSuite {
       r.getLong(0) -> (spans.size, spans.map(_._2).sum)
     }.toMap
     assert(viaDf == direct, "codegen path diverged from direct eval")
+    GraftFunctions.ensureRegistered(spark) // SQL text needs the names
     val viaSql = docs.sparkSession.sql(
       "SELECT size(graft_gear_chunks('abc def ghi jkl', 3)) AS n").head.getInt(0)
     assert(viaSql == chunkSpans("abc def ghi jkl", 3).size)

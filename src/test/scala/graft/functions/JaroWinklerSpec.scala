@@ -37,11 +37,11 @@ class JaroWinklerSpec extends AnyFunSuite {
 
   test("codegen path == interpreted compute; nulls propagate; SQL-callable") {
     import spark.implicits._
-    GraftFunctions.ensureRegistered(spark)
     val df = pinned.map { case (a, b, _) => (a, b) }.toDF("a", "b")
     val viaPlan = df.select(GraftFunctions.graftJaroWinkler(col("a"), col("b")))
       .collect().map(_.getDouble(0)).toSeq
     assert(viaPlan == pinned.map(_._3), "whole-stage codegen drifted from compute()")
+    GraftFunctions.ensureRegistered(spark) // SQL text needs the names
     val sqlRow = spark.sql("SELECT graft_jaro_winkler('martha', 'marhta')")
       .head.getDouble(0)
     assert(sqlRow == 0.9611111111111111)

@@ -25,7 +25,6 @@ class WarcSpec extends AnyFunSuite {
   }
 
   private def parse(container: String): Seq[(String, String, Long, String)] = {
-    GraftFunctions.ensureRegistered(spark)
     Seq(container).toDF("w")
       .select(explode(GraftFunctions.graftWarcRecords(col("w"))).as("r"))
       .select($"r.rec_type", $"r.uri", $"r.content_length", $"r.payload")
