@@ -1,15 +1,13 @@
 package graft.acl
 
-import scala.concurrent.{Await, Future}
 import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.fs.permission.{AclEntry, AclEntryScope, AclEntryType, AclStatus, FsAction}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-import graft.fs.{Fs, FsOperationResult, Retry, SerializableHadoopConf}
+import graft.fs.{Fs, FsOperationResult, Retry}
 
 /** User-facing ACL spec (reference: acl/AclManager.scala:198-205):
   * scope ∈ user/group/other/mask, POSIX rwx string, level ACCESS/DEFAULT,
@@ -37,12 +35,14 @@ object AclManager {
     b.build()
   }
 
-  /** Multithreaded `modifyAclEntries` over paths; paths that vanished are
-    * skipped (reference acl/AclManager.scala:57-80); retry ≤5.
+  /** `modifyAclEntries` over paths on the driver pool
+    * ([[graft.fs.Retry.onDriver]]), retry ≤5; a path that is gone when
+    * its call runs is skipped and reported as a success (reference
+    * acl/AclManager.scala:57-80).
     */
-  def modifyAcls(paths: Seq[String], permission: FsPermission,
-      threads: Int = Fs.driverPoolSize)(implicit conf: Configuration): Seq[FsOperationResult] =
-    modifyAcls(paths, Seq(permission), threads)
+  def modifyAcls(paths: Seq[String], permission: FsPermission)(
+      implicit conf: Configuration): Seq[FsOperationResult] =
+    modifyAcls(paths, Seq(permission))
 
   /** Multi-entry [[modifyAcls]] — reference parity (the reference takes
     * an `Array[FsPermission]`, acl/AclManager.scala:57-76): ALL entries
@@ -51,32 +51,12 @@ object AclManager {
     * path instead of N calls racing per-entry. Empty `permissions` is a
     * no-op.
     */
-  def modifyAcls(paths: Seq[String], permissions: Seq[FsPermission],
-      threads: Int)(implicit conf: Configuration): Seq[FsOperationResult] = {
-    if (paths.isEmpty || permissions.isEmpty) return Seq.empty
-    val fs = Fs.getFileSystem(conf, paths.head)
-    val entries = permissions.map(getAclEntry).asJava
-    val existing = paths.filter(p => fs.exists(new Path(p)))
-    Retry.retryFailed[String](
-      existing,
-      work => Fs.withPool(threads) { implicit ec =>
-        val fut = work.map { p => Future {
-          val ok = try { fs.modifyAclEntries(new Path(p), entries); true }
-                   catch { case _: Throwable => false }
-          FsOperationResult(p, ok)
-        }}
-        fut.map(Await.result(_, Fs.OpTimeout))
-      },
-      identity,
-      // "vanished paths are skipped" must also hold for paths deleted
-      // AFTER the exists() pre-filter (temp/_SUCCESS files mid-run) —
-      // count them as done instead of failing the whole batch
-      repair = failed => failed.filter(p => !fs.exists(new Path(p))))
-  }
-
   def modifyAcls(paths: Seq[String], permissions: Seq[FsPermission])(
-      implicit conf: Configuration): Seq[FsOperationResult] =
-    modifyAcls(paths, permissions, Fs.driverPoolSize)
+      implicit conf: Configuration): Seq[FsOperationResult] = {
+    if (permissions.isEmpty) return Seq.empty
+    val entries = permissions.map(getAclEntry).asJava
+    applyAclOnDriver(paths)((fs, path) => fs.modifyAclEntries(path, entries))
+  }
 
   /** Table ACL: ACCESS+DEFAULT on the table folder, ACCESS on all data
     * files (reference acl/AclManager.scala:32-45).
@@ -119,25 +99,28 @@ object AclManager {
       modifyAcls(folders, permissions.map(_.copy(level = "DEFAULT")))
   }
 
-  /** Remove all non-base ACL entries from paths (reference
-    * acl/AclManager.scala:135-164).
+  /** Remove all non-base ACL entries from paths, like [[modifyAcls]]
+    * (reference acl/AclManager.scala:135-164).
     */
-  def clearAcls(paths: Seq[String], threads: Int = Fs.driverPoolSize)(
+  def clearAcls(paths: Seq[String])(implicit conf: Configuration): Seq[FsOperationResult] =
+    applyAclOnDriver(paths)((fs, path) => fs.removeAcl(path))
+
+  /** The driver form of an ACL call: `op` on each path that still
+    * exists, checked in the pooled call itself, so a vanished path is a
+    * skipped success and no serial existence pass runs first.
+    */
+  private def applyAclOnDriver(paths: Seq[String])(op: (FileSystem, Path) => Unit)(
       implicit conf: Configuration): Seq[FsOperationResult] = {
     if (paths.isEmpty) return Seq.empty
     val fs = Fs.getFileSystem(conf, paths.head)
-    Retry.retryFailed[String](
-      paths.filter(p => fs.exists(new Path(p))),
-      work => Fs.withPool(threads) { implicit ec =>
-        val fut = work.map { p => Future {
-          val ok = try { fs.removeAcl(new Path(p)); true }
-                   catch { case _: Throwable => false }
-          FsOperationResult(p, ok)
-        }}
-        fut.map(Await.result(_, Fs.OpTimeout))
-      },
-      identity,
-      repair = failed => failed.filter(p => !fs.exists(new Path(p))))
+    Retry.onDriver[String](paths, identity)(applyIfPresent(fs, op))
+  }
+
+  /** `op` on `p` when it exists; true either way. */
+  private def applyIfPresent(fs: FileSystem, op: (FileSystem, Path) => Unit)(p: String): Boolean = {
+    val path = new Path(p)
+    if (fs.exists(path)) op(fs, path)
+    true
   }
 
   def clearFolderAcl(uri: String)(implicit conf: Configuration): Seq[FsOperationResult] =
@@ -197,23 +180,12 @@ object AclManager {
       opBuilder: () => (FileSystem, Path) => Unit)(
       implicit spark: SparkSession): Dataset[FsOperationResult] = {
     import spark.implicits._
-    require(!spark.conf.getOption("spark.speculation").contains("true"),
-      "distributed ACL tasks are side-effecting; disable spark.speculation")
-    val sconf = new SerializableHadoopConf(conf)
+    val perPartition = Retry.inTasks[String](conf, identity) { c =>
+      val op = opBuilder()
+      p => applyIfPresent(new Path(p).getFileSystem(c), op)(p)
+    }
     graft.fs.DistributedRetry.run[String](paths, "value", "ACL operations",
-      (pending, _) => pending.mapPartitions { it =>
-        val c = sconf.value
-        val op = opBuilder()
-        it.map { p =>
-          val path = new Path(p)
-          val ok = try {
-            val fs = path.getFileSystem(c)
-            if (fs.exists(path)) op(fs, path)
-            true // vanished paths are skipped-success, as in the driver variant
-          } catch { case NonFatal(_) => false }
-          FsOperationResult(p, ok)
-        }
-      })
+      (pending, _) => pending.mapPartitions(perPartition))
   }
 
   /** Read AclStatus for one / many paths (reference acl/AclManager.scala:172-175,324-329). */

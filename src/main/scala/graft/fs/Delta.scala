@@ -1,7 +1,5 @@
 package graft.fs
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -203,36 +201,33 @@ object Delta {
     val targetUri = new org.apache.hadoop.fs.Path(targetUri0).toString
     val (src, trg, release) = hashedSides(sourceUri, targetUri, checkContent)
     val keys = Seq("relPath", "isDirectory", "byteSize", "contentHash")
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val target = (relPath: String) => new org.apache.hadoop.fs.Path(s"$targetUri/$relPath")
+    // both stages fail the sync on any failed item; each runs one job
+    def failures(relPaths: org.apache.spark.sql.Dataset[String])(
+        op: org.apache.hadoop.conf.Configuration => String => Boolean): Long =
+      relPaths.mapPartitions(Retry.inTasks[String](spark.sparkContext.hadoopConfiguration, identity)(op))
+        .filter(!_.success).count()
 
     // target-only entries: recursive idempotent delete (empty relPath
     // would be the target root — rel() already refuses those)
     val extra = trg.join(src, keys, "left_anti")
       .filter(length($"relPath") > 0).select($"relPath").as[String]
-    val delFailed = extra.mapPartitions { it =>
-      val c = conf.value
-      it.map { relPath =>
-        val p = new org.apache.hadoop.fs.Path(s"$targetUri/$relPath")
-        val ok = try { val fs = p.getFileSystem(c); fs.delete(p, true); !fs.exists(p) }
-                 catch { case NonFatal(_) => false }
-        FsOperationResult(relPath, ok)
-      }
-    }.filter(!_.success).count()
+    val delFailed = failures(extra) { c => relPath =>
+      val p = target(relPath)
+      val fs = p.getFileSystem(c)
+      fs.delete(p, true)
+      !fs.exists(p)
+    }
     require(delFailed == 0, s"synchronizeDistributed: $delFailed deletes failed under $targetUri")
 
     val missing = src.join(trg, keys, "left_anti")
       .filter(length($"relPath") > 0)
       .select($"relPath", $"isDirectory").persist()
     // source-only directories: recreate (copy below only moves files)
-    val mkdirFailed = missing.filter($"isDirectory").select($"relPath").as[String]
-      .mapPartitions { it =>
-        val c = conf.value
-        it.map { relPath =>
-          val p = new org.apache.hadoop.fs.Path(s"$targetUri/$relPath")
-          val ok = try p.getFileSystem(c).mkdirs(p) catch { case NonFatal(_) => false }
-          FsOperationResult(relPath, ok)
-        }
-      }.filter(!_.success).count()
+    val mkdirFailed = failures(missing.filter($"isDirectory").select($"relPath").as[String]) { c => relPath =>
+      val p = target(relPath)
+      p.getFileSystem(c).mkdirs(p)
+    }
     require(mkdirFailed == 0, s"synchronizeDistributed: $mkdirFailed mkdirs failed under $targetUri")
     // source-only files: distributed copy with retry
     val files = missing.filter(!$"isDirectory").select($"relPath").as[String]
@@ -309,8 +304,8 @@ object Delta {
     val fs = Fs.getFileSystem(conf, targetUri)
     // recreate missing directories (copy handles files only); the diff
     // entries carry isDirectory from the listing, so no per-path re-stat
-    missing.filter(_.isDirectory)
-      .foreach(e => fs.mkdirs(new org.apache.hadoop.fs.Path(s"$targetUri/${e.path}")))
+    Retry.onDriver[String](missing.filter(_.isDirectory).map(e => s"$targetUri/${e.path}").toIndexedSeq,
+      identity)(d => fs.mkdirs(new org.apache.hadoop.fs.Path(d)))
     val pairs = missing.filterNot(_.isDirectory)
       .map(e => Paths(s"$sourceUri/${e.path}", s"$targetUri/${e.path}")).toIndexedSeq
     DistributedExecution.copyFiles(pairs, taskCount)

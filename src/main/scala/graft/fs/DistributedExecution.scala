@@ -1,7 +1,5 @@
 package graft.fs
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Distributed file copy: the flagship data-movement operator
@@ -10,15 +8,14 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * Spark-first redesign (SURVEY §7.4):
   *   - one task per slot by default, files dealt round-robin; the
   *     reference's one-file-per-task layout is `taskCount = <file count>`;
-  *   - Hadoop conf ships to tasks via [[SerializableHadoopConf]] exactly
-  *     as the reference broadcasts `SerializableWritable`;
-  *   - per-task FS handles opened once per partition (`mapPartitions`);
+  *   - each partition copies through [[Retry.inTasks]], which ships the
+  *     Hadoop conf ([[SerializableHadoopConf]], as the reference
+  *     broadcasts `SerializableWritable`) and refuses speculative tasks;
   *   - [[copyFiles]] retries on the driver ([[Retry.retryFailed]], one
   *     `collect` per attempt); [[copyDataset]] keeps work and results
   *     distributed ([[DistributedRetry]]), so a billion-file copy never
   *     materializes on the driver;
-  *   - copy is overwrite=true → idempotent, safe under task retry
-  *     (speculation must stay off: side-effecting tasks).
+  *   - copy is overwrite=true → idempotent, safe under task retry.
   */
 object DistributedExecution {
 
@@ -66,22 +63,13 @@ object DistributedExecution {
     */
   private def attempt(taskCount: Int)(implicit spark: SparkSession)
       : (Long => Int, Iterator[Paths] => Iterator[FsOperationResult]) = {
-    require(!spark.conf.getOption("spark.speculation").contains("true"),
-      "distributed copy tasks are side-effecting; disable spark.speculation")
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val limit = if (taskCount > 0) taskCount else spark.sparkContext.defaultParallelism
-    (pending => math.min(limit.toLong, pending).max(1L).toInt, it => {
-      val c = conf.value
-      it.map { p =>
+    (pending => math.min(limit.toLong, pending).max(1L).toInt,
+      Retry.inTasks[Paths](spark.sparkContext.hadoopConfiguration, _.sourcePath) { c => p =>
         // a self-copy with overwrite=true TRUNCATES the file before
         // reading it — refuse rather than destroy data (this is the
         // failure mode of a mis-spelled prefix rewrite upstream)
-        val ok =
-          if (p.sourcePath == p.targetPath) false
-          else try Fs.copySingleFile(c, p.sourcePath, p.targetPath)
-               catch { case NonFatal(_) => false }
-        FsOperationResult(p.sourcePath, ok)
-      }
-    })
+        p.sourcePath != p.targetPath && Fs.copySingleFile(c, p.sourcePath, p.targetPath)
+      })
   }
 }

@@ -1,10 +1,8 @@
 package graft.fs
 
 import java.net.URI
-import java.util.concurrent.Executors
 
 import scala.concurrent.duration._
-import scala.concurrent.{Await, ExecutionContext, Future}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
@@ -13,7 +11,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 /** Tree scanning + size reporting over any Hadoop FileSystem.
   *
   * Semantics follow the reference (reference: fs/package.scala:23-119).
-  * [[Fs.list]] is driver-only: a breadth-first scan on driver futures
+  * [[Fs.list]] is driver-only: a breadth-first scan on the driver pool
   * that returns the whole tree as an array. The 100 TB-scale path is a
   * separate call (SURVEY §7.4): [[Fs.listDistributed]] scans level by
   * level in Spark (`Dataset[String].flatMap(listStatus)`, one Spark job
@@ -22,11 +20,15 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 object Fs {
 
-  /** Threads for driver-side metadata calls (reference used a 1000-thread
-    * pool sized for ADLS HTTP latency — fs/package.scala via
-    * helpers/implicits.scala:13-14). Overridable per call.
+  /** Threads of the driver pool every per-path metadata call runs on
+    * ([[Retry.onDriver]], [[list]]); the reference used a 1000-thread
+    * pool sized for ADLS HTTP latency (fs/package.scala via
+    * helpers/implicits.scala:13-14). The one width setting: the right
+    * width depends on the store's latency, so raise it for a remote
+    * store and lower it for a local one.
     */
   @volatile var driverPoolSize: Int = 256
+  /** How long the driver pool waits on one metadata call. */
   val OpTimeout: FiniteDuration = 10.minutes
 
   /** Resolve a FileSystem from a URI string (spaces sanitized — reference
@@ -43,12 +45,11 @@ object Fs {
     fs.listStatus(dir).map(toElement)
 
   /** Recursive breadth-first tree listing; each level's directories are
-    * listed concurrently on a bounded pool (reference fs/package.scala:35-50).
-    *
-    * `threads` defaults to [[driverPoolSize]] and is honored up to
-    * `withPool`'s 1000-thread cap — the reference sized this pool at
-    * 1000 because against a high-latency object store (ADLS HTTP) the
-    * listing rate is latency-bound, not CPU-bound.
+    * listed concurrently on the driver pool of [[Retry.onPool]]
+    * (reference fs/package.scala:35-50), whose width is
+    * [[driverPoolSize]] — the reference sized this pool at 1000 because
+    * against a high-latency object store (ADLS HTTP) the listing rate is
+    * latency-bound, not CPU-bound. A failed `listStatus` fails the call.
     *
     * `dropFileDetail = true` collapses each folder's files into one
     * `<folder>/summed_up_files` element DURING the scan (reference
@@ -57,27 +58,23 @@ object Fs {
     * a million rows, so wide-folder size reports stay driver-safe. Byte
     * totals are unchanged; only per-file detail is lost.
     */
-  def list(uri: String, dropFileDetail: Boolean = false,
-      threads: Int = -1)(implicit conf: Configuration): Array[FsElement] = {
+  def list(uri: String, dropFileDetail: Boolean = false)(implicit conf: Configuration): Array[FsElement] = {
     val fs = getFileSystem(conf, uri)
-    withPool(if (threads > 0) threads else driverPoolSize) { implicit ec =>
-      val out = Array.newBuilder[FsElement]
-      var dirs: Array[Path] = Array(new Path(uri))
-      while (dirs.nonEmpty) {
-        val futures = dirs.map(d => Future {
-          val elems = fs.listStatus(d).map(toElement)
-          if (dropFileDetail && elems.nonEmpty) {
-            val (subdirs, files) = elems.partition(_.isDirectory)
-            subdirs :+ FsElement(s"${d.toString.stripSuffix("/")}/summed_up_files",
-              isDirectory = false, files.map(_.byteSize).sum)
-          } else elems
-        })
-        val level = futures.flatMap(f => Await.result(f, OpTimeout))
-        out ++= level
-        dirs = level.filter(_.isDirectory).map(e => new Path(e.path))
-      }
-      out.result()
+    val out = Array.newBuilder[FsElement]
+    var dirs: Seq[Path] = Seq(new Path(uri))
+    while (dirs.nonEmpty) {
+      val level = Retry.onPool(dirs) { d =>
+        val elems = fs.listStatus(d).map(toElement)
+        if (dropFileDetail && elems.nonEmpty) {
+          val (subdirs, files) = elems.partition(_.isDirectory)
+          subdirs :+ FsElement(s"${d.toString.stripSuffix("/")}/summed_up_files",
+            isDirectory = false, files.map(_.byteSize).sum)
+        } else elems
+      }.flatten
+      out ++= level
+      dirs = level.filter(_.isDirectory).map(e => new Path(e.path))
     }
+    out.result()
   }
 
   /** Distributed level-synchronous tree scan: the 100 TB path. Each BFS
@@ -197,17 +194,6 @@ object Fs {
     FileUtil.copy(srcFs, src, dstFs, dst, false, true, conf)
   }
 
-  /** Rename only works within one FileSystem (reference fs/package.scala:126-129). */
-  /** Fixed driver-side thread pool scoped to `body` — the one pool
-    * helper every multithreaded metadata operator (move/delete/ACL)
-    * shares, so sizing/shutdown fixes land in one place.
-    */
-  private[graft] def withPool[T](threads: Int)(body: ExecutionContext => T): T = {
-    val pool = Executors.newFixedThreadPool(threads.max(1).min(1000))
-    try body(ExecutionContext.fromExecutor(pool))
-    finally pool.shutdown()
-  }
-
   /** Rewrite `path` from one root prefix onto another, with all three
     * normalized through Hadoop Path so caller spellings — file:///x vs
     * listStatus's file:/x, trailing slash, unqualified — can't turn the
@@ -226,6 +212,7 @@ object Fs {
     to + p.stripPrefix(from)
   }
 
+  /** Rename only works within one FileSystem (reference fs/package.scala:126-129). */
   def checkIfFsIsTheSame(source: String, target: String): Boolean = {
     def auth(u: String) = { val x = new URI(u); (x.getScheme, x.getAuthority) }
     auth(source) == auth(target)

@@ -1,13 +1,12 @@
 package graft.fs
 
-import scala.concurrent.{Await, Future}
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
 /** Driver-side multithreaded metadata operations: rename and delete are
   * single HTTP/metadata calls per path on cloud stores, so a Spark job
-  * would be overhead — a bounded thread pool is the right tool
+  * would be overhead — each runs on the driver pool of
+  * [[Retry.onDriver]], which sizes, times out and retries it
   * (reference: fs/LocalExecution.scala:26-157).
   */
 object LocalExecution {
@@ -16,23 +15,12 @@ object LocalExecution {
     * "failed" rename whose source is gone and target exists already took
     * effect (reference fs/LocalExecution.scala:70-97,151-157).
     */
-  def movePaths(paths: Seq[Paths], threads: Int = Fs.driverPoolSize)(
-      implicit conf: Configuration): Seq[FsOperationResult] = {
+  def movePaths(paths: Seq[Paths])(implicit conf: Configuration): Seq[FsOperationResult] = {
     if (paths.isEmpty) return Seq.empty
     val fs = Fs.getFileSystem(conf, paths.head.sourcePath)
-    Retry.retryFailed[Paths](
-      paths,
-      work => Fs.withPool(threads) { implicit ec =>
-        val fut = work.map { p => Future {
-          val ok = try fs.rename(new Path(p.sourcePath), new Path(p.targetPath))
-                   catch { case _: Throwable => false }
-          FsOperationResult(p.sourcePath, ok)
-        }}
-        fut.map(Await.result(_, Fs.OpTimeout))
-      },
-      _.sourcePath,
-      repair = failed => failed.filter(p =>
-        !fs.exists(new Path(p.sourcePath)) && fs.exists(new Path(p.targetPath))))
+    def tookEffect(p: Paths) = !fs.exists(new Path(p.sourcePath)) && fs.exists(new Path(p.targetPath))
+    Retry.onDriver[Paths](paths, _.sourcePath, repair = _.filter(tookEffect))(
+      p => fs.rename(new Path(p.sourcePath), new Path(p.targetPath)))
   }
 
   /** Safe folder-content move (reference fs/LocalExecution.scala:26-61):
@@ -69,9 +57,8 @@ object LocalExecution {
       fuse.startTransaction(sourceUri)
       if (fs.exists(targetPath)) {
         // clear target contents (keep the folder so its ACLs survive)
-        fs.listStatus(targetPath)
-          .filterNot(_.getPath.getName.endsWith("_open_transaction"))
-          .foreach(s => fs.delete(s.getPath, true))
+        deletePaths(fs.listStatus(targetPath).map(_.getPath)
+          .filterNot(_.getName.endsWith("_open_transaction")).map(_.toString).toIndexedSeq)
       } else fs.mkdirs(targetPath)
     }
     if (resuming && !fs.exists(sourcePath)) {
@@ -123,21 +110,10 @@ object LocalExecution {
     * fs/LocalExecution.scala:106-128). Deleting an already-absent path
     * counts as success (idempotent rerun).
     */
-  def deletePaths(paths: Seq[String], threads: Int = Fs.driverPoolSize)(
-      implicit conf: Configuration): Seq[FsOperationResult] = {
+  def deletePaths(paths: Seq[String])(implicit conf: Configuration): Seq[FsOperationResult] = {
     if (paths.isEmpty) return Seq.empty
     val fs = Fs.getFileSystem(conf, paths.head)
-    Retry.retryFailed[String](
-      paths,
-      work => Fs.withPool(threads) { implicit ec =>
-        val fut = work.map { p => Future {
-          val ok = try { fs.delete(new Path(p), true); !fs.exists(new Path(p)) }
-                   catch { case _: Throwable => false }
-          FsOperationResult(p, ok)
-        }}
-        fut.map(Await.result(_, Fs.OpTimeout))
-      },
-      identity)
+    Retry.onDriver[String](paths, identity) { p => fs.delete(new Path(p), true); !fs.exists(new Path(p)) }
   }
 
   /** Delete a folder, or only its level-1 contents (reference

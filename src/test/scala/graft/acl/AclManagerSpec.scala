@@ -74,6 +74,19 @@ class AclManagerSpec extends AnyFunSuite with BeforeAndAfterEach {
       .forall(t => acl.exists(_.getType == t)), s"missing entry types in $acl")
   }
 
+  test("modifyAcls reports a vanished path as a skipped success and makes no call on it") {
+    val root = newAclRoot("acl_gone")
+    TestTree.create(root, 3, width = 1)
+    val paths = Fs.list(root).filter(!_.isDirectory).map(_.path).toIndexedSeq
+    val gone = paths.head
+    Fs.getFileSystem(conf, gone).delete(new Path(gone), false)
+    val res = AclManager.modifyAcls(paths, FsPermission("user", "rwx", "ACCESS", "g1"))
+    assert(res.map(_.path).sorted == paths.sorted && res.forall(_.success), res)
+    val called = InMemAclFileSystem.modifyCalls.asScala.map(_._1).toSet
+    assert(!called(new Path(gone).toUri.getPath), s"modifyAclEntries ran on the deleted $gone")
+    assert(called == paths.tail.map(p => new Path(p).toUri.getPath).toSet)
+  }
+
   test("multi-entry modifyFolderAcl batches per level set") {
     val root = newAclRoot("acl_multi_folder")
     TestTree.create(root, 5, width = 2)

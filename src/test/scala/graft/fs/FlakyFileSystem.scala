@@ -5,7 +5,7 @@ import java.net.URI
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.permission.{AclEntry, FsPermission}
 import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
 
@@ -14,8 +14,11 @@ import org.apache.hadoop.util.Progressable
   * [[FlakyFileSystem.failures]] calls on each path. Every call is
   * counted per path, so a spec can pin how many attempts a file took.
   * Opt-in, `rename` throws for every target [[FlakyFileSystem.failRenamesOnto]]
-  * picks, and `delete` throws what [[FlakyFileSystem.failDeletesWith]] makes;
-  * every `delete` is counted ([[FlakyFileSystem.deleteCalls]]).
+  * picks, `delete` throws for the next k calls
+  * ([[FlakyFileSystem.failNextDeletes]]) or what
+  * [[FlakyFileSystem.failDeletesWith]] makes, and `modifyAclEntries` throws
+  * what [[FlakyFileSystem.failAclsWith]] makes; every `delete` is counted
+  * ([[FlakyFileSystem.deleteCalls]]).
   * State lives in the companion: Spark's local-mode tasks share the
   * test JVM, and whichever cached instance they resolve sees it.
   */
@@ -38,14 +41,20 @@ class FlakyFileSystem extends RawLocalFileSystem {
   }
 
   override def rename(src: Path, dst: Path): Boolean = {
-    if (failRenameOnto(key(dst))) throw new IOException(s"injected rename failure: $src -> $dst")
+    if (failRenameOnto(key(dst))) throw renameFailure()
     super.rename(src, dst)
   }
 
   override def delete(f: Path, recursive: Boolean): Boolean = {
-    deletes.incrementAndGet()
+    val n = deletes.incrementAndGet()
+    if (n <= failDeletesUpTo) throw new IOException(s"injected delete failure (call $n) on $f")
     deleteFailure.foreach(e => throw e())
     super.delete(f, recursive)
+  }
+
+  override def modifyAclEntries(path: Path, aclSpec: java.util.List[AclEntry]): Unit = {
+    aclFailure.foreach(e => throw e())
+    super.modifyAclEntries(path, aclSpec)
   }
 }
 
@@ -54,20 +63,33 @@ object FlakyFileSystem {
   val Uri: URI = URI.create(s"$Scheme:///")
   @volatile var failures = 0
   @volatile private var failRenameOnto: String => Boolean = _ => false
+  private val InjectedRenameFailure: () => Throwable = () => new IOException("injected rename failure")
+  @volatile private var renameFailure = InjectedRenameFailure
+  @volatile private var failDeletesUpTo = 0
   @volatile private var deleteFailure: Option[() => Throwable] = None
+  @volatile private var aclFailure: Option[() => Throwable] = None
   private val calls = new ConcurrentHashMap[String, AtomicInteger]()
   private val deletes = new AtomicInteger()
 
-  /** Fail the first `k` creates of every path from now on; renames and deletes succeed. */
+  /** Fail the first `k` creates of every path from now on; renames, deletes and ACL calls succeed. */
   def reset(k: Int): Unit = {
-    failures = k; failRenameOnto = _ => false; deleteFailure = None; calls.clear(); deletes.set(0)
+    failures = k; failRenameOnto = _ => false; failDeletesUpTo = 0; deleteFailure = None; aclFailure = None
+    calls.clear(); deletes.set(0)
   }
 
-  /** Fail every rename onto a target whose scheme-less path satisfies `p`. */
-  def failRenamesOnto(p: String => Boolean): Unit = failRenameOnto = p
+  /** Make every rename onto a target whose scheme-less path satisfies `p` throw `e()`. */
+  def failRenamesOnto(p: String => Boolean, e: () => Throwable = InjectedRenameFailure): Unit = {
+    renameFailure = e; failRenameOnto = p
+  }
+
+  /** Make the next `k` deletes throw an `IOException`. */
+  def failNextDeletes(k: Int): Unit = failDeletesUpTo = deletes.get + k
 
   /** Make every delete throw `e()`. */
   def failDeletesWith(e: () => Throwable): Unit = deleteFailure = Some(e)
+
+  /** Make every `modifyAclEntries` throw `e()`. */
+  def failAclsWith(e: () => Throwable): Unit = aclFailure = Some(e)
 
   /** `delete` calls seen on any path since the last [[reset]]. */
   def deleteCalls: Int = deletes.get

@@ -54,10 +54,11 @@ class FsSpec extends AnyFunSuite {
     c.set("fs.cnt.impl", classOf[CountingFileSystem].getName)
     c.setBoolean("fs.cnt.impl.disable.cache", true)
     CountingFileSystem.reset()
-    val all = Fs.list("cnt:/", threads = CountingFileSystem.Width)(c)
+    assert(Fs.driverPoolSize >= CountingFileSystem.Width)
+    val all = Fs.list("cnt:/")(c)
     assert(all.count(_.isDirectory) == CountingFileSystem.Width)
     // every directory's listStatus holds for HoldMs, so with the pool
-    // really sized at Width they overlap almost completely; the old
+    // really as wide as its setting they overlap almost completely; the old
     // hidden .min(64) clamp would cap the high-water mark at 64
     val peak = CountingFileSystem.maxActive.get()
     assert(peak > 64, s"listing concurrency peaked at $peak - pool width not honored")

@@ -1,6 +1,8 @@
 package graft.fs
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{FutureTask, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -8,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.SparkTestSession.withJobCount
+import graft.acl.{AclManager, FsPermission}
 
 class MoveCopyDeleteSpec extends AnyFunSuite {
   implicit lazy val spark: org.apache.spark.sql.SparkSession = {
@@ -59,6 +62,48 @@ class MoveCopyDeleteSpec extends AnyFunSuite {
     }
   }
 
+  /** What `body` throws, run on its own thread; fails the test when
+    * `body` returns or is still running after `seconds`.
+    */
+  private def thrownWithin(seconds: Int)(body: => Any): Throwable = {
+    val task = new FutureTask[Option[Throwable]](() =>
+      try { body; None } catch { case t: Throwable => Some(t) })
+    val thread = new Thread(task)
+    thread.setDaemon(true)
+    thread.start()
+    task.get(seconds.toLong, TimeUnit.SECONDS).getOrElse(fail("the call returned without an error"))
+  }
+
+  test("driver form: a fatal error ends the call with its cause; an IOException is retried 5 times") {
+    // (operator, how to make its one storage call per path throw)
+    val ops: Seq[(String, Seq[String] => Any, (() => Throwable) => Unit)] = Seq(
+      ("movePaths", ps => LocalExecution.movePaths(ps.map(p => Paths(p, p + ".moved"))),
+        e => FlakyFileSystem.failRenamesOnto(_ => true, e)),
+      ("deletePaths", ps => LocalExecution.deletePaths(ps), FlakyFileSystem.failDeletesWith),
+      ("modifyAcls", ps => AclManager.modifyAcls(ps, FsPermission("user", "rwx", "ACCESS", "u1")),
+        FlakyFileSystem.failAclsWith))
+    val errors: Seq[(String, () => Throwable)] = Seq(
+      "InterruptedException" -> (() => new InterruptedException("injected")),
+      "LinkageError" -> (() => new LinkageError("injected")),
+      "IOException" -> (() => new java.io.IOException("injected")))
+    val failedRows = for ((opName, op, inject) <- ops; (errName, error) <- errors) yield {
+      val root = TestTree.newRoot(s"policy_$opName")
+      val paths = Seq("a", "b").map { n => write(s"$root/$n.txt", n); FlakyFileSystem.flaky(s"$root/$n.txt") }
+      val made = new AtomicInteger()
+      FlakyFileSystem.reset(0)
+      inject(() => { made.incrementAndGet(); error() })
+      val thrown = try thrownWithin(60)(op(paths)) finally FlakyFileSystem.reset(0)
+      val causes = Iterator.iterate(thrown)(_.getCause).takeWhile(_ != null).toSeq
+      val ok =
+        if (errName == "IOException")
+          thrown.isInstanceOf[IllegalStateException] && paths.forall(thrown.getMessage.contains) &&
+            made.get == Retry.MaxAttempts * paths.size
+        else causes.exists(c => c.getClass == error().getClass && c.getMessage == "injected")
+      if (ok) None else Some(s"$opName/$errName: $thrown after ${made.get} calls")
+    }
+    assert(failedRows.flatten.isEmpty, failedRows.flatten.mkString("\n"))
+  }
+
   test("moveFolderContent moves level-1 children and deletes source") {
     val src = TestTree.newRoot("mvf_src"); TestTree.create(src, 5)
     val trg = TestTree.newRoot("mvf_trg") + "/dest"
@@ -100,6 +145,23 @@ class MoveCopyDeleteSpec extends AnyFunSuite {
     // the child must land flat, not nested inside its stale twin
     assert(!fs.exists(new Path(s"$trg/$child/$child")))
     assert(!fs.exists(new Path(s"$trg/$child/stale")))
+    assert(relSet(trg) == before)
+  }
+
+  test("moveFolderContent: a target clear whose first delete fails heals; children land un-nested") {
+    val src = TestTree.newRoot("mvc_src"); TestTree.create(src, 5)
+    val trg = TestTree.newRoot("mvc_trg")
+    // the target holds a twin of every source child plus a stale file: a
+    // twin left in place would swallow its child as a nested folder
+    DistributedExecution.copyFolder(src, trg)
+    write(s"$trg/stale.txt", "stale")
+    val before = relSet(src)
+    FlakyFileSystem.reset(0)
+    FlakyFileSystem.failNextDeletes(1)
+    val res =
+      try LocalExecution.moveFolderContent(FlakyFileSystem.flaky(src), FlakyFileSystem.flaky(trg))
+      finally FlakyFileSystem.reset(0)
+    assert(res.nonEmpty && res.forall(_.success))
     assert(relSet(trg) == before)
   }
 
