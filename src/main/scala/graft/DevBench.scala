@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlBridge
+
 /** Dev-loop timing harness: times a subset of registered queries by name
   * (args) against SPARK_GRAFT_SF_DIR, printing per-pass seconds — the
   * single-query feedback loop Bench's 10-minute full suite is too slow
@@ -19,22 +22,25 @@ object DevBench {
       SparkEntry.queries.keys.toSeq.sorted else names0.toSeq
     if (countJobs) {
       // jobs-per-query audit (r16 verdict task 6): run each query once
-      // warm, once measured under its own job group, and report how
-      // many driver jobs the single noop action issued — every job
-      // beyond 1 is an eager materialization (checkpoint/collect/
-      // broadcast-build) worth knowing about. Dev-only: the full Bench
-      // never sets job groups.
+      // warm, once measured, and report how many jobs the single noop
+      // action issued — every job beyond 1 is an eager materialization
+      // (checkpoint/collect/broadcast-build) worth knowing about. A
+      // listener counts job starts; draining the listener bus before
+      // the reset and before the read makes the count exact.
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      })
       names.foreach { name =>
         try {
           val fn = SparkEntry.queries(name)
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           graft.ops.Blocks.sweep(spark)
-          spark.sparkContext.setJobGroup(name, name)
+          GraftSqlBridge.drainListeners(spark.sparkContext)
+          jobs.set(0)
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          spark.sparkContext.clearJobGroup()
-          Thread.sleep(200) // status store is fed asynchronously
-          val n = spark.sparkContext.statusTracker.getJobIdsForGroup(name).length
-          println(f"$name%-28s jobs: $n")
+          GraftSqlBridge.drainListeners(spark.sparkContext)
+          println(f"$name%-28s jobs: ${jobs.get}")
           graft.ops.Blocks.sweep(spark)
         } catch { case e: Throwable =>
           println(s"$name FAILED: ${e.getMessage}")

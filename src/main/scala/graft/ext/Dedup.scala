@@ -643,8 +643,8 @@ object Dedup {
     */
   case class PairGraphParams(kind: String, n: Int, threshold: Double)
 
-  private def pgParamsPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_graft_pair_graph_params.json")
+  private[graft] val PairGraphSidecar =
+    new IndexLifecycle.Sidecar[PairGraphParams]("pair_graph")
 
   /** The exact near-dup PAIR GRAPH as a persisted corpus-level artifact
     * — the [[contaminationIndex]]/[[minhashIndex]] pattern applied to
@@ -671,7 +671,7 @@ object Dedup {
     ngramJaccardPairs(docs, n, minJaccard, textCol, idCol, prefixFilter, broadcastDf)
       .repartition(col("id_a"))
       .write.mode("overwrite").parquet(path)
-    writePairGraphParams(docs.sparkSession, path, PairGraphParams("jaccard", n, minJaccard))
+    PairGraphSidecar.write(docs.sparkSession, path, PairGraphParams("jaccard", n, minJaccard))
   }
 
   /** [[writePairGraph]] for the asymmetric CONTAINMENT pair set
@@ -685,17 +685,8 @@ object Dedup {
     ngramContainmentPairs(docs, n, minContainment, textCol, idCol, prefixFilter, broadcastDf)
       .repartition(col("id_a"))
       .write.mode("overwrite").parquet(path)
-    writePairGraphParams(docs.sparkSession, path,
+    PairGraphSidecar.write(docs.sparkSession, path,
       PairGraphParams("containment", n, minContainment))
-  }
-
-  private[ext] def writePairGraphParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, p: PairGraphParams): Unit = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(pgParamsPath(path), true)
-    try out.write(s"""{"kind":"${p.kind}","n":${p.n},"threshold":${p.threshold}}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
   }
 
   /** Read a persisted pair graph back ([[writePairGraph]] /
@@ -710,16 +701,8 @@ object Dedup {
     * for a pre-sidecar artifact.
     */
   def readPairGraphParams(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[PairGraphParams] = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    if (!fs.exists(pgParamsPath(path))) return None
-    val in = fs.open(pgParamsPath(path))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val kind = """"kind":"([a-z]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-    val n = """"n":([0-9]+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-    val t = """"threshold":([0-9.eE+-]+)""".r.findFirstMatchIn(txt).map(_.group(1).toDouble)
-    for { k <- kind; nn <- n; tt <- t } yield PairGraphParams(k, nn, tt)
-  }
+      path: String): Option[PairGraphParams] =
+    PairGraphSidecar.read(spark, path)
 
   /** Exact n-gram Jaccard pairs TOUCHING an ingest batch — the
     * incremental twin of [[ngramJaccardPairs]], cost O(|batch| ·
@@ -825,8 +808,7 @@ object Dedup {
       textCol: String = "text", idCol: String = "doc_id",
       broadcastBatch: Boolean = true): Unit = {
     val spark = newDocs.sparkSession
-    val p = readPairGraphParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no pair-graph sidecar at $path"))
+    val p = PairGraphSidecar.require(spark, path, "not a pair graph this can update")
     val batchIds = newDocs.select(col(idCol).as("id"))
     val live = readPairGraph(spark, path)
     val kept = live
@@ -841,12 +823,9 @@ object Dedup {
       case other => throw new IllegalArgumentException(
         s"unknown pair-graph kind '$other' at $path")
     }
-    val rebuild = s"${path}_rebuild"
-    kept.unionByName(fresh)
-      .repartition(col("id_a"))
-      .write.mode("overwrite").parquet(rebuild)
-    writePairGraphParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, PairGraphSidecar, p) {
+      kept.unionByName(fresh).repartition(col("id_a")).write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Copy a persisted pair graph (rows + sidecar) to a new location —
@@ -855,12 +834,11 @@ object Dedup {
     */
   def copyPairGraph(spark: org.apache.spark.sql.SparkSession,
       from: String, to: String): Unit = {
-    val p = readPairGraphParams(spark, from).getOrElse(
-      throw new IllegalArgumentException(s"no pair-graph sidecar at $from"))
+    val p = PairGraphSidecar.require(spark, from, "not a pair graph")
     readPairGraph(spark, from)
       .repartition(col("id_a"))
       .write.mode("overwrite").parquet(to)
-    writePairGraphParams(spark, to, p)
+    PairGraphSidecar.write(spark, to, p)
   }
 
   /** Remove pairs touching any of `forgetIds` — the pure policy under
@@ -892,14 +870,11 @@ object Dedup {
     */
   def forgetDocs(spark: org.apache.spark.sql.SparkSession, path: String,
       forgetIds: DataFrame, idCol: String = "doc_id"): Unit = {
-    val p = readPairGraphParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no pair-graph sidecar at $path"))
-    val rebuild = s"${path}_rebuild"
-    forgetPairs(readPairGraph(spark, path), forgetIds, idCol)
-      .repartition(col("id_a"))
-      .write.mode("overwrite").parquet(rebuild)
-    writePairGraphParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    val p = PairGraphSidecar.require(spark, path, "not a pair graph this can update")
+    IndexLifecycle.replace(spark, path, PairGraphSidecar, p) {
+      forgetPairs(readPairGraph(spark, path), forgetIds, idCol)
+        .repartition(col("id_a")).write.mode("overwrite").parquet(_)
+    }
   }
 
   // ---------------------------------------------------------- clustering
@@ -1062,8 +1037,7 @@ object Dedup {
     */
   case class MinhashParams(n: Int, k: Int, bands: Int)
 
-  private def mhParamsPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_graft_minhash_params.json")
+  private[graft] val MinhashSidecar = new IndexLifecycle.Sidecar[MinhashParams]("minhash")
 
   /** Persist [[minhashIndex]] as parquet, laid out for the probe join:
     * repartitioned on (band, bandHash) — the candidate join's key — so
@@ -1078,31 +1052,15 @@ object Dedup {
     minhashIndex(docs, n, k, bands, textCol, idCol)
       .repartition(col("band"), col("bandHash"))
       .write.mode("overwrite").parquet(path)
-    writeMinhashParams(docs.sparkSession, path, MinhashParams(n, k, bands))
-  }
-
-  private[ext] def writeMinhashParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, p: MinhashParams): Unit = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(mhParamsPath(path), true)
-    try out.write(s"""{"n":${p.n},"k":${p.k},"bands":${p.bands}}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    MinhashSidecar.write(docs.sparkSession, path, MinhashParams(n, k, bands))
   }
 
   /** The [[MinhashParams]] sidecar of a persisted index; None for an
     * index written before the sidecar existed.
     */
   def readMinhashIndexParams(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[MinhashParams] = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    if (!fs.exists(mhParamsPath(path))) return None
-    val in = fs.open(mhParamsPath(path))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def field(key: String) = s""""$key":(-?[0-9]+)""".r.findFirstMatchIn(txt).map(_.group(1))
-    for { n <- field("n"); k <- field("k"); b <- field("bands") }
-      yield MinhashParams(n.toInt, k.toInt, b.toInt)
-  }
+      path: String): Option[MinhashParams] =
+    MinhashSidecar.read(spark, path)
 
   /** Read a persisted [[minhashIndex]] back; pass as `corpusIndex` to
     * [[minhashDedupNewPairs]] WITH the sidecar's (n, k, bands) — or use
@@ -1126,18 +1084,14 @@ object Dedup {
   def updateMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, path: String,
       textCol: String = "text", idCol: String = "doc_id"): Unit = {
-    val p = readMinhashIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_minhash_params.json sidecar — not an index this can update"))
+    val p = MinhashSidecar.require(spark, path, "not an index this can update")
     val kept = readMinhashIndex(spark, path)
       .join(newDocs.select(col(idCol).as("id")), Seq("id"), "left_anti")
     val fresh = minhashIndex(newDocs, p.n, p.k, p.bands, textCol, idCol)
-    val rebuild = s"${path}_rebuild"
-    kept.unionByName(fresh)
-      .repartition(col("band"), col("bandHash"))
-      .write.mode("overwrite").parquet(rebuild)
-    writeMinhashParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, MinhashSidecar, p) {
+      kept.unionByName(fresh)
+        .repartition(col("band"), col("bandHash")).write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Deletion propagation for a persisted [[minhashIndex]]: drop every
@@ -1148,16 +1102,12 @@ object Dedup {
     */
   def forgetMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, forgetIds: DataFrame, idCol: String = "doc_id"): Unit = {
-    val p = readMinhashIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_minhash_params.json sidecar — not an index this can update"))
-    val rebuild = s"${path}_rebuild"
-    readMinhashIndex(spark, path)
-      .join(forgetIds.select(col(idCol).as("id")), Seq("id"), "left_anti")
-      .repartition(col("band"), col("bandHash"))
-      .write.mode("overwrite").parquet(rebuild)
-    writeMinhashParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    val p = MinhashSidecar.require(spark, path, "not an index this can update")
+    IndexLifecycle.replace(spark, path, MinhashSidecar, p) {
+      readMinhashIndex(spark, path)
+        .join(forgetIds.select(col(idCol).as("id")), Seq("id"), "left_anti")
+        .repartition(col("band"), col("bandHash")).write.mode("overwrite").parquet(_)
+    }
   }
 
   /** [[minhashDedupNewPairs]] against a persisted index path, signature
@@ -1169,9 +1119,7 @@ object Dedup {
       newDocs: DataFrame, corpus: DataFrame, path: String,
       minJaccard: Double = 0.8,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val p = readMinhashIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_minhash_params.json sidecar; pass (n, k, bands) explicitly"))
+    val p = MinhashSidecar.require(spark, path, "pass (n, k, bands) explicitly")
     minhashDedupNewPairs(newDocs, corpus, p.n, p.k, p.bands, minJaccard,
       textCol, idCol, corpusIndex = Some(readMinhashIndex(spark, path)))
   }
@@ -1340,8 +1288,8 @@ object Dedup {
     */
   case class ChunkIndexParams(maskBits: Int)
 
-  private def ciParamsPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_graft_chunk_index_params.json")
+  private[graft] val ChunkIndexSidecar =
+    new IndexLifecycle.Sidecar[ChunkIndexParams]("chunk_index")
 
   /** Per-document content-defined chunk table via the gear rolling
     * hash ([[graft.functions.GearChunks]]): one row per chunk —
@@ -1379,16 +1327,7 @@ object Dedup {
     chunkTable(docs, maskBits, textCol, idCol)
       .repartition(col("chunk_hash"))
       .write.mode("overwrite").parquet(path)
-    writeChunkIndexParams(docs.sparkSession, path, ChunkIndexParams(maskBits))
-  }
-
-  private[ext] def writeChunkIndexParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, p: ChunkIndexParams): Unit = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(ciParamsPath(path), true)
-    try out.write(s"""{"maskBits":${p.maskBits}}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    ChunkIndexSidecar.write(docs.sparkSession, path, ChunkIndexParams(maskBits))
   }
 
   /** Read a persisted chunk store back; artifact == [[chunkTable]]
@@ -1402,17 +1341,11 @@ object Dedup {
     * not a chunk store.
     */
   def readChunkIndexParams(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[ChunkIndexParams] = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    if (!fs.exists(ciParamsPath(path))) return None
-    val in = fs.open(ciParamsPath(path))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    """"maskBits":([0-9]+)""".r.findFirstMatchIn(txt)
-      .map(m => ChunkIndexParams(m.group(1).toInt))
-  }
+      path: String): Option[ChunkIndexParams] =
+    ChunkIndexSidecar.read(spark, path)
 
   def isChunkIndex(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    readChunkIndexParams(spark, path).isDefined
+    ChunkIndexSidecar.exists(spark, path)
 
   /** Shared provenance rollup: per batch document, how many distinct
     * chunks it has and how many of those the corpus has already seen.
@@ -1473,8 +1406,7 @@ object Dedup {
   def chunkProvenanceIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
       maxProbeChunks: Long = 5000000L): DataFrame = {
-    val p = readChunkIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no chunk-index sidecar at $path"))
+    val p = ChunkIndexSidecar.require(spark, path, "not a chunk store")
     provenanceOf(chunkTable(newDocs, p.maskBits, textCol, idCol),
       readChunkIndex(spark, path), maxProbeChunks)
   }
@@ -1516,18 +1448,15 @@ object Dedup {
   def updateChunkIndex(newDocs: DataFrame, path: String,
       textCol: String = "text", idCol: String = "doc_id"): Unit = {
     val spark = newDocs.sparkSession
-    val p = readChunkIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no chunk-index sidecar at $path"))
+    val p = ChunkIndexSidecar.require(spark, path, "not a chunk store this can update")
     val live = readChunkIndex(spark, path)
     val kept = live
       .join(newDocs.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_anti")
       .select(live.columns.map(col).toIndexedSeq: _*)
-    val rebuild = s"${path}_rebuild"
-    kept.unionByName(chunkTable(newDocs, p.maskBits, textCol, idCol))
-      .repartition(col("chunk_hash"))
-      .write.mode("overwrite").parquet(rebuild)
-    writeChunkIndexParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, ChunkIndexSidecar, p) {
+      kept.unionByName(chunkTable(newDocs, p.maskBits, textCol, idCol))
+        .repartition(col("chunk_hash")).write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Deletion propagation for the chunk store (takedown/opt-out): drop
@@ -1538,17 +1467,12 @@ object Dedup {
     */
   def forgetChunkIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       forgetIds: DataFrame, idCol: String = "doc_id"): Unit = {
-    val p = readChunkIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no chunk-index sidecar at $path"))
+    val p = ChunkIndexSidecar.require(spark, path, "not a chunk store this can update")
     val live = readChunkIndex(spark, path)
-    val purged = live
-      .join(forgetIds.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_anti")
-      .select(live.columns.map(col).toIndexedSeq: _*)
-    val rebuild = s"${path}_rebuild"
-    purged
-      .repartition(col("chunk_hash"))
-      .write.mode("overwrite").parquet(rebuild)
-    writeChunkIndexParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, ChunkIndexSidecar, p) {
+      live.join(forgetIds.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_anti")
+        .select(live.columns.map(col).toIndexedSeq: _*)
+        .repartition(col("chunk_hash")).write.mode("overwrite").parquet(_)
+    }
   }
 }

@@ -210,37 +210,18 @@ object Fuzzy {
     */
   case class FuzzyIndexParams(q: Int, maxDist: Int)
 
-  private def fzParamsPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_fuzzy_params.json")
-
-  private def writeFuzzyParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, p: FuzzyIndexParams): Unit = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(fzParamsPath(path), true)
-    try out.write(s"""{"q":${p.q},"maxDist":${p.maxDist}}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private[graft] val FuzzySidecar = new IndexLifecycle.Sidecar[FuzzyIndexParams]("fuzzy")
 
   /** The [[FuzzyIndexParams]] sidecar; None when `path` is not a
     * catalog index.
     */
   def readCatalogIndexParams(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[FuzzyIndexParams] = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    if (!fs.exists(fzParamsPath(path))) return None
-    val in = fs.open(fzParamsPath(path))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def field(key: String) = s""""$key":(-?[0-9]+)""".r.findFirstMatchIn(txt).map(_.group(1))
-    for { q <- field("q"); d <- field("maxDist") }
-      yield FuzzyIndexParams(q.toInt, d.toInt)
-  }
+      path: String): Option[FuzzyIndexParams] =
+    FuzzySidecar.read(spark, path)
 
   private def requireParams(spark: org.apache.spark.sql.SparkSession,
       path: String): FuzzyIndexParams =
-    readCatalogIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_fuzzy_params.json sidecar — not a catalog index"))
+    FuzzySidecar.require(spark, path, "not a catalog index")
 
   /** Persist the catalog's matching index: three co-swapped datasets
     * under one directory —
@@ -279,7 +260,7 @@ object Fuzzy {
     catalog.filter(length(col(strCol)) <= shortLen(q, maxDist))
       .select(col(idCol).as("id"), col(strCol).as("s"))
       .write.mode("overwrite").parquet(s"$path/short")
-    writeFuzzyParams(spark, path, FuzzyIndexParams(q, maxDist))
+    FuzzySidecar.write(spark, path, FuzzyIndexParams(q, maxDist))
   }
 
   /** All (id_a, id_b, dist) pairs within the index's maxDist between a
@@ -335,25 +316,24 @@ object Fuzzy {
       batch: DataFrame, path: String,
       strCol: String = "s", idCol: String = "id"): Unit = {
     val p = requireParams(spark, path)
-    val rebuild = s"${path}_rebuild"
     val batchIds = batch.select(col(idCol).as("id"))
     val dfStored = spark.read.parquet(s"$path/df")
-    dfStored.write.mode("overwrite").parquet(s"$rebuild/df")
     val freshPrefix = prefixOf(qgramRows(batch, p.q, strCol, idCol), dfStored,
         p.q, p.maxDist, idCol, strCol)
       .toDF("id", "s", "len", "gram", "occ")
-    spark.read.parquet(s"$path/prefix")
-      .join(batchIds, Seq("id"), "left_anti")
-      .unionByName(freshPrefix)
-      .repartition(col("gram"))
-      .write.mode("overwrite").parquet(s"$rebuild/prefix")
-    spark.read.parquet(s"$path/short")
-      .join(batchIds, Seq("id"), "left_anti")
-      .unionByName(batch.filter(length(col(strCol)) <= shortLen(p.q, p.maxDist))
-        .select(col(idCol).as("id"), col(strCol).as("s")))
-      .write.mode("overwrite").parquet(s"$rebuild/short")
-    writeFuzzyParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, FuzzySidecar, p) { rebuild =>
+      dfStored.write.mode("overwrite").parquet(s"$rebuild/df")
+      spark.read.parquet(s"$path/prefix")
+        .join(batchIds, Seq("id"), "left_anti")
+        .unionByName(freshPrefix)
+        .repartition(col("gram"))
+        .write.mode("overwrite").parquet(s"$rebuild/prefix")
+      spark.read.parquet(s"$path/short")
+        .join(batchIds, Seq("id"), "left_anti")
+        .unionByName(batch.filter(length(col(strCol)) <= shortLen(p.q, p.maxDist))
+          .select(col(idCol).as("id"), col(strCol).as("s")))
+        .write.mode("overwrite").parquet(s"$rebuild/short")
+    }
   }
 
   /** Takedown propagation: purge every index row of the forgotten ids
@@ -365,17 +345,16 @@ object Fuzzy {
   def forgetCatalogIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, forgetIds: DataFrame, idCol: String = "id"): Unit = {
     val p = requireParams(spark, path)
-    val rebuild = s"${path}_rebuild"
     val ids = forgetIds.select(col(idCol).as("id"))
-    spark.read.parquet(s"$path/df").write.mode("overwrite").parquet(s"$rebuild/df")
-    spark.read.parquet(s"$path/prefix")
-      .join(ids, Seq("id"), "left_anti")
-      .repartition(col("gram"))
-      .write.mode("overwrite").parquet(s"$rebuild/prefix")
-    spark.read.parquet(s"$path/short")
-      .join(ids, Seq("id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$rebuild/short")
-    writeFuzzyParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, FuzzySidecar, p) { rebuild =>
+      spark.read.parquet(s"$path/df").write.mode("overwrite").parquet(s"$rebuild/df")
+      spark.read.parquet(s"$path/prefix")
+        .join(ids, Seq("id"), "left_anti")
+        .repartition(col("gram"))
+        .write.mode("overwrite").parquet(s"$rebuild/prefix")
+      spark.read.parquet(s"$path/short")
+        .join(ids, Seq("id"), "left_anti")
+        .write.mode("overwrite").parquet(s"$rebuild/short")
+    }
   }
 }

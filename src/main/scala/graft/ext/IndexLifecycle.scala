@@ -1,5 +1,10 @@
 package graft.ext
 
+import scala.reflect.ClassTag
+
+import com.fasterxml.jackson.databind.DeserializationFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -15,6 +20,11 @@ import graft.fs.{Fs, SafetyFuse}
   * across the destructive window so a crashed swap is recoverable and
   * a rerun can't re-delete).
   *
+  * Every persisted index family shares one artifact protocol, kept
+  * here: its build parameters ride a [[Sidecar]] inside the artifact
+  * folder, and every update/forget/merge/rebuild goes through
+  * [[replace]] (build beside the live folder, write the sidecar, swap).
+  *
   * Serving continuity: [[graft.streaming.StreamingSimilarity.startAt]]
   * re-reads the index path per micro-batch, so a swap that lands
   * between micro-batches is picked up by the NEXT batch with no stream
@@ -22,121 +32,172 @@ import graft.fs.{Fs, SafetyFuse}
   */
 object IndexLifecycle {
 
+  private val Json = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES)
+    .disable(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES)
+    .build()
+
+  /** The params sidecar of one artifact kind:
+    * `<dir>/_graft_<kind>_params.json`, one JSON object of `P`'s fields
+    * in declaration order (underscore-prefixed, so parquet readers skip
+    * it like `_SUCCESS`). An index family reads its build parameters
+    * from here, never from call-site literals: a probe or update under
+    * different parameters than the build matches nothing or garbage.
+    */
+  final class Sidecar[P](kind: String)(implicit ct: ClassTag[P]) {
+    val file: String = s"_graft_${kind}_params.json"
+    private def at(dir: String) = new Path(dir, file)
+
+    def write(spark: SparkSession, dir: String, params: P): Unit = {
+      val out = fsOf(spark, dir).create(at(dir), true)
+      try out.write(Json.writeValueAsBytes(params)) finally out.close()
+    }
+
+    /** The params of the artifact at `dir`; None when it has no sidecar. */
+    def read(spark: SparkSession, dir: String): Option[P] = {
+      val fs = fsOf(spark, dir)
+      if (!fs.exists(at(dir))) None
+      else {
+        val in: java.io.InputStream = fs.open(at(dir))
+        try Some(Json.readValue(in, ct.runtimeClass.asInstanceOf[Class[P]])) finally in.close()
+      }
+    }
+
+    def exists(spark: SparkSession, dir: String): Boolean = fsOf(spark, dir).exists(at(dir))
+
+    /** [[read]] that fails loudly; `why` names what `dir` then is not. */
+    def require(spark: SparkSession, dir: String, why: String): P =
+      read(spark, dir).getOrElse(throw missingSidecar(dir, file, why))
+  }
+
+  /** The one error for an artifact folder without the sidecar `file`. */
+  private def missingSidecar(dir: String, file: String, why: String): IllegalArgumentException =
+    new IllegalArgumentException(s"$dir has no $file sidecar — $why")
+
+  /** Build a new version of the artifact at `livePath` and swap it in:
+    * `build` writes it to `<livePath>_rebuild` (compaction included),
+    * then [[swapIn]] promotes it. Readers keep using `livePath`
+    * throughout; only the rename window is exclusive.
+    */
+  def replace(spark: SparkSession, livePath: String)(build: String => Unit): Unit = {
+    val rebuild = s"${livePath}_rebuild"
+    build(rebuild)
+    swapIn(spark, rebuild, livePath)
+  }
+
+  /** [[replace]] for an artifact with a params sidecar: `params` are
+    * written after `build` returns, so an artifact swapped in always
+    * carries them — a compaction inside `build` that rewrites the
+    * folder cannot drop them.
+    */
+  def replace[P](spark: SparkSession, livePath: String, sidecar: Sidecar[P], params: P)(
+      build: String => Unit): Unit =
+    replace(spark, livePath) { rebuild =>
+      build(rebuild)
+      sidecar.write(spark, rebuild, params)
+    }
+
   /** Rebuild the LSH index for `vectors` and atomically swap it into
-    * `livePath`. The rebuild lands at `<livePath>_rebuild`, gets
-    * compacted (z-ordered on (table, bucket) — the probe join's key, so
-    * bucket reads cluster into contiguous row groups), has its params
-    * sidecar restored (compaction rewrites the folder), and then
-    * replaces the live index inside a fuse-guarded swap. Readers keep
-    * probing `livePath` throughout; only the rename window (two
-    * metadata ops) is exclusive.
+    * `livePath` ([[replace]]). The rebuild is compacted and z-ordered
+    * on (table, bucket) — the probe join's key, so bucket reads cluster
+    * into contiguous row groups — and records the build corpus's
+    * distribution fingerprint so ingest can ask [[driftSinceBuild]]
+    * without keeping the corpus around.
     */
   def rebuildLshIndex(vectors: DataFrame, livePath: String, dim: Int,
       bitsPerTable: Int = 8, tables: Int = 8, seedBase: Long = 2000L,
       requestedSizeMb: Int = 100,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     implicit val spark: SparkSession = vectors.sparkSession
-    val rebuild = s"${livePath}_rebuild"
-    Similarity.writeLshIndex(vectors, rebuild, dim, bitsPerTable, tables, seedBase,
-      idCol, vecCol)
-    // compaction rewrites the folder (losing the sidecar with the old
-    // dir) — restore params after, they describe the same build
-    Compactor.doAutoCoalesce(rebuild, requestedSizeMb,
-      zorderCols = Seq("table", "bucket"))
-    Similarity.writeLshParams(spark, rebuild,
-      Similarity.LshParams(dim, bitsPerTable, tables, seedBase))
-    // record the build corpus's distribution fingerprint so ingest can
-    // ask driftSinceBuild without keeping the corpus around
-    Similarity.writeMomentsSidecar(vectors, rebuild, vecCol)
-    swapIn(spark, rebuild, livePath)
+    replace(spark, livePath, Similarity.LshSidecar,
+        Similarity.LshParams(dim, bitsPerTable, tables, seedBase)) { rebuild =>
+      Similarity.writeLshIndex(vectors, rebuild, dim, bitsPerTable, tables, seedBase,
+        idCol, vecCol)
+      Compactor.doAutoCoalesce(rebuild, requestedSizeMb,
+        zorderCols = Seq("table", "bucket"))
+      Similarity.writeMomentsSidecar(vectors, rebuild, vecCol)
+    }
   }
 
   /** [[rebuildLshIndex]] for the IVF family: rebuild codebook +
-    * inverted lists to `<livePath>_rebuild` (lists compacted and
-    * z-ordered on `centroid_id` — the probe join's key, so an nProbe
-    * read touches contiguous row groups), then swap the whole index
-    * directory in one fuse-guarded promotion (codebook and lists move
-    * together — a probe can never see a new codebook over old lists).
+    * inverted lists (lists compacted and z-ordered on `centroid_id` —
+    * the probe join's key, so an nProbe read touches contiguous row
+    * groups), then swap the whole index directory in one fuse-guarded
+    * promotion (codebook and lists move together — a probe can never
+    * see a new codebook over old lists). `trainIters > 0` swaps the
+    * hash-sampled codebook for a Lloyd's-trained one
+    * ([[Similarity.trainCodebook]]).
     */
   def rebuildIvfIndex(corpus: DataFrame, livePath: String, nCentroids: Int = 16,
       requestedSizeMb: Int = 100,
       idCol: String = "vec_id", vecCol: String = "embedding",
       trainIters: Int = 0): Unit = {
     implicit val spark: SparkSession = corpus.sparkSession
-    val rebuild = s"${livePath}_rebuild"
-    // trainIters > 0 swaps the hash-sampled codebook for a Lloyd's-
-    // trained one (Similarity.trainCodebook) — same index shapes, the
-    // rebuild just spends trainIters extra linear passes to tighten
-    // the inverted lists before the one-time layout + swap
     val index =
       if (trainIters > 0)
         Similarity.ivfIndexTrained(corpus, nCentroids, trainIters, idCol, vecCol)
       else Similarity.ivfIndex(corpus, nCentroids, idCol, vecCol)
-    Similarity.writeIvfIndexParts(index, rebuild)
-    Compactor.doAutoCoalesce(s"$rebuild/lists", requestedSizeMb,
-      zorderCols = Seq("centroid_id"))
-    Similarity.writeMomentsSidecar(corpus, rebuild, vecCol)
-    swapIn(spark, rebuild, livePath)
+    replace(spark, livePath) { rebuild =>
+      Similarity.writeIvfIndexParts(index, rebuild)
+      Compactor.doAutoCoalesce(s"$rebuild/lists", requestedSizeMb,
+        zorderCols = Seq("centroid_id"))
+      Similarity.writeMomentsSidecar(corpus, rebuild, vecCol)
+    }
   }
 
-  /** [[rebuildIvfIndex]] for the PQ family: train + encode to
-    * `<livePath>_rebuild`, compact + z-order the codes on the ADC
-    * probe join's (sub, code) key, and promote codebook + codes +
-    * sidecar together under the fuse (the sidecar lives at the index
-    * ROOT, so compacting the codes subfolder can't eat it).
+  /** [[rebuildIvfIndex]] for the PQ family: train + encode, compact +
+    * z-order the codes on the ADC probe join's (sub, code) key, and
+    * promote codebook + codes + sidecar together under the fuse.
     */
   def rebuildPqIndex(corpus: DataFrame, livePath: String, m: Int = 4,
       k: Int = 8, iters: Int = 2, requestedSizeMb: Int = 100,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     implicit val spark: SparkSession = corpus.sparkSession
-    val rebuild = s"${livePath}_rebuild"
-    Similarity.writePqIndex(corpus, rebuild, m, k, iters, idCol, vecCol)
-    Compactor.doAutoCoalesce(s"$rebuild/codes", requestedSizeMb,
-      zorderCols = Seq("sub", "code"))
-    Similarity.writeMomentsSidecar(corpus, rebuild, vecCol)
-    swapIn(spark, rebuild, livePath)
+    replace(spark, livePath) { rebuild =>
+      Similarity.writePqIndex(corpus, rebuild, m, k, iters, idCol, vecCol)
+      Compactor.doAutoCoalesce(s"$rebuild/codes", requestedSizeMb,
+        zorderCols = Seq("sub", "code"))
+      Similarity.writeMomentsSidecar(corpus, rebuild, vecCol)
+    }
   }
 
   /** [[rebuildLshIndex]] for the minhash text family: rebuild the
-    * banded-signature index to `<livePath>_rebuild`, compact +
-    * z-order on (band, bandHash) — the candidate join's key — and
-    * swap it in under the fuse.
+    * banded-signature index, compact + z-order on (band, bandHash) —
+    * the candidate join's key — and swap it in under the fuse.
     */
   def rebuildMinhashIndex(docs: DataFrame, livePath: String,
       n: Int = 3, k: Int = 32, bands: Int = 16, requestedSizeMb: Int = 100,
       textCol: String = "text", idCol: String = "doc_id"): Unit = {
     implicit val spark: SparkSession = docs.sparkSession
-    val rebuild = s"${livePath}_rebuild"
-    Dedup.writeMinhashIndex(docs, rebuild, n, k, bands, textCol, idCol)
-    Compactor.doAutoCoalesce(rebuild, requestedSizeMb,
-      zorderCols = Seq("band", "bandHash"))
-    // compaction rewrites the folder and its sidecar with it — restore
-    Dedup.writeMinhashParams(spark, rebuild, Dedup.MinhashParams(n, k, bands))
-    swapIn(spark, rebuild, livePath)
+    replace(spark, livePath, Dedup.MinhashSidecar, Dedup.MinhashParams(n, k, bands)) {
+      rebuild =>
+        Dedup.writeMinhashIndex(docs, rebuild, n, k, bands, textCol, idCol)
+        Compactor.doAutoCoalesce(rebuild, requestedSizeMb,
+          zorderCols = Seq("band", "bandHash"))
+    }
   }
 
   /** [[rebuildMinhashIndex]] for the near-dup pair-graph artifact
-    * ([[Dedup.writePairGraph]]): full recompute to `<livePath>_rebuild`,
-    * compacted (z-ordered on id_a — every consumer's first join/groupBy
-    * key, so cluster/representative/graph reads touch contiguous row
-    * groups), sidecar restored, fuse-guarded swap. The full-rebuild
-    * member of the pair-graph lifecycle ([[Dedup.updatePairGraph]] /
-    * [[Dedup.forgetDocs]] are the incremental ones): run it on snapshot
-    * boundaries or when incremental drift warrants a clean base.
+    * ([[Dedup.writePairGraph]]): full recompute, compacted (z-ordered
+    * on id_a — every consumer's first join/groupBy key, so
+    * cluster/representative/graph reads touch contiguous row groups),
+    * fuse-guarded swap. The full-rebuild member of the pair-graph
+    * lifecycle ([[Dedup.updatePairGraph]] / [[Dedup.forgetDocs]] are
+    * the incremental ones): run it on snapshot boundaries or when
+    * incremental drift warrants a clean base.
     */
   def rebuildPairGraph(docs: DataFrame, livePath: String, n: Int = 3,
       minJaccard: Double = 0.5, requestedSizeMb: Int = 100,
       textCol: String = "text", idCol: String = "doc_id",
       prefixFilter: Boolean = false, broadcastDf: Boolean = false): Unit = {
     implicit val spark: SparkSession = docs.sparkSession
-    val rebuild = s"${livePath}_rebuild"
-    Dedup.writePairGraph(docs, rebuild, n, minJaccard, textCol, idCol,
-      prefixFilter, broadcastDf)
-    Compactor.doAutoCoalesce(rebuild, requestedSizeMb, zorderCols = Seq("id_a"))
-    // compaction rewrites the folder and its sidecar with it — restore
-    Dedup.writePairGraphParams(spark, rebuild,
-      Dedup.PairGraphParams("jaccard", n, minJaccard))
-    swapIn(spark, rebuild, livePath)
+    replace(spark, livePath, Dedup.PairGraphSidecar,
+        Dedup.PairGraphParams("jaccard", n, minJaccard)) { rebuild =>
+      Dedup.writePairGraph(docs, rebuild, n, minJaccard, textCol, idCol,
+        prefixFilter, broadcastDf)
+      Compactor.doAutoCoalesce(rebuild, requestedSizeMb, zorderCols = Seq("id_a"))
+    }
   }
 
   /** Drift of an ingest batch against the distribution the LIVE index
@@ -151,18 +212,21 @@ object IndexLifecycle {
   def driftSinceBuild(spark: SparkSession, livePath: String, batch: DataFrame,
       vecCol: String = "embedding"): DataFrame = {
     val before = Similarity.readMomentsSidecar(spark, livePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"$livePath has no _graft_moments sidecar — rebuild with the current " +
-        "lifecycle to record the build distribution"))
+      throw missingMoments(livePath))
     Similarity.embeddingDrift(before, Similarity.embeddingMoments(batch, vecCol))
   }
+
+  /** The error for a live index without the `_graft_moments` sidecar. */
+  def missingMoments(livePath: String): IllegalArgumentException =
+    missingSidecar(livePath, "_graft_moments",
+      "rebuild with the current lifecycle to record the build distribution")
 
   /** Fuse-guarded atomic swap: promote `rebuildPath` over `livePath`.
     * Marker content records the rebuild path so [[recoverSwap]] can
     * verify an open transaction is its own before touching anything.
     */
   def swapIn(spark: SparkSession, rebuildPath: String, livePath: String): Unit = {
-    val fs = Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, livePath)
+    val fs = fsOf(spark, livePath)
     val fuse = swapFuse(spark, livePath)
     require(!fuse.isInProgress(),
       s"unfinished swap on $livePath — run recoverSwap first")
@@ -192,7 +256,7 @@ object IndexLifecycle {
     * Returns true when a marker was found and resolved.
     */
   def recoverSwap(spark: SparkSession, livePath: String): Boolean = {
-    val fs = Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, livePath)
+    val fs = fsOf(spark, livePath)
     val fuse = swapFuse(spark, livePath)
     if (!fuse.isInProgress()) return false
     val bak = s"${livePath}_swap_bak"
@@ -248,10 +312,11 @@ object IndexLifecycle {
       else isTransientMissing(t.getCause)
   }
 
+  private def fsOf(spark: SparkSession, path: String) =
+    Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
+
   private def swapFuse(spark: SparkSession, livePath: String): SafetyFuse = {
     val p = new Path(livePath)
-    new SafetyFuse(
-      Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, livePath),
-      p.getParent.toString, s"${p.getName}_swap")
+    new SafetyFuse(fsOf(spark, livePath), p.getParent.toString, s"${p.getName}_swap")
   }
 }

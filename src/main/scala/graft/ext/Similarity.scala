@@ -533,6 +533,8 @@ object Similarity {
     */
   case class LshParams(dim: Int, bitsPerTable: Int, tables: Int, seedBase: Long)
 
+  private[graft] val LshSidecar = new IndexLifecycle.Sidecar[LshParams]("lsh")
+
   /** Persist [[lshIndex]] as parquet, repartitioned on the probe join's
     * (table, bucket) key so bucket reads are co-located. The hash
     * parameters are written alongside as an `_graft_lsh_params.json`
@@ -546,38 +548,16 @@ object Similarity {
     lshIndex(vectors, dim, bitsPerTable, tables, seedBase, idCol, vecCol)
       .repartition(col("table"), col("bucket"))
       .write.mode("overwrite").parquet(path)
-    writeLshParams(vectors.sparkSession, path,
+    LshSidecar.write(vectors.sparkSession, path,
       LshParams(dim, bitsPerTable, tables, seedBase))
-  }
-
-  private def paramsPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_graft_lsh_params.json")
-
-  private[ext] def writeLshParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, p: LshParams): Unit = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(paramsPath(path), true)
-    try out.write(
-      s"""{"dim":${p.dim},"bitsPerTable":${p.bitsPerTable},"tables":${p.tables},"seedBase":${p.seedBase}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
   }
 
   /** The [[LshParams]] sidecar of a persisted index; None for an index
     * written before the sidecar existed (or by hand).
     */
   def readLshIndexParams(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[LshParams] = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    if (!fs.exists(paramsPath(path))) return None
-    val in = fs.open(paramsPath(path))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def field(k: String) = s""""$k":(-?[0-9]+)""".r.findFirstMatchIn(txt).map(_.group(1))
-    for {
-      d <- field("dim"); b <- field("bitsPerTable")
-      t <- field("tables"); s <- field("seedBase")
-    } yield LshParams(d.toInt, b.toInt, t.toInt, s.toLong)
-  }
+      path: String): Option[LshParams] =
+    LshSidecar.read(spark, path)
 
   /** Read a persisted [[lshIndex]] back (reload==recompute pinned in
     * ExtSpec); pass to [[lshTopK]]'s `corpusIndex` or
@@ -599,19 +579,15 @@ object Similarity {
   def updateLshIndex(spark: org.apache.spark.sql.SparkSession,
       newVectors: DataFrame, path: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val p = readLshIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_lsh_params.json sidecar — not an index this can update"))
+    val p = LshSidecar.require(spark, path, "not an index this can update")
     val kept = readLshIndex(spark, path)
       .join(newVectors.select(col(idCol).as("id")), Seq("id"), "left_anti")
     val fresh = lshIndex(newVectors, p.dim, p.bitsPerTable, p.tables, p.seedBase,
       idCol, vecCol)
-    val rebuild = s"${path}_rebuild"
-    kept.unionByName(fresh)
-      .repartition(col("table"), col("bucket"))
-      .write.mode("overwrite").parquet(rebuild)
-    writeLshParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, LshSidecar, p) {
+      kept.unionByName(fresh)
+        .repartition(col("table"), col("bucket")).write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Deletion propagation for a persisted [[lshIndex]]: the embedding
@@ -622,16 +598,12 @@ object Similarity {
     */
   def forgetLshIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, forgetIds: DataFrame, idCol: String = "vec_id"): Unit = {
-    val p = readLshIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_lsh_params.json sidecar — not an index this can update"))
-    val rebuild = s"${path}_rebuild"
-    readLshIndex(spark, path)
-      .join(forgetIds.select(col(idCol).as("id")), Seq("id"), "left_anti")
-      .repartition(col("table"), col("bucket"))
-      .write.mode("overwrite").parquet(rebuild)
-    writeLshParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    val p = LshSidecar.require(spark, path, "not an index this can update")
+    IndexLifecycle.replace(spark, path, LshSidecar, p) {
+      readLshIndex(spark, path)
+        .join(forgetIds.select(col(idCol).as("id")), Seq("id"), "left_anti")
+        .repartition(col("table"), col("bucket")).write.mode("overwrite").parquet(_)
+    }
   }
 
   /** [[lshTopK]] against a persisted index path, hash parameters taken
@@ -642,9 +614,7 @@ object Similarity {
       k: Int, path: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       broadcastQueries: Boolean = true): DataFrame = {
-    val p = readLshIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_lsh_params.json sidecar; pass parameters to lshTopK explicitly"))
+    val p = LshSidecar.require(spark, path, "pass parameters to lshTopK explicitly")
     lshTopKIndexed(queries, readLshIndex(spark, path), k, p, idCol, vecCol,
       broadcastQueries)
   }
@@ -879,12 +849,12 @@ object Similarity {
     val (cb, lists) = readIvfIndex(spark, path)
     val kept = lists.join(newVectors.select(col(idCol).as("id")), Seq("id"), "left_anti")
     val fresh = ivfAssign(newVectors, cb, idCol, vecCol)
-    val rebuild = s"${path}_rebuild"
-    cb.write.mode("overwrite").parquet(s"$rebuild/codebook")
-    kept.unionByName(fresh)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").parquet(s"$rebuild/lists")
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path) { rebuild =>
+      cb.write.mode("overwrite").parquet(s"$rebuild/codebook")
+      kept.unionByName(fresh)
+        .repartition(col("centroid_id"))
+        .write.mode("overwrite").parquet(s"$rebuild/lists")
+    }
   }
 
   /** Deletion propagation for a persisted [[ivfIndex]]: list rows carry
@@ -898,12 +868,12 @@ object Similarity {
   def forgetIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, forgetIds: DataFrame, idCol: String = "vec_id"): Unit = {
     val (cb, lists) = readIvfIndex(spark, path)
-    val rebuild = s"${path}_rebuild"
-    cb.write.mode("overwrite").parquet(s"$rebuild/codebook")
-    lists.join(forgetIds.select(col(idCol).as("id")), Seq("id"), "left_anti")
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").parquet(s"$rebuild/lists")
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path) { rebuild =>
+      cb.write.mode("overwrite").parquet(s"$rebuild/codebook")
+      lists.join(forgetIds.select(col(idCol).as("id")), Seq("id"), "left_anti")
+        .repartition(col("centroid_id"))
+        .write.mode("overwrite").parquet(s"$rebuild/lists")
+    }
   }
 
   /** Nearest `keep` centroids of a collected codebook as a sorted
@@ -1587,31 +1557,12 @@ object Similarity {
 
   case class PqParams(m: Int, k: Int, iters: Int, dim: Int)
 
-  private def pqParamsPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_graft_pq_params.json")
-
-  private[ext] def writePqParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, p: PqParams): Unit = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(pqParamsPath(path), true)
-    try out.write(
-      s"""{"m":${p.m},"k":${p.k},"iters":${p.iters},"dim":${p.dim}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private[graft] val PqSidecar = new IndexLifecycle.Sidecar[PqParams]("pq")
 
   /** The [[PqParams]] sidecar of a persisted PQ index; None if absent. */
   def readPqIndexParams(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[PqParams] = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    if (!fs.exists(pqParamsPath(path))) return None
-    val in = fs.open(pqParamsPath(path))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def field(key: String) = s""""$key":(-?[0-9]+)""".r.findFirstMatchIn(txt).map(_.group(1))
-    for {
-      m <- field("m"); k <- field("k"); i <- field("iters"); d <- field("dim")
-    } yield PqParams(m.toInt, k.toInt, i.toInt, d.toInt)
-  }
+      path: String): Option[PqParams] =
+    PqSidecar.read(spark, path)
 
   /** Persist a PQ index: train ([[pqTrain]]), encode ([[pqEncode]]),
     * write the integer codebook state to `<path>/codebook` and the
@@ -1631,7 +1582,7 @@ object Similarity {
     pqEncode(vectors, state, idCol, vecCol)
       .repartition(col("sub"), col("code"))
       .write.mode("overwrite").parquet(s"$path/codes")
-    writePqParams(spark, path, PqParams(m, k, iters, dim))
+    PqSidecar.write(spark, path, PqParams(m, k, iters, dim))
   }
 
   /** Read a persisted PQ index back as (codes, codebook state). */
@@ -1654,22 +1605,19 @@ object Similarity {
   def updatePqIndex(spark: org.apache.spark.sql.SparkSession,
       newVectors: DataFrame, path: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val p = readPqIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_pq_params.json sidecar — not an index this can update"))
+    val p = PqSidecar.require(spark, path, "not an index this can update")
     val batchDim = newVectors.select(size(col(vecCol))).head().getInt(0)
     require(batchDim == p.dim,
       s"batch dim $batchDim != index dim ${p.dim} — encoding would be garbage")
     val (codes, state) = readPqIndex(spark, path)
     val kept = codes.join(newVectors.select(col(idCol).as("vec_id")), Seq("vec_id"), "left_anti")
     val fresh = pqEncode(newVectors, state, idCol, vecCol)
-    val rebuild = s"${path}_rebuild"
-    state.write.mode("overwrite").parquet(s"$rebuild/codebook")
-    kept.unionByName(fresh)
-      .repartition(col("sub"), col("code"))
-      .write.mode("overwrite").parquet(s"$rebuild/codes")
-    writePqParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, PqSidecar, p) { rebuild =>
+      state.write.mode("overwrite").parquet(s"$rebuild/codebook")
+      kept.unionByName(fresh)
+        .repartition(col("sub"), col("code"))
+        .write.mode("overwrite").parquet(s"$rebuild/codes")
+    }
   }
 
   /** Deletion propagation for a persisted PQ index: drop every code
@@ -1680,17 +1628,14 @@ object Similarity {
     */
   def forgetPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, forgetIds: DataFrame, idCol: String = "vec_id"): Unit = {
-    val p = readPqIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_pq_params.json sidecar — not an index this can update"))
+    val p = PqSidecar.require(spark, path, "not an index this can update")
     val (codes, state) = readPqIndex(spark, path)
-    val rebuild = s"${path}_rebuild"
-    state.write.mode("overwrite").parquet(s"$rebuild/codebook")
-    codes.join(forgetIds.select(col(idCol).as("vec_id")), Seq("vec_id"), "left_anti")
-      .repartition(col("sub"), col("code"))
-      .write.mode("overwrite").parquet(s"$rebuild/codes")
-    writePqParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, PqSidecar, p) { rebuild =>
+      state.write.mode("overwrite").parquet(s"$rebuild/codebook")
+      codes.join(forgetIds.select(col(idCol).as("vec_id")), Seq("vec_id"), "left_anti")
+        .repartition(col("sub"), col("code"))
+        .write.mode("overwrite").parquet(s"$rebuild/codes")
+    }
   }
 
   /** [[pqTopK]] against a persisted index, with the decomposition
@@ -1700,8 +1645,7 @@ object Similarity {
   def pqTopKAt(spark: org.apache.spark.sql.SparkSession, probes: DataFrame,
       k: Int, path: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val p = readPqIndexParams(spark, path).getOrElse(throw new IllegalStateException(
-      s"$path has no _graft_pq_params.json sidecar; serve with pqTopK explicitly"))
+    val p = PqSidecar.require(spark, path, "serve with pqTopK explicitly")
     val probeDim = probes.select(size(col(vecCol))).head().getInt(0)
     require(probeDim == p.dim,
       s"probe dim $probeDim != index dim ${p.dim} (index at $path)")
@@ -1711,34 +1655,14 @@ object Similarity {
 
   case class IvfPqParams(nLists: Int, m: Int, k: Int, iters: Int, dim: Int)
 
-  private def ivfPqParamsPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_graft_ivfpq_params.json")
-
-  private[ext] def writeIvfPqParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, p: IvfPqParams): Unit = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(ivfPqParamsPath(path), true)
-    try out.write(
-      s"""{"nLists":${p.nLists},"m":${p.m},"k":${p.k},"iters":${p.iters},"dim":${p.dim}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private[graft] val IvfPqSidecar = new IndexLifecycle.Sidecar[IvfPqParams]("ivfpq")
 
   /** The [[IvfPqParams]] sidecar of a persisted IVF-PQ index; None if
     * absent.
     */
   def readIvfPqIndexParams(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[IvfPqParams] = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    if (!fs.exists(ivfPqParamsPath(path))) return None
-    val in = fs.open(ivfPqParamsPath(path))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def field(key: String) = s""""$key":(-?[0-9]+)""".r.findFirstMatchIn(txt).map(_.group(1))
-    for {
-      n <- field("nLists"); m <- field("m"); k <- field("k")
-      i <- field("iters"); d <- field("dim")
-    } yield IvfPqParams(n.toInt, m.toInt, k.toInt, i.toInt, d.toInt)
-  }
+      path: String): Option[IvfPqParams] =
+    IvfPqSidecar.read(spark, path)
 
   /** Persist an IVF-PQ composite index — the TENTH index-lifecycle
     * family: `<path>/coarse` (the (id, vec, norm) coarse quantizer),
@@ -1761,7 +1685,7 @@ object Similarity {
     ivfPqEncodeWith(vectors, coarse.collect(), state, idCol, vecCol)
       .repartition(col("list_id"))
       .write.mode("overwrite").parquet(s"$path/codes")
-    writeIvfPqParams(spark, path, IvfPqParams(nLists, m, k, iters, dim))
+    IvfPqSidecar.write(spark, path, IvfPqParams(nLists, m, k, iters, dim))
   }
 
   /** Read a persisted [[writeIvfPqIndex]] back as
@@ -1779,8 +1703,7 @@ object Similarity {
   def ivfPqTopKAt(spark: org.apache.spark.sql.SparkSession, probes: DataFrame,
       k: Int, path: String, nProbe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val p = readIvfPqIndexParams(spark, path).getOrElse(throw new IllegalStateException(
-      s"$path has no _graft_ivfpq_params.json sidecar; serve with ivfPqTopK explicitly"))
+    val p = IvfPqSidecar.require(spark, path, "serve with ivfPqTopK explicitly")
     val probeDim = probes.select(size(col(vecCol))).head().getInt(0)
     require(probeDim == p.dim,
       s"probe dim $probeDim != index dim ${p.dim} (index at $path)")
@@ -1803,9 +1726,7 @@ object Similarity {
   def updateIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       newVectors: DataFrame, path: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val p = readIvfPqIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_ivfpq_params.json sidecar — not an index this can update"))
+    val p = IvfPqSidecar.require(spark, path, "not an index this can update")
     val batchDim = newVectors.select(size(col(vecCol))).head().getInt(0)
     require(batchDim == p.dim,
       s"batch dim $batchDim != index dim ${p.dim} — encoding would be garbage")
@@ -1813,14 +1734,13 @@ object Similarity {
     val kept = codes.join(newVectors.select(col(idCol).as("vec_id")),
       Seq("vec_id"), "left_anti")
     val fresh = ivfPqEncodeWith(newVectors, coarse.collect(), state, idCol, vecCol)
-    val rebuild = s"${path}_rebuild"
-    coarse.write.mode("overwrite").parquet(s"$rebuild/coarse")
-    state.write.mode("overwrite").parquet(s"$rebuild/codebook")
-    kept.unionByName(fresh)
-      .repartition(col("list_id"))
-      .write.mode("overwrite").parquet(s"$rebuild/codes")
-    writeIvfPqParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, IvfPqSidecar, p) { rebuild =>
+      coarse.write.mode("overwrite").parquet(s"$rebuild/coarse")
+      state.write.mode("overwrite").parquet(s"$rebuild/codebook")
+      kept.unionByName(fresh)
+        .repartition(col("list_id"))
+        .write.mode("overwrite").parquet(s"$rebuild/codes")
+    }
   }
 
   /** Deletion propagation for a persisted IVF-PQ index: purge every
@@ -1830,18 +1750,15 @@ object Similarity {
     */
   def forgetIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, forgetIds: DataFrame, idCol: String = "vec_id"): Unit = {
-    val p = readIvfPqIndexParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_ivfpq_params.json sidecar — not an index this can update"))
+    val p = IvfPqSidecar.require(spark, path, "not an index this can update")
     val (codes, state, coarse) = readIvfPqIndex(spark, path)
-    val rebuild = s"${path}_rebuild"
-    coarse.write.mode("overwrite").parquet(s"$rebuild/coarse")
-    state.write.mode("overwrite").parquet(s"$rebuild/codebook")
-    codes.join(forgetIds.select(col(idCol).as("vec_id")), Seq("vec_id"), "left_anti")
-      .repartition(col("list_id"))
-      .write.mode("overwrite").parquet(s"$rebuild/codes")
-    writeIvfPqParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, IvfPqSidecar, p) { rebuild =>
+      coarse.write.mode("overwrite").parquet(s"$rebuild/coarse")
+      state.write.mode("overwrite").parquet(s"$rebuild/codebook")
+      codes.join(forgetIds.select(col(idCol).as("vec_id")), Seq("vec_id"), "left_anti")
+        .repartition(col("list_id"))
+        .write.mode("overwrite").parquet(s"$rebuild/codes")
+    }
   }
 
   /** [[cosineDupPairs]] at corpus scale: random-hyperplane LSH buckets

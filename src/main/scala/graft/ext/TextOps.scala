@@ -1,5 +1,6 @@
 package graft.ext
 
+import com.fasterxml.jackson.annotation.{JsonProperty, JsonPropertyOrder}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -557,17 +558,17 @@ object TextOps {
 
   // ---------------------------------------- persisted tokenizer artifact
 
-  private def tokenizerParamsPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_tokenizer_params.json")
+  /** The (k, lowercase) contract of a persisted tokenizer. */
+  private[graft] case class TokenizerParams(k: Int, lowercase: Boolean)
+
+  private[graft] val TokenizerSidecar = new IndexLifecycle.Sidecar[TokenizerParams]("tokenizer")
 
   /** True iff `path` carries the tokenizer sidecar — the loud-failure
     * marker the serve path checks (the text-index convention: a
     * directory that is not a graft tokenizer must never be served).
     */
-  def isTokenizer(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    fs.exists(tokenizerParamsPath(path))
-  }
+  def isTokenizer(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    TokenizerSidecar.exists(spark, path)
 
   /** Train `k` merges on `docs` and persist them as the TOKENIZER
     * ARTIFACT — the ninth lifecycle family: production trains a
@@ -583,15 +584,11 @@ object TextOps {
     */
   def writeTokenizer(docs: DataFrame, path: String, k: Int,
       textCol: String = "text", lowercase: Boolean = true): Unit = {
-    val spark = docs.sparkSession
     bpeMerges(docs, k, textCol, lowercase)
       .select(col("step"), col("lhs"), col("rhs"), col("merged"), col("pair_count"))
       .coalesce(1) // k rows — one file reads in one footer fetch
       .write.mode("overwrite").parquet(path)
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(tokenizerParamsPath(path), true)
-    out.write(s"""{"k":$k,"lowercase":$lowercase}""".getBytes("UTF-8"))
-    out.close()
+    TokenizerSidecar.write(docs.sparkSession, path, TokenizerParams(k, lowercase))
   }
 
   /** The persisted merge table of [[writeTokenizer]], in step order,
@@ -600,17 +597,12 @@ object TextOps {
     */
   def readTokenizer(spark: org.apache.spark.sql.SparkSession,
       path: String): (Seq[BpeMerge], Boolean) = {
-    require(isTokenizer(spark, path),
-      s"$path has no _graft_tokenizer_params.json sidecar — not a graft tokenizer")
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val in = fs.open(tokenizerParamsPath(path))
-    val params = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val lowercase = params.contains("\"lowercase\":true")
+    val p = TokenizerSidecar.require(spark, path, "not a graft tokenizer")
     val merges = spark.read.parquet(path)
       .orderBy(col("step")).collect()
       .map(r => BpeMerge(r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4))).toSeq
-    (merges, lowercase)
+    (merges, p.lowercase)
   }
 
   /** Encode `docs` with a PERSISTED tokenizer — the serve half: k
@@ -1779,23 +1771,23 @@ object TextOps {
 
   // ------------------------------------------------ persisted text index
 
-  private def textParamsPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_text_params.json")
+  /** The format version and tokenizer of a persisted text index. */
+  private[graft] case class TextIndexParams(v: Int, tokenizer: String)
+
+  private[graft] val TextIndexSidecar = new IndexLifecycle.Sidecar[TextIndexParams]("text")
+  private val TextIndexV1 = TextIndexParams(1, "ws")
 
   /** True iff `path` carries the text-index sidecar — the loud-failure
     * marker every lifecycle entry point checks (a directory that is
     * not a graft text index must never be served, updated, or
     * swap-clobbered).
     */
-  def isTextIndex(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    fs.exists(textParamsPath(path))
-  }
+  def isTextIndex(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    TextIndexSidecar.exists(spark, path)
 
   private def requireTextIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    require(isTextIndex(spark, path),
-      s"$path has no _graft_text_params.json sidecar — not a graft text index")
+    TextIndexSidecar.require(spark, path, "not a graft text index")
 
   /** (postings, docs) frames of a corpus — the build shape shared by
     * [[writeTextIndex]] and [[updateTextIndex]]'s fresh side. Postings
@@ -1819,8 +1811,8 @@ object TextOps {
     (postings, withDl.select(col("doc_id"), col("dl")))
   }
 
-  private def writeTextIndexAt(spark: org.apache.spark.sql.SparkSession,
-      postings: DataFrame, docsT: DataFrame, path: String): Unit = {
+  private def writeTextIndexAt(postings: DataFrame, docsT: DataFrame,
+      path: String): Unit = {
     // column order pinned explicitly: the update path's anti joins move
     // their key to the front, and a rebuild must be file-comparable to
     // a fresh build (positional exceptAll in the specs, schema-stable
@@ -1836,11 +1828,6 @@ object TextOps {
     docsT.agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
       .write.mode("overwrite").parquet(s"$path/stats")
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(textParamsPath(path), true)
-    try out.write("""{"v":1,"tokenizer":"ws"}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
   }
 
   /** Persist the inverted index of a corpus — the SIXTH index-lifecycle
@@ -1859,7 +1846,8 @@ object TextOps {
   def writeTextIndex(docs: DataFrame, path: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val (postings, docsT) = textIndexFrames(docs, idCol, textCol)
-    writeTextIndexAt(docs.sparkSession, postings, docsT, path)
+    writeTextIndexAt(postings, docsT, path)
+    TextIndexSidecar.write(docs.sparkSession, path, TextIndexV1)
   }
 
   /** [[bm25TopK]] served from a persisted [[writeTextIndex]] artifact:
@@ -1916,10 +1904,9 @@ object TextOps {
     val keptD = spark.read.parquet(s"$path/docs")
       .join(newIds, Seq("doc_id"), "left_anti")
     val (freshP, freshD) = textIndexFrames(newDocs, idCol, textCol)
-    val rebuild = s"${path}_rebuild"
-    writeTextIndexAt(spark, keptP.unionByName(freshP),
-      keptD.unionByName(freshD), rebuild)
-    graft.ext.IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, TextIndexSidecar, TextIndexV1) {
+      writeTextIndexAt(keptP.unionByName(freshP), keptD.unionByName(freshD), _)
+    }
   }
 
   /** Deletion propagation for a persisted text index: every posting and
@@ -1934,9 +1921,9 @@ object TextOps {
       .join(ids, Seq("doc_id"), "left_anti")
     val keptD = spark.read.parquet(s"$path/docs")
       .join(ids, Seq("doc_id"), "left_anti")
-    val rebuild = s"${path}_rebuild"
-    writeTextIndexAt(spark, keptP, keptD, rebuild)
-    graft.ext.IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, TextIndexSidecar, TextIndexV1) {
+      writeTextIndexAt(keptP, keptD, _)
+    }
   }
 
   // ---------------------------------------------- persisted tf-idf index
@@ -1946,35 +1933,29 @@ object TextOps {
     * reads them from there (a call-site literal can't disagree with
     * the build).
     */
-  case class TfidfParams(tfCap: Long, idfCap: Long)
+  @JsonPropertyOrder(Array("v", "tfCap", "idfCap", "tokenizer"))
+  case class TfidfParams(tfCap: Long, idfCap: Long) {
+    // the sidecar also records the format version and tokenizer
+    @JsonProperty("v") private def v: Int = 1
+    @JsonProperty("tokenizer") private def tokenizer: String = "ws"
+  }
 
-  private def tfidfParamsPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_tfidf_params.json")
+  private[graft] val TfidfSidecar = new IndexLifecycle.Sidecar[TfidfParams]("tfidf")
 
   /** True iff `path` carries the tf-idf sidecar — the loud-failure
     * marker every lifecycle entry point checks.
     */
-  def isTfidfIndex(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    fs.exists(tfidfParamsPath(path))
-  }
+  def isTfidfIndex(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    TfidfSidecar.exists(spark, path)
 
   private def requireTfidfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    require(isTfidfIndex(spark, path),
-      s"$path has no _graft_tfidf_params.json sidecar — not a graft tf-idf index")
+      path: String): TfidfParams =
+    TfidfSidecar.require(spark, path, "not a graft tf-idf index")
 
   /** The [[TfidfParams]] sidecar of a persisted index. */
   def readTfidfIndexParams(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[TfidfParams] = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    if (!fs.exists(tfidfParamsPath(path))) return None
-    val in = fs.open(tfidfParamsPath(path))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    def field(key: String) = s""""$key":(-?[0-9]+)""".r.findFirstMatchIn(txt).map(_.group(1))
-    for { t <- field("tfCap"); i <- field("idfCap") }
-      yield TfidfParams(t.toLong, i.toLong)
-  }
+      path: String): Option[TfidfParams] =
+    TfidfSidecar.read(spark, path)
 
   /** (tf grain, doc grain) of a corpus under the tf-idf model: the
     * SATURATED term-frequency rows `(doc_id, token, tfs)` — the only
@@ -1994,8 +1975,8 @@ object TextOps {
     (grain, ids)
   }
 
-  private def writeTfidfIndexAt(spark: org.apache.spark.sql.SparkSession,
-      grain: DataFrame, docIds: DataFrame, p: TfidfParams, path: String): Unit = {
+  private def writeTfidfIndexAt(grain: DataFrame, docIds: DataFrame, p: TfidfParams,
+      path: String): Unit = {
     // corpus statistics re-derived from the grain on EVERY build: an
     // added/forgotten doc moves df of its tokens, which moves idf,
     // which moves the weight of every doc sharing those tokens — norms
@@ -2022,12 +2003,6 @@ object TextOps {
       .write.mode("overwrite").parquet(s"$path/docs")
     docIds.agg(count(lit(1)).as("n_docs"))
       .write.mode("overwrite").parquet(s"$path/stats")
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(tfidfParamsPath(path), true)
-    try out.write(
-      s"""{"v":1,"tfCap":${p.tfCap},"idfCap":${p.idfCap},"tokenizer":"ws"}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
   }
 
   /** Persist the tf-idf vector-space index of a corpus — the ELEVENTH
@@ -2049,8 +2024,9 @@ object TextOps {
       idfCap: Long = 100000L,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val (grain, ids) = tfidfGrainFrames(docs, tfCap, idCol, textCol)
-    writeTfidfIndexAt(docs.sparkSession, grain, ids,
-      TfidfParams(tfCap, idfCap), path)
+    val p = TfidfParams(tfCap, idfCap)
+    writeTfidfIndexAt(grain, ids, p, path)
+    TfidfSidecar.write(docs.sparkSession, path, p)
   }
 
   /** [[tfidfCosineTopK]] served from a persisted [[writeTfidfIndex]]
@@ -2067,8 +2043,7 @@ object TextOps {
   def tfidfCosineTopKAt(spark: org.apache.spark.sql.SparkSession, path: String,
       queryTerms: Seq[String], k: Int = 20): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    requireTfidfIndex(spark, path)
-    val p = readTfidfIndexParams(spark, path).get
+    val p = requireTfidfIndex(spark, path)
     val terms = queryTerms.map(_.toLowerCase).distinct
     val tf = spark.read.parquet(s"$path/postings")
       .where(col("token").isin(terms: _*))
@@ -2107,8 +2082,7 @@ object TextOps {
   def docKeywordsAt(spark: org.apache.spark.sql.SparkSession, path: String,
       k: Int = 3): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    requireTfidfIndex(spark, path)
-    val p = readTfidfIndexParams(spark, path).get
+    val p = requireTfidfIndex(spark, path)
     val tf = spark.read.parquet(s"$path/postings")
       .select(col("doc_id"), col("token"), col("tfs"))
     val dfT = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
@@ -2136,8 +2110,7 @@ object TextOps {
   def updateTfidfIndex(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, path: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    requireTfidfIndex(spark, path)
-    val p = readTfidfIndexParams(spark, path).get
+    val p = requireTfidfIndex(spark, path)
     val newIds = newDocs.select(col(idCol).cast("long").as("doc_id"))
     val keptG = spark.read.parquet(s"$path/postings")
       .join(newIds, Seq("doc_id"), "left_anti")
@@ -2145,10 +2118,9 @@ object TextOps {
     val keptD = spark.read.parquet(s"$path/docs")
       .join(newIds, Seq("doc_id"), "left_anti")
     val (freshG, freshD) = tfidfGrainFrames(newDocs, p.tfCap, idCol, textCol)
-    val rebuild = s"${path}_rebuild"
-    writeTfidfIndexAt(spark, keptG.unionByName(freshG),
-      keptD.unionByName(freshD), p, rebuild)
-    graft.ext.IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, TfidfSidecar, p) {
+      writeTfidfIndexAt(keptG.unionByName(freshG), keptD.unionByName(freshD), p, _)
+    }
   }
 
   /** Deletion propagation for a persisted tf-idf index: the forgotten
@@ -2157,17 +2129,16 @@ object TextOps {
     */
   def forgetTfidfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, forgetIds: DataFrame, idCol: String = "doc_id"): Unit = {
-    requireTfidfIndex(spark, path)
-    val p = readTfidfIndexParams(spark, path).get
+    val p = requireTfidfIndex(spark, path)
     val ids = forgetIds.select(col(idCol).cast("long").as("doc_id"))
     val keptG = spark.read.parquet(s"$path/postings")
       .join(ids, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("token"), col("tfs"))
     val keptD = spark.read.parquet(s"$path/docs")
       .join(ids, Seq("doc_id"), "left_anti")
-    val rebuild = s"${path}_rebuild"
-    writeTfidfIndexAt(spark, keptG, keptD, p, rebuild)
-    graft.ext.IndexLifecycle.swapIn(spark, rebuild, path)
+    IndexLifecycle.replace(spark, path, TfidfSidecar, p) {
+      writeTfidfIndexAt(keptG, keptD, p, _)
+    }
   }
 
   /** Per-document text metrics via [[graft.functions.TextMetrics]] — ONE

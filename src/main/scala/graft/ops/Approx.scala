@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ext.IndexLifecycle
+
 /** Approximate aggregates — the scale alternates to the exact forms the
   * oracle gate verifies (q06 exact distinct, q14 exact percentiles).
   *
@@ -190,28 +192,17 @@ object Approx {
 
   // --------------------------------------------- persisted KMV sketch
 
-  private def kmvParamsPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_kmv_params.json")
+  /** The sketch size a persisted sketch was built with. */
+  private[graft] case class KmvParams(k: Int)
+
+  private[graft] val KmvSidecar = new IndexLifecycle.Sidecar[KmvParams]("kmv")
 
   /** The k recorded in a persisted sketch's sidecar; None when `path`
     * is not a KMV artifact.
     */
   def readKmvParams(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Int] = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    if (!fs.exists(kmvParamsPath(path))) return None
-    val in = fs.open(kmvParamsPath(path))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    """"k":(-?[0-9]+)""".r.findFirstMatchIn(txt).map(_.group(1).toInt)
-  }
-
-  private def writeKmvParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, k: Int): Unit = {
-    val fs = graft.fs.Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(kmvParamsPath(path), true)
-    try out.write(s"""{"k":$k}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      path: String): Option[Int] =
+    KmvSidecar.read(spark, path).map(_.k)
 
   /** Persist a sketch (k-row parquet + sidecar recording k — merges
     * MUST share k, and the sidecar makes a mismatched call-site literal
@@ -219,7 +210,7 @@ object Approx {
     */
   def writeKmvSketch(df: DataFrame, c: Column, k: Int, path: String): Unit = {
     kmvSketch(df, c, k).write.mode("overwrite").parquet(path)
-    writeKmvParams(df.sparkSession, path, k)
+    KmvSidecar.write(df.sparkSession, path, KmvParams(k))
   }
 
   /** Fold a batch into a persisted sketch at batch cost: sketch the
@@ -233,16 +224,13 @@ object Approx {
     */
   def mergeIntoKmvSketch(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, c: Column, path: String): Unit = {
-    val k = readKmvParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_kmv_params.json sidecar — not a KMV sketch"))
-    val rebuild = s"${path}_rebuild"
-    spark.read.parquet(path)
-      .unionByName(kmvSketch(batch, c, k))
-      .distinct().orderBy(col("h")).limit(k)
-      .write.mode("overwrite").parquet(rebuild)
-    writeKmvParams(spark, rebuild, k)
-    graft.ext.IndexLifecycle.swapIn(spark, rebuild, path)
+    val p = KmvSidecar.require(spark, path, "not a KMV sketch")
+    IndexLifecycle.replace(spark, path, KmvSidecar, p) {
+      spark.read.parquet(path)
+        .unionByName(kmvSketch(batch, c, p.k))
+        .distinct().orderBy(col("h")).limit(p.k)
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Corpus-overlap estimates from two KMV sketches, one output row:

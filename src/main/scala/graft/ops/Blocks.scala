@@ -42,7 +42,9 @@ object Blocks {
     * consumers: a freed localCheckpoint cannot be recomputed.
     */
   def free(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
+    // subquery plans too: a scan inside a scalar subquery is a leaf
+    // whose bytes no checkpoint block accounts for
+    df.queryExecution.analyzed.foreachWithSubqueries {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
@@ -97,7 +99,9 @@ object Blocks {
   def materializedBytes(df: DataFrame): Option[Long] = {
     val ids = scala.collection.mutable.ArrayBuffer.empty[Int]
     var allCheckpoints = true
-    df.queryExecution.analyzed.foreach {
+    // subquery plans too: a scan inside a scalar subquery is a leaf
+    // whose bytes no checkpoint block accounts for
+    df.queryExecution.analyzed.foreachWithSubqueries {
       case lr: org.apache.spark.sql.execution.LogicalRDD => ids += lr.rdd.id
       case leaf if leaf.children.isEmpty &&
           leaf.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LeafNode] =>

@@ -40,32 +40,13 @@ object RankIndex {
     */
   case class RankParams(itersTotal: Int)
 
-  private def paramsPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_graft_rank_params.json")
-
-  private def writeParams(spark: SparkSession, path: String,
-      p: RankParams): Unit = {
-    val fs = graft.fs.Fs.getFileSystem(
-      spark.sparkContext.hadoopConfiguration, path)
-    val out = fs.create(paramsPath(path), true)
-    try out.write(s"""{"itersTotal":${p.itersTotal}}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private[graft] val RankSidecar = new IndexLifecycle.Sidecar[RankParams]("rank")
 
   /** The params sidecar of a persisted rank artifact; None for a path
     * without one (not an artifact this lifecycle wrote).
     */
-  def readRankParams(spark: SparkSession, path: String): Option[RankParams] = {
-    val fs = graft.fs.Fs.getFileSystem(
-      spark.sparkContext.hadoopConfiguration, path)
-    if (!fs.exists(paramsPath(path))) return None
-    val in = fs.open(paramsPath(path))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    """"itersTotal":(-?[0-9]+)""".r.findFirstMatchIn(txt)
-      .map(m => RankParams(m.group(1).toInt))
-  }
+  def readRankParams(spark: SparkSession, path: String): Option[RankParams] =
+    RankSidecar.read(spark, path)
 
   /** Build the artifact: `iters` rounds of [[Graph.pageRankWeighted]]
     * from the uniform prior, persisted with its provenance sidecar.
@@ -73,10 +54,9 @@ object RankIndex {
     */
   def writeRankIndex(nodes: DataFrame, edges: DataFrame, path: String,
       iters: Int = 3, weightCol: String = "w"): Unit = {
-    val spark = nodes.sparkSession
     Graph.pageRankWeighted(nodes, edges, iters, weightCol)
       .write.mode("overwrite").parquet(path)
-    writeParams(spark, path, RankParams(iters))
+    RankSidecar.write(nodes.sparkSession, path, RankParams(iters))
   }
 
   /** The persisted rank vector (id, rank) — the serve path a frontier
@@ -98,16 +78,11 @@ object RankIndex {
     */
   def updateRankIndex(spark: SparkSession, path: String, nodes: DataFrame,
       edges: DataFrame, iters: Int = 2, weightCol: String = "w"): Unit = {
-    val p = readRankParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_rank_params.json sidecar — not a rank " +
-        "artifact this can update"))
-    val init = ranksAt(spark, path)
-    val rebuild = s"${path}_rebuild"
-    Graph.pageRankWeightedFrom(nodes, edges, init, iters, weightCol)
-      .write.mode("overwrite").parquet(rebuild)
-    writeParams(spark, rebuild, RankParams(p.itersTotal + iters))
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    val p = RankSidecar.require(spark, path, "not a rank artifact this can update")
+    IndexLifecycle.replace(spark, path, RankSidecar, RankParams(p.itersTotal + iters)) {
+      Graph.pageRankWeightedFrom(nodes, edges, ranksAt(spark, path), iters, weightCol)
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Deletion propagation: drop the forgotten ids' rows and swap the
@@ -118,15 +93,11 @@ object RankIndex {
     */
   def forgetRankIndex(spark: SparkSession, path: String,
       forgetIds: DataFrame, idCol: String = "id"): Unit = {
-    val p = readRankParams(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no _graft_rank_params.json sidecar — not a rank " +
-        "artifact this can update"))
-    val rebuild = s"${path}_rebuild"
-    ranksAt(spark, path)
-      .join(forgetIds.select(col(idCol).as("id")), Seq("id"), "left_anti")
-      .write.mode("overwrite").parquet(rebuild)
-    writeParams(spark, rebuild, p)
-    IndexLifecycle.swapIn(spark, rebuild, path)
+    val p = RankSidecar.require(spark, path, "not a rank artifact this can update")
+    IndexLifecycle.replace(spark, path, RankSidecar, p) {
+      ranksAt(spark, path)
+        .join(forgetIds.select(col(idCol).as("id")), Seq("id"), "left_anti")
+        .write.mode("overwrite").parquet(_)
+    }
   }
 }

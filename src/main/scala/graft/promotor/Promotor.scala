@@ -17,17 +17,16 @@ import graft.meta.{Meta, TableMetadataValidator}
 object Promotor {
 
   /** Source-table files → target paths by location prefix rewrite
-    * (reference Assistant.scala:12-24).
+    * (reference Assistant.scala:12-24). Throws, naming the file, when a
+    * file lies outside the source table's folder (a partition added
+    * with its own LOCATION): it has no place under the target's.
     */
   def getTablesPathsList(srcDb: String, srcTable: String, trgDb: String, trgTable: String)(
       implicit spark: SparkSession): Seq[Paths] = {
-    // normalize through Hadoop Path: inputFiles says file:///x while the
-    // catalog location says file:/x — a raw string replace would miss
-    def norm(u: String) = new Path(u).toString
-    val srcLoc = norm(Meta.getTableLocation(srcDb, srcTable)).stripSuffix("/")
-    val trgLoc = norm(Meta.getTableLocation(trgDb, trgTable)).stripSuffix("/")
+    val srcLoc = Meta.getTableLocation(srcDb, srcTable)
+    val trgLoc = Meta.getTableLocation(trgDb, trgTable)
     Meta.getListOfTableFiles(srcDb, srcTable).toIndexedSeq
-      .map(f => Paths(norm(f), norm(f).replace(srcLoc, trgLoc)))
+      .map(f => Paths(new Path(f).toString, Fs.rebase(f, srcLoc, trgLoc)))
   }
 
   // ------------------------------------------------------------------
@@ -92,19 +91,28 @@ object Promotor {
       trgTable: String, taskCount: Int = -1)(
       implicit spark: SparkSession): Array[FsOperationResult] = {
     TableMetadataValidator.validate(srcDb, srcTable, trgDb, trgTable)
-    val res = DistributedExecution.copyFiles(getTablesPathsList(srcDb, srcTable, trgDb, trgTable), taskCount)
-    Meta.refreshMetadata(trgDb, trgTable)
-    res
+    copyAndRefresh(getTablesPathsList(srcDb, srcTable, trgDb, trgTable), trgDb, trgTable, taskCount)
   }
 
-  /** H7: delete target content, copy all source files, refresh. */
+  /** H7: delete target content, copy all source files, refresh. The copy
+    * list is built first, so a source file that cannot be mapped onto
+    * the target fails the call before anything is deleted.
+    */
   def copyOverwriteTable(srcDb: String, srcTable: String, trgDb: String,
       trgTable: String, taskCount: Int = -1)(
       implicit spark: SparkSession): Array[FsOperationResult] = {
     TableMetadataValidator.validate(srcDb, srcTable, trgDb, trgTable)
+    val work = getTablesPathsList(srcDb, srcTable, trgDb, trgTable)
     implicit val conf = spark.sessionState.newHadoopConf()
     LocalExecution.deleteFolder(Meta.getTableLocation(trgDb, trgTable), deleteContentOnly = true)
-    copyFilesBetweenTables(srcDb, srcTable, trgDb, trgTable, taskCount)
+    copyAndRefresh(work, trgDb, trgTable, taskCount)
+  }
+
+  private def copyAndRefresh(work: Seq[Paths], trgDb: String, trgTable: String, taskCount: Int)(
+      implicit spark: SparkSession): Array[FsOperationResult] = {
+    val res = DistributedExecution.copyFiles(work, taskCount)
+    Meta.refreshMetadata(trgDb, trgTable)
+    res
   }
 
   /** H8: copy partitions whose folder name contains any match string. */

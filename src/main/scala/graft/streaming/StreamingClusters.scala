@@ -51,10 +51,8 @@ object StreamingClusters {
           // pin column order before the write (artifact-writer rule) and
           // materialize the fold BEFORE the swap touches the live path —
           // updateClusters reads the current labeling lazily
-          val rebuild = s"${labelsPath}_rebuild"
-          next.select(col("id"), col("cluster_id"))
-            .write.mode("overwrite").parquet(rebuild)
-          IndexLifecycle.swapIn(spark, rebuild, labelsPath)
+          IndexLifecycle.replace(spark, labelsPath)(
+            next.select(col("id"), col("cluster_id")).write.mode("overwrite").parquet)
         }
         ()
       }

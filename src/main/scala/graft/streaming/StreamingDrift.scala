@@ -43,9 +43,7 @@ object StreamingDrift {
       .foreachBatch { (running: DataFrame, _: Long) =>
         graft.ext.IndexLifecycle.retryingDuringSwap() {
           val before = Similarity.readMomentsSidecar(spark, indexPath).getOrElse(
-            throw new IllegalStateException(
-              s"$indexPath has no _graft_moments sidecar — rebuild with the " +
-              "current lifecycle to record the build distribution"))
+            throw graft.ext.IndexLifecycle.missingMoments(indexPath))
           Similarity.embeddingDrift(before, running)
             .write.mode("overwrite").parquet(outPath)
         }

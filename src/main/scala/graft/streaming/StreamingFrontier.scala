@@ -81,9 +81,7 @@ object StreamingFrontier {
           if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
             mergeState(spark.read.parquet(statePath), batchState)
           else batchState
-        val rebuild = s"${statePath}_rebuild"
-        merged.write.mode("overwrite").parquet(rebuild)
-        graft.ext.IndexLifecycle.swapIn(spark, rebuild, statePath)
+        graft.ext.IndexLifecycle.replace(spark, statePath)(merged.write.mode("overwrite").parquet)
         ()
       }
       .option("checkpointLocation", checkpoint)

@@ -54,9 +54,8 @@ object StreamingRank {
             StreamingLinks.mergeState(
               spark.read.parquet(edgeStatePath), batchState)
           else batchState
-        val rebuild = s"${edgeStatePath}_rebuild"
-        merged.write.mode("overwrite").parquet(rebuild)
-        graft.ext.IndexLifecycle.swapIn(spark, rebuild, edgeStatePath)
+        graft.ext.IndexLifecycle.replace(spark, edgeStatePath)(
+          merged.write.mode("overwrite").parquet)
         val edges = domainEdges(spark.read.parquet(edgeStatePath))
         val nodes = edges.select(col("src").as("id"))
           .unionByName(edges.select(col("dst").as("id"))).distinct()

@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,5 +25,18 @@ class BlocksSpec extends AnyFunSuite {
     Blocks.free(parent)
     assert(child.agg(sum("v")).head().getLong(0) == 999000L)
     Blocks.free(child)
+  }
+
+  test("materializedBytes is unknown for a checkpoint filtered by a subquery over a parquet table") {
+    val dir = Files.createTempDirectory("blocks_subquery").toFile.getAbsolutePath + "/t"
+    spark.range(10).write.parquet(dir)
+    val cp = spark.range(0, 100, 1, 4).toDF().localCheckpoint()
+    assert(Blocks.materializedBytes(cp).isDefined, "fixture: the bare checkpoint has a size")
+    cp.createOrReplaceTempView("blocks_cp")
+    spark.read.parquet(dir).createOrReplaceTempView("blocks_pq")
+    val filtered = spark.sql("SELECT id FROM blocks_cp WHERE id <= (SELECT max(id) FROM blocks_pq)")
+    assert(Blocks.materializedBytes(filtered).isEmpty,
+      "a parquet scan inside a scalar subquery must make the size unknown")
+    Blocks.free(cp)
   }
 }

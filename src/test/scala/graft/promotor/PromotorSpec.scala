@@ -99,6 +99,32 @@ class PromotorSpec extends AnyFunSuite {
     assert(qty("sales_np_trg") == qty("sales_np_src"))
   }
 
+  test("copyOverwriteTable refuses a source file outside the source folder before deleting anything") {
+    val _ = base
+    val root = Files.createTempDirectory("promo_outside").toFile.getAbsolutePath
+    val rows = spark.range(40).select(col("id"), (col("id") % 2).as("p"))
+    rows.write.partitionBy("p").option("path", s"file:$root/src").saveAsTable(s"$db.outside_src")
+    rows.write.partitionBy("p").option("path", s"file:$root/trg").saveAsTable(s"$db.outside_trg")
+    // a partition with its own LOCATION, outside the source table's folder
+    spark.range(40, 50).write.parquet(s"file:$root/elsewhere/p=7")
+    spark.sql(s"ALTER TABLE $db.outside_src ADD PARTITION (p=7) LOCATION 'file:$root/elsewhere/p=7'")
+    def targetFiles(): Set[(String, Long)] = {
+      val trg = java.nio.file.Paths.get(s"$root/trg")
+      val walk = Files.walk(trg)
+      try walk.filter(Files.isRegularFile(_)).toArray.toSet
+        .map((f: AnyRef) => f.asInstanceOf[java.nio.file.Path])
+        .map(f => trg.relativize(f).toString -> Files.size(f))
+      finally walk.close()
+    }
+    val before = targetFiles()
+    assert(before.exists(_._1.endsWith(".parquet")), "fixture: the target holds data")
+    val e = intercept[IllegalArgumentException] {
+      Promotor.copyOverwriteTable(db, "outside_src", db, "outside_trg")
+    }
+    assert(e.getMessage.contains(s"$root/elsewhere/p=7/part-"), e.getMessage)
+    assert(targetFiles() == before, "the target's files changed")
+  }
+
   test("moveTablePartitions moves partition dirs metadata-only") {
     val _ = base
     val m = "2001-03"
