@@ -302,9 +302,12 @@ object Compactor {
       zorderCols: Seq[String])(implicit spark: SparkSession): DataFrame = {
     val data = spark.read.schema(schema).parquet(group.map(_.dir.toString): _*)
     val file = col("_metadata.file_path")
-    val folderOf = regexp_extract(file, "^(.*)/[^/]*$", 1)
-    // `_metadata.file_path` is the file's URI string; match leaves the same way
-    val index = typedLit(group.map(r => r.dir.toUri.toString -> r.index).toMap)
+    // `_metadata.file_path` is the file's URI string, and the listing
+    // picks its scheme spelling (`file:/x/…` for a folder qualified as
+    // `file:///x`), so leaves match on the raw (still percent-encoded)
+    // path part alone; every leaf sits under one table on one file system
+    val folderOf = regexp_extract(file, "^(?:[a-zA-Z][a-zA-Z0-9+.-]*:(?://[^/]*)?)?(.*)/[^/]*$", 1)
+    val index = typedLit(group.map(r => r.dir.toUri.getRawPath -> r.index).toMap)
     val leaf = coalesce(element_at(index, folderOf),
       raise_error(concat(lit("compaction: file outside every planned leaf: "), file)))
     val tagged = data.withColumn(LeafCol, leaf)

@@ -1,6 +1,7 @@
 package graft.ext
 
 import scala.reflect.ClassTag
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.DeserializationFeature
 import com.fasterxml.jackson.databind.json.JsonMapper
@@ -68,12 +69,16 @@ object IndexLifecycle {
 
     /** [[read]] that fails loudly; `why` names what `dir` then is not. */
     def require(spark: SparkSession, dir: String, why: String): P =
-      read(spark, dir).getOrElse(throw missingSidecar(dir, file, why))
+      read(spark, dir).getOrElse(throw new MissingSidecarException(dir, file, why))
   }
 
-  /** The one error for an artifact folder without the sidecar `file`. */
-  private def missingSidecar(dir: String, file: String, why: String): IllegalArgumentException =
-    new IllegalArgumentException(s"$dir has no $file sidecar — $why")
+  /** The one error for an artifact folder `dir` without the sidecar
+    * `file`. A serving batch that reads a live index inside
+    * [[swapIn]]'s rename window gets exactly this, so
+    * [[retryingDuringSwap]] parks on this type.
+    */
+  final class MissingSidecarException(dir: String, file: String, why: String)
+      extends IllegalArgumentException(s"$dir has no $file sidecar — $why")
 
   /** Build a new version of the artifact at `livePath` and swap it in:
     * `build` writes it to `<livePath>_rebuild` (compaction included),
@@ -217,8 +222,8 @@ object IndexLifecycle {
   }
 
   /** The error for a live index without the `_graft_moments` sidecar. */
-  def missingMoments(livePath: String): IllegalArgumentException =
-    missingSidecar(livePath, "_graft_moments",
+  def missingMoments(livePath: String): MissingSidecarException =
+    new MissingSidecarException(livePath, "_graft_moments",
       "rebuild with the current lifecycle to record the build distribution")
 
   /** Fuse-guarded atomic swap: promote `rebuildPath` over `livePath`.
@@ -280,18 +285,20 @@ object IndexLifecycle {
     * does not exist, so a serving micro-batch firing inside that window
     * would throw and permanently fail its streaming query. The window is
     * two renames (milliseconds); this parks the batch for up to
-    * `attempts × sleepMs` (default 10 s) on missing-path/missing-sidecar
-    * errors before letting the failure through. Retrying the WHOLE batch
-    * body — including its parquet append — is safe under Spark's default
-    * commit protocol: a job that failed before commit has published no
-    * files, so the re-run appends exactly once.
+    * `attempts × sleepMs` (default 10 s) on a missing path or a
+    * [[MissingSidecarException]], matched by type anywhere in the cause
+    * chain, before letting the failure through; any other non-fatal
+    * error fails at once, and a fatal one is never caught. Retrying the
+    * WHOLE batch body — including its parquet append — is safe under
+    * Spark's default commit protocol: a job that failed before commit
+    * has published no files, so the re-run appends exactly once.
     */
   def retryingDuringSwap[T](attempts: Int = 100, sleepMs: Long = 100)(body: => T): T = {
     var left = attempts
     while (true) {
       try return body
       catch {
-        case e: Throwable if left > 0 && isTransientMissing(e) =>
+        case NonFatal(e) if left > 0 && isTransientMissing(e) =>
           left -= 1; Thread.sleep(sleepMs)
       }
     }
@@ -304,12 +311,9 @@ object IndexLifecycle {
   @annotation.tailrec
   private def isTransientMissing(e: Throwable): Boolean = e match {
     case null => false
-    case _: java.io.FileNotFoundException => true
-    case t =>
-      val m = Option(t.getMessage).getOrElse("")
-      if (m.contains("PATH_NOT_FOUND") || m.contains("Path does not exist") ||
-        m.contains("params sidecar")) true
-      else isTransientMissing(t.getCause)
+    case _: java.io.FileNotFoundException | _: MissingSidecarException => true
+    case t: org.apache.spark.SparkThrowable if t.getCondition == "PATH_NOT_FOUND" => true
+    case t => isTransientMissing(t.getCause)
   }
 
   private def fsOf(spark: SparkSession, path: String) =

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Block-manager hygiene for iterative operators and long-lived
   * sessions.
@@ -30,6 +31,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * signature in miniature: late passes of the multi-job iterative
   * queries (s02, t25, d37) ran 2–4× their early-pass times while
   * single-job queries sat tight.
+  *
+  * Keyed checkpoints: the converged loops ([[converge]]) and the graph
+  * operators' input pins checkpoint through
+  * [[org.apache.spark.sql.GraftSqlBridge.localCheckpoint]], which
+  * declares the hash partitioning the executed plan proved (under AQE
+  * plain `localCheckpoint` declares none). Edges pinned by
+  * `repartition(n, src)` and a state frame keyed on its id then join
+  * with no exchange, round after round; only each half-step's re-key
+  * to the receiving node shuffles. A checkpoint is freed only through
+  * [[release]] once its successor is fully in the block manager.
   */
 object Blocks {
 
@@ -45,7 +56,7 @@ object Blocks {
     // subquery plans too: a scan inside a scalar subquery is a leaf
     // whose bytes no checkpoint block accounts for
     df.queryExecution.analyzed.foreachWithSubqueries {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      case lr: LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
@@ -58,19 +69,19 @@ object Blocks {
     * last frame, the rounds run, and whether the last round changed
     * nothing.
     *
-    * Each round is a lazy `localCheckpoint` (plan depth stays one round
-    * however deep the trajectory runs) whose one action is the count of
-    * its rows matching `changed`, the answer to "stable?". The count
-    * scans the round's RDD: one job, no exchange (`Dataset.count` would
-    * add a partial-count shuffle, a second job under AQE). The previous
-    * round is freed after that count, but only if this driver
-    * checkpointed it: `init` may read the caller's own checkpoints
-    * (edges, node ids), which stay the caller's to free. Freeing is safe
-    * once any job has read the new round: at the end of a job that
-    * touches a locally checkpointed RDD, Spark
-    * (`LocalRDDCheckpointData.doCheckpoint`) caches every partition the
-    * job skipped, so the new round never needs the freed one again
-    * (BlocksSpec pins this).
+    * Each round is a lazy keyed checkpoint
+    * ([[org.apache.spark.sql.GraftSqlBridge.localCheckpoint]]): plan
+    * depth stays one round however deep the trajectory runs, and a
+    * round whose plan ends hash-partitioned on an output column (a
+    * state frame keyed on its node id) is declared so, so the next
+    * round joins it to edges pinned on the same key without an
+    * exchange. The round's one action is the count of its rows matching
+    * `changed`, the answer to "stable?". The count scans the round's
+    * RDD: one job, no exchange (`Dataset.count` would add a
+    * partial-count shuffle, a second job under AQE). The previous round
+    * is then freed ([[release]]), but only if this driver checkpointed
+    * it: `init` may read the caller's own checkpoints (edges, node ids),
+    * which stay the caller's to free.
     */
   private[graft] def converge(init: DataFrame, maxRounds: Int)(
       round: DataFrame => DataFrame, changed: Column): (DataFrame, Int, Boolean) = {
@@ -78,13 +89,38 @@ object Blocks {
     var rounds = 0
     var stable = false
     while (rounds < maxRounds && !stable) {
-      val next = round(cur).localCheckpoint(false)
+      val next = GraftSqlBridge.localCheckpoint(round(cur), eager = false)
       stable = next.filter(changed).queryExecution.toRdd.count() == 0L
-      if (rounds > 0) free(cur)
+      if (rounds > 0) release(cur, next)
       cur = next
       rounds += 1
     }
     (cur, rounds, stable)
+  }
+
+  /** [[free]] `prev` once its successor checkpoint no longer needs it:
+    * every partition of every checkpoint RDD `successor` reads must be
+    * in the block manager, or this throws an `IllegalStateException`
+    * naming the RDD and frees nothing. A freed local checkpoint cannot
+    * be recomputed, so a successor partition still to be computed from
+    * `prev` would fail later, far from the cause. After any job that
+    * read a lazy local checkpoint, Spark
+    * (`LocalRDDCheckpointData.doCheckpoint`) has stored every partition
+    * of it, including those the job skipped (BlocksSpec pins this). The
+    * block manager master is asked
+    * ([[GraftSqlBridge.storedPartitions]]), not `getRDDStorageInfo`:
+    * that one lags the job that stored the blocks.
+    */
+  private[graft] def release(prev: DataFrame, successor: DataFrame): Unit = {
+    successor.queryExecution.analyzed.foreach {
+      case lr: LogicalRDD =>
+        val (stored, n) = (GraftSqlBridge.storedPartitions(lr.rdd), lr.rdd.getNumPartitions)
+        if (stored < n) throw new IllegalStateException(
+          s"cannot free a checkpoint yet: its successor ${lr.rdd} (RDD ${lr.rdd.id}) has " +
+            s"$stored of $n partitions in the block manager")
+      case _ => ()
+    }
+    free(prev)
   }
 
   /** The REAL materialized size of an (eagerly) localCheckpointed
@@ -102,7 +138,7 @@ object Blocks {
     // subquery plans too: a scan inside a scalar subquery is a leaf
     // whose bytes no checkpoint block accounts for
     df.queryExecution.analyzed.foreachWithSubqueries {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => ids += lr.rdd.id
+      case lr: LogicalRDD => ids += lr.rdd.id
       case leaf if leaf.children.isEmpty &&
           leaf.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LeafNode] =>
         leaf match {

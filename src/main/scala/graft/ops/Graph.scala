@@ -1,14 +1,17 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
-/** Iterative graph analytics in the Pregel-on-DataFrames shape:
-  * per iteration, ONE shuffle joins ranks to edges on `src` and ONE
-  * aggregates contributions on `dst` — the standard distributed
-  * PageRank profile (no driver-side adjacency, nothing scales with
-  * the graph on one machine). Complements [[graft.ext.Dedup.clusters]]
-  * (connected components by iterative min-label propagation).
+/** Iterative graph analytics in the Pregel-on-DataFrames shape, with
+  * GraphX's routing-table layout: the edges are pinned once
+  * hash-partitioned on their join key (`src`, and `dst` too for HITS)
+  * and every round's state is keyed on its node id, so the join of
+  * ranks to edges runs with no exchange and each half-step's one
+  * shuffle re-keys the contributions to the receiving node (no
+  * driver-side adjacency, nothing scales with the graph on one
+  * machine). Complements [[graft.ext.Dedup.clusters]] (connected
+  * components by iterative min-label propagation).
   */
 object Graph {
 
@@ -47,9 +50,27 @@ object Graph {
       materialize: Boolean = true): DataFrame =
     rankFixed(nodes.select(col("id")), edges, iters, None, materialize)(uniformPrior)
 
-  /** `df` pinned once by an eager `localCheckpoint` when `materialize`. */
-  private def pin(df: DataFrame, materialize: Boolean): DataFrame =
-    if (materialize) df.localCheckpoint() else df
+  /** `df` hash-partitioned on `key` into `spark.sql.shuffle.partitions`
+    * (an explicit count, which AQE never coalesces) and, when
+    * `materialize`, pinned once by an eager keyed checkpoint
+    * ([[GraftSqlBridge.localCheckpoint]]); otherwise the keying stays
+    * in-plan. The loops key their state on the node id the same way, so
+    * a round joins state to edges pinned on the join key without an
+    * exchange — GraphX's routing table, on DataFrames.
+    */
+  private[graft] def pin(df: DataFrame, key: String, materialize: Boolean): DataFrame = {
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val keyed = df.repartition(n, col(key))
+    if (materialize) GraftSqlBridge.localCheckpoint(keyed, eager = true) else keyed
+  }
+
+  /** The join hint on every keyed side of a round's joins. Checkpointed
+    * state reports tiny statistics, so the planner (or AQE at runtime)
+    * would broadcast it — one more job per join — where a sort-merge
+    * join of two sides already partitioned on the key needs no exchange
+    * at all.
+    */
+  private val Merge = "shuffle_merge"
 
   private val uniformPrior: DataFrame => DataFrame =
     _.select(col("id"), lit(1000000L).as("rank"))
@@ -68,20 +89,29 @@ object Graph {
       materialize: Boolean): (DataFrame, DataFrame, String) = {
     val (norm, share) = weightCol.fold((count(lit(1)).as("d"), "rank div d"))(
       w => (sum(col(w)).as("ws"), s"rank * $w div ws"))
-    (pin(edges.join(edges.groupBy("src").agg(norm), "src"), materialize),
-      pin(ids, materialize), share)
+    (pin(edges.join(edges.groupBy("src").agg(norm), "src"), "src", materialize),
+      pin(ids, "id", materialize), share)
   }
+
+  /** `state` (id, …) keyed on id flows along the edges `e` keyed on
+    * `from`: each edge carries `value` (over the edge's and the state's
+    * columns) to its `to` end, summed there as (id, c). The join is
+    * co-partitioned; the re-key to `to` is the one exchange.
+    */
+  private[graft] def spread(e: DataFrame, state: DataFrame, from: String, to: String,
+      value: Column): DataFrame =
+    e.join(state.withColumnRenamed("id", from).hint(Merge), from)
+      .select(col(to).as("id"), value.as("c"))
+      .groupBy("id").agg(sum("c").as("c"))
 
   /** One round of the integer recurrence: `r` (id, rank, …) spreads
     * `share` along the edges `e`, and every node of `ids` gets `floor`
     * (the teleport mass) plus 85 % of what reached it.
     */
-  private def rankRound(e: DataFrame, ids: DataFrame, r: DataFrame, share: String,
+  private[graft] def rankRound(e: DataFrame, ids: DataFrame, r: DataFrame, share: String,
       floor: Column): DataFrame = {
-    val contrib = e.join(r.select(col("id").as("src"), col("rank")), "src")
-      .select(col("dst").as("id"), expr(share).as("c"))
-      .groupBy("id").agg(sum("c").as("c"))
-    ids.join(contrib, Seq("id"), "left")
+    val contrib = spread(e, r.select(col("id"), col("rank")), "src", "dst", expr(share))
+    ids.join(contrib.hint(Merge), Seq("id"), "left")
       .select(col("id"),
         (floor + expr("(85 * coalesce(c, CAST(0 AS BIGINT))) div 100")).as("rank"))
   }
@@ -128,7 +158,7 @@ object Graph {
     // tolerance count is the round's one action ([[Blocks.converge]])
     val (r, rounds, _) = Blocks.converge(uniformPrior(ids), maxIters)(
       r => rankRound(e, ids, r, share, lit(150000L))
-        .join(r.select(col("id"), col("rank").as("_prev")), "id"),
+        .join(r.select(col("id"), col("rank").as("_prev")).hint(Merge), "id"),
       abs(col("rank") - col("_prev")) > tolMicros)
     // the result is a checkpoint: the pinned inputs are dead weight
     if (materialize) { Blocks.free(ids); Blocks.free(e) }
@@ -228,22 +258,28 @@ object Graph {
     * followed by L1 normalization `s·10⁶ div Σs` with truncating
     * integer division (classic HITS normalizes by L2; L1 keeps every
     * step a rational of longs, and the RANKING — the thing a frontier
-    * consumes — is scale-invariant). The normalizer stays in-plan as a
-    * broadcast 1-row cross join; nothing touches the driver. Overflow
-    * headroom: after normalization Σscore ≤ 10⁶, so a weighted sum is
-    * ≤ 10⁶·Σw — fine in a long for any real edge multiset.
+    * consumes — is scale-invariant). Each half-step's sums are
+    * checkpointed once, and the normalizer Σs is one fold job over that
+    * checkpoint: one `Long` per partition, folded on the driver, which
+    * then applies it as a literal. Overflow headroom: after
+    * normalization Σscore ≤ 10⁶, so a weighted sum is ≤ 10⁶·Σw — fine
+    * in a long for any real edge multiset.
     *
     * Nodes without in-edges hold authority 0, without out-edges hub 0
     * (exact zeros under the gate, the g06 unreachable contract). Scale
-    * shape: two shuffles per half-iteration (the contribution rollup +
-    * the normalizer agg, the latter a 1-row reduce), all keyed at node
-    * cardinality — domain-level for a crawl, never page-level.
+    * shape: the edges are pinned twice, by `src` and by `dst`, and the
+    * scores are keyed by node id, so each half-step joins scores to
+    * edges with no exchange and shuffles once, re-keying the weighted
+    * contributions (node cardinality — domain-level for a crawl, never
+    * page-level) to the receiving node. A round runs five jobs: per
+    * half-step that re-key and the L1 fold, then the stability count.
     *
     * A fixed-round run is [[hitsConverged]] capped at `iters`: it stops
     * early only at an exact integer fixpoint, which every further round
     * repeats, so the scores are exactly those of `iters` rounds. Each
     * round is checkpointed, so plan depth stays one round; `materialize`
-    * governs only the edge and node-id pins.
+    * governs only the edge and node-id pins (without it they stay
+    * in-plan repartitions and run no eager job).
     */
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int = 2,
       weightCol: String = "w", materialize: Boolean = true): DataFrame = {
@@ -274,42 +310,55 @@ object Graph {
       materialize: Boolean = true): (DataFrame, Int, Boolean) = {
     require(maxIters >= 1, "maxIters must be >= 1")
     require(tolMicros >= 0L, "tolMicros must be >= 0")
-    // edges and ids are pinned only when `materialize`: an opt-out
-    // caller runs no eager job at all and re-evaluates them per round
-    val e = pin(edges.select(col("src"), col("dst"), col(weightCol).as("w")), materialize)
-    // node ids pinned once — referenced by every half-step's
-    // zero-restore join (see [[rankInputs]]); freed before return
-    val ids = pin(nodes.select(col("id")), materialize)
+    // the edges pinned once by src and once by dst, the node ids by id
+    // (in-plan when not `materialize`: an opt-out caller runs no eager
+    // job), so every half-step's edge join is co-partitioned
+    val bySrc = pin(edges.select(col("src"), col("dst"), col(weightCol).as("w")), "src",
+      materialize)
+    val byDst = pin(bySrc, "dst", materialize)
+    val ids = pin(nodes.select(col("id")), "id", materialize)
+    val weighted = col("s") * col("w")
 
-    // one weighted-sum + L1-normalize half-step: scores keyed by
-    // `from` flow along (from → to) edges and land keyed by `to` on
-    // every row of `nodes` (one per node id), whose columns ride along
-    def halfStep(nodes: DataFrame, scores: DataFrame, from: String, to: String): DataFrame = {
-      val raw = e.join(scores.withColumnRenamed("id", from), from)
-        .select(col(to).as("id"), (col("s") * col("w")).as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      val withZeros = nodes.join(raw, Seq("id"), "left")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-      val total = withZeros.agg(greatest(sum("c"), lit(1L)).as("tot"))
-      withZeros.crossJoin(broadcast(total))
-        .withColumn("s", expr("c * 1000000L div tot")).drop("c", "tot")
+    // one half-step: `state` (one row per node, keyed on id) gains the
+    // summed contributions `raw` as `c` (0 where none arrive), checkpointed
+    // keyed once, so the normalizer and the next half-step read it
+    // without re-planning it. One fold job over the checkpoint sums `c`
+    // (a Long per partition, folded on the driver) and materializes it;
+    // the L1 normalization `c·10⁶ div max(Σc, 1)` then carries the
+    // total as a literal
+    def halfStep(state: DataFrame, raw: DataFrame): (DataFrame, Column) = {
+      val cp = GraftSqlBridge.localCheckpoint(state.join(raw.hint(Merge), Seq("id"), "left")
+        .withColumn("c", coalesce(col("c"), lit(0L))), eager = false)
+      val total = cp.select(col("c")).queryExecution.toRdd.map(_.getLong(0))
+        .fold(0L)((x, y) => Math.addExact(x, y))
+      (cp, expr(s"c * 1000000L div ${total max 1L}L"))
     }
 
-    // both vectors ride ONE combined (id, a_s, h_s) frame per round; the
-    // auth half-step lands on the previous round's frame, so its scores
-    // ride along as `_pa`/`_ph` for the stability count
-    // ([[Blocks.converge]]) without a join of their own
+    // both vectors ride ONE (id, a_s, h_s) frame per round; the auth
+    // half-step lands on the previous round's frame, so its scores ride
+    // along as `_pa`/`_ph` for the stability count ([[Blocks.converge]]).
+    // Each half-step checkpoint is freed once its successor is
+    // materialized: the auth one after the hub fold, the hub one after
+    // the round's count
+    var hub: Option[DataFrame] = None
     val (cur, rounds, stable) = Blocks.converge(
       ids.select(col("id"), lit(0L).as("a_s"), lit(1000000L).as("h_s")), maxIters)(
       { cur =>
-        val a = halfStep(cur.select(col("id"), col("a_s").as("_pa"), col("h_s").as("_ph")),
-          cur.select(col("id"), col("h_s").as("s")), "src", "dst")
-        val h = halfStep(ids, a.select(col("id"), col("s")), "dst", "src")
-        a.withColumnRenamed("s", "a_s").join(h.withColumnRenamed("s", "h_s"), "id")
+        hub.foreach(Blocks.release(_, cur))
+        val (a, auth) = halfStep(
+          cur.select(col("id"), col("a_s").as("_pa"), col("h_s").as("_ph")),
+          spread(bySrc, cur.select(col("id"), col("h_s").as("s")), "src", "dst", weighted))
+        val (h, hubs) = halfStep(
+          a.select(col("id"), col("_pa"), col("_ph"), auth.as("a_s")),
+          spread(byDst, a.select(col("id"), auth.as("s")), "dst", "src", weighted))
+        Blocks.release(a, h)
+        hub = Some(h)
+        h.select(col("id"), col("a_s"), hubs.as("h_s"), col("_pa"), col("_ph"))
       },
       abs(col("a_s") - col("_pa")) > tolMicros || abs(col("h_s") - col("_ph")) > tolMicros)
+    hub.foreach(Blocks.release(_, cur))
     // the result is a checkpoint: the pinned inputs are dead weight
-    if (materialize) { Blocks.free(ids); Blocks.free(e) }
+    if (materialize) Seq(ids, bySrc, byDst).foreach(Blocks.free)
     (cur.select(col("id"), col("h_s").as("hub_micro"), col("a_s").as("auth_micro")),
       rounds, stable)
   }
@@ -465,24 +514,25 @@ object Graph {
       materialize: Boolean = true): (DataFrame, Int, Boolean) = {
     require(maxIters >= 1, "maxIters must be >= 1")
     val e = pin(edges.select(col("src"), col("dst"),
-      weightCol.fold(lit(1L))(col).as("_w")), materialize)
+      weightCol.fold(lit(1L))(col).as("_w")), "src", materialize)
+    val ids = pin(nodes.select(col("id")), "id", materialize)
     // the previous label rides each round as `_prev`, so the stability
     // count is the round's one action ([[Blocks.converge]])
     val (l, rounds, stable) = Blocks.converge(
-      nodes.select(col("id"), col("id").as("label")), maxIters)(
+      ids.select(col("id"), col("id").as("label")), maxIters)(
       { l =>
-        val pick = e.join(l.select(col("id").as("src"), col("label")), "src")
+        val pick = e.join(l.select(col("id").as("src"), col("label")).hint(Merge), "src")
           .groupBy(col("dst").as("id"), col("label"))
           .agg(sum(col("_w")).as("c"))
           .groupBy("id")
           .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
           .select(col("id"), col("m.label").as("picked"))
-        l.join(pick, Seq("id"), "left")
+        l.join(pick.hint(Merge), Seq("id"), "left")
           .select(col("id"), coalesce(col("picked"), col("label")).as("label"),
             col("label").as("_prev"))
       },
       col("label") =!= col("_prev"))
-    if (materialize) Blocks.free(e) // the result is a checkpoint
+    if (materialize) { Blocks.free(ids); Blocks.free(e) } // the result is a checkpoint
     (l.select(col("id"), col("label").as("community")), rounds, stable)
   }
 

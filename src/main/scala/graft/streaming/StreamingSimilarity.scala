@@ -84,8 +84,7 @@ object StreamingSimilarity {
         // a batch racing swapIn's rename pair parks instead of failing
         // the query — see IndexLifecycle.retryingDuringSwap
         graft.ext.IndexLifecycle.retryingDuringSwap() {
-          val p = Similarity.readLshIndexParams(spark, indexPath).getOrElse(
-            throw new IllegalStateException(s"$indexPath lost its params sidecar"))
+          val p = Similarity.LshSidecar.require(spark, indexPath, "not a served LSH index")
           Similarity.lshTopKIndexed(batch, Similarity.readLshIndex(spark, indexPath),
               k, p, idCol, vecCol)
             .write.mode("append").parquet(outPath)
@@ -121,8 +120,7 @@ object StreamingSimilarity {
     queriesStream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.ext.IndexLifecycle.retryingDuringSwap() {
-          val p = Similarity.readLshIndexParams(spark, indexPath).getOrElse(
-            throw new IllegalStateException(s"$indexPath lost its params sidecar"))
+          val p = Similarity.LshSidecar.require(spark, indexPath, "not a served LSH index")
           val sem = Similarity.lshTopKIndexed(batch,
               Similarity.readLshIndex(spark, indexPath), semPool, p, idCol, vecCol)
             .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))

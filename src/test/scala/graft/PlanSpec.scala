@@ -847,4 +847,56 @@ class PlanSpec extends AnyFunSuite {
     assert(p10.contains("BroadcastHashJoin"),
       s"rerank candidate join should be a broadcast hash join:\n${p10.take(4000)}")
   }
+
+  test("graph rounds: no exchange under the state ⋈ edges join of a HITS half-step or a PageRank round") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import graft.ops.Graph
+    import spark.implicits._
+    // the final (post-AQE) plan: exchanges that ran are query stages
+    def ran(df: org.apache.spark.sql.DataFrame): SparkPlan = {
+      df.collect()
+      df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    }
+    def exchanges(p: SparkPlan) = "Exchange".r.findAllIn(p.treeString).length
+    // every node, query stages' plans included
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    def joins(p: SparkPlan, tpe: String) =
+      nodes(p).collect { case j: SortMergeJoinExec if j.joinType.toString == tpe => j }
+    val edges = Seq((1L, 2L, 2L), (2L, 3L, 1L), (3L, 1L, 1L), (3L, 4L, 5L))
+      .toDF("src", "dst", "w")
+    val bySrc = Graph.pin(edges, "src", materialize = true)
+    val ids = Graph.pin((1L to 4L).toDF("id"), "id", materialize = true)
+    // a round's state: a lazy keyed checkpoint, as Blocks.converge takes it
+    val state = org.apache.spark.sql.GraftSqlBridge.localCheckpoint(
+      ids.select(col("id"), lit(1000000L).as("s"), lit(1000000L).as("rank")), eager = false)
+
+    // HITS half-step: the edge join is co-partitioned; the re-key to
+    // `dst` is the one exchange
+    val half = ran(Graph.spread(bySrc, state.select(col("id"), col("s")), "src", "dst",
+      col("s") * col("w")))
+    val hitsJoin = joins(half, "Inner")
+    assert(hitsJoin.size == 1, half.treeString)
+    assert(exchanges(hitsJoin.head) == 0, s"exchange under the edge join:\n${half.treeString}")
+    assert(exchanges(half) == 1, half.treeString)
+
+    // PageRank round: the same edge join, then the zero-restore join of
+    // the node ids to the re-keyed contributions
+    val degrees = Graph.pin(edges.join(edges.groupBy("src").agg(count(lit(1)).as("d")), "src"),
+      "src", materialize = true)
+    val round = ran(Graph.rankRound(degrees, ids, state, "rank div d", lit(150000L)))
+    val prJoin = joins(round, "Inner")
+    assert(prJoin.size == 1, round.treeString)
+    assert(exchanges(prJoin.head) == 0, s"exchange under the edge join:\n${round.treeString}")
+    assert(exchanges(round) == 1, round.treeString)
+    Seq(state, ids, bySrc, degrees).foreach(graft.ops.Blocks.free)
+  }
 }

@@ -241,4 +241,23 @@ class CompactorSpec extends AnyFunSuite {
     assert(rows() == before && asides().isEmpty)
     assert(Files.list(table.getParent).iterator().asScala.map(_.getFileName.toString).toSet == Set("t"))
   }
+
+  test("a folder compacts the same spelled /abs, file:/abs and file:///abs") {
+    // `_metadata.file_path` spells the folder `file:/abs/…` whatever
+    // spelling the caller used; each spelling must find its leaf
+    val results = Seq("", "file:", "file://").map { scheme =>
+      val abs = Files.createTempDirectory("compact_spelling").toFile.getAbsolutePath + "/t"
+      spark.range(0, 400, 1, 8)
+        .select(col("id"), (col("id") * 7).cast("string").as("payload"))
+        .write.parquet(abs)
+      assert(dataFiles(abs).size == 8, s"fixture: $abs")
+      Compactor.doAutoCoalesce(scheme + abs)
+      val rows = spark.read.parquet(abs)
+        .agg(count(lit(1)), sum(xxhash64(col("id"), col("payload")).cast("decimal(38,0)")))
+        .head()
+      (scheme, dataFiles(abs).size, rows.getLong(0), BigDecimal(rows.getDecimal(1)))
+    }
+    assert(results.map(_._2).toSet == Set(1), results)
+    assert(results.map(r => (r._3, r._4)).distinct.size == 1 && results.head._3 == 400L, results)
+  }
 }

@@ -460,11 +460,11 @@ class IndexLifecycleSpec extends AnyFunSuite {
     }
     promoter.join()
     assert(n > 0, "batch did not see the promoted index")
-    // sidecar-missing parks too (readLshIndexParams contract)
+    // the codec's missing-sidecar error parks too
     var calls = 0
     val v = IndexLifecycle.retryingDuringSwap(attempts = 3, sleepMs = 1) {
       calls += 1
-      if (calls < 3) throw new IllegalStateException(s"$live lost its params sidecar")
+      if (calls < 3) Similarity.LshSidecar.require(spark, s"$root/absent", "not an index")
       42
     }
     assert(v == 42 && calls == 3)
@@ -475,6 +475,52 @@ class IndexLifecycleSpec extends AnyFunSuite {
       }
     }
     assert(ex2.getMessage == "real bug")
+  }
+
+  test("a serving batch racing replace parks on the codec's missing-sidecar error, then serves the new index") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val root = Files.createTempDirectory("graft_idx_race").toFile.getAbsolutePath
+    val live = s"$root/ann_index"
+    // inside swapIn's rename window the live folder is gone: what a
+    // serving batch reads there is the codec's own error
+    val e = intercept[IndexLifecycle.MissingSidecarException] {
+      Similarity.LshSidecar.require(spark, live, "not a served LSH index")
+    }
+    assert(e.getMessage.contains("_graft_lsh_params.json"), e.getMessage)
+    // the build replace swaps in is staged up front, so the race window
+    // is replace's own renames, not an index build
+    val staged = s"$root/staged"
+    Similarity.writeLshIndex(emb.filter(col("vec_id") < 40), staged, 64, 6, 4, 99L)
+    val fs = Fs.getFileSystem(spark.sparkContext.hadoopConfiguration, root)
+    val queries = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect()
+    val input = MemoryStream[(Long, Array[Float])]
+    val served = StreamingSimilarity.startAt(input.toDF().toDF("vec_id", "embedding"),
+      live, k = 3, s"$root/out", s"$root/ckpt")
+    try {
+      input.addData(queries.toIndexedSeq)
+      // the batch is running, parked because the index does not exist
+      // yet, before the replace that creates it starts
+      def running = served.status.isDataAvailable && served.status.isTriggerActive
+      val deadline = System.nanoTime() + 60000000000L
+      while (!running && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(running, "the serving batch never started")
+      Thread.sleep(500)
+      assert(served.isActive && served.exception.isEmpty, "the batch failed instead of parking")
+      assert(!served.recentProgress.exists(_.numInputRows > 0), "the batch ran without an index")
+      IndexLifecycle.replace(spark, live, Similarity.LshSidecar,
+          Similarity.LshParams(64, 6, 4, 99L)) { rebuild =>
+        require(fs.rename(new Path(staged), new Path(rebuild)))
+      }
+      served.processAllAvailable()
+    } finally served.stop()
+    assert(served.exception.isEmpty, served.exception)
+    val expected = topkRows(Similarity.lshTopKAt(spark, emb.filter(col("vec_id") < 5),
+      k = 3, live))
+    assert(expected.nonEmpty)
+    assert(topkRows(spark.read.parquet(s"$root/out")) == expected,
+      "the parked batch did not serve the index replace swapped in")
   }
 
   private def sameRows(a: org.apache.spark.sql.DataFrame,

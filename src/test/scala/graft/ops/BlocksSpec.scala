@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,5 +40,47 @@ class BlocksSpec extends AnyFunSuite {
     assert(Blocks.materializedBytes(filtered).isEmpty,
       "a parquet scan inside a scalar subquery must make the size unknown")
     Blocks.free(cp)
+  }
+
+  private def checkpointRdd(df: DataFrame) =
+    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }.get
+
+  private def declared(df: DataFrame): Partitioning =
+    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.outputPartitioning }.get
+
+  test("release refuses to free a checkpoint whose successor is not yet in the block manager") {
+    val prev = spark.range(0, 100, 1, 4).toDF().localCheckpoint()
+    val next = GraftSqlBridge.localCheckpoint(prev.select((col("id") + 1).as("id")), eager = false)
+    val rdd = checkpointRdd(next)
+    val e = intercept[IllegalStateException](Blocks.release(prev, next))
+    assert(e.getMessage.contains(s"RDD ${rdd.id}") && e.getMessage.contains("0 of 4"),
+      e.getMessage)
+    // nothing was freed: the successor still computes from `prev`
+    assert(GraftSqlBridge.storedPartitions(checkpointRdd(prev)) == 4)
+    assert(next.filter(col("id") > 0).queryExecution.toRdd.count() == 100L)
+    Blocks.release(prev, next)
+    assert(next.agg(sum("id")).head().getLong(0) == 5050L)
+    Blocks.free(next)
+  }
+
+  test("the keyed checkpoint declares only a hash partitioning the final plan proved") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val base = spark.range(0, 1000, 1, 3).toDF("k")
+    val keyed = GraftSqlBridge.localCheckpoint(base.repartition(n, col("k")), eager = true)
+    assert(declared(keyed).toString.matches(s"hashpartitioning\\(k#\\d+L, $n\\)"),
+      declared(keyed))
+    // range-partitioned by a sort: not a hash partitioning
+    val sorted = GraftSqlBridge.localCheckpoint(base.orderBy("k"), eager = true)
+    assert(declared(sorted) == UnknownPartitioning(0), declared(sorted))
+    // an aggregation AQE coalesced below n partitions: its final plan
+    // reports a coalesced hash partitioning, which is not declared
+    val agg = base.groupBy((col("k") % 10).as("g")).count()
+    val coalesced = GraftSqlBridge.localCheckpoint(agg, eager = false)
+    assert(checkpointRdd(coalesced).getNumPartitions < n, "fixture: AQE did not coalesce")
+    assert(declared(coalesced) == UnknownPartitioning(0), declared(coalesced))
+    // plain Dataset.localCheckpoint under AQE declares nothing either
+    val plain = base.repartition(n, col("k")).localCheckpoint()
+    assert(declared(plain) == UnknownPartitioning(0), declared(plain))
+    Seq(keyed, sorted, coalesced, plain).foreach(Blocks.free)
   }
 }

@@ -373,10 +373,11 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("converged loops: the input pins, then one stability count per round, and no initial-frame job") {
-    // every other job is a shuffle-map or broadcast stage AQE runs while
-    // it plans a round; the exact totals pin those too
+    // every other job is a shuffle-map stage AQE runs while it plans a
+    // round or a HITS half-step's L1 fold; the exact totals pin those too
     def eager(jobs: Seq[String]) = jobs.count(_.startsWith("localCheckpoint at"))
     def counts(jobs: Seq[String]) = jobs.count(_.startsWith("count at Blocks.scala"))
+    def folds(jobs: Seq[String]) = jobs.count(_.startsWith("fold at Graph.scala"))
     val nodes = (1L to 7L).toDF("id")
     val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L), (4L, 6L),
       (5L, 6L), (3L, 4L)).toDF("src", "dst")
@@ -384,18 +385,38 @@ class GraphSpec extends AnyFunSuite {
     val ((_, rounds, stable), lpa) =
       jobNames(Graph.labelPropagationConverged(nodes, edges, maxIters = 20))
     assert(stable && rounds == 4)
-    assert(eager(lpa) == 1, s"only the edge checkpoint runs eagerly: $lpa")
+    assert(eager(lpa) == 2, s"only the edge and id pins run eagerly: $lpa")
     assert(counts(lpa) == rounds, lpa)
-    assert(lpa.size == 23, lpa)
+    assert(lpa.size == 15, lpa)
+
+    val ((_, prRounds), pr) = jobNames(Graph.pageRankConverged(nodes, edges, maxIters = 64))
+    assert(prRounds == 10)
+    assert(eager(pr) == 2, s"only the edge and id pins run eagerly: $pr")
+    assert(counts(pr) == prRounds, pr)
+    assert(pr.size == 26, pr)
 
     val hNodes = Seq("a", "b", "c", "d").toDF("id")
     val hEdges = Seq(("a", "c", 2L), ("b", "c", 1L), ("c", "d", 1L))
       .toDF("src", "dst", "w")
     val ((_, hRounds, hStable), hits) = jobNames(Graph.hitsConverged(hNodes, hEdges, maxIters = 64))
     assert(hStable && hRounds == 11)
-    assert(eager(hits) == 2, s"only the edge and id checkpoints run eagerly: $hits")
+    assert(eager(hits) == 3, s"only the two edge pins and the id pin run eagerly: $hits")
     assert(counts(hits) == hRounds, hits)
-    assert(hits.size == 164, hits)
+    assert(folds(hits) == 2 * hRounds, s"one L1 fold per half-step: $hits")
+    assert(hits.size == 61, hits)
+    // the fixed-round spelling: pins, two rounds, and the caller's collect
+    val (_, fixed) = jobNames(Graph.hits(hNodes, hEdges, iters = 2).collect())
+    assert(fixed.size == 17, fixed)
+  }
+
+  test("g12_hits_converged on the sf0.001 fixture runs a pinned number of jobs") {
+    val (rows, jobs) = SparkTestSession.withJobCount(
+      graft.SparkEntry.queries("g12_hits_converged")(spark, SparkTestSession.sf).collect())
+    assert(rows.nonEmpty)
+    // pins (the harvest, both edge keyings, the node ids), 7 rounds of
+    // two re-key exchanges + two L1 folds + one stability count, then
+    // the caller's ordered collect
+    assert(jobs == 47, s"g12 ran $jobs jobs")
   }
 
   test("commonNeighbors: hand graphs — path, square, K3 micros") {
