@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.GraftSqlBridge
 
@@ -26,7 +27,10 @@ object DevBench {
       // action issued — every job beyond 1 is an eager materialization
       // (checkpoint/collect/broadcast-build) worth knowing about. A
       // listener counts job starts; draining the listener bus before
-      // the reset and before the read makes the count exact.
+      // the reset and before the read makes the count exact. Next to
+      // it: the classes Spark's code generator compiled during the
+      // measured run, 0 when the codegen cache held the query's
+      // working set from the first run (see GraftSession).
       val jobs = new java.util.concurrent.atomic.AtomicInteger()
       spark.sparkContext.addSparkListener(new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -38,9 +42,11 @@ object DevBench {
           graft.ops.Blocks.sweep(spark)
           GraftSqlBridge.drainListeners(spark.sparkContext)
           jobs.set(0)
+          val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
           GraftSqlBridge.drainListeners(spark.sparkContext)
-          println(f"$name%-28s jobs: ${jobs.get}")
+          println(f"$name%-28s jobs: ${jobs.get}%4d  compiled: $compiled")
           graft.ops.Blocks.sweep(spark)
         } catch { case e: Throwable =>
           println(s"$name FAILED: ${e.getMessage}")

@@ -194,6 +194,12 @@ object GraftFunctions {
   def graftGearChunks(text: Column, maskBits: Int): Column =
     column(GearChunks(expression(text), maskBits))
 
+  /** `value` as a long the generated code reads at run time, so plans
+    * that differ only in it share their compiled classes (see
+    * [[LongParam]]).
+    */
+  def graftParam(value: Long): Column = column(LongParam(value))
+
   /** Native Morton code of `cols` under per-column quantile `bounds`. */
   def graftMorton(bounds: Array[Array[Double]], cols: Seq[Column]): Column =
     column(MortonCode((typedLit[Seq[Seq[Double]]](bounds.map(_.toSeq).toSeq) +: cols)

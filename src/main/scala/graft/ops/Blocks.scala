@@ -108,13 +108,13 @@ object Blocks {
     * (`LocalRDDCheckpointData.doCheckpoint`) has stored every partition
     * of it, including those the job skipped (BlocksSpec pins this). The
     * block manager master is asked
-    * ([[GraftSqlBridge.storedPartitions]]), not `getRDDStorageInfo`:
+    * ([[GraftSqlBridge.storedBlocks]]), not `getRDDStorageInfo`:
     * that one lags the job that stored the blocks.
     */
   private[graft] def release(prev: DataFrame, successor: DataFrame): Unit = {
     successor.queryExecution.analyzed.foreach {
       case lr: LogicalRDD =>
-        val (stored, n) = (GraftSqlBridge.storedPartitions(lr.rdd), lr.rdd.getNumPartitions)
+        val (stored, n) = (GraftSqlBridge.storedBlocks(lr.rdd).size, lr.rdd.getNumPartitions)
         if (stored < n) throw new IllegalStateException(
           s"cannot free a checkpoint yet: its successor ${lr.rdd} (RDD ${lr.rdd.id}) has " +
             s"$stored of $n partitions in the block manager")
@@ -126,19 +126,22 @@ object Blocks {
   /** The REAL materialized size of an (eagerly) localCheckpointed
     * frame, read from the block manager with NO job: sums mem+disk
     * bytes of every `LogicalRDD` leaf in the plan. None when any leaf
-    * is not a checkpoint or its blocks are not (yet) reported — the
+    * is not a checkpoint or has a partition not (yet) stored — the
     * caller must then treat the size as unknown, not zero. The honest
     * input to a broadcast decision (guide §3: broadcast only what
     * FITS): planner estimates over checkpointed chains are garbage,
-    * and a counting job would cost what this lookup gets for free.
+    * and a counting job would cost what this lookup gets for free. The
+    * block manager master is asked ([[GraftSqlBridge.storedBlocks]]),
+    * as in [[release]]: `getRDDStorageInfo` lags the job that stored
+    * the blocks, and right after one it can size only some partitions.
     */
   def materializedBytes(df: DataFrame): Option[Long] = {
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val rdds = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
     var allCheckpoints = true
     // subquery plans too: a scan inside a scalar subquery is a leaf
     // whose bytes no checkpoint block accounts for
     df.queryExecution.analyzed.foreachWithSubqueries {
-      case lr: LogicalRDD => ids += lr.rdd.id
+      case lr: LogicalRDD => rdds += lr.rdd
       case leaf if leaf.children.isEmpty &&
           leaf.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LeafNode] =>
         leaf match {
@@ -148,12 +151,13 @@ object Blocks {
         }
       case _ => ()
     }
-    if (!allCheckpoints || ids.isEmpty) None
+    if (!allCheckpoints || rdds.isEmpty) None
     else {
-      val info = df.sparkSession.sparkContext.getRDDStorageInfo
-        .filter(i => ids.contains(i.id))
-      if (info.length != ids.distinct.size) None
-      else Some(info.map(i => i.memSize + i.diskSize).sum)
+      val sizes = rdds.distinctBy(_.id).map { rdd =>
+        val stored = GraftSqlBridge.storedBlocks(rdd)
+        if (stored.size == rdd.getNumPartitions) Some(stored.values.sum) else None
+      }
+      if (sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None
     }
   }
 

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+
 /** Iterative graph analytics in the Pregel-on-DataFrames shape, with
   * GraphX's routing-table layout: the edges are pinned once
   * hash-partitioned on their join key (`src`, and `dst` too for HITS)
@@ -324,14 +326,16 @@ object Graph {
     // keyed once, so the normalizer and the next half-step read it
     // without re-planning it. One fold job over the checkpoint sums `c`
     // (a Long per partition, folded on the driver) and materializes it;
-    // the L1 normalization `c·10⁶ div max(Σc, 1)` then carries the
-    // total as a literal
+    // the L1 normalization `c·10⁶ div max(Σc, 1)` then reads the total as
+    // a run-time parameter, not a literal spelled into the generated
+    // code, so every round from the third on reuses the classes the
+    // second compiled ([[graft.functions.LongParam]])
     def halfStep(state: DataFrame, raw: DataFrame): (DataFrame, Column) = {
       val cp = GraftSqlBridge.localCheckpoint(state.join(raw.hint(Merge), Seq("id"), "left")
         .withColumn("c", coalesce(col("c"), lit(0L))), eager = false)
       val total = cp.select(col("c")).queryExecution.toRdd.map(_.getLong(0))
         .fold(0L)((x, y) => Math.addExact(x, y))
-      (cp, expr(s"c * 1000000L div ${total max 1L}L"))
+      (cp, call_function("div", col("c") * 1000000L, GraftFunctions.graftParam(total max 1L)))
     }
 
     // both vectors ride ONE (id, a_s, h_s) frame per round; the auth

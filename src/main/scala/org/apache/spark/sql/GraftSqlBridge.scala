@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.storage.{BlockId, RDDBlockId}
+import org.apache.spark.storage.RDDBlockId
 
 /** Minimal bridge into Spark SQL's `private[sql]` surface: `Dataset.ofRows`
   * wraps graft's custom logical nodes (graft.plans) back into a
@@ -16,7 +16,7 @@ import org.apache.spark.storage.{BlockId, RDDBlockId}
   * go into a plan directly, with no function-registry lookup;
   * `drainListeners` waits until the listener bus has delivered every
   * posted event, so counts a SparkListener keeps are exact when read;
-  * `storedPartitions` asks the block manager master what is stored;
+  * `storedBlocks` asks the block manager master what is stored;
   * `localCheckpoint` is `Dataset.localCheckpoint` that declares the hash
   * partitioning the executed plan proved. Lives in the Spark SQL
   * package for access; contains no operator logic.
@@ -31,16 +31,20 @@ object GraftSqlBridge {
 
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
-  /** How many of `rdd`'s partitions some block manager holds, asked of
-    * the block manager master, which a block put updates before the
-    * task that stored it ends. `SparkContext.getRDDStorageInfo` reads
-    * the status store instead, which the listener bus fills later, so
-    * right after a job it can still miss blocks that job stored.
+  /** The bytes (memory plus disk) the block managers hold for each
+    * stored partition of `rdd`, keyed by partition index; a partition
+    * no block manager holds is absent. Asked of the block manager
+    * master, which a block put updates before the task that stored it
+    * ends. `SparkContext.getRDDStorageInfo` reads the status store
+    * instead, which the listener bus fills later, so right after a job
+    * it can still miss blocks that job stored.
     */
-  def storedPartitions(rdd: RDD[_]): Int = {
-    val blocks: Array[BlockId] = rdd.partitions.indices.map(RDDBlockId(rdd.id, _)).toArray
-    rdd.sparkContext.env.blockManager.master.getLocations(blocks).count(_.nonEmpty)
-  }
+  def storedBlocks(rdd: RDD[_]): Map[Int, Long] =
+    rdd.sparkContext.env.blockManager.master.getStorageStatus.toSeq
+      .flatMap(_.rddBlocks.collect {
+        case (RDDBlockId(id, p), s) if id == rdd.id => p -> (s.memSize + s.diskSize)
+      })
+      .groupMapReduce(_._1)(_._2)(_ + _)
 
   /** `df.localCheckpoint(eager)` — the same blocks, the same lazy/eager
     * choice, the same origin statistics and constraints — whose

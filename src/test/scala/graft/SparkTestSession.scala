@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -30,5 +31,16 @@ object SparkTestSession {
       org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
       (out, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and the number of classes Spark's code generator
+    * compiled while it ran. A class found in the codegen cache is not
+    * compiled again, so on a warm cache this is 0. The counter is
+    * JVM-wide: `body` must be the only code running Spark.
+    */
+  def withCompileCount[T](body: => T): (T, Long) = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val out = body
+    (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
   }
 }

@@ -45,6 +45,22 @@ class BlocksSpec extends AnyFunSuite {
   private def checkpointRdd(df: DataFrame) =
     df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }.get
 
+  test("materializedBytes reads the block manager master and is unknown while a partition is not stored") {
+    val cp = spark.range(0, 1000, 1, 4).toDF().localCheckpoint()
+    val rdd = checkpointRdd(cp)
+    val stored = GraftSqlBridge.storedBlocks(rdd)
+    assert(stored.size == 4 && stored.values.forall(_ > 0), stored)
+    // read right after the job that stored the blocks: the master knows
+    // all four, whatever the listener bus has delivered so far
+    assert(Blocks.materializedBytes(cp).contains(stored.values.sum))
+    org.apache.spark.GraftTestBridge.dropBlock(rdd, 0)
+    // once the status store has seen the drop too, it still lists the
+    // RDD with three partitions; only a full set of blocks has a size
+    org.apache.spark.GraftTestBridge.waitForListeners(spark.sparkContext)
+    assert(Blocks.materializedBytes(cp).isEmpty, "a checkpoint missing a partition has no size")
+    Blocks.free(cp)
+  }
+
   private def declared(df: DataFrame): Partitioning =
     df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.outputPartitioning }.get
 
@@ -56,7 +72,7 @@ class BlocksSpec extends AnyFunSuite {
     assert(e.getMessage.contains(s"RDD ${rdd.id}") && e.getMessage.contains("0 of 4"),
       e.getMessage)
     // nothing was freed: the successor still computes from `prev`
-    assert(GraftSqlBridge.storedPartitions(checkpointRdd(prev)) == 4)
+    assert(GraftSqlBridge.storedBlocks(checkpointRdd(prev)).size == 4)
     assert(next.filter(col("id") > 0).queryExecution.toRdd.count() == 100L)
     Blocks.release(prev, next)
     assert(next.agg(sum("id")).head().getLong(0) == 5050L)

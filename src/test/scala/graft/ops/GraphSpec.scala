@@ -372,6 +372,22 @@ class GraphSpec extends AnyFunSuite {
     assert(s0.collect().forall(x => x.getLong(1) == 0L && x.getLong(2) == 0L))
   }
 
+  test("hitsConverged: rounds after the second compile no new code") {
+    // the hand DAG with every weight ×13: the same scores and rounds,
+    // but L1 totals no other test produces, so a total spelled into the
+    // generated code would compile fresh classes in every round
+    val nodes = Seq("a", "b", "c", "d").toDF("id")
+    val edges = Seq(("a", "c", 26L), ("b", "c", 13L), ("c", "d", 13L))
+      .toDF("src", "dst", "w")
+    val ((_, two, _), _) = SparkTestSession.withCompileCount(
+      Graph.hitsConverged(nodes, edges, maxIters = 2))
+    assert(two == 2)
+    val ((_, rounds, stable), compiled) = SparkTestSession.withCompileCount(
+      Graph.hitsConverged(nodes, edges, maxIters = 64))
+    assert(stable && rounds == 11)
+    assert(compiled == 0, s"rounds 3 to $rounds compiled $compiled classes")
+  }
+
   test("converged loops: the input pins, then one stability count per round, and no initial-frame job") {
     // every other job is a shuffle-map stage AQE runs while it plans a
     // round or a HITS half-step's L1 fold; the exact totals pin those too
