@@ -1,8 +1,5 @@
 package graft.compact
 
-import scala.util.Try
-import scala.util.control.NonFatal
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -13,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.fs.Fs
+import graft.fs.{FolderSwap, Fs, Paths, SafetyFuse}
 
 /** Small-file compaction (reference: Coalesce.scala).
   *
@@ -29,14 +26,20 @@ import graft.fs.Fs
   * their leaf's output files by hash, reducer count sized by AQE) where
   * the reference's per-leaf `coalesce(n)` shuffled nothing.
   *
-  * Swap: live leaf → aside, rewritten leaf → live, delete aside — one
-  * leaf at a time, after every rewrite has been written. The temp root
-  * and the aside folders have `.`-prefixed names, which Spark's file
-  * index ignores, so a concurrent reader never sees a leaf twice and a
-  * crash leaves no extra partition behind; [[getLowestFoldersPaths]]
-  * skips them too. [[doItAll]] and [[doAutoCoalesce]] start by moving
-  * back an aside folder whose leaf is missing, so a swap that failed
-  * half way (or a crash between its renames) heals on the next run.
+  * Swap: once every rewrite has been written, all rewritten leaves go
+  * live in one run of [[FolderSwap.replace]], the crash-safe folder
+  * replace the index swaps and partition moves use too. Its marker,
+  * `_<table>_compact_open_transaction` beside the table, records every
+  * (rewrite, leaf) pair; each live leaf goes to its aside
+  * `.<leaf>_graft_aside`, its rewrite takes the leaf's name, and the
+  * asides are deleted. The temp root, the asides and the marker have
+  * names Spark's file index skips, so a concurrent reader never sees a
+  * leaf twice and a crash leaves no extra partition behind;
+  * [[getLowestFoldersPaths]] skips them too. [[doItAll]] and
+  * [[doAutoCoalesce]] start with [[FolderSwap.recover]], so a swap that
+  * failed or crashed half way is finished or rolled back before the next
+  * run plans; an aside an earlier build left without a marker is settled
+  * by the same per-leaf rule.
   *
   * Two reference bugs fixed deliberately (SURVEY §7.6):
   *   - `numOfFiles == -1` (skip sentinel) was passed into `coalesce()`
@@ -50,8 +53,6 @@ object Compactor {
   private val LeafCol = "__graft_leaf"
   private val BucketCol = "__graft_bucket"
   private val ZCol = "__graft_z"
-  private val AsideSuffix = "_graft_aside"
-  private val AsideName = ("""\.(.+)""" + AsideSuffix).r
 
   /** Target file count, or -1 when compaction should be skipped: fewer
     * than 2 files, or median file size already ≥ requested (reference
@@ -86,8 +87,8 @@ object Compactor {
     val conf = spark.sessionState.newHadoopConf()
     val fs = Fs.getFileSystem(conf, path)
     val dir = fs.makeQualified(new Path(path))
-    val (dirs, files) = listRestoring(fs, dir)(fs.listStatus(dir))
-      .filterNot(s => isHidden(s.getPath.getName)).partition(_.isDirectory)
+    recover(fs, dir)
+    val (dirs, files) = fs.listStatus(dir).filterNot(s => isHidden(s.getPath.getName)).partition(_.isDirectory)
     require(dirs.isEmpty,
       s"$path has sub-folders (${dirs.head.getPath.getName}, ...): compact a partitioned table with doItAll")
     val leaf = Leaf(path, files.map(_.getLen).toIndexedSeq, files.map(_.getPath.toString).minOption)
@@ -127,9 +128,8 @@ object Compactor {
       distributedListing: Boolean = false, zorderCols: Seq[String] = Nil)(
       implicit spark: SparkSession): Map[String, Int] = {
     val fs = Fs.getFileSystem(spark.sessionState.newHadoopConf(), tablePath)
-    val all = listRestoring(fs, fs.makeQualified(new Path(tablePath)))(
-      leaves(tablePath, distributedListing, restore = true))
-    compact(tablePath, all, requestedSizeMb, zorderCols)
+    recover(fs, fs.makeQualified(new Path(tablePath)))
+    compact(tablePath, leaves(tablePath, distributedListing, restore = true), requestedSizeMb, zorderCols)
   }
 
   /** A leaf folder as listed: its data files' sizes and the path-sorted
@@ -150,48 +150,41 @@ object Compactor {
 
   private def parentOf(p: String): String = new Path(p).getParent.toString
 
-  /** Where [[swap]] moves a live `leaf` while its compacted copy is promoted. */
-  private def asideOf(leaf: Path): Path = new Path(leaf.getParent, s".${leaf.getName}$AsideSuffix")
-
-  /** The aside folders among `dirs` under a visible parent, each paired
-    * with the live leaf it belongs to.
-    */
-  private def asides(dirs: Seq[String], rootDepth: Int): Seq[(Path, Path)] =
-    dirs.map(new Path(_)).flatMap { a =>
-      a.getName match {
-        case AsideName(leaf) if isVisible(a.getParent.toString, rootDepth) => Some(a -> new Path(a.getParent, leaf))
-        case _ => None
-      }
-    }
-
-  /** Moves each aside folder whose leaf is not `live` back into place;
-    * true if any moved. An aside beside a live leaf is stale, and [[swap]]
-    * deletes it.
-    */
-  private def restoreOrphans(fs: FileSystem, found: Seq[(Path, Path)], live: Set[String]): Boolean = {
-    val orphans = found.filterNot { case (_, leaf) => live(leaf.toString) }
-    orphans.foreach { case (aside, leaf) => moveBack(fs, aside, leaf) }
-    orphans.nonEmpty
+  /** The marker of `table`'s swaps, in its parent beside the temp root. */
+  private def swapFuse(fs: FileSystem, table: Path): SafetyFuse = {
+    require(table.getParent != null, s"cannot compact a file system root: $table")
+    new SafetyFuse(fs, table.getParent.toString, s"${table.getName}_compact")
   }
 
-  private def moveBack(fs: FileSystem, aside: Path, leaf: Path): Unit =
-    rename(fs, aside, leaf, s"cannot move $aside back to $leaf")
+  /** Where a compaction of `table` writes its rewrites. */
+  private def tmpOf(table: Path): Path = new Path(table.getParent, s".${table.getName}_graft_tmp")
 
-  /** `list`, or, when it fails because `dir` itself is missing and sits
-    * aside (its own swap failed half way), `list` again after moving it
-    * back.
+  /** Resolves what an interrupted compaction of `table` left: its open
+    * swap, the aside an earlier build, which kept no marker, left in
+    * place of a missing table root, and then its temp root.
     */
-  private def listRestoring[T](fs: FileSystem, dir: Path)(list: => T): T =
-    try list catch { case NonFatal(_) if !fs.exists(dir) && fs.exists(asideOf(dir)) =>
-      moveBack(fs, asideOf(dir), dir)
-      list
-    }
+  private def recover(fs: FileSystem, table: Path): Unit = {
+    FolderSwap.recover(fs, swapFuse(fs, table))
+    val aside = FolderSwap.asideOf(table)
+    if (!fs.exists(table) && fs.exists(aside)) FolderSwap.settle(fs, None, table, aside)
+    fs.delete(tmpOf(table), true)
+  }
 
-  /** The leaves under `path`. With `restore`, first moves back every
-    * aside folder whose leaf is missing (a promotion that failed and
-    * could not move it back, or a crash between [[swap]]'s two renames):
-    * the asides are found in the same listing, and only a restore lists
-    * the tree again.
+  /** Settles each aside among `dirs` under a visible parent with its
+    * leaf by the per-live rule ([[FolderSwap.settle]]); true if there
+    * was any.
+    */
+  private def settleAsides(fs: FileSystem, dirs: Seq[String], rootDepth: Int): Boolean = {
+    val leaves = dirs.map(new Path(_)).filter(a => isVisible(a.getParent.toString, rootDepth))
+      .flatMap(FolderSwap.liveOf)
+    leaves.foreach(l => FolderSwap.settle(fs, None, l, FolderSwap.asideOf(l)))
+    leaves.nonEmpty
+  }
+
+  /** The leaves under `path`. With `restore`, first settles every aside
+    * folder an earlier build left without a marker (moved back when its
+    * leaf is missing, deleted otherwise): the asides are found in the
+    * same listing, and only a restore lists the tree again.
     */
   private def leaves(path: String, distributedListing: Boolean, restore: Boolean)(
       implicit spark: SparkSession): Seq[Leaf] = {
@@ -206,15 +199,11 @@ object Compactor {
         val tree = Fs.listDistributed(spark, path) // arrives persisted
         val visible = tree.filter(e => isVisible(e.path, rootDepth))
         val dirs = visible.filter(_.isDirectory).map(_.path).persist()
-        if (restore) {
-          val found = asides(tree.filter(e => e.isDirectory && e.path.endsWith(AsideSuffix))
-            .map(_.path).collect().toSeq, rootDepth)
-          val wanted = found.map(_._2.toString).toSet
-          if (found.nonEmpty && restoreOrphans(fs, found, dirs.filter(wanted(_)).collect().toSet)) {
-            dirs.unpersist()
-            tree.unpersist()
-            return leaves(path, distributedListing, restore)
-          }
+        if (restore && settleAsides(fs, tree.filter(e => e.isDirectory &&
+            e.path.endsWith(FolderSwap.AsideSuffix)).map(_.path).collect().toSeq, rootDepth)) {
+          dirs.unpersist()
+          tree.unpersist()
+          return leaves(path, distributedListing, restore)
         }
         val parents = dirs.map(parentOf).distinct()
         val out = dirs.toDF("p").join(parents.toDF("p"), Seq("p"), "left_anti")
@@ -228,8 +217,8 @@ object Compactor {
       } else {
         val listing = Fs.list(path)
         val (dirs, files) = listing.filter(e => isVisible(e.path, rootDepth)).partition(_.isDirectory)
-        if (restore && restoreOrphans(fs, asides(listing.collect { case e if e.isDirectory => e.path }.toSeq,
-            rootDepth), dirs.map(_.path).toSet)) return leaves(path, distributedListing, restore)
+        if (restore && settleAsides(fs, listing.collect { case e if e.isDirectory => e.path }.toSeq,
+            rootDepth)) return leaves(path, distributedListing, restore)
         val parentsOfDirs = dirs.map(d => parentOf(d.path)).toSet
         (dirs.map(_.path).filterNot(parentsOfDirs.contains).toIndexedSeq,
           files.groupBy(f => parentOf(f.path))
@@ -261,7 +250,8 @@ object Compactor {
   private final case class Rewrite(path: String, dir: Path, first: String, n: Int, index: Int)
 
   /** Rewrite the `leaves` of `tablePath` that need it and swap them in;
-    * the shared body of [[doAutoCoalesce]] (one leaf) and [[doItAll]].
+    * the shared body of [[doAutoCoalesce]] (one leaf) and [[doItAll]],
+    * which run [[recover]] first, so the temp root starts out absent.
     */
   private def compact(tablePath: String, leaves: Seq[Leaf], requestedSizeMb: Int,
       zorderCols: Seq[String])(implicit spark: SparkSession): Map[String, Int] = {
@@ -272,12 +262,10 @@ object Compactor {
       .map { case ((l, n), g) => Rewrite(l.path, fs.makeQualified(new Path(l.path)), l.first.get, n, g) }
     if (todo.isEmpty) return planned.toMap
     val table = fs.makeQualified(new Path(tablePath))
-    require(table.getParent != null, s"cannot compact a file system root: $tablePath")
-    val tmp = new Path(table.getParent, s".${table.getName}_graft_tmp")
+    val tmp = tmpOf(table)
     def staged(r: Rewrite) = new Path(tmp, s"$LeafCol=${r.index}")
     val schemas = footerSchemas(todo.map(_.first))
     val groups = todo.groupBy(r => (schemas(r.first), if (zorderCols.isEmpty) "" else r.path))
-    fs.delete(tmp, true)
     try {
       groups.foreach { case ((schema, _), group) =>
         rewrite(group, schema, zorderCols).write.mode("append").partitionBy(LeafCol).parquet(tmp.toString)
@@ -285,7 +273,7 @@ object Compactor {
       // a leaf whose files hold no rows stages nothing: it stays as it is
       val written = fs.listStatus(tmp).map(_.getPath.getName).toSet
       val done = todo.filter(r => written(staged(r).getName))
-      done.foreach(r => swap(fs, staged(r), r.dir))
+      FolderSwap.replace(fs, swapFuse(fs, table), done.map(r => Paths(staged(r).toString, r.dir.toString)))
       val swapped = done.map(_.path).toSet
       planned.map { case (l, n) => l -> (if (swapped(l)) n else -1) }.toMap
     } finally fs.delete(tmp, true)
@@ -325,26 +313,4 @@ object Compactor {
     }
   }
 
-  /** live → aside, staged → live, delete aside. A failed promotion moves
-    * the original folder back (or, failing that, names where it is) and
-    * throws; nothing of the original is deleted before the promotion.
-    */
-  private def swap(fs: FileSystem, staged: Path, leaf: Path): Unit = {
-    val aside = asideOf(leaf)
-    // a live leaf exists, so an aside left by an earlier crash is stale
-    fs.delete(aside, true)
-    rename(fs, leaf, aside, s"swap: cannot move $leaf aside")
-    try rename(fs, staged, leaf, s"swap: cannot promote the compacted copy of $leaf")
-    catch { case NonFatal(e) =>
-      val restored = Try(fs.rename(aside, leaf)).getOrElse(false)
-      throw new IllegalStateException(
-        s"${e.getMessage}; its original files are ${if (restored) "back in place" else s"in $aside"}", e)
-    }
-    fs.delete(aside, true)
-  }
-
-  private def rename(fs: FileSystem, from: Path, to: Path, what: String): Unit = {
-    val ok = try fs.rename(from, to) catch { case NonFatal(e) => throw new IllegalStateException(what, e) }
-    if (!ok) throw new IllegalStateException(what)
-  }
 }

@@ -10,16 +10,17 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.compact.Compactor
-import graft.fs.{Fs, SafetyFuse}
+import graft.fs.{FolderSwap, Fs, Paths, SafetyFuse}
 
 /** Operational lifecycle for the persisted similarity-index artifacts:
   * the ext/ indexes are plain parquet, so they get the SAME treatment
   * tables get on the fs surface — rebuild to a sibling path, compact +
   * z-order the rewrite ([[Compactor.doAutoCoalesce]]), and promote it
-  * with a [[SafetyFuse]]-guarded atomic swap (the Promotor/Compactor
-  * rename discipline: live → bak, new → live, drop bak, marker open
-  * across the destructive window so a crashed swap is recoverable and
-  * a rerun can't re-delete).
+  * through [[graft.fs.FolderSwap]], the one crash-safe folder replace
+  * compaction and partition moves use too: a hidden [[SafetyFuse]]
+  * marker records (rebuild, live), live → `.<name>_graft_aside`,
+  * rebuild → live, drop the aside, close the marker, so a crashed swap
+  * is finished or rolled back by [[recoverSwap]].
   *
   * Every persisted index family shares one artifact protocol, kept
   * here: its build parameters ride a [[Sidecar]] inside the artifact
@@ -226,62 +227,30 @@ object IndexLifecycle {
     new MissingSidecarException(livePath, "_graft_moments",
       "rebuild with the current lifecycle to record the build distribution")
 
-  /** Fuse-guarded atomic swap: promote `rebuildPath` over `livePath`.
-    * Marker content records the rebuild path so [[recoverSwap]] can
-    * verify an open transaction is its own before touching anything.
+  /** Promote `rebuildPath` over `livePath` through the one crash-safe
+    * folder replace ([[graft.fs.FolderSwap]]), under a marker beside the
+    * live folder that records both paths. Refuses to run over an open
+    * marker: [[recoverSwap]] resolves that first.
     */
   def swapIn(spark: SparkSession, rebuildPath: String, livePath: String): Unit = {
-    val fs = fsOf(spark, livePath)
     val fuse = swapFuse(spark, livePath)
-    require(!fuse.isInProgress(),
-      s"unfinished swap on $livePath — run recoverSwap first")
-    val bak = s"${livePath}_swap_bak"
-    fuse.startTransaction(rebuildPath)
-    fs.delete(new Path(bak), true)
-    // no live index yet = the initial promotion; nothing to move aside
-    if (fs.exists(new Path(livePath)))
-      require(fs.rename(new Path(livePath), new Path(bak)),
-        s"swap: cannot move $livePath aside")
-    require(fs.rename(new Path(rebuildPath), new Path(livePath)),
-      s"swap: cannot promote $rebuildPath")
-    fs.delete(new Path(bak), true)
-    fuse.endTransaction()
+    require(!fuse.isInProgress(), s"unfinished swap on $livePath — run recoverSwap first")
+    FolderSwap.replace(fsOf(spark, livePath), fuse, Seq(Paths(rebuildPath, livePath)))
   }
 
-  /** Complete or roll back a swap whose process died mid-transaction.
-    * State machine over (live, bak, rebuild) existence:
-    *  - no open marker → nothing to do;
-    *  - live exists → the destructive renames either never started or
-    *    fully completed: drop any leftover bak, close the marker;
-    *  - live missing, rebuild exists → crashed between the two renames:
-    *    finish the promotion (rebuild → live), drop bak, close;
-    *  - live missing, rebuild gone, bak exists → promotion half-lost:
-    *    restore the old index (bak → live), close — serving resumes on
-    *    the previous build.
-    * Returns true when a marker was found and resolved.
+  /** Complete or roll back a swap whose process died mid-transaction
+    * ([[graft.fs.FolderSwap.recover]]): a missing live index takes the
+    * rebuild if it is still there, or else the previous build back, so
+    * serving resumes on one of the two. It also resolves the swap of an
+    * earlier build, which recorded the bare rebuild path and kept the
+    * previous build in `<livePath>_swap_bak`. Returns true when a marker
+    * was found and resolved.
     */
-  def recoverSwap(spark: SparkSession, livePath: String): Boolean = {
-    val fs = fsOf(spark, livePath)
-    val fuse = swapFuse(spark, livePath)
-    if (!fuse.isInProgress()) return false
-    val bak = s"${livePath}_swap_bak"
-    val rebuild = fuse.markerContent().getOrElse("")
-    val liveP = new Path(livePath)
-    if (!fs.exists(liveP)) {
-      if (rebuild.nonEmpty && fs.exists(new Path(rebuild))) {
-        require(fs.rename(new Path(rebuild), liveP), s"recover: cannot promote $rebuild")
-        fs.delete(new Path(bak), true)
-      } else {
-        require(fs.exists(new Path(bak)), s"recover: neither live, rebuild nor bak at $livePath")
-        require(fs.rename(new Path(bak), liveP), s"recover: cannot restore $bak")
-      }
-    } else fs.delete(new Path(bak), true)
-    fuse.endTransaction()
-    true
-  }
+  def recoverSwap(spark: SparkSession, livePath: String): Boolean =
+    FolderSwap.recover(fsOf(spark, livePath), swapFuse(spark, livePath), Some(new Path(livePath)))
 
   /** Run `body`, retrying briefly while the live index is mid-[[swapIn]]:
-    * between rename(live → bak) and rename(rebuild → live) the live path
+    * between rename(live → aside) and rename(rebuild → live) the live path
     * does not exist, so a serving micro-batch firing inside that window
     * would throw and permanently fail its streaming query. The window is
     * two renames (milliseconds); this parks the batch for up to

@@ -94,15 +94,12 @@ object LocalExecution {
       val leftovers = pairs.filter(p => fs.exists(new Path(p.targetPath)))
       if (leftovers.nonEmpty) deletePaths(leftovers.map(_.targetPath))
     }
+    // movePaths returns only once every child moved, and throws when one
+    // did not: the source folder then stays, and so does the marker, so
+    // a retry takes the RESUME path above instead of clearing the target
     val res = movePaths(pairs)
-    // Only drop the source folder once every child actually moved —
-    // deleting it under a failed rename would destroy the unmoved data.
-    val allMoved = res.forall(_.success)
-    if (!keepSourceFolder && allMoved) fs.delete(sourcePath, true)
-    // On partial failure the marker stays: a retry must take the RESUME
-    // path above — closing the transaction would send it through the
-    // clear-target branch, destroying the children that already moved.
-    if (allMoved) fuse.endTransaction()
+    if (!keepSourceFolder) fs.delete(sourcePath, true)
+    fuse.endTransaction()
     res
   }
 

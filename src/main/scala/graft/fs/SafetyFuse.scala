@@ -15,16 +15,25 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * The fuse guards against reruns (its purpose), not against racing
   * writers on such stores.
   *
+  * The marker is `<folder>/_<runId>_open_transaction` (any `=` in
+  * `runId` becomes `-`): a `_`-prefixed name without `=`, which Spark's
+  * file index skips, so a table that holds an open marker stays
+  * readable. A marker under the visible name earlier builds wrote,
+  * `<folder>/<runId>_open_transaction`, counts as open too, so their
+  * interrupted runs still resume.
+  *
   * The marker can carry a `content` payload identifying the operation
-  * that opened it (e.g. the move's source URI), so a resume path can
-  * verify the open transaction is ITS OWN before inferring anything
-  * from partial state — closing a stranger's marker would unlock
-  * destructive fresh-path steps over data the stranger still owns.
+  * that opened it (e.g. the move's source URI, or [[FolderSwap]]'s
+  * pairs), so a resume path can verify the open transaction is ITS OWN
+  * before inferring anything from partial state — closing a stranger's
+  * marker would unlock destructive fresh-path steps over data the
+  * stranger still owns.
   */
 class SafetyFuse(fs: FileSystem, folder: String, runId: String = "graft") {
-  private val marker = new Path(s"$folder/${runId}_open_transaction")
+  private val marker = new Path(folder, s"_${runId.replace('=', '-')}_open_transaction")
+  private val legacy = new Path(folder, s"${runId}_open_transaction")
 
-  def isInProgress(): Boolean = fs.exists(marker)
+  def isInProgress(): Boolean = fs.exists(marker) || fs.exists(legacy)
 
   def startTransaction(content: String = ""): Unit = {
     if (!fs.exists(new Path(folder))) fs.mkdirs(new Path(folder))
@@ -38,15 +47,20 @@ class SafetyFuse(fs: FileSystem, folder: String, runId: String = "graft") {
   /** Payload recorded at `startTransaction`; None when no marker exists,
     * Some("") for a payload-less marker.
     */
-  def markerContent(): Option[String] = {
-    if (!fs.exists(marker)) return None
-    val in = fs.open(marker)
+  def markerContent(): Option[String] = Seq(marker, legacy).find(fs.exists).map { m =>
+    val in = fs.open(m)
     try {
       val buf = new java.io.ByteArrayOutputStream()
       org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-      Some(new String(buf.toByteArray, StandardCharsets.UTF_8))
+      new String(buf.toByteArray, StandardCharsets.UTF_8)
     } finally in.close()
   }
 
-  def endTransaction(): Unit = fs.delete(marker, false)
+  /** Closes the transaction; deleting `marker` is its last call, so a
+    * crash before it leaves the transaction open.
+    */
+  def endTransaction(): Unit = {
+    if (fs.exists(legacy)) fs.delete(legacy, false)
+    fs.delete(marker, false)
+  }
 }

@@ -238,10 +238,16 @@ object Promotor {
     moveFolders(subs.map(p => Paths(p, Fs.rebase(p, srcFolder, trgFolder))).toIndexedSeq)
   }
 
-  /** M11 core folder move: per-folder safety guard, same-FS check,
-    * SafetyFuse-guarded delete of existing targets, then rename — guard
-    * order preserved from the reference (safety check BEFORE delete,
-    * Promotor.scala:204-245).
+  /** M11 core folder move: per-folder safety guard and same-FS check,
+    * then one crash-safe replace of every target by its source
+    * ([[FolderSwap.replace]]) under a marker in the first target's parent
+    * — guard order preserved from the reference (safety check BEFORE
+    * anything moves, Promotor.scala:204-245). An existing target goes
+    * aside and is deleted only once its source holds its name, so a
+    * failed rename puts the old partition back. A run that throws leaves
+    * the marker open; the next call first resolves it
+    * ([[FolderSwap.recover]]) and then counts a pair whose source is gone
+    * and whose target exists as done.
     */
   private[graft] def moveFolders(pairs: Seq[Paths])(
       implicit spark: SparkSession): Seq[FsOperationResult] = {
@@ -251,41 +257,19 @@ object Promotor {
     pairs.foreach { p =>
       require(Fs.checkIfFsIsTheSame(p.sourcePath, p.targetPath),
         s"move requires one FileSystem: $p")
-      // a self-move would delete the source as the "existing target" —
-      // refuse outright (defense in depth behind Fs.rebase)
+      // a self-move would set the source aside as the "existing target"
+      // — refuse outright (defense in depth behind Fs.rebase)
       require(p.sourcePath != p.targetPath, s"refusing self-move: ${p.sourcePath}")
     }
-    val trgParent = new Path(pairs.head.targetPath).getParent.toString
-    val fuse = new SafetyFuse(fs, trgParent)
-    val resuming = fuse.isInProgress()
-    // Resuming a crashed run: pairs whose source is gone and target exists
-    // already renamed — count them done. Everything else still needs its
-    // move, and any target it finds in the way predates the interrupted
-    // transaction's delete phase.
+    val fuse = new SafetyFuse(fs, new Path(pairs.head.targetPath).getParent.toString)
     val (done, toMove) =
-      if (!resuming) (Seq.empty[Paths], pairs)
-      else pairs.partition(p =>
-        !fs.exists(new Path(p.sourcePath)) && fs.exists(new Path(p.targetPath)))
+      if (!FolderSwap.recover(fs, fuse)) (Seq.empty[Paths], pairs)
+      else pairs.partition(p => !fs.exists(new Path(p.sourcePath)) && fs.exists(new Path(p.targetPath)))
     toMove.foreach { p =>
       if (!Fs.doesMoveLookSafe(fs, p.sourcePath, p.targetPath))
         throw new IllegalStateException(s"unsafe move: $p")
     }
-    if (!resuming) fuse.startTransaction()
-    // Delete pre-existing targets for pairs about to move — on the resume
-    // path too, else Hadoop rename(src, existingDir) silently nests the
-    // partition folder INSIDE the leftover target (trg/p1/p1).
-    val existing = toMove.map(_.targetPath).filter(t => fs.exists(new Path(t)))
-    LocalExecution.deletePaths(existing)
-    val res = done.map(p => FsOperationResult(p.sourcePath, success = true)) ++
-      LocalExecution.movePaths(toMove)
-    // A partial failure must leave the fuse open so a retry re-enters
-    // the resume path above and counts already-renamed pairs as done
-    // instead of tripping doesMoveLookSafe. Today that happens via the
-    // THROW from movePaths (its retry loop only ever returns successes,
-    // see Retry.retryFailed), which skips this line; the forall guard is
-    // defense in depth should movePaths ever start returning failure
-    // rows instead. Regression-tested in PromotorSpec.
-    if (res.forall(_.success)) fuse.endTransaction()
-    res
+    FolderSwap.replace(fs, fuse, toMove)
+    (done ++ toMove).map(p => FsOperationResult(p.sourcePath, success = true))
   }
 }

@@ -19,6 +19,12 @@ import org.apache.hadoop.util.Progressable
   * [[FlakyFileSystem.failDeletesWith]] makes, and `modifyAclEntries` throws
   * what [[FlakyFileSystem.failAclsWith]] makes; every `delete` is counted
   * ([[FlakyFileSystem.deleteCalls]]).
+  * Every mutating call (create, rename, delete, mkdirs) on a path outside
+  * Spark's `_temporary` folders is counted
+  * ([[FlakyFileSystem.mutatingCalls]]); from call k of
+  * [[FlakyFileSystem.abortAtMutatingCall]] on, each one throws before it
+  * acts, as if the process had died at call k — a crash that also kills
+  * the caller's cleanup.
   * State lives in the companion: Spark's local-mode tasks share the
   * test JVM, and whichever cached instance they resolve sees it.
   */
@@ -30,26 +36,40 @@ class FlakyFileSystem extends RawLocalFileSystem {
 
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    mutate(f)
     failIfDue(f)
     super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    mutate(f)
     failIfDue(f)
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 
   override def rename(src: Path, dst: Path): Boolean = {
+    mutate(src, dst)
     if (failRenameOnto(key(dst))) throw renameFailure()
     super.rename(src, dst)
   }
 
   override def delete(f: Path, recursive: Boolean): Boolean = {
+    mutate(f)
     val n = deletes.incrementAndGet()
     if (n <= failDeletesUpTo) throw new IOException(s"injected delete failure (call $n) on $f")
     deleteFailure.foreach(e => throw e())
     super.delete(f, recursive)
+  }
+
+  override def mkdirs(f: Path): Boolean = {
+    mutate(f)
+    super.mkdirs(f)
+  }
+
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    mutate(f)
+    super.mkdirs(f, permission)
   }
 
   override def modifyAclEntries(path: Path, aclSpec: java.util.List[AclEntry]): Unit = {
@@ -70,12 +90,22 @@ object FlakyFileSystem {
   @volatile private var aclFailure: Option[() => Throwable] = None
   private val calls = new ConcurrentHashMap[String, AtomicInteger]()
   private val deletes = new AtomicInteger()
+  @volatile private var abortAt = Int.MaxValue
+  private val mutating = new AtomicInteger()
 
   /** Fail the first `k` creates of every path from now on; renames, deletes and ACL calls succeed. */
   def reset(k: Int): Unit = {
     failures = k; failRenameOnto = _ => false; failDeletesUpTo = 0; deleteFailure = None; aclFailure = None
-    calls.clear(); deletes.set(0)
+    calls.clear(); deletes.set(0); abortAt = Int.MaxValue; mutating.set(0)
   }
+
+  /** Restart the mutating-call count; call `k` (1-based) and every later
+    * mutating call throw an `IOException` before they act.
+    */
+  def abortAtMutatingCall(k: Int): Unit = { mutating.set(0); abortAt = k }
+
+  /** Mutating calls outside `_temporary` folders since the last [[reset]] or [[abortAtMutatingCall]]. */
+  def mutatingCalls: Int = mutating.get
 
   /** Make every rename onto a target whose scheme-less path satisfies `p` throw `e()`. */
   def failRenamesOnto(p: String => Boolean, e: () => Throwable = InjectedRenameFailure): Unit = {
@@ -102,6 +132,12 @@ object FlakyFileSystem {
   def flaky(fileUri: String): String = s"$Scheme:" + new Path(fileUri).toUri.getPath
 
   private def key(f: Path) = Path.getPathWithoutSchemeAndAuthority(f).toString
+
+  private def mutate(paths: Path*): Unit =
+    if (!paths.exists(_.toUri.getPath.split('/').contains("_temporary"))) {
+      val n = mutating.incrementAndGet()
+      if (n >= abortAt) throw new IOException(s"injected crash: mutating call $n (from $abortAt) on ${paths.mkString(" -> ")}")
+    }
 
   private def failIfDue(f: Path): Unit = {
     val n = calls.computeIfAbsent(key(f), _ => new AtomicInteger).incrementAndGet()

@@ -216,7 +216,7 @@ class MoveCopyDeleteSpec extends AnyFunSuite {
     assert(res.isEmpty) // nothing left to move — but the run must COMPLETE
     assert(!fs.exists(new Path(s"$root/src")), "source folder not cleaned up on resume")
     assert(fs.exists(new Path(s"$root/trg/a.txt")))
-    assert(!fs.exists(new Path(s"$root/trg/graft_open_transaction")), "fuse left open")
+    assert(!new SafetyFuse(fs, s"$root/trg").isInProgress(), "fuse left open")
   }
 
   test("moveFolderContent resume: source vanished after full move (crash before fuse close)") {
@@ -229,7 +229,7 @@ class MoveCopyDeleteSpec extends AnyFunSuite {
     val res = LocalExecution.moveFolderContent(s"$root/src", s"$root/trg")
     assert(res.isEmpty)
     assert(fs.exists(new Path(s"$root/trg/a.txt")), "resume damaged the moved content")
-    assert(!fs.exists(new Path(s"$root/trg/graft_open_transaction")), "fuse left open")
+    assert(!new SafetyFuse(fs, s"$root/trg").isInProgress(), "fuse left open")
     // a fresh move into the now-closed target takes the normal path again
     TestTree.touch(fs, s"$root/src2/b.txt")
     val res2 = LocalExecution.moveFolderContent(s"$root/src2", s"$root/trg")
@@ -248,13 +248,69 @@ class MoveCopyDeleteSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       LocalExecution.moveFolderContent(s"$root/b", s"$root/trg")
     }
-    assert(fs.exists(new Path(s"$root/trg/graft_open_transaction")),
+    assert(new SafetyFuse(fs, s"$root/trg").isInProgress(),
       "stranger's marker was closed")
     // the genuine owner's resume still completes
     val res = LocalExecution.moveFolderContent(s"$root/a", s"$root/trg")
     assert(res.isEmpty)
-    assert(!fs.exists(new Path(s"$root/trg/graft_open_transaction")))
+    assert(!new SafetyFuse(fs, s"$root/trg").isInProgress())
     assert(fs.exists(new Path(s"$root/trg/moved_by_a.txt")))
+  }
+
+  test("an open transaction's marker is hidden from Spark: the table under it stays readable") {
+    import org.apache.spark.sql.functions.col
+    val root = TestTree.newRoot("fuse_read")
+    val fs = TestTree.fsFor(root)
+    val rows = spark.range(0, 40, 1, 4).withColumn("part", col("id") % 2)
+    rows.write.partitionBy("part").parquet(s"$root/partitioned")
+    rows.drop("part").write.parquet(s"$root/flat")
+    // a move's marker in the table root (payload: its source), and markers
+    // whose run id holds an `=` in a partitioned table's root
+    new SafetyFuse(fs, s"$root/partitioned").startTransaction(s"$root/src")
+    new SafetyFuse(fs, s"$root/partitioned", "part=0_compact").startTransaction()
+    new SafetyFuse(fs, s"$root/flat").startTransaction(s"$root/src")
+    assert(spark.read.parquet(s"$root/partitioned").count() == 40)
+    assert(spark.read.parquet(s"$root/partitioned").where("part = 1").count() == 20)
+    assert(spark.read.parquet(s"$root/flat").count() == 40)
+    spark.sql(s"CREATE TABLE graft_fuse_flat USING parquet LOCATION '$root/flat'")
+    try assert(spark.table("graft_fuse_flat").count() == 40)
+    finally spark.sql("DROP TABLE graft_fuse_flat")
+  }
+
+  test("moveFolderContent resumes a marker under the visible name earlier builds wrote") {
+    val root = TestTree.newRoot("mvlegacy")
+    val fs = TestTree.fsFor(root)
+    // crashed under an earlier build after moving a.txt: the marker is
+    // `graft_open_transaction`, and b.txt is still in the source
+    TestTree.touch(fs, s"$root/trg/a.txt")
+    TestTree.touch(fs, s"$root/src/b.txt")
+    val out = fs.create(new Path(s"$root/trg/graft_open_transaction"), false)
+    out.write(new Path(s"$root/src").toString.getBytes(StandardCharsets.UTF_8)); out.close()
+    val fuse = new SafetyFuse(fs, s"$root/trg")
+    assert(fuse.isInProgress() && fuse.markerContent().contains(new Path(s"$root/src").toString))
+    val res = LocalExecution.moveFolderContent(s"$root/src", s"$root/trg")
+    assert(res.map(_.success) == Seq(true))
+    // resumed, not restarted: the fresh path would have cleared a.txt
+    assert(fs.exists(new Path(s"$root/trg/a.txt")) && fs.exists(new Path(s"$root/trg/b.txt")))
+    assert(!fs.exists(new Path(s"$root/src")) && !fuse.isInProgress())
+  }
+
+  test("moveFolderContent: a child that cannot move throws, keeping the marker and the source; a rerun completes") {
+    val src = TestTree.newRoot("mvstuck_src"); TestTree.create(src, 7)
+    val trg = TestTree.newRoot("mvstuck_trg")
+    val fs = TestTree.fsFor(src)
+    val before = relSet(src)
+    val stuck = fs.listStatus(new Path(src)).map(_.getPath.getName).min
+    FlakyFileSystem.reset(0)
+    FlakyFileSystem.failRenamesOnto(_.endsWith(s"/$stuck"))
+    try intercept[IllegalStateException] {
+      LocalExecution.moveFolderContent(FlakyFileSystem.flaky(src), FlakyFileSystem.flaky(trg))
+    } finally FlakyFileSystem.reset(0)
+    assert(new SafetyFuse(fs, trg).isInProgress(), "the marker was closed over a partial move")
+    assert(fs.exists(new Path(s"$src/$stuck")), "the source folder went with a child still in it")
+    val res = LocalExecution.moveFolderContent(src, trg)
+    assert(res.nonEmpty && res.forall(_.success))
+    assert(relSet(trg) == before && !fs.exists(new Path(src)) && !new SafetyFuse(fs, trg).isInProgress())
   }
 
   test("contentHash sentinel is side-distinct for unreadable files") {

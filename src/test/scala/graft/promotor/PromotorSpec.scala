@@ -157,7 +157,7 @@ class PromotorSpec extends AnyFunSuite {
     assert(!fs.exists(new Path(s"$root/trg/p1/old.txt")))
     // p2's completed rename is reported done and left untouched
     assert(fs.exists(new Path(s"$root/trg/p2/moved.txt")))
-    assert(!fs.exists(new Path(s"$root/trg/graft_open_transaction")))
+    assert(!new graft.fs.SafetyFuse(fs, s"$root/trg").isInProgress())
   }
 
   test("moveFolders partial failure leaves the fuse open; retry resumes completed pairs (ADVICE r2)") {
@@ -180,7 +180,7 @@ class PromotorSpec extends AnyFunSuite {
     // p1's rename went through before the failure surfaced; the fuse must
     // still be open or the retry below takes the non-resume path and
     // trips 'unsafe move' on the vanished p1 source
-    assert(fs.exists(new Path(s"$root/trg/graft_open_transaction")))
+    assert(new graft.fs.SafetyFuse(fs, s"$root/trg").isInProgress())
     assert(fs.exists(new Path(s"$root/trg/p1/data.txt")))
     // clear the obstruction: file → directory
     fs.delete(new Path(s"$root/trg/bad"), false)
@@ -188,7 +188,32 @@ class PromotorSpec extends AnyFunSuite {
     val res = Promotor.moveFolders(pairs)
     assert(res.forall(_.success) && res.size == 2)
     assert(fs.exists(new Path(s"$root/trg/bad/p2/data.txt")))
-    assert(!fs.exists(new Path(s"$root/trg/graft_open_transaction")))
+    assert(!new graft.fs.SafetyFuse(fs, s"$root/trg").isInProgress())
+  }
+
+  test("moveFolders: a failed rename puts the old partition back; a rerun completes the move") {
+    import org.apache.hadoop.fs.Path
+    import graft.fs.FlakyFileSystem
+    spark.sparkContext.hadoopConfiguration.set(s"fs.${FlakyFileSystem.Scheme}.impl",
+      classOf[FlakyFileSystem].getName)
+    implicit val conf = spark.sessionState.newHadoopConf()
+    val root = graft.fs.TestTree.newRoot("mvback")
+    val fs = graft.fs.Fs.getFileSystem(conf, root)
+    graft.fs.TestTree.touch(fs, s"$root/src/p1/new.txt")
+    graft.fs.TestTree.touch(fs, s"$root/trg/p1/old.txt")
+    val flaky = FlakyFileSystem.flaky(root)
+    val pairs = Seq(graft.fs.Paths(s"$flaky/src/p1", s"$flaky/trg/p1"))
+    // the rename of the source onto the target fails; moving the old partition back works
+    var onto = 0
+    FlakyFileSystem.reset(0)
+    FlakyFileSystem.failRenamesOnto(p => p.endsWith("/trg/p1") && { onto += 1; onto == 1 })
+    try intercept[IllegalStateException](Promotor.moveFolders(pairs)) finally FlakyFileSystem.reset(0)
+    assert(fs.exists(new Path(s"$root/trg/p1/old.txt")), "the target lost its partition")
+    assert(fs.exists(new Path(s"$root/src/p1/new.txt")))
+    assert(new graft.fs.SafetyFuse(fs, s"$root/trg").isInProgress())
+    assert(Promotor.moveFolders(pairs).map(_.success) == Seq(true))
+    assert(fs.exists(new Path(s"$root/trg/p1/new.txt")) && !fs.exists(new Path(s"$root/trg/p1/old.txt")))
+    assert(!fs.exists(new Path(s"$root/src/p1")) && !new graft.fs.SafetyFuse(fs, s"$root/trg").isInProgress())
   }
 
   test("current-database overloads: partition ops resolve bare table names") {
