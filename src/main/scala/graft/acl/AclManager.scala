@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.fs.permission.{AclEntry, AclEntryScope, AclEntryType, AclStatus, FsAction}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-import graft.fs.{Fs, FsOperationResult, Retry}
+import graft.fs.{Fs, FsElement, FsOperationResult, Retry, Root}
 
 /** User-facing ACL spec (reference: acl/AclManager.scala:198-205):
   * scope ∈ user/group/other/mask, POSIX rwx string, level ACCESS/DEFAULT,
@@ -81,7 +81,8 @@ object AclManager {
   }
 
   /** Folder-tree ACL: ACCESS on every element, DEFAULT additionally on
-    * folders (reference acl/AclManager.scala:110-126).
+    * folders (reference acl/AclManager.scala:110-126). `uri` is any
+    * spelling of a folder on one file system.
     */
   def modifyFolderAcl(uri: String, permission: FsPermission)(
       implicit conf: Configuration): Seq[FsOperationResult] =
@@ -92,9 +93,10 @@ object AclManager {
     */
   def modifyFolderAcl(uri: String, permissions: Seq[FsPermission])(
       implicit conf: Configuration): Seq[FsOperationResult] = {
-    val tree = Fs.list(uri)
-    val all = uri +: tree.map(_.path).toIndexedSeq
-    val folders = uri +: tree.filter(_.isDirectory).map(_.path).toIndexedSeq
+    val root = Root(uri)
+    val tree = Fs.tree(root)
+    val all = root.path.toString +: tree.map(_.path).toIndexedSeq
+    val folders = root.path.toString +: tree.filter(_.isDirectory).map(_.path).toIndexedSeq
     modifyAcls(all, permissions.map(_.copy(level = "ACCESS"))) ++
       modifyAcls(folders, permissions.map(_.copy(level = "DEFAULT")))
   }
@@ -123,8 +125,13 @@ object AclManager {
     true
   }
 
-  def clearFolderAcl(uri: String)(implicit conf: Configuration): Seq[FsOperationResult] =
-    clearAcls(uri +: Fs.list(uri).map(_.path).toIndexedSeq)
+  /** [[clearAcls]] on a folder tree; `uri` is any spelling of a folder
+    * on one file system.
+    */
+  def clearFolderAcl(uri: String)(implicit conf: Configuration): Seq[FsOperationResult] = {
+    val root = Root(uri)
+    clearAcls(root.path.toString +: Fs.tree(root).map(_.path).toIndexedSeq)
+  }
 
   // ------------------------------------------------ distributed variants
 
@@ -157,15 +164,17 @@ object AclManager {
     applyAclDistributed(paths, conf)(() => (fs, path) => fs.removeAcl(path))
 
   /** Distributed [[modifyFolderAcl]]: tree scan, ACCESS application and
-    * DEFAULT-on-folders application all run as Spark jobs.
+    * DEFAULT-on-folders application all run as Spark jobs. `uri` is any
+    * spelling of a folder on one file system.
     */
   def modifyFolderAclDistributed(uri: String, permission: FsPermission,
       conf: Configuration)(implicit spark: SparkSession): Unit = {
     import spark.implicits._
-    val tree = Fs.listDistributed(spark, uri, conf) // arrives persisted
-    val root = spark.createDataset(Seq(uri))
-    val all = tree.map(_.path).union(root)
-    val folders = tree.filter(_.isDirectory).map(_.path).union(root)
+    val root = Root(uri)(conf)
+    val tree = Fs.listDistributed(spark, root) // arrives persisted
+    val top = spark.createDataset(Seq(root.path.toString))
+    val all = tree.map(_.path).union(top)
+    val folders = tree.filter(_.isDirectory).map(_.path).union(top)
     // DistributedRetry.run returns its result already materialized AND
     // pinned; this caller only needs the side effects, so release the
     // pin — left persisted, each call would hold a row per path for the
@@ -232,54 +241,39 @@ object AclManager {
     planned.toSeq
   }
 
-  /** ACL tree synchronization (reference acl/AclManager.scala:214-316):
-    * read all source-folder ACLs, plan target-folder ACLs by path
-    * correspondence with parent inheritance, apply parent-first
+  /** ACL tree synchronization (reference acl/AclManager.scala:214-316),
+    * each side any spelling of a folder on one file system: read all
+    * source-folder ACLs, plan target-folder ACLs by path correspondence
+    * (root-relative paths) with parent inheritance, apply parent-first
     * (replace, then each file gets its parent's DEFAULT entries as
     * ACCESS entries).
     */
-  def synchronizeAcls(applyToUri0: String, takeFromUri0: String)(
+  def synchronizeAcls(applyToUri: String, takeFromUri: String)(
       implicit conf: Configuration): Unit = {
-    val applyToUri = applyToUri0.stripSuffix("/")
-    val takeFromUri = takeFromUri0.stripSuffix("/")
-    val srcFs = Fs.getFileSystem(conf, takeFromUri)
-    val trgFs = Fs.getFileSystem(conf, applyToUri)
-
-    // URI forms differ between caller and listStatus (acl:///x vs acl:/x)
-    // — Delta.rel relativizes on the scheme-less URI path AND refuses a
-    // path that is not under the root (a silent stripPrefix no-op would
-    // feed an absolute path into the correspondence map)
-    def rel(rootUri: String, p: String): String = graft.fs.Delta.rel(rootUri)(p)
-
-    val srcTree = Fs.list(takeFromUri)
-    val srcFolderRel = "" +: srcTree.filter(_.isDirectory)
-      .map(e => rel(takeFromUri, e.path)).toIndexedSeq
-    val srcAcls: Map[String, Seq[AclEntry]] = srcFolderRel.map { r =>
-      val abs = if (r.isEmpty) takeFromUri else s"$takeFromUri/$r"
-      r -> srcFs.getAclStatus(new Path(abs)).getEntries.asScala.toSeq
+    val (trg, src) = (Root(applyToUri), Root(takeFromUri))
+    def folders(root: Root, tree: Array[FsElement]) =
+      "" +: tree.filter(_.isDirectory).map(e => root.rel(e.path)).toIndexedSeq
+    val srcAcls: Map[String, Seq[AclEntry]] = folders(src, Fs.tree(src)).map { r =>
+      r -> src.fs.getAclStatus(src.child(r)).getEntries.asScala.toSeq
     }.toMap
 
-    val trgTree = Fs.list(applyToUri)
-    val trgFolderRel = "" +: trgTree.filter(_.isDirectory)
-      .map(e => rel(applyToUri, e.path)).toIndexedSeq
-
-    val plan = planIdealAcls(srcAcls, trgFolderRel)
+    val trgTree = Fs.tree(trg)
+    val plan = planIdealAcls(srcAcls, folders(trg, trgTree))
     val byRel = plan.toMap
 
     // folders parent-first: replace entries
     plan.foreach { case (r, entries) =>
       if (entries.nonEmpty) {
-        val abs = if (r.isEmpty) applyToUri else s"$applyToUri/$r"
-        trgFs.removeAcl(new Path(abs))
-        trgFs.modifyAclEntries(new Path(abs), entries.asJava)
+        trg.fs.removeAcl(trg.child(r))
+        trg.fs.modifyAclEntries(trg.child(r), entries.asJava)
       }
     }
     // files: parent's DEFAULT entries, converted to ACCESS
     trgTree.filter(!_.isDirectory).foreach { f =>
-      val r = rel(applyToUri, f.path)
+      val r = trg.rel(f.path)
       val parentRel = { val i = r.lastIndexOf('/'); if (i < 0) "" else r.substring(0, i) }
       val inherited = defaultsToAccess(byRel.getOrElse(parentRel, Seq.empty))
-      if (inherited.nonEmpty) trgFs.setAcl(new Path(f.path), inherited.asJava)
+      if (inherited.nonEmpty) trg.fs.setAcl(new Path(f.path), inherited.asJava)
     }
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.fs.{FolderSwap, Fs, Paths, SafetyFuse}
+import graft.fs.{FolderSwap, Fs, Paths, Root, SafetyFuse}
 
 /** Small-file compaction (reference: Coalesce.scala).
   *
@@ -68,9 +68,10 @@ object Compactor {
     math.max(1, math.min(math.ceil(total.toDouble / requested).toInt, fileSizes.size))
   }
 
-  /** Compact one parquet folder in place. Returns the new file count, or
-    * -1 if skipped. The folder must hold no (visible) sub-folders: a
-    * partitioned table is compacted leaf by leaf with [[doItAll]].
+  /** Compact one parquet folder in place, `path` any spelling of a folder
+    * on one file system. Returns the new file count, or -1 if skipped.
+    * The folder must hold no (visible) sub-folders: a partitioned table
+    * is compacted leaf by leaf with [[doItAll]].
     *
     * @param zorderCols when non-empty, the rewrite lays the data out
     *        along the Morton curve of these columns — exactly
@@ -84,20 +85,18 @@ object Compactor {
   def doAutoCoalesce(path: String, requestedSizeMb: Int = 100,
       zorderCols: Seq[String] = Nil)(
       implicit spark: SparkSession): Int = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = Fs.getFileSystem(conf, path)
-    val dir = fs.makeQualified(new Path(path))
-    recover(fs, dir)
-    val (dirs, files) = fs.listStatus(dir).filterNot(s => isHidden(s.getPath.getName)).partition(_.isDirectory)
+    val dir = Root(path)(spark.sessionState.newHadoopConf())
+    recover(dir)
+    val (dirs, files) = dir.fs.listStatus(dir.path).filterNot(s => isHidden(s.getPath.getName)).partition(_.isDirectory)
     require(dirs.isEmpty,
       s"$path has sub-folders (${dirs.head.getPath.getName}, ...): compact a partitioned table with doItAll")
-    val leaf = Leaf(path, files.map(_.getLen).toIndexedSeq, files.map(_.getPath.toString).minOption)
-    val done = compact(path, Seq(leaf), requestedSizeMb, zorderCols)
-    done(path)
+    val leaf = Leaf(dir.path.toString, files.map(_.getLen).toIndexedSeq, files.map(_.getPath.toString).minOption)
+    compact(dir, Seq(leaf), requestedSizeMb, zorderCols).apply(leaf.path)
   }
 
-  /** Leaf (partition) directories under `path` — dirs with no subdirs
-    * (reference Coalesce.scala:48-62). Folders Spark's file index skips
+  /** Leaf (partition) directories under `path`, any spelling of a folder
+    * on one file system — dirs with no subdirs, spelled as a listing
+    * spells them (reference Coalesce.scala:48-62). Folders Spark's file index skips
     * (names starting with `.`, or with `_` and holding no `=`) are
     * skipped here too, with everything under them.
     *
@@ -109,10 +108,11 @@ object Compactor {
     */
   def getLowestFoldersPaths(path: String, distributedListing: Boolean = false)(
       implicit spark: SparkSession): Seq[String] =
-    leaves(path, distributedListing, restore = false).map(_.path)
+    leaves(Root(path)(spark.sessionState.newHadoopConf()), distributedListing, restore = false).map(_.path)
 
-  /** Compact every leaf partition folder of `tablePath` (reference
-    * Coalesce.scala:85-97 ran one job per leaf on a 10-thread pool).
+  /** Compact every leaf partition folder of `tablePath`, any spelling of a
+    * folder on one file system (reference Coalesce.scala:85-97 ran one
+    * job per leaf on a 10-thread pool).
     * The leaves that need a rewrite share one Spark write job per
     * distinct schema — a leaf is never rewritten under another leaf's
     * schema, and its rows never leave it; each ends with at most its
@@ -122,14 +122,15 @@ object Compactor {
     * as a bound sampled over several leaves could cut a leaf into more
     * files than its plan.
     *
-    * @return per leaf path, the new file count or -1 if skipped
+    * @return per leaf path as a listing spells it, the new file count or
+    *         -1 if skipped
     */
   def doItAll(tablePath: String, requestedSizeMb: Int = 100,
       distributedListing: Boolean = false, zorderCols: Seq[String] = Nil)(
       implicit spark: SparkSession): Map[String, Int] = {
-    val fs = Fs.getFileSystem(spark.sessionState.newHadoopConf(), tablePath)
-    recover(fs, fs.makeQualified(new Path(tablePath)))
-    compact(tablePath, leaves(tablePath, distributedListing, restore = true), requestedSizeMb, zorderCols)
+    val table = Root(tablePath)(spark.sessionState.newHadoopConf())
+    recover(table)
+    compact(table, leaves(table, distributedListing, restore = true), requestedSizeMb, zorderCols)
   }
 
   /** A leaf folder as listed: its data files' sizes and the path-sorted
@@ -151,9 +152,9 @@ object Compactor {
   private def parentOf(p: String): String = new Path(p).getParent.toString
 
   /** The marker of `table`'s swaps, in its parent beside the temp root. */
-  private def swapFuse(fs: FileSystem, table: Path): SafetyFuse = {
-    require(table.getParent != null, s"cannot compact a file system root: $table")
-    new SafetyFuse(fs, table.getParent.toString, s"${table.getName}_compact")
+  private def swapFuse(table: Root): SafetyFuse = {
+    require(table.path.getParent != null, s"cannot compact a file system root: $table")
+    new SafetyFuse(table.fs, table.path.getParent.toString, s"${table.path.getName}_compact")
   }
 
   /** Where a compaction of `table` writes its rewrites. */
@@ -163,11 +164,12 @@ object Compactor {
     * swap, the aside an earlier build, which kept no marker, left in
     * place of a missing table root, and then its temp root.
     */
-  private def recover(fs: FileSystem, table: Path): Unit = {
-    FolderSwap.recover(fs, swapFuse(fs, table))
-    val aside = FolderSwap.asideOf(table)
-    if (!fs.exists(table) && fs.exists(aside)) FolderSwap.settle(fs, None, table, aside)
-    fs.delete(tmpOf(table), true)
+  private def recover(table: Root): Unit = {
+    val fs = table.fs
+    FolderSwap.recover(fs, swapFuse(table))
+    val aside = FolderSwap.asideOf(table.path)
+    if (!fs.exists(table.path) && fs.exists(aside)) FolderSwap.settle(fs, None, table.path, aside)
+    fs.delete(tmpOf(table.path), true)
   }
 
   /** Settles each aside among `dirs` under a visible parent with its
@@ -186,24 +188,22 @@ object Compactor {
     * leaf is missing, deleted otherwise): the asides are found in the
     * same listing, and only a restore lists the tree again.
     */
-  private def leaves(path: String, distributedListing: Boolean, restore: Boolean)(
+  private def leaves(root: Root, distributedListing: Boolean, restore: Boolean)(
       implicit spark: SparkSession): Seq[Leaf] = {
-    implicit val conf: Configuration = spark.sessionState.newHadoopConf()
-    val fs = Fs.getFileSystem(conf, path)
-    val root = fs.makeQualified(new Path(path))
-    val rootDepth = root.depth
+    val fs = root.fs
+    val rootDepth = root.path.depth
     // leaf dirs, and per parent folder: its data files' sizes + first path
     val (leafDirs, byParent): (Seq[String], Map[String, (Seq[Long], String)]) =
       if (distributedListing) {
         import spark.implicits._
-        val tree = Fs.listDistributed(spark, path) // arrives persisted
+        val tree = Fs.listDistributed(spark, root) // arrives persisted
         val visible = tree.filter(e => isVisible(e.path, rootDepth))
         val dirs = visible.filter(_.isDirectory).map(_.path).persist()
         if (restore && settleAsides(fs, tree.filter(e => e.isDirectory &&
             e.path.endsWith(FolderSwap.AsideSuffix)).map(_.path).collect().toSeq, rootDepth)) {
           dirs.unpersist()
           tree.unpersist()
-          return leaves(path, distributedListing, restore)
+          return leaves(root, distributedListing, restore)
         }
         val parents = dirs.map(parentOf).distinct()
         val out = dirs.toDF("p").join(parents.toDF("p"), Seq("p"), "left_anti")
@@ -215,20 +215,18 @@ object Compactor {
         tree.unpersist()
         (out, files.map { case (p, sizes, first) => p -> (sizes, first) }.toMap)
       } else {
-        val listing = Fs.list(path)
+        val listing = Fs.tree(root)
         val (dirs, files) = listing.filter(e => isVisible(e.path, rootDepth)).partition(_.isDirectory)
         if (restore && settleAsides(fs, listing.collect { case e if e.isDirectory => e.path }.toSeq,
-            rootDepth)) return leaves(path, distributedListing, restore)
+            rootDepth)) return leaves(root, distributedListing, restore)
         val parentsOfDirs = dirs.map(d => parentOf(d.path)).toSet
         (dirs.map(_.path).filterNot(parentsOfDirs.contains).toIndexedSeq,
           files.groupBy(f => parentOf(f.path))
             .map { case (p, fs) => p -> (fs.map(_.byteSize).toSeq, fs.map(_.path).min) })
       }
-    val (paths, keys) =
-      if (leafDirs.isEmpty) (Seq(path.stripSuffix("/")), Seq(root.toString))
-      else (leafDirs, leafDirs)
-    paths.zip(keys).map { case (p, k) =>
-      byParent.get(k).fold(Leaf(p, Nil, None)) { case (sizes, first) => Leaf(p, sizes, Some(first)) }
+    // a table without sub-folders is its own one leaf, spelled as a listing spells it
+    (if (leafDirs.isEmpty) Seq(root.path.toString) else leafDirs).map { p =>
+      byParent.get(p).fold(Leaf(p, Nil, None)) { case (sizes, first) => Leaf(p, sizes, Some(first)) }
     }
   }
 
@@ -247,22 +245,21 @@ object Compactor {
   /** A leaf to rewrite into `n` files; `index` names its staged folder
     * `LeafCol=index` under the temp root.
     */
-  private final case class Rewrite(path: String, dir: Path, first: String, n: Int, index: Int)
+  private final case class Rewrite(path: String, dir: Root, first: String, n: Int, index: Int)
 
   /** Rewrite the `leaves` of `tablePath` that need it and swap them in;
     * the shared body of [[doAutoCoalesce]] (one leaf) and [[doItAll]],
     * which run [[recover]] first, so the temp root starts out absent.
     */
-  private def compact(tablePath: String, leaves: Seq[Leaf], requestedSizeMb: Int,
+  private def compact(table: Root, leaves: Seq[Leaf], requestedSizeMb: Int,
       zorderCols: Seq[String])(implicit spark: SparkSession): Map[String, Int] = {
-    implicit val conf: Configuration = spark.sessionState.newHadoopConf()
-    val fs = Fs.getFileSystem(conf, tablePath)
+    implicit val conf: Configuration = table.conf
+    val fs = table.fs
     val planned = leaves.map(l => l.path -> figureOutNumberOfPartitions(l.sizes, requestedSizeMb))
     val todo = leaves.zip(planned).collect { case (l, (_, n)) if n > 0 => (l, n) }.zipWithIndex
-      .map { case ((l, n), g) => Rewrite(l.path, fs.makeQualified(new Path(l.path)), l.first.get, n, g) }
+      .map { case ((l, n), g) => Rewrite(l.path, Root(l.path), l.first.get, n, g) }
     if (todo.isEmpty) return planned.toMap
-    val table = fs.makeQualified(new Path(tablePath))
-    val tmp = tmpOf(table)
+    val tmp = tmpOf(table.path)
     def staged(r: Rewrite) = new Path(tmp, s"$LeafCol=${r.index}")
     val schemas = footerSchemas(todo.map(_.first))
     val groups = todo.groupBy(r => (schemas(r.first), if (zorderCols.isEmpty) "" else r.path))
@@ -273,7 +270,7 @@ object Compactor {
       // a leaf whose files hold no rows stages nothing: it stays as it is
       val written = fs.listStatus(tmp).map(_.getPath.getName).toSet
       val done = todo.filter(r => written(staged(r).getName))
-      FolderSwap.replace(fs, swapFuse(fs, table), done.map(r => Paths(staged(r).toString, r.dir.toString)))
+      FolderSwap.replace(fs, swapFuse(table), done.map(r => Paths(staged(r).toString, r.path)))
       val swapped = done.map(_.path).toSet
       planned.map { case (l, n) => l -> (if (swapped(l)) n else -1) }.toMap
     } finally fs.delete(tmp, true)
@@ -288,14 +285,14 @@ object Compactor {
     */
   private def rewrite(group: Seq[Rewrite], schema: StructType,
       zorderCols: Seq[String])(implicit spark: SparkSession): DataFrame = {
-    val data = spark.read.schema(schema).parquet(group.map(_.dir.toString): _*)
+    val data = spark.read.schema(schema).parquet(group.map(_.path): _*)
     val file = col("_metadata.file_path")
-    // `_metadata.file_path` is the file's URI string, and the listing
-    // picks its scheme spelling (`file:/x/…` for a folder qualified as
-    // `file:///x`), so leaves match on the raw (still percent-encoded)
-    // path part alone; every leaf sits under one table on one file system
-    val folderOf = regexp_extract(file, "^(?:[a-zA-Z][a-zA-Z0-9+.-]*:(?://[^/]*)?)?(.*)/[^/]*$", 1)
-    val index = typedLit(group.map(r => r.dir.toUri.getRawPath -> r.index).toMap)
+    // `_metadata.file_path` is the file's percent-encoded URI string, in
+    // the scheme spelling of Spark's listing, so leaves match on its
+    // encoded path part alone; every leaf sits under one table on one
+    // file system
+    val folderOf = regexp_extract(file, Root.SchemeAuthority + "(.*)/[^/]*$", 1)
+    val index = typedLit(group.map(r => r.dir.rawKey -> r.index).toMap)
     val leaf = coalesce(element_at(index, folderOf),
       raise_error(concat(lit("compaction: file outside every planned leaf: "), file)))
     val tagged = data.withColumn(LeafCol, leaf)

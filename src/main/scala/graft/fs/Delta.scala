@@ -18,40 +18,11 @@ import org.apache.spark.sql.functions._
   */
 object Delta {
 
-  /** Relative path of `p` under `root`, compared on scheme-independent
-    * URI paths (as AclManager.rel does) so caller spellings — file:///x
-    * vs file:/x, trailing slash, unqualified — can't break the prefix
-    * arithmetic the way a raw string offset would.
-    */
-  private[graft] def rel(root: String)(p: String): String = {
-    val rootPath = new org.apache.hadoop.fs.Path(root).toUri.getPath.stripSuffix("/")
-    val pp = new org.apache.hadoop.fs.Path(p).toUri.getPath
-    require(pp.startsWith(rootPath + "/"), s"listed path $p is not under root $root")
-    pp.substring(rootPath.length + 1)
-  }
-
-  /** Column twin of [[rel]], spelled entirely in codegen'd built-ins: a
-    * Scala UDF here would fence whole-stage codegen and hide the
-    * projection from Catalyst on exactly the path that exists for huge
-    * listings (the distributed diff). The scheme[+authority] strip
-    * mirrors `Path.toUri.getPath` for the Hadoop-normalized URIs a
-    * listing yields; the not-under-root invariant keeps the driver
-    * require's semantics via a raise_error branch that never executes
-    * on rooted listings.
-    */
-  private[graft] def relCol(root: String)(path: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val rootPath = new org.apache.hadoop.fs.Path(root).toUri.getPath.stripSuffix("/")
-    val uriPath = regexp_replace(path, "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", "")
-    when(substring(uriPath, 1, rootPath.length + 1) === lit(rootPath + "/"),
-      substring(uriPath, rootPath.length + 2, Int.MaxValue))
-      .otherwise(raise_error(concat(
-        lit("listed path "), path, lit(s" is not under root $root"))))
-  }
-
   /** Both directions of the tree diff, on the driver: each side's
     * listing keyed by (relPath, isDirectory, byteSize, contentHash);
     * `missing` holds the source entries whose key the target lacks,
-    * `extra` the reverse.
+    * `extra` the reverse. Each side is any spelling of a folder on one
+    * file system.
     *
     * @param checkContent when true, files are additionally compared by a
     *        content hash (FNV-1a 64 over the byte stream) — the reference
@@ -61,12 +32,16 @@ object Delta {
     *        with one relPath and size are hashed, in one Spark job, since
     *        every other entry differs already.
     */
-  def getDelta(sourceUri0: String, targetUri0: String, checkContent: Boolean = false)(
+  def getDelta(sourceUri: String, targetUri: String, checkContent: Boolean = false)(
       implicit spark: SparkSession): (Array[DeltaEntry], Array[DeltaEntry]) = {
     implicit val conf = spark.sparkContext.hadoopConfiguration
-    def side(rootUri: String) = Fs.list(rootUri).map(e => rel(rootUri)(e.path) -> e)
-    val src = side(sourceUri0.stripSuffix("/"))
-    val trg = side(targetUri0.stripSuffix("/"))
+    diff(Root(sourceUri), Root(targetUri), checkContent)
+  }
+
+  private def diff(source: Root, target: Root, checkContent: Boolean)(
+      implicit spark: SparkSession): (Array[DeltaEntry], Array[DeltaEntry]) = {
+    def side(root: Root) = Fs.tree(root).map(e => root.rel(e.path) -> e)
+    val (src, trg) = (side(source), side(target))
     val hashes = if (checkContent) sharedFileHashes(src, trg) else Map.empty[String, Long]
     type Key = (String, Boolean, Long, Long)
     def keys(side: Array[(String, FsElement)]): Array[Key] = side.map { case (r, e) =>
@@ -128,14 +103,14 @@ object Delta {
     * returned Dataset[DeltaEntry] can itself be millions of rows and
     * feed the copy/delete stages distributively. Equivalent to
     * [[getDelta]] (asserted in MoveCopyDeleteSpec); use this form when
-    * a tree is too large for a driver listing.
+    * a tree is too large for a driver listing. Each side is any spelling
+    * of a folder on one file system.
     */
-  def getDeltaDataset(sourceUri0: String, targetUri0: String, checkContent: Boolean = false)(
+  def getDeltaDataset(sourceUri: String, targetUri: String, checkContent: Boolean = false)(
       implicit spark: SparkSession): org.apache.spark.sql.Dataset[DeltaEntry] = {
     import spark.implicits._
-    val sourceUri = sourceUri0.stripSuffix("/")
-    val targetUri = targetUri0.stripSuffix("/")
-    val (src, trg, release) = hashedSides(sourceUri, targetUri, checkContent)
+    implicit val conf = spark.sparkContext.hadoopConfiguration
+    val (src, trg, release) = hashedSides(Root(sourceUri), Root(targetUri), checkContent)
     val keys = Seq("relPath", "isDirectory", "byteSize", "contentHash")
     val missing = src.join(trg, keys, "left_anti")
       .select($"relPath", $"isDirectory").as[(String, Boolean)]
@@ -165,15 +140,13 @@ object Delta {
     * vanished-file sentinel keeps the rebuilt rows safe (the entry reads
     * as drift and is re-copied) instead of aborting the job.
     */
-  private def hashedSides(sourceUri: String, targetUri: String, checkContent: Boolean)(
+  private def hashedSides(source: Root, target: Root, checkContent: Boolean)(
       implicit spark: SparkSession): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, () => Unit) = {
     import spark.implicits._
-    val srcList = Fs.listDistributed(spark, sourceUri)
-    val trgList = Fs.listDistributed(spark, targetUri)
-    val src = withContentHash(srcList, checkContent)
-      .withColumn("relPath", relCol(sourceUri)($"path"))
-    val trg = withContentHash(trgList, checkContent)
-      .withColumn("relPath", relCol(targetUri)($"path"))
+    val srcList = Fs.listDistributed(spark, source)
+    val trgList = Fs.listDistributed(spark, target)
+    val src = withContentHash(srcList, checkContent).withColumn("relPath", source.relCol($"path"))
+    val trg = withContentHash(trgList, checkContent).withColumn("relPath", target.relCol($"path"))
     if (!checkContent) {
       (src, trg, () => { srcList.unpersist(); trgList.unpersist(); () })
     } else {
@@ -192,28 +165,27 @@ object Delta {
     * (SURVEY §7.4) — the form to use when a tree has more entries than
     * driver memory holds. Deletes are recursive and idempotent, so no
     * deepest-first ordering is needed: a child whose ancestor another
-    * task already removed counts as deleted.
+    * task already removed counts as deleted. Each side is any spelling of
+    * a folder on one file system.
     */
-  def synchronizeDistributed(sourceUri0: String, targetUri0: String, taskCount: Int = -1,
+  def synchronizeDistributed(sourceUri: String, targetUri: String, taskCount: Int = -1,
       checkContent: Boolean = false)(implicit spark: SparkSession): Unit = {
     import spark.implicits._
-    val sourceUri = new org.apache.hadoop.fs.Path(sourceUri0).toString
-    val targetUri = new org.apache.hadoop.fs.Path(targetUri0).toString
-    val (src, trg, release) = hashedSides(sourceUri, targetUri, checkContent)
+    implicit val conf = spark.sparkContext.hadoopConfiguration
+    val (source, target) = (Root(sourceUri), Root(targetUri))
+    val (src, trg, release) = hashedSides(source, target, checkContent)
     val keys = Seq("relPath", "isDirectory", "byteSize", "contentHash")
-    val target = (relPath: String) => new org.apache.hadoop.fs.Path(s"$targetUri/$relPath")
     // both stages fail the sync on any failed item; each runs one job
-    def failures(relPaths: org.apache.spark.sql.Dataset[String])(
-        op: org.apache.hadoop.conf.Configuration => String => Boolean): Long =
-      relPaths.mapPartitions(Retry.inTasks[String](spark.sparkContext.hadoopConfiguration, identity)(op))
+    def failures(relPaths: org.apache.spark.sql.DataFrame)(
+        op: org.apache.hadoop.conf.Configuration => org.apache.hadoop.fs.Path => Boolean): Long =
+      relPaths.select(target.childCol($"relPath")).as[String]
+        .mapPartitions(Retry.inTasks[String](conf, identity)(c => uri => op(c)(new org.apache.hadoop.fs.Path(uri))))
         .filter(!_.success).count()
 
-    // target-only entries: recursive idempotent delete (empty relPath
-    // would be the target root — rel() already refuses those)
-    val extra = trg.join(src, keys, "left_anti")
-      .filter(length($"relPath") > 0).select($"relPath").as[String]
-    val delFailed = failures(extra) { c => relPath =>
-      val p = target(relPath)
+    // target-only entries: recursive idempotent delete (an empty relPath
+    // would be the target root)
+    val extra = trg.join(src, keys, "left_anti").filter(length($"relPath") > 0)
+    val delFailed = failures(extra) { c => p =>
       val fs = p.getFileSystem(c)
       fs.delete(p, true)
       !fs.exists(p)
@@ -224,14 +196,11 @@ object Delta {
       .filter(length($"relPath") > 0)
       .select($"relPath", $"isDirectory").persist()
     // source-only directories: recreate (copy below only moves files)
-    val mkdirFailed = failures(missing.filter($"isDirectory").select($"relPath").as[String]) { c => relPath =>
-      val p = target(relPath)
-      p.getFileSystem(c).mkdirs(p)
-    }
+    val mkdirFailed = failures(missing.filter($"isDirectory"))(c => p => p.getFileSystem(c).mkdirs(p))
     require(mkdirFailed == 0, s"synchronizeDistributed: $mkdirFailed mkdirs failed under $targetUri")
     // source-only files: distributed copy with retry
-    val files = missing.filter(!$"isDirectory").select($"relPath").as[String]
-      .map(relPath => Paths(s"$sourceUri/$relPath", s"$targetUri/$relPath"))
+    val files = missing.filter(!$"isDirectory")
+      .select(source.childCol($"relPath").as("sourcePath"), target.childCol($"relPath").as("targetPath")).as[Paths]
     DistributedExecution.copyDataset(files, taskCount).unpersist()
     missing.unpersist()
     release()
@@ -283,14 +252,14 @@ object Delta {
   /** Make target identical to source: delete the top-most target-only
     * paths, recreate missing folders, then distributed-copy the missing
     * files (reference Delta.scala:25-32). The diff is [[getDelta]]'s, so
-    * without `checkContent` the copy is the only Spark job.
+    * without `checkContent` the copy is the only Spark job. Each side is
+    * any spelling of a folder on one file system.
     */
-  def synchronize(sourceUri0: String, targetUri0: String, taskCount: Int = -1,
+  def synchronize(sourceUri: String, targetUri: String, taskCount: Int = -1,
       checkContent: Boolean = false)(implicit spark: SparkSession): Unit = {
     implicit val conf = spark.sparkContext.hadoopConfiguration
-    val sourceUri = new org.apache.hadoop.fs.Path(sourceUri0).toString
-    val targetUri = new org.apache.hadoop.fs.Path(targetUri0).toString
-    val (missing, extra) = getDelta(sourceUri, targetUri, checkContent)
+    val (source, target) = (Root(sourceUri), Root(targetUri))
+    val (missing, extra) = diff(source, target, checkContent)
     // an empty relPath would resolve to the target ROOT — refuse rather
     // than wipe it
     extra.foreach(e => require(e.path.nonEmpty,
@@ -299,15 +268,14 @@ object Delta {
     // recursive delete already takes everything under it
     val extraDirs = extra.iterator.filter(_.isDirectory).map(_.path).toSet
     val toDelete = extra.filterNot(e => ancestors(e.path).exists(extraDirs))
-      .map(e => s"$targetUri/${e.path}").toIndexedSeq
+      .map(e => target.child(e.path).toString).toIndexedSeq
     LocalExecution.deletePaths(toDelete)
-    val fs = Fs.getFileSystem(conf, targetUri)
     // recreate missing directories (copy handles files only); the diff
     // entries carry isDirectory from the listing, so no per-path re-stat
-    Retry.onDriver[String](missing.filter(_.isDirectory).map(e => s"$targetUri/${e.path}").toIndexedSeq,
-      identity)(d => fs.mkdirs(new org.apache.hadoop.fs.Path(d)))
+    Retry.onDriver[org.apache.hadoop.fs.Path](missing.filter(_.isDirectory).map(e => target.child(e.path)).toIndexedSeq,
+      _.toString)(target.fs.mkdirs)
     val pairs = missing.filterNot(_.isDirectory)
-      .map(e => Paths(s"$sourceUri/${e.path}", s"$targetUri/${e.path}")).toIndexedSeq
+      .map(e => Paths(source.child(e.path).toString, target.child(e.path).toString)).toIndexedSeq
     DistributedExecution.copyFiles(pairs, taskCount)
     ()
   }

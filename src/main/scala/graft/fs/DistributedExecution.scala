@@ -19,15 +19,17 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 object DistributedExecution {
 
-  /** Copy a whole folder tree: list, derive target paths by prefix
-    * rewrite, distributed copy of all files (empty dirs skipped —
-    * reference fs/DistributedExecution.scala:22-30).
+  /** Copy a whole folder tree, each side any spelling of a folder on one
+    * file system: list, rebase each file onto the target, distributed
+    * copy of all files (empty dirs skipped — reference
+    * fs/DistributedExecution.scala:22-30).
     */
   def copyFolder(sourceUri: String, targetUri: String, taskCount: Int = -1)(
       implicit spark: SparkSession): Array[FsOperationResult] = {
     implicit val conf = spark.sparkContext.hadoopConfiguration
-    copyFiles(Fs.list(sourceUri).toIndexedSeq.filter(!_.isDirectory)
-      .map(e => Paths(e.path, Fs.rebase(e.path, sourceUri, targetUri))), taskCount)
+    val (source, target) = (Root(sourceUri), Root(targetUri))
+    copyFiles(Fs.tree(source).toIndexedSeq.filter(!_.isDirectory)
+      .map(e => Paths(e.path, source.rebase(e.path, target))), taskCount)
   }
 
   /** Distributed copy with retry-failed-subset ≤5 (reference

@@ -47,8 +47,8 @@ private[graft] object FolderSwap {
     */
   def replace(fs: FileSystem, fuse: SafetyFuse, pairs: Seq[Paths]): Unit = {
     if (pairs.isEmpty) return
-    // paths are recorded without scheme: they resolve on `fs`, however the caller spelled them
-    fuse.startTransaction(pairs.map(p => s"${bare(p.sourcePath)}\t${bare(p.targetPath)}\n").mkString)
+    // paths are recorded by their key: they resolve on `fs`, however the caller spelled them
+    fuse.startTransaction(pairs.map(p => s"${Root.key(p.sourcePath)}\t${Root.key(p.targetPath)}\n").mkString)
     val asides = pairs.map { p =>
       val (staged, live) = (new Path(p.sourcePath), new Path(p.targetPath))
       val aside = asideOf(live)
@@ -104,8 +104,6 @@ private[graft] object FolderSwap {
     }
     fs.delete(aside, true)
   }
-
-  private def bare(uri: String): String = Path.getPathWithoutSchemeAndAuthority(new Path(uri)).toString
 
   /** Renames `from` to `to`, or throws. A rename reported failed that
     * took effect (`from` gone, `to` there) counts as done, as in

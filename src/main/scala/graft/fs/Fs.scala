@@ -1,7 +1,5 @@
 package graft.fs
 
-import java.net.URI
-
 import scala.concurrent.duration._
 
 import org.apache.hadoop.conf.Configuration
@@ -31,11 +29,10 @@ object Fs {
   /** How long the driver pool waits on one metadata call. */
   val OpTimeout: FiniteDuration = 10.minutes
 
-  /** Resolve a FileSystem from a URI string (spaces sanitized — reference
+  /** The FileSystem of a folder, in any spelling of it (reference
     * fs/package.scala:23-25).
     */
-  def getFileSystem(conf: Configuration, uri: String): FileSystem =
-    FileSystem.get(new URI(uri.replace(" ", "%20")), conf)
+  def getFileSystem(conf: Configuration, uri: String): FileSystem = Root(uri)(conf).fs
 
   private def toElement(s: FileStatus): FsElement =
     FsElement(s.getPath.toString, s.isDirectory, if (s.isDirectory) 0L else s.getLen)
@@ -50,6 +47,9 @@ object Fs {
     * [[driverPoolSize]] — the reference sized this pool at 1000 because
     * against a high-latency object store (ADLS HTTP) the listing rate is
     * latency-bound, not CPU-bound. A failed `listStatus` fails the call.
+    * `uri` is any spelling of a folder on one file system (`/abs`,
+    * `file:/abs`, `file:///abs`, `/abs/`); the elements are spelled as
+    * `listStatus` spells them.
     *
     * `dropFileDetail = true` collapses each folder's files into one
     * `<folder>/summed_up_files` element DURING the scan (reference
@@ -58,16 +58,20 @@ object Fs {
     * a million rows, so wide-folder size reports stay driver-safe. Byte
     * totals are unchanged; only per-file detail is lost.
     */
-  def list(uri: String, dropFileDetail: Boolean = false)(implicit conf: Configuration): Array[FsElement] = {
-    val fs = getFileSystem(conf, uri)
+  def list(uri: String, dropFileDetail: Boolean = false)(implicit conf: Configuration): Array[FsElement] =
+    tree(Root(uri), dropFileDetail)
+
+  /** [[list]] of a folder already resolved to its [[Root]]. */
+  private[graft] def tree(root: Root, dropFileDetail: Boolean = false): Array[FsElement] = {
+    val fs = root.fs
     val out = Array.newBuilder[FsElement]
-    var dirs: Seq[Path] = Seq(new Path(uri))
+    var dirs: Seq[Path] = Seq(root.path)
     while (dirs.nonEmpty) {
       val level = Retry.onPool(dirs) { d =>
         val elems = fs.listStatus(d).map(toElement)
         if (dropFileDetail && elems.nonEmpty) {
           val (subdirs, files) = elems.partition(_.isDirectory)
-          subdirs :+ FsElement(s"${d.toString.stripSuffix("/")}/summed_up_files",
+          subdirs :+ FsElement(Root.childOf(d, "summed_up_files").toString,
             isDirectory = false, files.map(_.byteSize).sum)
         } else elems
       }.flatten
@@ -77,9 +81,10 @@ object Fs {
     out.result()
   }
 
-  /** Distributed level-synchronous tree scan: the 100 TB path. Each BFS
-    * level is one Spark job; directory names (not file bytes) are what
-    * shuffles, so a billion-file tree lists with bounded driver memory.
+  /** Distributed level-synchronous tree scan of any spelling of a folder
+    * on one file system: the 100 TB path. Each BFS level is one Spark
+    * job; directory names (not file bytes) are what shuffles, so a
+    * billion-file tree lists with bounded driver memory.
     *
     * The returned Dataset comes back PERSISTED and materialized (the
     * per-level caches the loop needs are released before returning, so
@@ -87,17 +92,23 @@ object Fs {
     * callers must `unpersist()` it when done with the listing.
     */
   def listDistributed(spark: SparkSession, uri: String): Dataset[FsElement] =
-    listDistributed(spark, uri, spark.sparkContext.hadoopConfiguration)
+    listDistributed(spark, Root(uri)(spark.sparkContext.hadoopConfiguration))
 
   /** [[listDistributed]] with an explicit Hadoop conf (e.g. a custom
     * FileSystem registration not present on the SparkContext conf).
     */
   def listDistributed(spark: SparkSession, uri: String,
-      hadoopConf: Configuration): Dataset[FsElement] = {
+      hadoopConf: Configuration): Dataset[FsElement] =
+    listDistributed(spark, Root(uri)(hadoopConf))
+
+  /** [[listDistributed]] of a folder already resolved to its [[Root]],
+    * listed with the Hadoop conf it was resolved with.
+    */
+  private[graft] def listDistributed(spark: SparkSession, root: Root): Dataset[FsElement] = {
     import spark.implicits._
-    val conf = new SerializableHadoopConf(hadoopConf)
+    val conf = new SerializableHadoopConf(root.conf)
     var result = spark.emptyDataset[FsElement]
-    var dirs = spark.createDataset(Seq(uri))
+    var dirs = spark.createDataset(Seq(root.path.toString))
     // ONE job per BFS level: the aggregate that materializes the level's
     // persist also returns how many of its rows are directories, which
     // is exactly the next iteration's fan-out (no dirs.count() job —
@@ -145,7 +156,9 @@ object Fs {
     dirs ++ rolled
   }
 
-  /** Tree scan + queryable size report (reference fs/package.scala:112-119). */
+  /** Tree scan + queryable size report (reference fs/package.scala:112-119);
+    * `uri` is any spelling of a folder on one file system.
+    */
   def getSize(uri: String)(implicit conf: Configuration): FsSizes =
     FsSizes(list(uri))
 
@@ -169,13 +182,14 @@ object Fs {
     loop(bytes, 0)
   }
 
-  /** Child directories of a folder, non-recursive (reference
-    * metastore/package.scala:48-52).
+  /** Child directories of any spelling of a folder on one file system,
+    * non-recursive (reference metastore/package.scala:48-52).
     */
-  def getSubfolderPaths(uri: String)(implicit conf: Configuration): Array[String] = {
-    val fs = getFileSystem(conf, uri)
-    fs.listStatus(new Path(uri)).filter(_.isDirectory).map(_.getPath.toString)
-  }
+  def getSubfolderPaths(uri: String)(implicit conf: Configuration): Array[String] =
+    getSubfolderPaths(Root(uri))
+
+  private[graft] def getSubfolderPaths(root: Root): Array[String] =
+    root.fs.listStatus(root.path).filter(_.isDirectory).map(_.getPath.toString)
 
   /** All files (recursively) under each of `folders`, directories dropped
     * (reference metastore/package.scala:58-61).
@@ -194,28 +208,12 @@ object Fs {
     FileUtil.copy(srcFs, src, dstFs, dst, false, true, conf)
   }
 
-  /** Rewrite `path` from one root prefix onto another, with all three
-    * normalized through Hadoop Path so caller spellings — file:///x vs
-    * listStatus's file:/x, trailing slash, unqualified — can't turn the
-    * rewrite into a no-op. A raw String.replace with a mismatched
-    * prefix silently yields target == source, which downstream turns
-    * into a self-move (source deleted as the "existing target") or a
-    * self-copy (file truncated by overwrite). Throws when `path` is not
-    * under `fromRoot`.
+  /** Rename only works within one FileSystem (reference fs/package.scala:126-129);
+    * a folder spelled without a scheme is on the default one.
     */
-  def rebase(path: String, fromRoot: String, toRoot: String): String = {
-    val p = new Path(path).toString
-    val from = new Path(fromRoot).toString.stripSuffix("/")
-    val to = new Path(toRoot).toString.stripSuffix("/")
-    require(p == from || p.startsWith(from + "/"),
-      s"path $p is not under $from - cannot rebase onto $to")
-    to + p.stripPrefix(from)
-  }
-
-  /** Rename only works within one FileSystem (reference fs/package.scala:126-129). */
   def checkIfFsIsTheSame(source: String, target: String): Boolean = {
-    def auth(u: String) = { val x = new URI(u); (x.getScheme, x.getAuthority) }
-    auth(source) == auth(target)
+    implicit val conf: Configuration = new Configuration()
+    Root(source).sameFileSystem(Root(target))
   }
 
   /** Refuse moving an empty source over a non-empty target — rerun

@@ -28,16 +28,15 @@ final case class DeltaEntry(path: String, message: String, isDirectory: Boolean 
   * (reference: fs/package.scala:79-87).
   */
 final case class FsSizes(sizes: Array[FsElement]) {
-  /** Total bytes under `path` — matched on a PATH boundary, not a raw
-    * string prefix, so a sibling like `/data/2024-backup` doesn't count
-    * toward `/data/2024`.
+  /** Total bytes under `path`, in any spelling of it — matched on a PATH
+    * boundary, not a raw string prefix, so a sibling like
+    * `/data/2024-backup` doesn't count toward `/data/2024`.
     */
   def getSizeOfPath(path: String): Long = {
-    val root = path.stripSuffix("/")
-    sizes.iterator
-      .filter(e => (e.path == root || e.path.startsWith(root + "/")) && !e.isDirectory)
-      .map(_.byteSize).sum
+    val root = Root.key(path)
+    keyed.iterator.collect { case (k, e) if !e.isDirectory && Root.relative(root, k).isDefined => e.byteSize }.sum
   }
+  private lazy val keyed = sizes.map(e => Root.key(e.path) -> e)
   def totalBytes: Long = sizes.iterator.filterNot(_.isDirectory).map(_.byteSize).sum
   def count: Int = sizes.length
 }

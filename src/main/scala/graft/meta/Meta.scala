@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
 
-import graft.fs.Fs
+import graft.fs.{Fs, Root}
 
 /** Catalog/metastore operators (reference: metastore/package.scala).
   * All built on Spark's public `sessionState.catalog` / `spark.catalog`
@@ -15,9 +15,11 @@ object Meta {
   def tableMeta(db: String, table: String)(implicit spark: SparkSession): CatalogTable =
     spark.sessionState.catalog.getTableMetadata(TableIdentifier(table, Some(db)))
 
-  /** Table folder URI (reference metastore/package.scala:17-19,70-74). */
+  /** Table folder, spelled as a listing spells it (reference
+    * metastore/package.scala:17-19,70-74).
+    */
   def getTableLocation(db: String, table: String)(implicit spark: SparkSession): String =
-    tableMeta(db, table).location.toString
+    Root.listed(tableMeta(db, table).location)
 
   def getTableLocation(table: String)(implicit spark: SparkSession): String =
     getTableLocation(spark.catalog.currentDatabase, table)
@@ -36,7 +38,7 @@ object Meta {
     val meta = tableMeta(db, table)
     require(meta.partitionColumnNames.nonEmpty, s"table $db.$table is not partitioned")
     implicit val conf = spark.sessionState.newHadoopConf()
-    Fs.getSubfolderPaths(meta.location.toString)
+    Fs.getSubfolderPaths(Root.listed(meta.location))
   }
 
   /** Partition folders whose name contains any match string (reference
@@ -56,8 +58,10 @@ object Meta {
       spark.catalog.recoverPartitions(qualified)
   }
 
-  /** Data files of a table (reference metastore/package.scala:111-113). */
+  /** Data files of a table, spelled as a listing spells them (reference
+    * metastore/package.scala:111-113).
+    */
   def getListOfTableFiles(db: String, table: String)(
       implicit spark: SparkSession): Array[String] =
-    spark.table(s"$db.$table").inputFiles
+    spark.table(s"$db.$table").inputFiles.map(f => Root.listed(new java.net.URI(f)))
 }

@@ -23,10 +23,16 @@ object Promotor {
     */
   def getTablesPathsList(srcDb: String, srcTable: String, trgDb: String, trgTable: String)(
       implicit spark: SparkSession): Seq[Paths] = {
-    val srcLoc = Meta.getTableLocation(srcDb, srcTable)
-    val trgLoc = Meta.getTableLocation(trgDb, trgTable)
+    val (src, trg) = locations(srcDb, srcTable, trgDb, trgTable)
     Meta.getListOfTableFiles(srcDb, srcTable).toIndexedSeq
-      .map(f => Paths(new Path(f).toString, Fs.rebase(f, srcLoc, trgLoc)))
+      .map(f => Paths(f, src.rebase(f, trg)))
+  }
+
+  /** The folders of a source and a target table. */
+  private def locations(srcDb: String, srcTable: String, trgDb: String, trgTable: String)(
+      implicit spark: SparkSession): (Root, Root) = {
+    implicit val conf = spark.sessionState.newHadoopConf()
+    (Root(Meta.getTableLocation(srcDb, srcTable)), Root(Meta.getTableLocation(trgDb, trgTable)))
   }
 
   // ------------------------------------------------------------------
@@ -147,39 +153,46 @@ object Promotor {
   private def copyPartitionFiles(srcDb: String, srcTable: String, trgDb: String, trgTable: String,
       matchStrings: Seq[String], taskCount: Int)(
       implicit spark: SparkSession): Array[FsOperationResult] = {
-    implicit val conf = spark.sessionState.newHadoopConf()
     val partitions = Meta.filterPartitions(srcDb, srcTable, matchStrings)
     require(partitions.nonEmpty, s"no partitions of $srcDb.$srcTable match $matchStrings")
-    val srcLoc = Meta.getTableLocation(srcDb, srcTable)
-    val trgLoc = Meta.getTableLocation(trgDb, trgTable)
-    val files = Fs.getFilesOnlyOfFolders(partitions.toIndexedSeq)
-    val pairs = files.map(e => Paths(e.path, Fs.rebase(e.path, srcLoc, trgLoc))).toIndexedSeq
-    DistributedExecution.copyFiles(pairs, taskCount)
+    val (src, trg) = locations(srcDb, srcTable, trgDb, trgTable)
+    copyFilesOf(partitions.toIndexedSeq, src, trg, taskCount)
   }
 
-  /** H10: H8 generalized to bare folders (no metastore); target
-    * subfolders auto-created (reference Promotor.scala:163-182).
+  /** Distributed copy of every file under `folders`, each under `src`,
+    * to its place under `trg`.
+    */
+  private def copyFilesOf(folders: Seq[String], src: Root, trg: Root, taskCount: Int)(
+      implicit spark: SparkSession): Array[FsOperationResult] = {
+    val files = Fs.getFilesOnlyOfFolders(folders)(src.conf)
+    DistributedExecution.copyFiles(files.map(e => Paths(e.path, src.rebase(e.path, trg))).toIndexedSeq, taskCount)
+  }
+
+  /** H10: H8 generalized to bare folders (no metastore), each side any
+    * spelling of a folder on one file system; target subfolders
+    * auto-created (reference Promotor.scala:163-182).
     */
   def copySelectedSubFoldersContent(srcFolder: String, trgFolder: String,
       matchStrings: Seq[String], taskCount: Int = -1)(
       implicit spark: SparkSession): Array[FsOperationResult] = {
     implicit val conf = spark.sessionState.newHadoopConf()
-    val src = srcFolder.stripSuffix("/")
-    val subs = Meta.filterPaths(Fs.getSubfolderPaths(src), matchStrings)
-    val files = Fs.getFilesOnlyOfFolders(subs.toIndexedSeq)
-    val pairs = files.map(e => Paths(e.path, Fs.rebase(e.path, srcFolder, trgFolder))).toIndexedSeq
-    DistributedExecution.copyFiles(pairs, taskCount)
+    copySubFolders(Root(srcFolder), Root(trgFolder), matchStrings, taskCount)
   }
 
-  /** H11: delete matching target subfolders then H10. */
+  private def copySubFolders(src: Root, trg: Root, matchStrings: Seq[String], taskCount: Int)(
+      implicit spark: SparkSession): Array[FsOperationResult] =
+    copyFilesOf(Meta.filterPaths(Fs.getSubfolderPaths(src), matchStrings).toIndexedSeq, src, trg, taskCount)
+
+  /** H11: delete matching target subfolders then H10; each side any
+    * spelling of a folder on one file system.
+    */
   def copyOverwriteSelectedSubfoldersContent(srcFolder: String, trgFolder: String,
       matchStrings: Seq[String], taskCount: Int = -1)(
       implicit spark: SparkSession): Array[FsOperationResult] = {
     implicit val conf = spark.sessionState.newHadoopConf()
-    val trg = trgFolder.stripSuffix("/")
-    val existing = Meta.filterPaths(Fs.getSubfolderPaths(trg), matchStrings)
-    LocalExecution.deletePaths(existing.toIndexedSeq)
-    copySelectedSubFoldersContent(srcFolder, trgFolder, matchStrings, taskCount)
+    val trg = Root(trgFolder)
+    LocalExecution.deletePaths(Meta.filterPaths(Fs.getSubfolderPaths(trg), matchStrings).toIndexedSeq)
+    copySubFolders(Root(srcFolder), trg, matchStrings, taskCount)
   }
 
   /** H12: delete matching partition folders + refresh. */
@@ -205,10 +218,8 @@ object Promotor {
     TableMetadataValidator.validate(srcDb, srcTable, trgDb, trgTable)
     val partitions = Meta.filterPartitions(srcDb, srcTable, matchStrings)
     require(partitions.nonEmpty, s"no partitions of $srcDb.$srcTable match $matchStrings")
-    val srcLoc = Meta.getTableLocation(srcDb, srcTable)
-    val trgLoc = Meta.getTableLocation(trgDb, trgTable)
-    val pairs = partitions.map(p => Paths(p, Fs.rebase(p, srcLoc, trgLoc))).toIndexedSeq
-    val res = moveFolders(pairs)
+    val (src, trg) = locations(srcDb, srcTable, trgDb, trgTable)
+    val res = moveFolders(partitions.map(p => Paths(p, src.rebase(p, trg))).toIndexedSeq)
     Meta.refreshMetadata(srcDb, srcTable)
     Meta.refreshMetadata(trgDb, trgTable)
     res
@@ -229,13 +240,14 @@ object Promotor {
     res
   }
 
-  /** H15: folder-level partition move for bare paths. */
+  /** H15: folder-level partition move for bare paths, each side any
+    * spelling of a folder on one file system, both on the same one.
+    */
   def moveSelectedSubFolders(srcFolder: String, trgFolder: String, matchStrings: Seq[String])(
       implicit spark: SparkSession): Seq[FsOperationResult] = {
     implicit val conf = spark.sessionState.newHadoopConf()
-    val src = srcFolder.stripSuffix("/")
-    val subs = Meta.filterPaths(Fs.getSubfolderPaths(src), matchStrings)
-    moveFolders(subs.map(p => Paths(p, Fs.rebase(p, srcFolder, trgFolder))).toIndexedSeq)
+    val (src, trg) = (Root(srcFolder), Root(trgFolder))
+    moveFolders(Meta.filterPaths(Fs.getSubfolderPaths(src), matchStrings).map(p => Paths(p, src.rebase(p, trg))).toIndexedSeq)
   }
 
   /** M11 core folder move: per-folder safety guard and same-FS check,
@@ -253,15 +265,15 @@ object Promotor {
       implicit spark: SparkSession): Seq[FsOperationResult] = {
     if (pairs.isEmpty) return Seq.empty
     implicit val conf = spark.sessionState.newHadoopConf()
-    val fs = Fs.getFileSystem(conf, pairs.head.sourcePath)
-    pairs.foreach { p =>
-      require(Fs.checkIfFsIsTheSame(p.sourcePath, p.targetPath),
-        s"move requires one FileSystem: $p")
+    val roots = pairs.map(p => (Root(p.sourcePath), Root(p.targetPath)))
+    roots.foreach { case (src, trg) =>
+      require(src.sameFileSystem(trg), s"move requires one FileSystem: $src -> $trg")
       // a self-move would set the source aside as the "existing target"
-      // — refuse outright (defense in depth behind Fs.rebase)
-      require(p.sourcePath != p.targetPath, s"refusing self-move: ${p.sourcePath}")
+      // — refuse outright
+      require(src.key != trg.key, s"refusing self-move: $src")
     }
-    val fuse = new SafetyFuse(fs, new Path(pairs.head.targetPath).getParent.toString)
+    val fs = roots.head._1.fs
+    val fuse = new SafetyFuse(fs, roots.head._2.path.getParent.toString)
     val (done, toMove) =
       if (!FolderSwap.recover(fs, fuse)) (Seq.empty[Paths], pairs)
       else pairs.partition(p => !fs.exists(new Path(p.sourcePath)) && fs.exists(new Path(p.targetPath)))

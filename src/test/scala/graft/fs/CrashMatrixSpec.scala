@@ -17,7 +17,8 @@ import graft.ext.{IndexLifecycle, Similarity}
 import graft.promotor.Promotor
 
 /** Crash-point enumeration (ALICE, "All File Systems Are Not Created
-  * Equal", OSDI 2014) over the callers of [[FolderSwap]]: each operator
+  * Equal", OSDI 2014) over the callers of [[FolderSwap]],
+  * [[LocalExecution.moveFolderContent]] and [[Delta.synchronize]]: each operator
   * runs once crash-free, counting its mutating file-system calls; then,
   * for every k up to that count, it runs on a fresh copy of the same
   * fixture with a crash at call k ([[FlakyFileSystem.abortAtMutatingCall]]:
@@ -56,6 +57,15 @@ class CrashMatrixSpec extends AnyFunSuite {
       s"${rel(dir)}/*.parquet" -> s"${files.size} files, ${r.get(0)} rows, ${r.get(1)}"
     }
   }
+
+  /** Writes `body` to `rel` under `fixture`, parents included. */
+  private def file(fixture: JPath, rel: String, body: String): Unit = {
+    Files.createDirectories(fixture.resolve(rel).getParent)
+    Files.write(fixture.resolve(rel), body.getBytes("UTF-8"))
+  }
+
+  /** The absolute path of a `flaky:` root, without scheme: how a user types it. */
+  private def plain(root: String): String = new Path(root).toUri.getPath
 
   private def copyTree(from: JPath, to: JPath): Unit =
     Files.walk(from).iterator().asScala.filterNot(_.getFileName.toString.endsWith(".crc")).foreach { f =>
@@ -139,6 +149,41 @@ class CrashMatrixSpec extends AnyFunSuite {
     val calls = matrix("index", fixture)(run) { root =>
       IndexLifecycle.recoverSwap(spark, s"$root/idx")
       run(root)
+    }
+    info(s"$calls mutating calls")
+  }
+
+  // The reruns below spell the folders differently from the crashed run
+  // (`flaky:/abs` there): a resume must recognize its own folders, and
+  // its marker, in any spelling.
+
+  test("LocalExecution.moveFolderContent: a rerun spelled /abs/ after a crash at any call moves the content") {
+    val fixture = Files.createTempDirectory("crash_content_fixture")
+    file(fixture, "src/a.txt", "new a"); file(fixture, "src/d/b.txt", "new b")
+    // a twin of a source child, and a child only the target holds
+    file(fixture, "trg/a.txt", "old a"); file(fixture, "trg/old.txt", "old")
+    val calls = matrix("content", fixture) { root =>
+      LocalExecution.moveFolderContent(s"$root/src", s"$root/trg")(spark.sparkContext.hadoopConfiguration); ()
+    } { root =>
+      // the plain local file system: the move is a rename on one file system
+      LocalExecution.moveFolderContent(s"${plain(root)}/src/", s"${plain(root)}/trg/")(
+        spark.sparkContext.hadoopConfiguration); ()
+    }
+    info(s"$calls mutating calls")
+  }
+
+  test("Delta.synchronize: a rerun spelled /abs/ and flaky:///abs/ after a crash at any call replicates the source") {
+    val fixture = Files.createTempDirectory("crash_sync_fixture")
+    file(fixture, "src/a.txt", "new a, resized"); file(fixture, "src/d/b.txt", "b")
+    file(fixture, "src/e/f/c.txt", "c") // folders the target lacks
+    file(fixture, "trg/a.txt", "old a"); file(fixture, "trg/d/b.txt", "b")
+    file(fixture, "trg/old/x.txt", "x") // a folder only the target holds
+    val calls = matrix("sync", fixture) { root =>
+      Delta.synchronize(s"$root/src", s"$root/trg"); ()
+    } { root =>
+      // the source is only read, so the plain local file system serves it;
+      // the target keeps the raw flaky one, which writes no checksum files
+      Delta.synchronize(s"${plain(root)}/src/", s"${FlakyFileSystem.Scheme}://${plain(root)}/trg/"); ()
     }
     info(s"$calls mutating calls")
   }

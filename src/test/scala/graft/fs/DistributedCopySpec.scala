@@ -44,7 +44,7 @@ class DistributedCopySpec extends AnyFunSuite {
     val src = FlakyFileSystem.flaky(sourceTree(prefix + "_src", n))
     val trg = FlakyFileSystem.flaky(TestTree.newRoot(prefix + "_trg"))
     Fs.list(src).filter(!_.isDirectory).toSeq
-      .map(e => Paths(e.path, Fs.rebase(e.path, src, trg)))
+      .map(e => Paths(e.path, Root(src).rebase(e.path, Root(trg))))
   }
 
   private def copyFiles(work: Seq[Paths]): Seq[FsOperationResult] =

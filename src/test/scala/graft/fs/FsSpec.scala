@@ -205,5 +205,13 @@ class FsSpec extends AnyFunSuite {
       FsElement("/data/2024-backup/f2", isDirectory = false, 90)))
     assert(sizes.getSizeOfPath("/data/2024") == 10)
     assert(sizes.getSizeOfPath("/data/2024/") == 10)
+    // a listing spells its paths `file:/…`; every spelling of a listed
+    // folder sizes it, still on path boundaries
+    val listed = FsSizes(Array(
+      FsElement("file:/data/2024", isDirectory = true, 0),
+      FsElement("file:/data/2024/f1", isDirectory = false, 10),
+      FsElement("file:/data/2024-backup/f2", isDirectory = false, 90)))
+    for (spelling <- Seq("/data/2024", "file:/data/2024", "file:///data/2024", "/data/2024/"))
+      assert(listed.getSizeOfPath(spelling) == 10, spelling)
   }
 }

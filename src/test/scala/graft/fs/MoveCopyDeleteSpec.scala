@@ -411,13 +411,13 @@ class MoveCopyDeleteSpec extends AnyFunSuite {
       ("hdfs://nn:8020/w/t", "hdfs://nn:8020/w/t/part-0"))
     cases.foreach { case (root, p) =>
       val got = Seq(p).toDF("path")
-        .select(Delta.relCol(root)($"path")).head.getString(0)
-      assert(got == Delta.rel(root)(p), s"relCol($root)($p) = $got")
+        .select(Root(root).relCol($"path")).head.getString(0)
+      assert(got == Root(root).rel(p), s"relCol($root)($p) = $got")
     }
     // the not-under-root require survives as a raise_error branch
     val err = intercept[Exception] {
       Seq("file:/elsewhere/f").toDF("path")
-        .select(Delta.relCol("file:/tmp/root")($"path")).head
+        .select(Root("file:/tmp/root").relCol($"path")).head
     }
     assert(err.getMessage.contains("is not under root"), err.getMessage)
     // the distributed diff — the form that exists for huge listings —
